@@ -1,5 +1,8 @@
 package graft.vlm
 
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Executors}
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,8 +11,11 @@ import org.apache.spark.sql.functions._
   * scan → per-task transform → per-task sink → combined union → summary.
   *
   * Unlike the reference (whole corpus materialized in driver memory,
-  * data_loader.py:40-53), every step here is a lazy plan; only the summary
-  * aggregates ever reach the driver.
+  * data_loader.py:40-53), the corpus stays distributed; only per-partition
+  * row counts and the summary aggregates ever reach the driver. Building a
+  * task is eager: its id assignment ([[QaPrimitives.withContiguousIds]])
+  * runs the task's jobs and stores its sorted rows on the executors, and
+  * every sink after that reads those stored rows.
   */
 object QaPipeline {
 
@@ -24,7 +30,9 @@ object QaPipeline {
     require(unknown.isEmpty, s"unknown tasks: ${unknown.mkString(", ")}; known: ${taskRegistry.keys.toSeq.sorted.mkString(", ")}")
   }
 
-  /** Run the given tasks over a frame corpus; returns per-task DataFrames. */
+  /** Run the given tasks over a frame corpus, one after another; returns
+    * per-task DataFrames over stored rows (see [[QaPrimitives.release]]).
+    */
   def generate(
       frames: DataFrame,
       datasetName: String,
@@ -48,27 +56,64 @@ object QaPipeline {
       .withColumn("dataset", lit(datasetName))
       .withColumn("generated_date", date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss"))
 
-  /** Full run: per-task JSON sinks (K2), combined (K3), summary (K4). */
+  /** Full run: per-task JSON sinks (K2), combined (K3), summary (K4).
+    *
+    * The tasks are built and sunk concurrently, one thread each, so one
+    * task's driver-side planning and small jobs overlap the others' work.
+    * The combined output and the summary then read the same stored rows.
+    * Every stored row is released before returning. If a task fails, the
+    * other tasks' jobs are cancelled, and once they have all stopped the
+    * first error is rethrown.
+    */
   def run(
       spark: SparkSession,
       frames: DataFrame,
       datasetName: String,
       outDir: String,
       tasks: Seq[String] = taskRegistry.keys.toSeq.sorted): Map[String, Long] = {
-    val perTask = generate(frames, datasetName, tasks)
-    perTask.foreach { case (t, df) =>
-      df.write.mode("overwrite").json(s"$outDir/${datasetName}_${t}_qa")
+    validateTasks(tasks)
+    require(tasks.nonEmpty, "no tasks to run")
+    val sc = spark.sparkContext
+    val tag = s"graft-qa-${java.util.UUID.randomUUID()}"
+    val built = new ConcurrentLinkedQueue[DataFrame]()
+    val firstError = new AtomicReference[Throwable]()
+    val names = tasks.distinct
+    val pool = Executors.newFixedThreadPool(names.size, (r: Runnable) => {
+      val th = new Thread(r, "qa-task"); th.setDaemon(true); th
+    })
+    try {
+      val work = names.map { t =>
+        pool.submit[(String, DataFrame)](() => {
+          sc.addJobTag(tag)
+          try {
+            val df = taskRegistry(t)(frames, datasetName)
+            built.add(df) // released below even if its sink fails
+            // a task built after another failed skips its sink: the run is lost
+            if (firstError.get == null) df.write.mode("overwrite").json(s"$outDir/${datasetName}_${t}_qa")
+            t -> df
+          } catch {
+            case e: Throwable =>
+              if (firstError.compareAndSet(null, e)) sc.cancelJobsWithTag(tag)
+              throw e
+          }
+        })
+      }
+      work.foreach(f => try f.get() catch { case _: ExecutionException => })
+      Option(firstError.get).foreach(e => throw e)
+      val perTask = work.map(_.get()).toMap
+      combined(perTask).write.mode("overwrite").json(s"$outDir/${datasetName}_all_qa_pairs")
+      val sum = summary(perTask, datasetName)
+      // run the summary aggregation ONCE: collect the handful of per-task
+      // rows, then write those rows
+      val rows = sum.collect()
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), sum.schema)
+        .coalesce(1).write.mode("overwrite").json(s"$outDir/${datasetName}_summary")
+      val counts = rows.map(r =>
+        r.getAs[String]("task_type") -> r.getAs[Long]("total_questions")).toMap
+      tasks.map(t => t -> counts.getOrElse(t, 0L)).toMap
+    } finally {
+      pool.shutdown()
+      built.forEach(df => QaPrimitives.release(df))
     }
-    combined(perTask).write.mode("overwrite").json(s"$outDir/${datasetName}_all_qa_pairs")
-    val sum = summary(perTask, datasetName)
-    // run the summary aggregation ONCE (it re-aggregates the whole combined
-    // union): collect the handful of per-task rows, then write those rows —
-    // this also replaces the old per-task re-read of the written JSON
-    val rows = sum.collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), sum.schema)
-      .coalesce(1).write.mode("overwrite").json(s"$outDir/${datasetName}_summary")
-    val counts = rows.map(r =>
-      r.getAs[String]("task_type") -> r.getAs[Long]("total_questions")).toMap
-    tasks.map(t => t -> counts.getOrElse(t, 0L)).toMap
   }
 }

@@ -9,11 +9,14 @@ import org.apache.spark.sql.expressions.Window
   *
   * Every task is per-frame work: explode → column math/UDF → re-assemble, so
   * the plans are shuffle-free except (a) the pair self-joins, which shuffle
-  * once on `image_id` and stay partition-local after that, and (b) the final
-  * contiguous QA-id window. All randomness (distractors, option shuffles,
-  * sampling) is md5-seeded on stable row identity — a documented improvement
-  * over the reference's unseeded `random` (SURVEY §7.4 item 3): identical
-  * output for any partitioning, cluster size, or rerun.
+  * once on `image_id` and stay partition-local after that, and (b) the
+  * contiguous QA ids, which range-partition and sort on each task's unique
+  * order key and number the rows from per-partition offsets
+  * ([[QaPrimitives.withContiguousIds]]: eager, it stores the sorted rows).
+  * All randomness (distractors, option shuffles, sampling) is md5-seeded on
+  * stable row identity — a documented improvement over the reference's
+  * unseeded `random` (SURVEY §7.4 item 3): identical output for any
+  * partitioning, cluster size, or rerun.
   *
   * Output schema matches [[FrameSchema.QaPair]]:
   * (id, question, answer, answer_type, options, metadata).
@@ -81,15 +84,7 @@ object QaTasks {
       b.getField("xl"), b.getField("yl"), b.getField("zl"),
       b.getField("pitch"), b.getField("yaw"), b.getField("roll"))
 
-  /** Contiguous per-task QA ids `{dataset}_{task}_{n:06d}` assigned in a
-    * stable total order (qa_base.py:54-65 / SURVEY W6) — distributed via
-    * range-partitioned zipWithIndex, not a single-partition global window.
-    */
-  private def assignIds(df: DataFrame, datasetName: String, task: String, order: Seq[Column]): DataFrame =
-    QaPrimitives.withContiguousIds(df, "id", s"${datasetName}_${task}_%06d", order)
-      .select(col("id"), col("question"), col("answer"), col("answer_type"), col("options"), col("metadata"))
-
-  import QaPrimitives.{distractor, shuffleToLetter}
+  import QaPrimitives.{assignQaIds, distractor, shuffleToLetter}
 
   // ------------------------------------------------------------------ tasks
 
@@ -143,7 +138,7 @@ object QaTasks {
           "category_counts" -> to_json(col("cat_counts")),
           "unit" -> lit("count")
         ))
-    assignIds(q, datasetName, "object_count", Seq(col("image_id")))
+    assignQaIds(q, datasetName, "object_count", Seq(col("image_id")))
   }
 
   /** object_3d_size — tasks/tasks_3d/object_3d_size_qa.py:28-100. */
@@ -177,7 +172,7 @@ object QaTasks {
           "answer_value" -> col("ans"),
           "unit" -> lit("centimeters")
         ))
-    assignIds(shuffled, datasetName, "object_3d_size", Seq(col("image_id"), col("bbox.category")))
+    assignQaIds(shuffled, datasetName, "object_3d_size", Seq(col("image_id"), col("bbox.category")))
   }
 
   /** cam_obj_distance — tasks/tasks_3d/cam_obj_distance_qa.py:28-100;
@@ -205,7 +200,7 @@ object QaTasks {
           "unit" -> lit("meters"),
           "uses_extrinsics" -> col("camera").getField("extrinsics").isNotNull
         ))
-    assignIds(q, datasetName, "cam_obj_distance", Seq(col("image_id"), col("bbox.category")))
+    assignQaIds(q, datasetName, "cam_obj_distance", Seq(col("image_id"), col("bbox.category")))
   }
 
   /** obj_obj_distance — tasks/tasks_3d/obj_obj_distance_qa.py:28-100 (J8
@@ -237,7 +232,7 @@ object QaTasks {
           "distance_meters" -> round(col("dist"), 1),
           "unit" -> lit("meters")
         ))
-    assignIds(q, datasetName, "obj_obj_distance", Seq(col("image_id"), col("i"), col("j")))
+    assignQaIds(q, datasetName, "obj_obj_distance", Seq(col("image_id"), col("i"), col("j")))
   }
 
   /** obj_obj_rel_pos — tasks/tasks_3d/obj_obj_rel_pos_qa.py:28-140 over
@@ -298,7 +293,7 @@ object QaTasks {
           "center_distance" -> round(col("rp").getField("_4"), 3),
           "min_distance" -> round(col("min_dist"), 3)
         ))
-    assignIds(q, datasetName, "obj_obj_rel_pos", Seq(col("image_id"), col("i"), col("j")))
+    assignQaIds(q, datasetName, "obj_obj_rel_pos", Seq(col("image_id"), col("i"), col("j")))
   }
 
   /** cam_obj_rel_dist — tasks/tasks_3d/cam_obj_rel_dist_qa.py: distances
@@ -424,6 +419,6 @@ object QaTasks {
     val unioned = v1.selectExpr(cols: _*)
       .unionByName(v2.selectExpr(cols: _*))
       .unionByName(v3.selectExpr(cols: _*))
-    assignIds(unioned, datasetName, "cam_obj_rel_dist", Seq(col("image_id"), col("ord1"), col("ord2")))
+    assignQaIds(unioned, datasetName, "cam_obj_rel_dist", Seq(col("image_id"), col("ord1"), col("ord2")))
   }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.expressions.Window
   * three raw encodings are folded at read time (SURVEY §7.4 item 5).
   */
 object QaTasks2D {
-  import QaPrimitives.{distractor, shuffleToLetter}
+  import QaPrimitives.{assignQaIds, distractor, shuffleToLetter}
 
   val MinBboxArea = 100.0 // F5: skip boxes under 100 px² (bbox_2d_size_qa.py:71-73)
   val CountBounds = (1, 20) // F6: frames with 1..20 objects (object_count_2d_qa.py:61-63)
@@ -53,10 +53,6 @@ object QaTasks2D {
   private def areaOf(b: Column): Column =
     coalesce(b.getField("area"), b.getField("w") * b.getField("h"))
 
-  private def assignIds(df: DataFrame, datasetName: String, task: String, order: Seq[Column]): DataFrame =
-    QaPrimitives.withContiguousIds(df, "id", s"${datasetName}_${task}_%06d", order)
-      .select(col("id"), col("question"), col("answer"), col("answer_type"), col("options"), col("metadata"))
-
   /** object_count_2d — tasks_2d/object_count_2d_qa.py: per-frame category
     * counts over 2D boxes, `unknown` excluded (F4), numerical answer.
     */
@@ -77,7 +73,7 @@ object QaTasks2D {
         "count" -> col("cnt"),
         "unit" -> lit("count")
       ))
-    assignIds(q, datasetName, "object_count_2d", Seq(col("image_id"), col("readable")))
+    assignQaIds(q, datasetName, "object_count_2d", Seq(col("image_id"), col("readable")))
   }
 
   /** bbox_2d_size — tasks_2d/bbox_2d_size_qa.py: first box per category
@@ -114,7 +110,7 @@ object QaTasks2D {
         "answer_value" -> col("ans"),
         "unit" -> lit("pixels")
       ))
-    assignIds(shuffled, datasetName, "bbox_2d_size", Seq(col("image_id"), col("bbox.category")))
+    assignQaIds(shuffled, datasetName, "bbox_2d_size", Seq(col("image_id"), col("bbox.category")))
   }
 
   /** object_2d_size — tasks_2d/object_2d_size_qa.py: first box per category,
@@ -146,6 +142,6 @@ object QaTasks2D {
         "answer_value" -> col("ans"),
         "unit" -> lit("square_pixels")
       ))
-    assignIds(shuffled, datasetName, "object_2d_size", Seq(col("image_id"), col("bbox.category")))
+    assignQaIds(shuffled, datasetName, "object_2d_size", Seq(col("image_id"), col("bbox.category")))
   }
 }

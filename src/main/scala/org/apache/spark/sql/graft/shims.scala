@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.StructType
 
 /** Bridge between custom Catalyst expressions and the public Column API.
   * Spark 4 wraps columns in ColumnNodes; the classic converter is
@@ -22,8 +25,7 @@ object shims {
       info: ExpressionInfo,
       builder: Seq[Expression] => Expression
   ): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
+    classic(spark).sessionState.functionRegistry
       .registerFunction(FunctionIdentifier(name), info, builder)
 
   /** Drain the async listener bus — `SparkContext.listenerBus` is
@@ -32,4 +34,20 @@ object shims {
     */
   def waitListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** A DataFrame over catalyst rows that conform to `schema`, with no
+    * `Row` conversion (`internalCreateDataFrame` is `private[sql]`).
+    */
+  def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    classic(spark).internalCreateDataFrame(rows, schema)
+
+  /** Runs `body` with the session's SQL confs set as local properties of
+    * the calling thread, so the tasks of any job `body` submits outside a
+    * Dataset action read them instead of the defaults.
+    */
+  def withSQLConfPropagated[T](spark: SparkSession)(body: => T): T =
+    SQLExecution.withSQLConfPropagated(classic(spark))(body)
+
+  private def classic(spark: SparkSession): org.apache.spark.sql.classic.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 }

@@ -2,6 +2,10 @@ package graft.vlm
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, lit, raise_error}
+import org.apache.spark.sql.graft.shims
+
 /** End-to-end: write a unified-JSON mini-corpus to disk, ingest with the
   * declared schema (S1), run the full pipeline (K2–K4), read outputs back.
   */
@@ -48,8 +52,6 @@ class PipelineSpec extends SparkSpec {
     // SparkRuntimeException or job-wrapped SparkException depending on
     // where the task fails — the contract is the loud malformed message)
     val e = intercept[Exception](Ingest.readFramesStrict(spark, dir).count())
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(e).exists(_.toLowerCase.contains("malformed")), msgs(e).mkString(" | "))
 
     // ...accepts it once the corrupt file is quarantined (the multi-line
@@ -71,10 +73,11 @@ class PipelineSpec extends SparkSpec {
     assert(Ingest.readFramesStrict(spark, dir, limit = Some(0)).count() == 0)
   }
 
-  test("ingest → generate → sinks round trip") {
+  /** Two frame docs in nested per-scene dirs + a summary.json to exclude;
+    * returns the corpus root.
+    */
+  private def writeCorpus(): String = {
     val dir = Files.createTempDirectory("graft_corpus").toString
-    val out = Files.createTempDirectory("graft_qa").toString
-    // two frame docs in nested per-scene dirs + a summary.json to exclude
     val sceneDir = new java.io.File(s"$dir/testds/scene0"); sceneDir.mkdirs()
     def doc(imageId: String, boxes: String): String =
       s"""{"dataset":"testds","split":"s0","image_id":"$imageId","scene_id":"scene0",
@@ -91,7 +94,15 @@ class PipelineSpec extends SparkSpec {
     Files.writeString(new java.io.File(sceneDir, "f2.json").toPath,
       doc("f2", s"${b3d("sofa", 0, 2)}"))
     Files.writeString(new java.io.File(sceneDir, "summary.json").toPath, """{"not":"a frame"}""")
+    dir
+  }
 
+  private def msgs(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+
+  test("ingest → generate → sinks round trip") {
+    val dir = writeCorpus()
+    val out = Files.createTempDirectory("graft_qa").toString
     val frames = Ingest.readFrames(spark, dir)
     assert(frames.count() == 2) // summary.json excluded
     assert(frames.columns.contains("_source_file"))
@@ -108,11 +119,47 @@ class PipelineSpec extends SparkSpec {
     val summary = spark.read.json(s"$out/testds_summary").collect()
     assert(summary.map(_.getAs[Long]("total_questions")).sum == counts.values.sum)
 
+    // the concurrent run wrote, ids included, what serial generate returns,
+    // and the combined output holds each task's rows unchanged
+    QaPipeline.generate(frames, "testds").foreach { case (t, df) =>
+      def sorted(rows: Array[Row]) = rows.sortBy(_.getString(0)).toSeq
+      val expected = sorted(df.collect())
+      QaPrimitives.release(df)
+      val written = sorted(spark.read.schema(df.schema).json(s"$out/testds_${t}_qa").collect())
+      assert(written == expected, t)
+      val inCombined = spark.read.schema(df.schema.add("task_type", "string"))
+        .json(s"$out/testds_all_qa_pairs").filter(col("task_type") === t).drop("task_type").collect()
+      assert(sorted(inCombined) == written, t)
+    }
+
     // K1: partitioned snapshot write round-trips
     val snap = Files.createTempDirectory("graft_snap").toString
     Ingest.writeFrames(frames, snap)
     val back = Ingest.readFrames(spark, snap)
     assert(back.count() == 2)
+  }
+
+  test("run releases the rows it stores, and on a task failure stops its jobs and rethrows") {
+    val sc = spark.sparkContext
+    val frames = Ingest.readFrames(spark, writeCorpus())
+    // someone else's stored RDD, which run must leave alone
+    val canary = sc.parallelize(1 to 4).persist()
+    canary.count()
+    val before = sc.getPersistentRDDs.keySet
+    QaPipeline.run(spark, frames, "testds", Files.createTempDirectory("graft_qa").toString)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+
+    // the 2D boxes raise an error: object_count_2d fails, the 3D tasks do not
+    val boxes2d = frames.schema("bounding_boxes_2d").dataType
+    val broken = frames.withColumn("bounding_boxes_2d", raise_error(lit("boom2d")).cast(boxes2d))
+    val e = intercept[Exception](QaPipeline.run(spark, broken, "testds",
+      Files.createTempDirectory("graft_qa").toString, Seq("object_count", "obj_obj_distance", "object_count_2d")))
+    assert(msgs(e).exists(_.contains("boom2d")), msgs(e).mkString(" | "))
+    shims.waitListenerBus(spark) // the status tracker reads listener events
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(sc.getPersistentRDDs.contains(canary.id))
+    canary.unpersist()
   }
 
   test("limit and bbox-availability gate (F1/F17)") {

@@ -148,4 +148,26 @@ class QaTasksSpec extends SparkSpec {
       assert(a.sameElements(b), s"task $name not deterministic")
     }
   }
+
+  test("withContiguousIds runs its jobs under the session's SQL confs, from any thread") {
+    import org.apache.spark.sql.functions._
+    // a duplicate map key is legal under the session's LAST_WIN and an
+    // error under the default policy. The map is built in the map stage of
+    // the range shuffle, which withContiguousIds itself runs, and inside a
+    // lambda: Spark evaluates that without generated code, so the policy is
+    // read from the task's SQL conf, not captured on the driver
+    val dupMap = map(lit("k"), col("id"), lit("k"), col("id") + 1)
+    val df = spark.range(0, 200, 1, 4)
+      .select(col("id"), element_at(transform(array(lit(0)), _ => dupMap), 1).as("m"))
+    def numbered(): Seq[(String, Long)] = {
+      val out = QaPrimitives.withContiguousIds(df, "qid", "q%03d", Seq(col("id")))
+      try out.select(col("qid"), col("m")("k")).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      finally QaPrimitives.release(out)
+    }
+    val expected = (0 until 200).map(i => (f"q$i%03d", i + 1L))
+    assert(numbered() == expected)
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try assert(pool.submit[Seq[(String, Long)]](() => numbered()).get() == expected)
+    finally pool.shutdown()
+  }
 }

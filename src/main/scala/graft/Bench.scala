@@ -179,6 +179,7 @@ object Bench {
       // exceed the 25-field default and WARN-spam plan truncation notices
       .config("spark.sql.debug.maxToStringFields", "2000")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.statusStoreCaps)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // late-register graft extensions (SQL functions + RangeJoinRewrite) so

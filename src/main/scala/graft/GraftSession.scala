@@ -138,6 +138,19 @@ object GraftSession {
   def preferSortMergeJoin: String =
     sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false")
 
+  /** Bounds on the driver's status store. With the UI off, Spark still
+    * keeps up to 1000 SQL executions (plan graphs, plan strings, metrics)
+    * and 1000 jobs and stages for a UI nobody reads — about 6 MB of heap
+    * per curation-funnel pass, growing for the life of a long-running
+    * session. Nothing in the engine reads finished executions, jobs or
+    * stages back (live ones are never evicted), so a small fixed window
+    * suffices. Applied by every session of the engine and of its tests.
+    */
+  val statusStoreCaps: Map[String, String] = Map(
+    "spark.sql.ui.retainedExecutions" -> "10",
+    "spark.ui.retainedJobs" -> "10",
+    "spark.ui.retainedStages" -> "10")
+
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession.Builder = {
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // Size-adaptive shuffle parallelism, BY STAGE INPUT BYTES (see
@@ -174,6 +187,7 @@ object GraftSession {
       // reads as a long; Tables/queries convert explicitly where needed
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(statusStoreCaps)
   }
 
   def getOrCreate(): SparkSession = {

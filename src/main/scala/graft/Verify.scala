@@ -22,6 +22,7 @@ object Verify {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.debug.maxToStringFields", "2000")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.statusStoreCaps)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // late-register graft extensions (SQL functions + RangeJoinRewrite);

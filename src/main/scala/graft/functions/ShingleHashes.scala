@@ -20,9 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Long digests keep downstream work integer-only: Jaccard intersects
   * longs, and minhash slices are bit shifts ([[MinHash8]]).
   *
-  * Tokenization matches `regexp_extract_all(lower(text), '[a-z0-9]+')`:
-  * the byte-level scan is equivalent because UTF-8 continuation/lead bytes
-  * never collide with ASCII `[a-z0-9]`.
+  * Tokenization matches `regexp_extract_all(lower(text), '[a-z0-9]+')`
+  * through the tokenizer's byte scanner ([[AlnumTokens.runs]]).
   */
 case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
 
@@ -49,40 +48,28 @@ object ShingleHashes {
   /** Static entry point shared by interpreted eval and generated code. */
   def compute(text: UTF8String, n: Int): ArrayData = {
     // mirror lower(text) exactly (UTF8String handles non-ASCII lowering)
-    val bytes = text.toLowerCase.getBytes
-    // tokenize: ASCII [a-z0-9] runs
-    val tokens = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)] // (start, end)
-    var i = 0
-    while (i < bytes.length) {
-      val b = bytes(i)
-      if ((b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')) {
-        val start = i
-        while (i < bytes.length && {
-          val c = bytes(i); (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-        }) i += 1
-        tokens += ((start, i))
-      } else i += 1
-    }
+    val lowered = text.toLowerCase
+    val bytes = lowered.getBytes
+    // tokens: the ASCII [a-z0-9] runs, token t = bytes [runs(2t), runs(2t+1))
+    val runs = AlnumTokens.runs(lowered)
+    val nTokens = runs.length / 2
     // n-token windows, space-joined; window starts 0..max(len-n, 0)
     // (matches shingles(): at least one window even when len < n)
-    val nWindows = math.max(tokens.length - (n - 1), 1)
+    val nWindows = math.max(nTokens - (n - 1), 1)
     val md = java.security.MessageDigest.getInstance("MD5")
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
-    val sb = new java.lang.StringBuilder(64)
     var w = 0
     while (w < nWindows) {
-      sb.setLength(0)
+      md.reset()
+      // the window's UTF-8 bytes: tokens are ASCII, joined by ' '
       var j = w
-      val last = math.min(w + n, tokens.length)
+      val last = math.min(w + n, nTokens)
       while (j < last) {
-        if (j > w) sb.append(' ')
-        val (s, e) = tokens(j)
-        var k = s
-        while (k < e) { sb.append(bytes(k).toChar); k += 1 }
+        if (j > w) md.update(' '.toByte)
+        md.update(bytes, runs(2 * j), runs(2 * j + 1) - runs(2 * j))
         j += 1
       }
-      md.reset()
-      val digest = md.digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val digest = md.digest()
       // first 15 hex digits = high 60 bits of the first 8 digest bytes,
       // matching conv(substring(md5(x), 1, 15), 16, 10)
       var h60 = 0L

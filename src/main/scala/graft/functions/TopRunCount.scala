@@ -9,10 +9,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Count of the most frequent element of an `array<string>` in ONE codegen
   * pass: sort a scratch copy (any total order groups equal values), then
-  * take the longest equal-adjacent run. The repetition-quality filter's hot
-  * path (CurationQueries t7): the `sort_array` + `aggregate` HOF chain it
-  * replaces interprets a lambda per element and allocates an intermediate
-  * sorted array per row — this is a single tight JVM loop per document.
+  * take the longest equal-adjacent run — a single tight JVM loop per row
+  * where a `sort_array` + `aggregate` HOF chain would interpret a lambda
+  * per element and allocate an intermediate sorted array. Over built
+  * bigram strings it is the reference semantics of [[TopBigramCount]]
+  * (and that kernel's fallback path for arrays its ids cannot represent).
   * Null elements are ignored; an empty (or all-null) array yields 0.
   */
 case class TopRunCount(child: Expression) extends UnaryExpression {

@@ -42,6 +42,18 @@ package object functions {
   def topRunCount(arr: Column): Column =
     shims.column(TopRunCount(shims.expression(arr)))
 
+  /** ASCII `[a-z0-9]` runs of an already-lowered string column, one byte
+    * scan — `regexp_extract_all(lowered, '[a-z0-9]+', 0)` exactly.
+    */
+  def alnumTokens(lowered: Column): Column =
+    shims.column(AlnumTokens(shims.expression(lowered)))
+
+  /** Count of the most frequent word bigram of a token array, without
+    * building the bigram strings — `top_run_count(shingles(toks, 2))`.
+    */
+  def topBigramCount(toks: Column): Column =
+    shims.column(TopBigramCount(shims.expression(toks)))
+
   /** 8 oriented-box vertices from a length-9 array (x..roll). */
   def boxVertices(fields: Column): Column =
     shims.column(BoxVertices(shims.expression(fields)))

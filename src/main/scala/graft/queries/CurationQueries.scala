@@ -55,14 +55,14 @@ object CurationQueries extends QueryModule {
   def curationSignals(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs
       .select(col("doc_id"), col("source"), col("text"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), col("source"), col("text"), col("toks"),
-        shingles(col("toks"), 2).as("bg"))
       .select(
         col("doc_id"), col("source"), col("text"),
         size(col("toks")).cast("long").as("n_tokens"),
         (size(col("toks")) - size(array_distinct(col("toks")))).cast("long").as("n_dup_tokens"),
-        graft.functions.topRunCount(col("bg")).as("top_bigram_n"),
-        size(col("bg")).cast("long").as("n_bigrams"),
+        // top_run_count(shingles(toks, 2)) and size(shingles(toks, 2)),
+        // without building the bigram strings
+        graft.functions.topBigramCount(col("toks")).as("top_bigram_n"),
+        greatest(size(col("toks")) - 1, lit(1)).cast("long").as("n_bigrams"),
         sampleBucket.as("bucket"))
 
   /** Seeded per-doc sample bucket in [0, 1000) — the mixing knob's
@@ -608,14 +608,14 @@ object CurationQueries extends QueryModule {
       (s, d) => {
         // Gopher-style repetition signals per document: duplicate-token
         // fraction and the mass of the single most frequent bigram. The
-        // bigram mode count is a single fused codegen pass per row
-        // ([[graft.functions.TopRunCount]]: sort a scratch copy, longest
-        // equal-adjacent run), so the whole filter is one shuffle-free scan
-        // (the explode → groupBy(doc, bg) alternative shuffles every
-        // bigram; the oracle states the semantics that way, the plan here
-        // doesn't pay for it). `toks` and `bg` are materialized in their
-        // own projections so the optimizer doesn't inline the expensive
-        // arrays into every consumer.
+        // bigram mode count is a single fused codegen pass per row over the
+        // token array ([[graft.functions.TopBigramCount]]: integer token
+        // ids, sorted bigram keys, longest equal run), so the whole filter
+        // is one shuffle-free scan (the explode → groupBy(doc, bg)
+        // alternative shuffles every bigram; the oracle states the
+        // semantics that way, the plan here doesn't pay for it). `toks` is
+        // materialized in its own projection so the optimizer doesn't
+        // inline the tokenizer into every consumer.
         // signals and the keep gate come from the shared curationSignals/
         // qualityGate — the thresholds live in ONE place, so retuning the
         // production curation stage retunes this audit query too (and its

@@ -34,11 +34,14 @@ object PipelineFns {
     java.lang.Long.parseLong(hex.substring(0, 15), 16)
   }
 
-  /** Lower-cased alnum tokens of the `text` column. Matches the oracle's
-    * regexp_extract_all(lower(text), '[a-z0-9]+') exactly.
+  /** Lower-cased alnum tokens of the `text` column: the
+    * [[graft.functions.AlnumTokens]] byte-scan kernel over Spark's own
+    * `lower(text)`, so case mapping stays Spark's. Matches the oracle's
+    * regexp_extract_all(lower(text), '[a-z0-9]+') exactly, data type
+    * included.
     */
   def tokens(text: Column): Column =
-    regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0))
+    graft.functions.alnumTokens(lower(text))
 
   val tokensSql = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 

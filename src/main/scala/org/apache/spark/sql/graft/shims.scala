@@ -48,6 +48,12 @@ object shims {
   def withSQLConfPropagated[T](spark: SparkSession)(body: => T): T =
     SQLExecution.withSQLConfPropagated(classic(spark))(body)
 
+  /** Number of SQL executions the driver's status store holds
+    * (`sharedState` is only on the classic session).
+    */
+  def statusStoreExecutions(spark: SparkSession): Long =
+    classic(spark).sharedState.statusStore.executionsCount()
+
   private def classic(spark: SparkSession): org.apache.spark.sql.classic.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 }

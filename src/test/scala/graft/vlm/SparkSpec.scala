@@ -26,6 +26,7 @@ object SparkSpec {
       // tolerate nanos-encoded fixtures (Tables.toEpochMicros normalizes)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(graft.GraftSession.statusStoreCaps)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

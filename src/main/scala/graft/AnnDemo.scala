@@ -44,9 +44,7 @@ object AnnDemo {
     val workDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-ann-demo").toString)
     val scale = args.lift(2).map(_.toInt).getOrElse(30)
-    GraftSession.quietStartupWarnings()
     val spark = GraftSession.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import graft.queries.IvfCentroids
     import graft.layout.Layout
 

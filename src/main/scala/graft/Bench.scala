@@ -155,36 +155,9 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    GraftSession.quietStartupWarnings()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // sort-writer alignment (see GraftSession.bypassMergeThreshold): the
-      // bypass writer's M×R file churn dominated the verify family at ×10
-      .config("spark.shuffle.sort.bypassMergeThreshold", GraftSession.bypassMergeThreshold)
-      // planner may pick shuffled-hash join when it fits (see GraftSession)
-      .config("spark.sql.join.preferSortMergeJoin", GraftSession.preferSortMergeJoin)
-      .config("spark.sql.adaptive.enabled", "true")
-      // stages start at the count the CORPUS warrants (1× at sf0.1, up to
-      // 4× at synthesized capacity corpora — same rule as GraftSession):
-      // the capacity sweep (bench_sf1_100tb) rides the spill fix, the
-      // demo sweep keeps 1× scheduling overhead on sub-second queries
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        GraftSession.initialPartitions(GraftSession.dirBytes(sfDir), cpus.toInt).toString)
-      // wide generated plans (128-slice signatures at the capacity preset)
-      // exceed the 25-field default and WARN-spam plan truncation notices
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.statusStoreCaps)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // late-register graft extensions (SQL functions + RangeJoinRewrite) so
-    // benchmarks run the same plans GraftSession produces
-    GraftExtensions.install(spark)
+    val sfDir = GraftSession.defaultSfDir
+    // the product session, its start size fitted to the corpus benched
+    val spark = GraftSession.getOrCreate(sfDir)
     // warm up codegen/JIT and file listing so the first measured query
     // doesn't absorb one-time JVM costs
     Seq("documents", "embeddings", "lineitem", "events").foreach { t =>

@@ -12,9 +12,7 @@ object DriverProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    GraftSession.quietStartupWarnings()
     val spark = GraftSession.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // A/B knobs for attributing in-execution driver overhead
     sys.env.get("SPARK_GRAFT_PROBE_NOAQE").foreach(_ =>
       spark.conf.set("spark.sql.adaptive.enabled", "false"))
@@ -23,8 +21,8 @@ object DriverProbe {
     sys.env.get("SPARK_GRAFT_PROBE_PLANLEN").foreach(v =>
       spark.conf.set("spark.sql.maxPlanStringLength", v))
     // NOTE: spark.shuffle.sort.bypassMergeThreshold is a STATIC conf — the
-    // probe must re-create the session to change it, so it is applied via
-    // GraftSession builder env instead (SPARK_GRAFT_BYPASS_THRESHOLD).
+    // probe cannot change it on a running session; A/B it by editing
+    // GraftSession.conf.
     def t[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime; val r = f
       println(f"[probe]   $label: ${(System.nanoTime - t0) / 1e9}%.2f s"); r

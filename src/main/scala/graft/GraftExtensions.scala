@@ -7,59 +7,23 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions installer: registers graft's custom expressions
   * for SQL use (`SELECT simhash56(hashes) ...`) and the
-  * [[graft.plans.RangeJoinRewrite]] optimizer rule. Enable with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` — wired in
-  * [[GraftSession]]. The DataFrame API ([[graft.functions]]) works without
-  * registration (and without the rule, marked range joins still compute
-  * the same result on the unrewritten plan).
+  * [[graft.plans.RangeJoinRewrite]] optimizer rule. Every session
+  * [[GraftSession]] builds carries it in `spark.sql.extensions`, which
+  * binds only when a session is created. The DataFrame API
+  * ([[graft.functions]]) works without registration (and without the rule,
+  * marked range joins still compute the same result on the unrewritten
+  * plan).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.registry.foreach(ext.injectFunction)
+    def function(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+    function("simhash56", classOf[SimHash56])(c => SimHash56(c.head))
+    function("long_dot", classOf[LongDot])(c => LongDot(c(0), c(1)))
+    function("quantize_vec", classOf[QuantizeVec])(c => QuantizeVec(c(0), intArg(c(1))))
+    function("shingle_hashes", classOf[ShingleHashes])(c => ShingleHashes(c(0), intArg(c(1))))
+    function("z_interleave", classOf[ZInterleave])(c => ZInterleave(c(0), c(1)))
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
-  }
-}
-
-object GraftExtensions {
-  private val registry: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (
-      FunctionIdentifier("simhash56"),
-      new ExpressionInfo(classOf[SimHash56].getName, "simhash56"),
-      (children: Seq[Expression]) => SimHash56(children.head)
-    ),
-    (
-      FunctionIdentifier("long_dot"),
-      new ExpressionInfo(classOf[LongDot].getName, "long_dot"),
-      (children: Seq[Expression]) => LongDot(children(0), children(1))
-    ),
-    (
-      FunctionIdentifier("quantize_vec"),
-      new ExpressionInfo(classOf[QuantizeVec].getName, "quantize_vec"),
-      (children: Seq[Expression]) =>
-        QuantizeVec(children(0), children(1).eval().asInstanceOf[Number].intValue())
-    ),
-    (
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (children: Seq[Expression]) =>
-        ShingleHashes(children(0), children(1).eval().asInstanceOf[Number].intValue())
-    ),
-    (
-      FunctionIdentifier("z_interleave"),
-      new ExpressionInfo(classOf[ZInterleave].getName, "z_interleave"),
-      (children: Seq[Expression]) => ZInterleave(children(0), children(1))
-    )
-  )
-
-  /** Late registration onto an already-created session (extensions config
-    * only applies at session build time).
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    registry.foreach { case (id, info, builder) =>
-      org.apache.spark.sql.graft.shims.registerFunction(spark, id.funcName, info, builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RangeJoinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RangeJoinRewrite
   }
 }

@@ -3,12 +3,15 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Session factory with the settings this engine assumes.
+/** The one session factory: every main, Bench, Verify and the test
+  * session get their confs from [[GraftSession.conf]].
   *
-  * Tuned for the driver harness (single-JVM `local[N]`) but every knob is
+  * Tuned for single-JVM `local[N]` runs, N = [[GraftSession.cores]]
+  * (`SPARK_GRAFT_CPUS`, else all available processors), but every knob is
   * cluster-sane: AQE on (runtime shuffle-partition coalescing + skew-join
   * splitting), shuffle partitions sized to cores rather than the 200
-  * default, UTC session time zone for oracle parity.
+  * default, the start size sized to the corpus, UTC session time zone for
+  * oracle parity.
   */
 object GraftSession {
 
@@ -19,7 +22,7 @@ object GraftSession {
     * block, and Spark reinitializes log4j2 during session creation, wiping
     * the level before a lazy classload would get there.
     */
-  def quietStartupWarnings(): Unit = {
+  private def quietStartupWarnings(): Unit = {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.hadoop.util.NativeCodeLoader", org.apache.logging.log4j.Level.ERROR)
     try Class.forName("org.apache.hadoop.util.NativeCodeLoader")
@@ -111,48 +114,71 @@ object GraftSession {
     n
   }
 
-  /** Shuffle-writer selection threshold (spark.shuffle.sort.bypassMergeThreshold,
-    * Spark default 200). The bypass-merge writer opens R partition files per
-    * MAP TASK; at this engine's shuffle geometry (R = 32–128 reduce
-    * partitions × as many map tasks) that is thousands of file
-    * opens+streams per shuffle, and r18 thread-sampling showed
-    * DiskBlockObjectWriter.initialize/createTempShuffleBlock dominating the
-    * verify family's runtime (d6 ×10 warm: 4.2 s → 1.8 s with the sort
-    * writer). At 100 TB R is far above any threshold, so the SORT writer is
-    * what production runs anyway — a low threshold makes demo-scale
-    * shuffles exercise the same writer instead of a worse one production
-    * never uses. 16 keeps genuinely tiny fan-outs (R ≤ 16: scalar/bounded
-    * shuffles) on the cheap bypass path. Env-overridable for A/Bs.
-    */
-  def bypassMergeThreshold: String =
-    sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "16")
-
-  /** Let the planner pick shuffled-hash join when its size conditions are
-    * met (spark.sql.join.preferSortMergeJoin=false — the guide's §9
-    * baseline): SHJ skips both sides' sorts and Spark only chooses it when
-    * one side's per-partition build fits memory, so sort-merge remains the
-    * fallback for unbounded sides. Measured r19 (warm A/B, same window):
-    * j7 1.55 → 1.37, j4 0.96 → 0.87, j8 1.09 → 1.02 at sf0.1.
-    * Env-overridable for A/Bs.
-    */
-  def preferSortMergeJoin: String =
-    sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false")
-
   /** Bounds on the driver's status store. With the UI off, Spark still
     * keeps up to 1000 SQL executions (plan graphs, plan strings, metrics)
     * and 1000 jobs and stages for a UI nobody reads — about 6 MB of heap
     * per curation-funnel pass, growing for the life of a long-running
     * session. Nothing in the engine reads finished executions, jobs or
     * stages back (live ones are never evicted), so a small fixed window
-    * suffices. Applied by every session of the engine and of its tests.
+    * suffices.
     */
   val statusStoreCaps: Map[String, String] = Map(
     "spark.sql.ui.retainedExecutions" -> "10",
     "spark.ui.retainedJobs" -> "10",
     "spark.ui.retainedStages" -> "10")
 
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession.Builder = {
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+  /** Local cores a session runs on: `SPARK_GRAFT_CPUS`, else every
+    * processor the JVM may use.
+    */
+  def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Corpus a session is sized for when its caller names none. */
+  def defaultSfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Value of the boolean env knob `name` (`raw` is its setting, if any;
+    * unset is false): exactly `true` or `false`, else the session refuses
+    * to start — Spark's boolean confs reject "1" only later, inside
+    * session-state construction, where the error no longer names the
+    * variable.
+    */
+  def envFlag(name: String, raw: Option[String]): Boolean = raw match {
+    case None | Some("false") => false
+    case Some("true") => true
+    case Some(other) => sys.error(s"$name must be 'true' or 'false', got '$other'")
+  }
+
+  /** Every conf a graft session runs with, for `cores` local cores and the
+    * corpus at `sfDir`. The product mains, Bench, Verify and the test
+    * session all start from this one map.
+    */
+  def conf(cores: Int, sfDir: String): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    // registers graft's custom expressions for SQL use (simhash56, …) and
+    // the RangeJoinRewrite optimizer rule
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    // Shuffle-writer selection threshold (Spark default 200). The
+    // bypass-merge writer opens R partition files per MAP TASK; at this
+    // engine's shuffle geometry (R = 32–128 reduce partitions × as many map
+    // tasks) that is thousands of file opens+streams per shuffle, and r18
+    // thread-sampling showed DiskBlockObjectWriter.initialize/
+    // createTempShuffleBlock dominating the verify family's runtime (d6 ×10
+    // warm: 4.2 s → 1.8 s with the sort writer). At 100 TB R is far above
+    // any threshold, so the SORT writer is what production runs anyway — a
+    // low threshold makes demo-scale shuffles exercise the same writer
+    // instead of a worse one production never uses. 16 keeps genuinely tiny
+    // fan-outs (R ≤ 16: scalar/bounded shuffles) on the cheap bypass path.
+    "spark.shuffle.sort.bypassMergeThreshold" -> "16",
+    // Let the planner pick shuffled-hash join when its size conditions are
+    // met: SHJ skips both sides' sorts and Spark
+    // only chooses it when one side's per-partition build fits memory, so
+    // sort-merge remains the fallback for unbounded sides. Measured r19
+    // (warm A/B, same window): j7 1.55 → 1.37, j4 0.96 → 0.87, j8 1.09 →
+    // 1.02 at sf0.1. SPARK_GRAFT_PREFER_SMJ=true is the A/B control.
+    "spark.sql.join.preferSortMergeJoin" ->
+      envFlag("SPARK_GRAFT_PREFER_SMJ", sys.env.get("SPARK_GRAFT_PREFER_SMJ")).toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     // Size-adaptive shuffle parallelism, BY STAGE INPUT BYTES (see
     // initialPartitions): stages start at an input-sized core multiple and
     // AQE coalesces small ones back down, so a wide stage's per-task
@@ -160,41 +186,40 @@ object GraftSession {
     // count, while small-corpus sessions keep the 1× start whose absence
     // cost sub-second queries 2× in scheduling overhead (round-14 lesson:
     // a FLAT 2× start fixed the ×10 spill but taxed every demo-scale
-    // query). SPARK_GRAFT_INIT_MULT stays as an explicit override for
-    // experiments; corpus-switching mains re-size via sizeShuffleFor.
-    val initial = sys.env.get("SPARK_GRAFT_INIT_MULT") match {
-      case Some(m) => m.toInt * cores
-      case None => initialPartitions(
-        dirBytes(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")), cores)
-    }
-    SparkSession
-      .builder()
-      .master(master)
+    // query). Corpus-switching mains re-size via sizeShuffleFor.
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+      initialPartitions(dirBytes(sfDir), cores).toString,
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    // QA metadata maps follow Python-dict last-wins collision semantics
+    "spark.sql.mapKeyDedupPolicy" -> "LAST_WIN",
+    // the testdata parquet uses TIMESTAMP(NANOS), which Spark only reads as
+    // a long; Tables/queries convert explicitly where needed
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // display only: wide generated plans (128-slice signatures at the
+    // capacity preset) exceed the 25-field default and WARN-spam plan
+    // truncation notices
+    "spark.sql.debug.maxToStringFields" -> "2000",
+    "spark.ui.enabled" -> "false",
+    // Spark's INFO chatter buries the engine's own stderr lines
+    "spark.log.level" -> "WARN") ++ statusStoreCaps
+
+  /** A builder carrying [[conf]] on `local[cores]`, the one place a graft
+    * session is configured: callers add only deployment paths (a
+    * warehouse dir) or a test app name. Silences the startup WARN first,
+    * since the session is created right after.
+    */
+  def builder(cores: Int = GraftSession.cores, sfDir: String = defaultSfDir): SparkSession.Builder = {
+    quietStartupWarnings()
+    SparkSession.builder()
+      .master(s"local[$cores]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // registers graft's custom expressions for SQL use (simhash56, …)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.shuffle.sort.bypassMergeThreshold", bypassMergeThreshold)
-      .config("spark.sql.join.preferSortMergeJoin", preferSortMergeJoin)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", initial.toString)
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // QA metadata maps follow Python-dict last-wins collision semantics
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      // the driver's testdata parquet uses TIMESTAMP(NANOS), which Spark only
-      // reads as a long; Tables/queries convert explicitly where needed
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(statusStoreCaps)
+      .config(conf(cores, sfDir))
   }
 
-  def getOrCreate(): SparkSession = {
-    val spark = builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  /** The session every main runs in, sized for the corpus at `sfDir`. */
+  def getOrCreate(sfDir: String = defaultSfDir): SparkSession =
+    builder(sfDir = sfDir).getOrCreate()
 }
 
 /** Accessors for the driver-provided TPC-H-ish test tables

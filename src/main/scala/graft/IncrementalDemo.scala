@@ -100,15 +100,12 @@ object IncrementalDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(3)
     val workDir = args.lift(2).getOrElse("/tmp/graft_incremental")
-    GraftSession.quietStartupWarnings()
     val spark = GraftSession.builder()
-      .config("spark.sql.debug.maxToStringFields", "2000")
       // the bucketed claim-store tables below live in the session catalog
       // with external data paths under workDir; the warehouse dir only
       // backs the default database's metadata and must stay out of the repo
       .config("spark.sql.warehouse.dir", s"$workDir/warehouse")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val docs = spreadToCores(spark,
       spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text"))

@@ -243,14 +243,10 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val preset = sys.env.getOrElse("GRAFT_PRESET", "demo")
-    GraftSession.quietStartupWarnings()
     // plan-only JVM: building the dedup queries must not pay the shared
     // pipeline's eager materialization pass (see SharedCaches.eagerMaterialize)
     graft.queries.SharedCaches.eagerMaterialize = false
-    val spark = GraftSession.builder()
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val cache = new PlanContracts.PlanCache(spark, sfDir)
     val (catalogViolations, allowedHits) = PlanContracts.checkCatalog(spark, sfDir, cache)
     val flagshipViolations = PlanContracts.check(spark, sfDir, cache)

@@ -15,7 +15,6 @@ object PlanSnap {
     require(args.length >= 4, "usage: PlanSnap <sfDir> <outDir> <tag> <query>...")
     val Array(sfDir, outDir, tag) = args.take(3)
     val names = args.drop(3).toSeq
-    GraftSession.quietStartupWarnings()
     val spark = GraftSession.getOrCreate()
     // plan-only inspection by default: skip the shared-cache
     // materialization jobs. SPARK_GRAFT_PLANSNAP_EXEC=1 keeps them on so

@@ -200,11 +200,7 @@ object ScaleBench {
         req
     }
     val preset = sys.env.getOrElse("GRAFT_PRESET", "demo")
-    GraftSession.quietStartupWarnings()
-    val spark = GraftSession.builder()
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val calib = Artifacts.calibrate(spark)
 
     val rows = scala.collection.mutable.LinkedHashMap.empty[Int, (Long, Long)]

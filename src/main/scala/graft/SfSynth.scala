@@ -81,9 +81,7 @@ object SfSynth {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    GraftSession.quietStartupWarnings()
-    val spark = GraftSession.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val t0 = System.nanoTime()
     val (nDocs, nVecs) = ScaleBench.synthesize(spark, src, dst, k)
     synthesizeStar(spark, src, dst, k)

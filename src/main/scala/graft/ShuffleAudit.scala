@@ -130,15 +130,12 @@ object ShuffleAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val sfDir = args.headOption.getOrElse(GraftSession.defaultSfDir)
     val names =
       if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    GraftSession.quietStartupWarnings()
-    val spark = GraftSession.getOrCreate()
-    // the audited dir may differ from the env the builder sized for (the
-    // ×10 leg passes a synthesized corpus as args(0)) — re-size for it
-    GraftSession.sizeShuffleFor(spark, sfDir)
+    // sized for the audited dir, which may differ from the env's (the ×10
+    // leg passes a synthesized corpus as args(0))
+    val spark = GraftSession.getOrCreate(sfDir)
     def mb(v: Long) = math.rint(v / 1048576.0 * 100) / 100
     val rows = names.map { n => n -> measure(spark, sfDir, n) }
     val zero = rows.collect { case (n, b) if b.shuffleWrite == 0 => n }

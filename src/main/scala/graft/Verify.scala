@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,25 +9,8 @@ object Verify {
     // query-name filter so a single operator can be oracle-checked without
     // a full catalog dump
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    GraftSession.quietStartupWarnings()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold", GraftSession.bypassMergeThreshold)
-      .config("spark.sql.join.preferSortMergeJoin", GraftSession.preferSortMergeJoin)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.statusStoreCaps)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // late-register graft extensions (SQL functions + RangeJoinRewrite);
-    // queries are correct without them, but this session should run the
-    // same plans GraftSession produces
-    GraftExtensions.install(spark)
+    // the product session, so the oracle checks the plans that ship
+    val spark = GraftSession.getOrCreate(sfDir)
     new java.io.File(outDir).mkdirs()
     // A failed query must surface as a RED row in the driver's compare, not
     // as a silently-missing key (round 7 lost 28 queries to absence): write

@@ -54,11 +54,7 @@ object WriteBench {
     val nFrames = args.headOption.map(_.toInt).getOrElse(50000)
     val workDir = args.lift(1).getOrElse("/tmp/graft_write_bench")
     val preset = sys.env.getOrElse("GRAFT_PRESET", "demo")
-    GraftSession.quietStartupWarnings()
-    val spark = GraftSession.builder()
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val calib = Artifacts.calibrate(spark)
 
     // Materialize the synthetic corpus once so every phase measures WRITE

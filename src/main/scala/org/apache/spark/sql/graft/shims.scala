@@ -2,8 +2,8 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.StructType
@@ -15,18 +15,6 @@ import org.apache.spark.sql.types.StructType
 object shims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a SQL function on an ALREADY-RUNNING session (extensions via
-    * `spark.sql.extensions` only bind at session creation).
-    */
-  def registerFunction(
-      spark: SparkSession,
-      name: String,
-      info: ExpressionInfo,
-      builder: Seq[Expression] => Expression
-  ): Unit =
-    classic(spark).sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 
   /** Drain the async listener bus — `SparkContext.listenerBus` is
     * `private[spark]`, and per-query metrics attribution (ShuffleAudit)

@@ -45,7 +45,6 @@ class QuantizeVecSpec extends SparkSpec {
       .orderBy("id").collect()
     assert(df(0).getSeq[Long](1) == Seq(1000L, 1001L))
     assert(df(1).isNullAt(1))
-    graft.GraftExtensions.install(spark)
     val viaSql = spark.sql("SELECT quantize_vec(array(CAST(0.0015 AS DOUBLE)), 1000) AS q")
       .collect().head.getSeq[Long](0)
     assert(viaSql == Seq(2L))

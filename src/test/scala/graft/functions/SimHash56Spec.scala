@@ -39,11 +39,8 @@ class SimHash56Spec extends SparkSpec {
   }
 
   test("callable from SQL after GraftExtensions registration") {
-    // the shared test session predates any extensions config, so use the
-    // late-install path (what a notebook attaching to a running session does)
     val s = spark
     import s.implicits._
-    graft.GraftExtensions.install(s)
     val got = s.sql("SELECT simhash56(array(CAST(5 AS BIGINT), CAST(5 AS BIGINT), CAST(2 AS BIGINT)))").as[Long].head()
     assert(got == reference(Seq(5L, 5L, 2L)))
   }

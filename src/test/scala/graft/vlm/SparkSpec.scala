@@ -12,23 +12,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // same extensions as GraftSession: SQL function registration + the
-      // RangeJoinRewrite optimizer rule (plan assertions must see it)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      // reference semantics: Python dict building is last-wins on key collision
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      // tolerate nanos-encoded fixtures (Tables.toEpochMicros normalizes)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(graft.GraftSession.statusStoreCaps)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val SessionDir = "/root/testdata/sf0.001"
+
+  /** The product session's confs on 4 cores, sized for the smallest corpus
+    * (a 1× start: 4 shuffle partitions), so plan assertions see the plans
+    * that ship.
+    */
+  lazy val session: SparkSession =
+    graft.GraftSession.builder(cores = 4, sfDir = SessionDir).appName("graft-test").getOrCreate()
 }

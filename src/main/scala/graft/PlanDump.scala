@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: dump the formatted physical plans of the flagship queries to a
@@ -8,6 +9,10 @@ import org.apache.spark.sql.execution.ExplainMode
   * Spark. Regenerate after plan-affecting changes:
   *
   *   runMain graft.PlanDump /root/testdata/sf0.001 PLANS.md
+  *   runMain graft.PlanDump <sfDir> <outDir> <tag> <query>...  (each query's
+  *     FULL plan to `<outDir>/<name>_<tag>.txt`: before/after plan evidence)
+  *
+  * Both print the executing-JVM shape, shared caches materialized.
   */
 object PlanDump {
   /** The queries whose plan shape carries the scale argument. */
@@ -27,8 +32,24 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("PLANS.md")
+    val snapshot = args.length > 2
+    require(!snapshot || args.length > 3, "usage: PlanDump <sfDir> <outDir> <tag> <query>...")
+    val names = SparkEntry.queryNames(if (snapshot) args.drop(3).toSeq else flagship)
     val spark = GraftSession.getOrCreate()
+    def formatted(name: String): String =
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted"))
+    if (snapshot) {
+      val dir = Files.createDirectories(Paths.get(args(1)))
+      names.foreach { name =>
+        val out = dir.resolve(s"${name}_${args(2)}.txt")
+        Files.writeString(out, formatted(name))
+        println(s"[plandump] $out")
+      }
+    } else markdown(sfDir, names.map(n => n -> formatted(n)), args.lift(1).getOrElse("PLANS.md"))
+    spark.stop()
+  }
+
+  private def markdown(sfDir: String, plans: Seq[(String, String)], out: String): Unit = {
     val sb = new StringBuilder
     sb.append("# Flagship query plans (generated by `graft.PlanDump` — do not edit)\n\n")
     sb.append(s"Formatted physical plans at `$sfDir`, optimizer-initial (AQE re-plans at\n")
@@ -41,17 +62,12 @@ object PlanDump {
     sb.append("the relation wraps a `Scan ExistingRDD` leaf (an eager localCheckpoint of\n")
     sb.append("the one-time build), so their build lineage does not print at all — and,\n")
     sb.append("more to the point, is no longer re-walked by every AQE plan-update render.\n")
-    flagship.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    plans.foreach { case (name, plan) =>
       // keep the tree (the shape); drop the per-node detail section
       val tree = plan.split("\n\n\\(1\\) ").head
       sb.append(s"\n## $name\n\n```\n").append(tree).append("\n```\n")
     }
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(out),
-      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"[plandump] wrote ${flagship.size} plans to $out")
-    spark.stop()
+    Files.writeString(Paths.get(out), sb)
+    println(s"[plandump] wrote ${plans.size} plans to $out")
   }
 }

@@ -35,6 +35,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.build).toMap
 
+  /** `requested`, or the whole catalog sorted when empty. Every name is
+    * checked before any query runs, so a typo fails up front, listing all.
+    */
+  def queryNames(requested: Seq[String]): Seq[String] = {
+    val known = all.map(_.name)
+    val unknown = requested.filterNot(known.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    if (requested.isEmpty) known.sorted else requested
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

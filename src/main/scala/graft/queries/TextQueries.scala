@@ -88,7 +88,7 @@ object PipelineFns {
     * AQE constructing the RDD of a plan that CONTAINS exchanges
     * materializes its query stages — i.e. runs shuffle jobs at
     * plan-construction time, including in plan-only JVMs
-    * (PlanAudit/PlanSnap). Safe for every current caller (all pass a bare
+    * (PlanAudit). Safe for every current caller (all pass a bare
     * scan+select); the require keeps a future derived-frame caller from
     * silently executing jobs during planning.
     */

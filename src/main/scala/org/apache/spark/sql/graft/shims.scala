@@ -5,7 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.types.StructType
 
 /** Bridge between custom Catalyst expressions and the public Column API.
@@ -17,11 +18,16 @@ object shims {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Drain the async listener bus — `SparkContext.listenerBus` is
-    * `private[spark]`, and per-query metrics attribution (ShuffleAudit)
+    * `private[spark]`, and per-query metrics attribution (QueryLedger)
     * needs every TaskEnd event delivered before reading the counters.
     */
   def waitListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The query an SQL execution ran, as carried by its end event (`qe` is
+    * `private[sql]`); None for events that do not carry one.
+    */
+  def executedQuery(e: SparkListenerSQLExecutionEnd): Option[QueryExecution] = Option(e.qe)
 
   /** A DataFrame over catalyst rows that conform to `schema`, with no
     * `Row` conversion (`internalCreateDataFrame` is `private[sql]`).

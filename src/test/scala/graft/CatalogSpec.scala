@@ -48,6 +48,14 @@ class CatalogSpec extends SparkSpec {
     assert(bad.isEmpty, bad.mkString("; "))
   }
 
+  test("queryNames checks every requested name before any runs, and defaults to the catalog") {
+    assert(SparkEntry.queryNames(Nil) == SparkEntry.queries.keys.toSeq.sorted)
+    assert(SparkEntry.queryNames(Seq("t11_span_dedup", "q1_agg")) == Seq("t11_span_dedup", "q1_agg"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.queryNames(Seq("q1_agg", "q1_agq", "t11_span_dedup", "nope")))
+    assert(e.getMessage.endsWith("unknown queries: q1_agq, nope"), e.getMessage)
+  }
+
   test("the flagship entry returns rows (the driver's smoke check)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

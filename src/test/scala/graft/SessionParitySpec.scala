@@ -3,7 +3,8 @@ package graft
 import graft.vlm.SparkSpec
 
 /** One session factory: the test session runs the product session's confs,
-  * and no main builds a session of its own.
+  * and no main builds a session of its own. One listener: every measuring
+  * tool reads QueryLedger instead of attaching its own.
   */
 class SessionParitySpec extends SparkSpec {
 
@@ -16,16 +17,18 @@ class SessionParitySpec extends SparkSpec {
     assert(diffs.isEmpty, diffs.mkString("; "))
   }
 
-  test("SparkSession.builder is called in src/main/scala only by GraftSession") {
+  test("SparkSession.builder and SparkListener each have one home in src/main") {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles.toSeq.flatMap(files) else Seq(f).filter(_.getName.endsWith(".scala"))
-    val callers = files(root).filter { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      """SparkSession\s*\.\s*builder""".r.findFirstIn(src).isDefined
-    }.map(_.getName)
-    assert(callers == Seq("GraftSession.scala"), callers.mkString(", "))
+    val sources = files(root).map(f => f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    for ((pattern, home) <- Seq(
+        """SparkSession\s*\.\s*builder""" -> "GraftSession.scala",
+        """extends\s+[\w.]*SparkListener\b|new\s+[\w.]*SparkListener\s*\{|addSparkListener""" -> "QueryLedger.scala")) {
+      val callers = sources.collect { case (name, src) if pattern.r.findFirstIn(src).isDefined => name }
+      assert(callers == Seq(home), s"$pattern: ${callers.mkString(", ")}")
+    }
   }
 
   test("boolean env knobs take exactly true or false, and name the variable otherwise") {

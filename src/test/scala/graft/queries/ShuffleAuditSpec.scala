@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ShuffleAudit
+import graft.QueryLedger
 import graft.vlm.SparkSpec
 
 /** Runtime shuffle/spill contracts — the measured counterpart to
@@ -66,7 +66,7 @@ class ShuffleAuditSpec extends SparkSpec {
   // and the zero-shuffle contract above would be vacuous.
   private val mustShuffle = Seq("t11_span_dedup", "j8_selfjoin_pairs", "t19_shuffled_shards")
 
-  private lazy val measured: Map[String, ShuffleAudit.QueryBytes] = {
+  private lazy val measured: Map[String, QueryLedger.Bytes] = {
     // Warm the shared band-signature caches first: the FIRST consumer of a
     // registered cache absorbs its build (the Bench/ShuffleAudit
     // attribution convention), and the build's core-width spread shuffle
@@ -74,9 +74,9 @@ class ShuffleAuditSpec extends SparkSpec {
     // d17's ledger row. The contracts below pin each query's STEADY-STATE
     // bytes — what it shuffles per execution, not the once-per-session
     // cache population.
-    ShuffleAudit.measure(spark, sf, "d3_lsh_near_dup_pairs")
+    QueryLedger.measure(spark, sf, "d3_lsh_near_dup_pairs")
     (mapOnly ++ boundedShuffle ++ mustShuffle)
-      .map(n => n -> ShuffleAudit.measure(spark, sf, n)).toMap
+      .map(n => n -> QueryLedger.measure(spark, sf, n).bytes).toMap
   }
 
   test("map-only catalog queries shuffle zero bytes") {
@@ -95,8 +95,8 @@ class ShuffleAuditSpec extends SparkSpec {
     // of the query's steady-state cost. Re-warm and re-measure once;
     // only a repeat offender is a real contract breach.
     val offenders = first.map(_._1).map { n =>
-      ShuffleAudit.measure(spark, sf, "d3_lsh_near_dup_pairs")
-      n -> ShuffleAudit.measure(spark, sf, n).shuffleWrite
+      QueryLedger.measure(spark, sf, "d3_lsh_near_dup_pairs")
+      n -> QueryLedger.measure(spark, sf, n).bytes.shuffleWrite
     }.filter(_._2 > BoundedCeiling)
     assert(offenders.isEmpty,
       s"constant-bounded queries exceeded ${BoundedCeiling}B: ${offenders.mkString(", ")}")

@@ -1,11 +1,13 @@
 package graft.functions
 
 import graft.vlm.Geo
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native expressions for the hot geometry kernels. The Scala-UDF forms
   * work but pay CatalystTypeConverters boxing for every nested
@@ -192,5 +194,70 @@ object MinBoxDistance {
       i += 1
     }
     math.sqrt(best)
+  }
+}
+
+/** Enhanced relative position of box 1 w.r.t. box 2 from their camera-frame
+  * vertices (geometry.py:424-495): struct(depth, horizontal, vertical
+  * relation, center distance), the struct `Geo.enhancedRelativePosition`'s
+  * tuple encodes to. The arithmetic runs in that function's order — per-axis
+  * vertex sums from 0.0, then `/ n`, then the same center distance — so the
+  * results are bit-equal; no per-row allocation beyond the result row.
+  */
+case class RelativePosition(left: Expression, right: Expression) extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(ArrayType(DoubleType, _), _), ArrayType(ArrayType(DoubleType, _), _)) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (l, r) =>
+      TypeCheckResult.TypeCheckFailure(s"relative_position requires two array<array<double>>, got (${l.simpleString}, ${r.simpleString})")
+  }
+  override def dataType: DataType = RelativePosition.resultType
+  override def prettyName: String = "relative_position"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    RelativePosition.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.RelativePosition.compute($a, $b);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): RelativePosition =
+    copy(left = newLeft, right = newRight)
+}
+
+object RelativePosition {
+  /** `Geo.enhancedRelativePosition`'s default threshold, in meters. */
+  val Threshold = 0.1
+
+  val resultType: StructType = StructType(Seq(
+    StructField("_1", StringType), StructField("_2", StringType), StructField("_3", StringType),
+    StructField("_4", DoubleType, nullable = false)))
+
+  private def utf8(s: String*): Array[UTF8String] = s.map(UTF8String.fromString).toArray
+  // (same, negative difference, positive difference) per axis
+  private val depth = utf8("Same depth", "Nearer", "Farther")
+  private val horizontal = utf8("Same horizontal position", "Left", "Right")
+  private val vertical = utf8("Same vertical position", "Above", "Below")
+
+  private def relation(d: Double, labels: Array[UTF8String]): UTF8String =
+    if (math.abs(d) < Threshold) labels(0) else if (d < 0) labels(1) else labels(2)
+
+  def compute(a: ArrayData, b: ArrayData): InternalRow = {
+    val na = a.numElements(); val nb = b.numElements()
+    var ax = 0.0; var ay = 0.0; var az = 0.0
+    var i = 0
+    while (i < na) {
+      val v = a.getArray(i); ax += v.getDouble(0); ay += v.getDouble(1); az += v.getDouble(2); i += 1
+    }
+    var bx = 0.0; var by = 0.0; var bz = 0.0
+    i = 0
+    while (i < nb) {
+      val v = b.getArray(i); bx += v.getDouble(0); by += v.getDouble(1); bz += v.getDouble(2); i += 1
+    }
+    ax /= na; ay /= na; az /= na
+    bx /= nb; by /= nb; bz /= nb
+    val dx = ax - bx; val dy = ay - by; val dz = az - bz
+    new GenericInternalRow(Array[Any](
+      relation(dz, depth), relation(dx, horizontal), relation(dy, vertical),
+      math.sqrt(dx * dx + dy * dy + dz * dz)))
   }
 }

@@ -62,6 +62,10 @@ package object functions {
   def minBoxDistance(a: Column, b: Column): Column =
     shims.column(MinBoxDistance(shims.expression(a), shims.expression(b)))
 
+  /** Enhanced relative position of two camera-frame 8-vertex boxes. */
+  def relativePosition(a: Column, b: Column): Column =
+    shims.column(RelativePosition(shims.expression(a), shims.expression(b)))
+
   /** Min camera-to-vertex distance. */
   def cameraToBoxDistance(cam: Column, verts: Column): Column =
     shims.column(CameraToBoxDistance(shims.expression(cam), shims.expression(verts)))

@@ -323,7 +323,7 @@ object DomainQueries extends QueryModule {
       "g3_relative_position",
       (s, d) => {
         // enhanced_relative_position center-diff classification through the
-        // production UDF (identity extrinsics → camera frame = world frame)
+        // production expression (identity extrinsics → camera frame = world frame)
         val idExtr = array(
           array(lit(1.0), lit(0.0), lit(0.0), lit(0.0)),
           array(lit(0.0), lit(1.0), lit(0.0), lit(0.0)),
@@ -339,7 +339,7 @@ object DomainQueries extends QueryModule {
         val a = b.select(col("frame_id"), col("idx").as("i"), col("verts").as("v1"))
         val c = b.select(col("frame_id").as("frame_id2"), col("idx").as("j"), col("verts").as("v2"))
         a.join(c, col("frame_id") === col("frame_id2") && col("i") < col("j"))
-          .withColumn("rp", GeoFunctions.relativePositionUdf(col("v1"), col("v2")))
+          .withColumn("rp", GeoFunctions.relativePositionCol(col("v1"), col("v2")))
           .groupBy(col("rp").getField("_1").as("depth_rel"), col("rp").getField("_2").as("horizontal_rel"))
           .agg(count(lit(1)).as("n"))
       },
@@ -352,7 +352,7 @@ object DomainQueries extends QueryModule {
              |         WHEN a.x - c.x < 0 THEN 'Left' ELSE 'Right' END AS horizontal_rel
              |  FROM b a JOIN b c ON a.frame_id = c.frame_id AND a.idx < c.idx)
              |GROUP BY depth_rel, horizontal_rel""".stripMargin),
-      "Relative-position classifier UDF (geometry.py:424-495) vs closed-form center-diff CASE logic; vertex means reduce to centers for axis-aligned boxes."
+      "Relative-position classifier expression (geometry.py:424-495) vs closed-form center-diff CASE logic; vertex means reduce to centers for axis-aligned boxes."
     ),
     QueryDef(
       "g4_project_2d",

@@ -253,7 +253,8 @@ object RelationalQueries extends QueryModule {
         // l_orderkey + per-group sort: O(n log n) where the pair join is
         // O(n²) per group — the plan that survives skewed groups at 100 TB.
         // (The raw i<j join shape itself stays oracle-validated by
-        // j8b_pair_rows below and the domain pair tasks, QaTasks.scala.)
+        // j8b_pair_rows below; the domain pair tasks form their pairs
+        // inside each frame row, QaTasks.boxPairs.)
         val w = Window.partitionBy(col("l_orderkey")).orderBy(col("p").asc, col("l_linenumber").asc)
         val grp = Window.partitionBy(col("l_orderkey"))
         Tables.lineitem(s, d)

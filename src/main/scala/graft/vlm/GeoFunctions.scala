@@ -7,11 +7,11 @@ import org.apache.spark.sql.functions._
   *
   * Split per SURVEY.md §7.3: anything expressible as built-in column math
   * is plain column composition (normalize-angle, center distance, max
-  * dimension, seeded randomness, depth stats); the matrix-shaped hot-path
-  * kernels (vertices, 8×8 min distance, camera distance, frame transform)
-  * are native ArrayData expressions in [[graft.functions]]; only the cold
-  * string-struct-returning kernels (relative position, camera position,
-  * quaternion conversion) remain Scala UDFs.
+  * dimension, seeded randomness, depth stats); the hot-path kernels
+  * (vertices, 8×8 min distance, camera distance, frame transform, relative
+  * position) are native ArrayData expressions in [[graft.functions]]; only
+  * cold kernels (camera position and orientation, vertex-extremes relative
+  * position, box IoU, quaternion conversion) remain Scala UDFs.
   */
 object GeoFunctions {
 
@@ -99,6 +99,14 @@ object GeoFunctions {
   def toCameraFrameCol(vertices: Column, extrinsics: Column): Column =
     graft.functions.toCameraFrame(vertices, extrinsics)
 
+  /** Enhanced relative position of box 1 w.r.t. box 2 from camera-frame
+    * vertices: struct(_1 depth, _2 horizontal, _3 vertical relation, _4
+    * center distance) (geometry.py:424-495) — native expression
+    * ([[graft.functions.RelativePosition]]).
+    */
+  def relativePositionCol(a: Column, b: Column): Column =
+    graft.functions.relativePosition(a, b)
+
   // ------------------------------------------------------------------ UDFs
 
   /** Camera position from 4×4 extrinsics, null-safe (geometry.py:135-162). */
@@ -106,16 +114,6 @@ object GeoFunctions {
     (extrinsics: Seq[Seq[Double]]) =>
       if (extrinsics == null) None
       else Geo.cameraPosition(extrinsics.map(_.toArray).toArray).map(_.toSeq)
-  }
-
-  /** Enhanced relative position: returns struct(depth, horizontal, vertical,
-    * center_distance) (geometry.py:424-495).
-    */
-  val relativePositionUdf = udf {
-    (a: Seq[Seq[Double]], b: Seq[Seq[Double]]) =>
-      val (d, h, v, cd) = Geo.enhancedRelativePosition(
-        a.map(_.toArray).toArray, b.map(_.toArray).toArray)
-      (d, h, v, cd)
   }
 
   /** G8 camera orientation basis vectors from 4×4 extrinsics: struct of

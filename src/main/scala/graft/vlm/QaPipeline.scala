@@ -3,8 +3,9 @@ package graft.vlm
 import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Executors}
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Registry-driven QA generation orchestration — the Spark re-expression of
   * QA_generation/generate_qa.py:41-171 (§3.1 query lifecycle):
@@ -12,10 +13,10 @@ import org.apache.spark.sql.functions._
   *
   * Unlike the reference (whole corpus materialized in driver memory,
   * data_loader.py:40-53), the corpus stays distributed; only per-partition
-  * row counts and the summary aggregates ever reach the driver. Building a
-  * task is eager: its id assignment ([[QaPrimitives.withContiguousIds]])
-  * runs the task's jobs and stores its sorted rows on the executors, and
-  * every sink after that reads those stored rows.
+  * row counts ever reach the driver. Building a task is eager: its id
+  * assignment ([[QaPrimitives.withContiguousIds]]) runs the task's jobs and
+  * stores its sorted rows on the executors, every sink after that reads
+  * those stored rows, and the summary is made from the row counts.
   */
 object QaPipeline {
 
@@ -46,21 +47,31 @@ object QaPipeline {
     perTask.toSeq.sortBy(_._1).map { case (t, df) => df.withColumn("task_type", lit(t)) }
       .reduce(_.unionByName(_))
 
-  /** K4: summary aggregate — per-task question counts + totals
-    * (generate_qa.py:147-163).
+  /** K4: summary — per-task question counts (generate_qa.py:147-163), one
+    * row per task with questions. Built on the driver from the counts that
+    * each task's id assignment found ([[QaPrimitives.rowCount]]), so
+    * neither building nor collecting it runs a Spark job; `perTask` must
+    * hold the tasks' DataFrames as built.
     */
-  def summary(perTask: Map[String, DataFrame], datasetName: String): DataFrame =
-    combined(perTask)
-      .groupBy(col("task_type"))
-      .agg(count(lit(1)).as("total_questions"))
+  def summary(perTask: Map[String, DataFrame], datasetName: String): DataFrame = {
+    val spark = perTask.values.head.sparkSession
+    val rows = perTask.toSeq.sortBy(_._1)
+      .map { case (t, df) => (t, QaPrimitives.rowCount(df)) }
+      .collect { case (t, n) if n > 0 => Row(t, n) }
+    val schema = StructType(Seq(
+      StructField("task_type", StringType, nullable = false),
+      StructField("total_questions", LongType, nullable = false)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
       .withColumn("dataset", lit(datasetName))
       .withColumn("generated_date", date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss"))
+  }
 
   /** Full run: per-task JSON sinks (K2), combined (K3), summary (K4).
     *
     * The tasks are built and sunk concurrently, one thread each, so one
     * task's driver-side planning and small jobs overlap the others' work.
-    * The combined output and the summary then read the same stored rows.
+    * The combined output then reads the same stored rows; the summary and
+    * the returned counts come from the tasks' row counts.
     * Every stored row is released before returning. If a task fails, the
     * other tasks' jobs are cancelled, and once they have all stopped the
     * first error is rethrown.
@@ -102,15 +113,8 @@ object QaPipeline {
       Option(firstError.get).foreach(e => throw e)
       val perTask = work.map(_.get()).toMap
       combined(perTask).write.mode("overwrite").json(s"$outDir/${datasetName}_all_qa_pairs")
-      val sum = summary(perTask, datasetName)
-      // run the summary aggregation ONCE: collect the handful of per-task
-      // rows, then write those rows
-      val rows = sum.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), sum.schema)
-        .coalesce(1).write.mode("overwrite").json(s"$outDir/${datasetName}_summary")
-      val counts = rows.map(r =>
-        r.getAs[String]("task_type") -> r.getAs[Long]("total_questions")).toMap
-      tasks.map(t => t -> counts.getOrElse(t, 0L)).toMap
+      summary(perTask, datasetName).coalesce(1).write.mode("overwrite").json(s"$outDir/${datasetName}_summary")
+      tasks.map(t => t -> QaPrimitives.rowCount(perTask(t))).toMap
     } finally {
       pool.shutdown()
       built.forEach(df => QaPrimitives.release(df))

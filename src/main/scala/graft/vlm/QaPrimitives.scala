@@ -5,6 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shims
@@ -58,10 +59,10 @@ object QaPrimitives {
     * the shuffle delivered them.
     *
     * Eager: the shuffle runs here and the sorted rows are persisted
-    * (`MEMORY_AND_DISK`); the count job stores every partition but the last,
-    * the first action on the result stores that one, and every later action
-    * — per-task sink, combined union, summary — reads the stored rows
-    * instead of re-running the shuffle and the sort. [[release]] frees them; otherwise
+    * (`MEMORY_AND_DISK`); the count job counts and stores every partition,
+    * so the last offset is the row total ([[rowCount]]), and every later
+    * action — per-task sink, combined union — reads the stored rows instead
+    * of re-running the shuffle and the sort. [[release]] frees them; otherwise
     * Spark's ContextCleaner does once the result is unreachable. The jobs run
     * here are RDD-level, outside any Dataset action, so they run under the
     * session's propagated SQL confs: without that, their tasks see the
@@ -75,12 +76,7 @@ object QaPrimitives {
       // the sort hands out one reused row object: copy before storing
       val rows = sorted.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        // the last partition's size is never needed (as in zipWithIndex),
-        // so a one-partition result runs no count job
-        val counted = 0 until rows.getNumPartitions - 1
-        val sizes =
-          if (counted.isEmpty) Array.empty[Long]
-          else spark.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => it.size.toLong, counted)
+        val sizes = spark.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => it.size.toLong)
         new NumberedRows(rows, sizes.scanLeft(0L)(_ + _))
       } catch {
         case e: Throwable => rows.unpersist(blocking = true); throw e
@@ -99,11 +95,31 @@ object QaPrimitives {
     case _ =>
   }
 
+  /** The row count of a DataFrame as [[assignQaIds]] or [[withContiguousIds]]
+    * returned it (projections on top allowed), read from the plan: the
+    * total the count job found, so no job runs. Fails on any other plan.
+    */
+  def rowCount(df: DataFrame): Long = {
+    def total(p: LogicalPlan): Option[Long] = p match {
+      case Project(_, child) => total(child)
+      case r: LogicalRDD => r.rdd match {
+        case n: NumberedRows => Some(n.total)
+        case _ => None
+      }
+      case _ => None
+    }
+    val plan = df.queryExecution.logical
+    total(plan).getOrElse(throw new IllegalArgumentException(
+      s"no stored row count: not a withContiguousIds result under projections:\n${plan.treeString}"))
+  }
+
   /** Stored sorted rows, each with its global row number (from the
-    * partition's start offset) appended as one more LONG column.
+    * partition's start offset) appended as one more LONG column. `offsets`
+    * holds one start per partition, then the row total.
     */
   private final class NumberedRows(val stored: RDD[InternalRow], offsets: Array[Long])
       extends RDD[InternalRow](stored) {
+    def total: Long = offsets.last
     override protected def getPartitions: Array[Partition] = stored.partitions
     override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
       // reused per row: the scan over this RDD projects each row at once

@@ -7,12 +7,13 @@ import org.apache.spark.sql.expressions.Window
 /** The six 3D QA task generators as declarative `DataFrame => DataFrame`
   * transforms over unified frame records (SURVEY.md §7.1 step 5).
   *
-  * Every task is per-frame work: explode → column math/UDF → re-assemble, so
-  * the plans are shuffle-free except (a) the pair self-joins, which shuffle
-  * once on `image_id` and stay partition-local after that, and (b) the
-  * contiguous QA ids, which range-partition and sort on each task's unique
-  * order key and number the rows from per-partition offsets
-  * ([[QaPrimitives.withContiguousIds]]: eager, it stores the sorted rows).
+  * Every task is per-frame work: explode → column math/UDF → re-assemble.
+  * The two pair tasks form their `i < j` box pairs inside each frame row
+  * ([[boxPairs]]), so no task joins boxes back to boxes. The plans shuffle
+  * only for per-frame aggregates and for the contiguous QA ids, which
+  * range-partition and sort on each task's unique order key and number the
+  * rows from per-partition offsets ([[QaPrimitives.withContiguousIds]]:
+  * eager, it stores the sorted rows).
   * All randomness (distractors, option shuffles, sampling) is md5-seeded on
   * stable row identity — a documented improvement over the reference's
   * unseeded `random` (SURVEY §7.4 item 3): identical output for any
@@ -36,12 +37,12 @@ object QaTasks {
   val RelPosThreshold = 0.1
   val V1SamplesPerFrame = 2
 
-  /** Skew guard for the J8 pair self-joins (SURVEY §7.4 item 2): a frame
-    * with n boxes emits n² /2 pairs, so one pathological frame (a mislabeled
-    * scene with thousands of instances) would dominate its partition at
-    * corpus scale. Frames keep their first `MaxPairBoxes` boxes (by bbox
-    * index — deterministic) for pair-shaped tasks; reference-scale frames
-    * (≤ tens of boxes) are unaffected.
+  /** Skew guard for the J8 pair tasks (SURVEY §7.4 item 2): a frame with n
+    * boxes emits n² /2 pairs, so one pathological frame (a mislabeled scene
+    * with thousands of instances) would dominate its partition at corpus
+    * scale. Frames keep their first `MaxPairBoxes` boxes (by bbox index —
+    * deterministic) for pair-shaped tasks; reference-scale frames (≤ tens of
+    * boxes) are unaffected.
     */
   val MaxPairBoxes = 64
 
@@ -83,6 +84,37 @@ object QaTasks {
       b.getField("x"), b.getField("y"), b.getField("z"),
       b.getField("xl"), b.getField("yl"), b.getField("zl"),
       b.getField("pitch"), b.getField("yaw"), b.getField("roll"))
+
+  /** The `i < j` box pairs of each frame with at least two boxes, formed
+    * inside the frame row: the vertices are computed once per box for the
+    * first [[MaxPairBoxes]] boxes, and an in-row array of pairs is
+    * exploded. Pairs never cross frame rows, even when two frames share an
+    * `image_id` (as in the reference's per-document loop). Columns: image_id,
+    * scene_id, frame_id, _source_file, i, j, b1, b2 (the boxes), w1, w2
+    * (their vertices) and, with `cameraFrame`, c1, c2 (the vertices in the
+    * camera frame; frames without extrinsics are dropped).
+    */
+  private[vlm] def boxPairs(frames: DataFrame, cameraFrame: Boolean): DataFrame = {
+    val extrinsics = col("camera").getField("extrinsics")
+    val multi = withSource(frames).filter(size(col("bounding_boxes_3d")) >= 2)
+    val framed = if (cameraFrame) multi.filter(extrinsics.isNotNull) else multi
+    val world = transform(slice(col("bounding_boxes_3d"), 1, MaxPairBoxes),
+      (b, k) => struct(k.as("idx"), b.as("bbox"), vertsOf(b).as("w")))
+    val boxes = framed.select(
+      col("image_id"), col("scene_id"), col("frame_id"), col("_source_file"),
+      (if (!cameraFrame) world
+       else transform(world, x => struct(x("idx").as("idx"), x("bbox").as("bbox"), x("w").as("w"),
+         toCameraFrameCol(x("w"), extrinsics).as("c")))).as("bx"))
+    val n = size(col("bx"))
+    def pair(x: Column, y: Column): Column = struct(
+      Seq(x("idx").as("i"), y("idx").as("j"), x("bbox").as("b1"), y("bbox").as("b2"),
+        x("w").as("w1"), y("w").as("w2")) ++
+        (if (cameraFrame) Seq(x("c").as("c1"), y("c").as("c2")) else Nil): _*)
+    boxes.select(
+      col("image_id"), col("scene_id"), col("frame_id"), col("_source_file"),
+      inline(flatten(transform(col("bx"),
+        (x, i) => transform(slice(col("bx"), i + 2, n - i - 1), y => pair(x, y))))))
+  }
 
   import QaPrimitives.{assignQaIds, distractor, shuffleToLetter}
 
@@ -204,19 +236,11 @@ object QaTasks {
   }
 
   /** obj_obj_distance — tasks/tasks_3d/obj_obj_distance_qa.py:28-100 (J8
-    * i<j pair self-join; min 8×8 vertex distance; 0.2–20 m gate).
+    * in-row i<j pairs; min 8×8 vertex distance; 0.2–20 m gate).
     */
   def objObjDistance(frames: DataFrame, datasetName: String): DataFrame = {
-    val b = boxes(frames)
-      .filter(col("bbox_idx") < MaxPairBoxes) // J8 skew guard
-      .withColumn("verts", vertsOf(col("bbox")))
-    val a = b.select(
-      col("image_id"), col("scene_id"), col("frame_id"), col("_source_file"),
-      col("bbox_idx").as("i"), col("bbox").as("b1"), col("verts").as("v1"))
-    val c = b.select(col("image_id").as("image_id2"), col("bbox_idx").as("j"), col("bbox").as("b2"), col("verts").as("v2"))
-    val q = a
-      .join(c, col("image_id") === col("image_id2") && col("i") < col("j"))
-      .withColumn("dist", minBoxDistanceCol(col("v1"), col("v2")))
+    val q = boxPairs(frames, cameraFrame = false)
+      .withColumn("dist", minBoxDistanceCol(col("w1"), col("w2")))
       .filter(col("dist") >= ObjObjMinDistance && col("dist") <= ObjObjMaxDistance)
       .withColumn("question",
         format_string("What is the distance between the %s and the %s in meters?",
@@ -240,19 +264,9 @@ object QaTasks {
     * seeded aspect choice.
     */
   def objObjRelPos(frames: DataFrame, datasetName: String): DataFrame = {
-    val b = boxes(frames)
-      .filter(col("camera").getField("extrinsics").isNotNull)
-      .filter(col("bbox_idx") < MaxPairBoxes) // J8 skew guard
-      .withColumn("verts", vertsOf(col("bbox")))
-      .withColumn("cverts", toCameraFrameCol(col("verts"), col("camera").getField("extrinsics")))
-    val a = b.select(
-      col("image_id"), col("scene_id"), col("frame_id"), col("_source_file"),
-      col("bbox_idx").as("i"), col("bbox").as("b1"), col("verts").as("w1"), col("cverts").as("v1"))
-    val c = b.select(col("image_id").as("image_id2"), col("bbox_idx").as("j"), col("bbox").as("b2"), col("verts").as("w2"), col("cverts").as("v2"))
-    val rel = a
-      .join(c, col("image_id") === col("image_id2") && col("i") < col("j"))
+    val rel = boxPairs(frames, cameraFrame = true)
       .withColumn("min_dist", minBoxDistanceCol(col("w1"), col("w2")))
-      .withColumn("rp", relativePositionUdf(col("v1"), col("v2")))
+      .withColumn("rp", relativePositionCol(col("c1"), col("c2")))
       .withColumn("r1", parseClassCategoryCol(col("b1").getField("category")))
       .withColumn("r2", parseClassCategoryCol(col("b2").getField("category")))
     // candidate aspects in the reference's fixed order: depth, horizontal, vertical

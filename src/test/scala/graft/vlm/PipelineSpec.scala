@@ -1,10 +1,14 @@
 package graft.vlm
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.TaskContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.{col, lit, raise_error}
+import org.apache.spark.sql.functions.{col, count, current_timestamp, date_format, lit, raise_error, udf}
 import org.apache.spark.sql.graft.shims
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end: write a unified-JSON mini-corpus to disk, ingest with the
   * declared schema (S1), run the full pipeline (K2–K4), read outputs back.
@@ -162,6 +166,79 @@ class PipelineSpec extends SparkSpec {
     canary.unpersist()
   }
 
+  test("summary comes from the id step's row counts: no job, same schema and totals as the aggregate") {
+    val sc = spark.sparkContext
+    val frames = Ingest.readFrames(spark, writeCorpus())
+    val out = Files.createTempDirectory("graft_qa").toString
+    val counts = QaPipeline.run(spark, frames, "testds", out)
+    // cam_obj_rel_dist has rows, object_count_2d has none (no 2D boxes)
+    assert(counts("cam_obj_rel_dist") > 0 && counts("object_count_2d") == 0)
+    val written = QaPipeline.taskRegistry.keys.map(t => t -> spark.read.json(s"$out/testds_${t}_qa").count()).toMap
+    assert(counts == written)
+    val summaryRows = spark.read.json(s"$out/testds_summary").collect()
+      .map(r => r.getAs[String]("task_type") -> r.getAs[Long]("total_questions")).toMap
+    assert(summaryRows == written.filter(_._2 > 0), "a task with no rows has no summary row")
+
+    val perTask = QaPipeline.generate(frames, "testds")
+    try {
+      // the former summary, an aggregate over the combined rows, is the reference
+      val reference = QaPipeline.combined(perTask)
+        .groupBy(col("task_type"))
+        .agg(count(lit(1)).as("total_questions"))
+        .withColumn("dataset", lit("testds"))
+        .withColumn("generated_date", date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss"))
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      shims.waitListenerBus(spark)
+      sc.addSparkListener(listener)
+      val sum = try {
+        val df = QaPipeline.summary(perTask, "testds")
+        val rows = df.collect()
+        shims.waitListenerBus(spark)
+        assert(jobs.get == 0, "building and collecting the summary runs no Spark job")
+        assert(df.schema == reference.schema)
+        rows
+      } finally sc.removeSparkListener(listener)
+      def key(rows: Array[Row]) = rows.map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq.sorted
+      assert(key(sum) == key(reference.collect()))
+      assert(sum.forall(_.getString(3).matches("""\d{4}-\d\d-\d\dT\d\d:\d\d:\d\d""")))
+      // any plan other than the id step's stored rows fails loudly
+      val e = intercept[IllegalArgumentException](
+        QaPipeline.summary(Map("object_count" -> perTask("object_count").filter(lit(false))), "testds"))
+      assert(e.getMessage.contains("no stored row count"))
+    } finally perTask.values.foreach(QaPrimitives.release)
+  }
+
+  test("withContiguousIds unpersists its rows when its own count job fails") {
+    import PipelineSpec.CountJobGate
+    val sc = spark.sparkContext
+    // the sort runs in the count job, and so does the order key's UDF: there
+    // it waits until the listener has cancelled that job's stage
+    val key = udf { (id: Long) => CountJobGate.await(); id }
+    val df = spark.range(0, 200, 1, 4).toDF("id")
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        val counting = e.stageInfo.rddInfos.exists(_.storageLevel != StorageLevel.NONE)
+        CountJobGate.stages.put(e.stageInfo.stageId, counting)
+        if (counting) sc.cancelStage(e.stageInfo.stageId, "forced count job failure")
+      }
+    }
+    shims.waitListenerBus(spark)
+    val before = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    try {
+      val e = intercept[Exception](QaPrimitives.withContiguousIds(df, "qid", "q%03d", Seq(key(col("id")))))
+      assert(msgs(e).exists(_.contains("forced count job failure")), msgs(e).mkString(" | "))
+      assert(CountJobGate.stages.containsValue(true), "the count job ran and was cancelled")
+    } finally {
+      sc.removeSparkListener(listener)
+      CountJobGate.stages.clear()
+    }
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
   test("limit and bbox-availability gate (F1/F17)") {
     val dir = Files.createTempDirectory("graft_corpus2").toString
     val d = new java.io.File(dir); d.mkdirs()
@@ -173,5 +250,28 @@ class PipelineSpec extends SparkSpec {
     assert(frames.count() == 1)
     assert(Ingest.withUsableBoxes(frames).count() == 0)
     assert(Ingest.readFrames(spark, dir, limit = Some(0)).count() == 0)
+  }
+}
+
+object PipelineSpec {
+
+  /** Holds each task of a count job (a stage over a persisted RDD) until
+    * the task is killed; other stages' tasks go on once the listener has
+    * classified their stage.
+    */
+  object CountJobGate {
+    val stages = new ConcurrentHashMap[Int, Boolean]()
+
+    def await(): Unit = {
+      val ctx = TaskContext.get()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      def waitFor(done: => Boolean, what: String): Unit =
+        while (!done) {
+          if (System.nanoTime() > deadline) throw new IllegalStateException(s"timed out waiting for $what")
+          Thread.sleep(5)
+        }
+      waitFor(stages.containsKey(ctx.stageId()), "the stage to be classified")
+      if (stages.get(ctx.stageId())) waitFor(ctx.isInterrupted(), "the count job to be cancelled")
+    }
   }
 }

@@ -141,6 +141,68 @@ class QaTasksSpec extends SparkSpec {
     assert(v3("ordered_objects").nonEmpty)
   }
 
+  /** Reference pairs: every box of every frame exploded, then an
+    * `image_id` self-join on `i < j` — the plan both pair tasks ran before
+    * they formed their pairs in-row.
+    */
+  private def joinPairs(frames: DataFrame, cameraFrame: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import GeoFunctions._
+    val framed = if (cameraFrame) frames.filter(col("camera.extrinsics").isNotNull) else frames
+    val b = framed
+      .filter(size(col("bounding_boxes_3d")) > 0)
+      .select(col("image_id"), col("camera"), posexplode(col("bounding_boxes_3d")).as(Seq("idx", "bbox")))
+      .filter(col("idx") < QaTasks.MaxPairBoxes)
+      .withColumn("w", bboxVerticesCol(col("bbox.x"), col("bbox.y"), col("bbox.z"),
+        col("bbox.xl"), col("bbox.yl"), col("bbox.zl"), col("bbox.pitch"), col("bbox.yaw"), col("bbox.roll")))
+      .withColumn("c", if (cameraFrame) toCameraFrameCol(col("w"), col("camera.extrinsics")) else lit(null))
+    val a = b.select(col("image_id"), col("idx").as("i"), col("bbox").as("b1"), col("w").as("w1"), col("c").as("c1"))
+    val c = b.select(col("image_id").as("image_id2"), col("idx").as("j"), col("bbox").as("b2"), col("w").as("w2"), col("c").as("c2"))
+    a.join(c, col("image_id") === col("image_id2") && col("i") < col("j")).drop("image_id2")
+  }
+
+  private def pairRows(df: DataFrame, cameraFrame: Boolean): Seq[String] = {
+    val cols = Seq("image_id", "i", "j", "b1", "b2", "w1", "w2") ++ (if (cameraFrame) Seq("c1", "c2") else Nil)
+    df.selectExpr(cols: _*).collect().map(_.toString).toSeq.sorted
+  }
+
+  test("in-row box pairs equal the former image_id self-join, box cap and extrinsics filter included") {
+    val rng = new scala.util.Random(5)
+    def boxes(n: Int) = Seq.tabulate(n)(k =>
+      box(s"c${rng.nextInt(6)}", rng.nextDouble() * 8 - 4, rng.nextDouble() * 2, 1 + rng.nextDouble() * 9,
+        0.2 + rng.nextDouble(), 0.2 + rng.nextDouble(), 0.2 + rng.nextDouble()))
+    val tilted = Some(Seq(Seq(0.0, -1.0, 0, 0.5), Seq(1.0, 0, 0, -2.0), Seq(0, 0, 1.0, 0.25), Seq(0, 0, 0, 1.0)))
+    val frames = (Seq(0, 1, 2, 64, 65, 90).map(n => frame(s"n$n", boxes(n), tilted)) ++
+      Seq(frame("no_extr", boxes(5), extr = None), frame("ident", boxes(4)))).toDF()
+    for (cameraFrame <- Seq(false, true)) {
+      val inRow = QaTasks.boxPairs(frames, cameraFrame)
+      val got = pairRows(inRow, cameraFrame)
+      assert(got == pairRows(joinPairs(frames, cameraFrame), cameraFrame), s"cameraFrame=$cameraFrame")
+      // 1 + 2016 + 2016 + 2016 pairs, + 10 (no extrinsics) + 6
+      assert(got.size == (if (cameraFrame) 6055 else 6065))
+      // no self-join: the plan joins nothing and shuffles nothing
+      val plan = inRow.queryExecution.executedPlan.toString
+      assert(!plan.contains("Join") && !plan.contains("Exchange"), plan)
+    }
+  }
+
+  test("in-row box pairs stay inside each frame when two frames share an image_id") {
+    // the self-join paired boxes across the two frames; the reference's
+    // per-document loop, and the in-row pairs, do not
+    val frames = Seq(
+      frame("dup", Seq(box("a", 0, 0, 2), box("b", 1, 0, 2), box("c", 2, 0, 2))),
+      frame("dup", Seq(box("d", 0, 0, 5), box("e", 3, 0, 5)))).toDF()
+    def cats(df: DataFrame): Seq[(Int, Int, String, String)] =
+      df.selectExpr("i", "j", "b1.category", "b2.category").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getString(3))).toSeq.sorted
+    for (cameraFrame <- Seq(false, true)) {
+      assert(cats(QaTasks.boxPairs(frames, cameraFrame)) ==
+        Seq((0, 1, "a", "b"), (0, 1, "d", "e"), (0, 2, "a", "c"), (1, 2, "b", "c")))
+      // the former join: 3 + 1 in-frame pairs and 4 across the frames
+      assert(cats(joinPairs(frames, cameraFrame)).size == 8)
+    }
+  }
+
   test("all tasks are deterministic across runs (seeded M3 randomness)") {
     QaTasks.all.foreach { case (name, fn) =>
       val a = fn(fixture, "testds").collect().map(_.toString).sorted

@@ -200,6 +200,23 @@ object GraftSession {
     // capacity preset) exceed the 25-field default and WARN-spam plan
     // truncation notices
     "spark.sql.debug.maxToStringFields" -> "2000",
+    // Generated classes live in one JVM-wide LRU of this many entries
+    // (Spark default 100). One QA pass compiles about 175 classes and one
+    // curation pass about 165, so at 100 every pass of either pipeline
+    // evicts its own code and recompiles all of it (Janino took 13–15% of
+    // executor samples, pass after pass). 512 holds both working sets in
+    // one JVM with headroom; an entry costs about 60 KB of live heap
+    // (+4.4 MB for ~75 more), so a full cache is about 30 MB. Static: the
+    // cache is sized once per JVM at the first codegen, which every graft
+    // session reaches only after it is built from this map.
+    "spark.sql.codegen.cache.maxEntries" -> "512",
+    // The cache is keyed by source text, and a whole-stage class is named
+    // after its codegen stage id. AQE numbers the stages in the order their
+    // inputs finish, so the same pipeline can get id 8 in one curation pass
+    // and 9 in the next, and compile again (6–16 classes per warm pass).
+    // Unnumbered names make equal pipelines equal text: warm passes of
+    // either pipeline compile nothing.
+    "spark.sql.codegen.useIdInClassName" -> "false",
     "spark.ui.enabled" -> "false",
     // Spark's INFO chatter buries the engine's own stderr lines
     "spark.log.level" -> "WARN") ++ statusStoreCaps

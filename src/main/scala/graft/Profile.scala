@@ -6,7 +6,8 @@ package graft
   * unchanged plans across rounds); the warm run2 numbers are the honest
   * per-query costs, so they are the artifact a regression argument should
   * cite. Run 2 is measured through [[QueryLedger]]: its record is printed
-  * (phases, driver gap, one line per stage) and written under `"ledger"`.
+  * (phases, driver gap, classes compiled, one line per stage) and written
+  * under `"ledger"`.
   *
   * Usage: runMain graft.Profile <sfDir> <queryName>...
   */

@@ -7,16 +7,23 @@ import scala.collection.mutable
 
 /** The per-query ledger behind Profile and ShuffleAudit: one catalog query,
   * built and run through the noop sink, as one [[QueryLedger.Record]] of
-  * phases, jobs and stages, bytes, driver gap and plan size.
+  * phases, jobs and stages, bytes, driver gap, plan size and the classes
+  * compiled for it.
   *
   * Optimize and plan are read off the end event of the write that ran;
   * forcing `optimizedPlan`/`executedPlan` first would time a second
   * planning pass. Spark opens the execution window before it plans, so
   * phases are split by their intervals, never by subtracting totals.
   *
-  * Only jobs of the measurement's job group count (sbt runs suites in
-  * parallel in one JVM). Broadcast and cache-build jobs submitted during
+  * Only jobs of the measurement's job group count, so a concurrent job of
+  * another group stays out. Broadcast and cache-build jobs submitted during
   * the query inherit the caller's group, so they stay inside.
+  *
+  * Compiles are the exception: Spark counts generated-class compiles per
+  * JVM, not per job, so `compiles` and `compileMs` are the JVM-wide
+  * deltas over the measurement and include any other query's compiles
+  * that overlap it. A warm query that keeps its generated code in Spark's
+  * codegen cache (`spark.sql.codegen.cache.maxEntries`) compiles nothing.
   *
   * Attribution convention: SharedCaches materializes a registered lineage
   * during its FIRST consumer's construction (as Bench times it), so that
@@ -43,15 +50,17 @@ object QueryLedger {
   /** Disjoint phase intervals in ms; they sum to the record's wall. */
   final case class Phases(construct: Long, optimize: Long, plan: Long, execute: Long, unattributed: Long)
 
+  /** `compiles` and `compileMs` are JVM-wide (see the object's doc). */
   final case class Record(name: String, wallMs: Long, phases: Phases, jobs: Int, stages: Seq[Stage],
-      bytes: Bytes, driverGapMs: Long, planNodes: Int) {
+      bytes: Bytes, driverGapMs: Long, planNodes: Int, compiles: Long, compileMs: Long) {
 
     /** The phase line, then one line per stage. */
     def lines: Seq[String] = {
       val p = phases
       (s"[ledger] $name: wall ${sec(wallMs)} s = construct ${sec(p.construct)} + optimize ${sec(p.optimize)}" +
         s" + plan ${sec(p.plan)} + execute ${sec(p.execute)} + unattributed ${sec(p.unattributed)};" +
-        s" driver gap ${sec(driverGapMs)} s; $jobs jobs, ${stages.size} stages, $planNodes plan nodes") +:
+        s" driver gap ${sec(driverGapMs)} s; $jobs jobs, ${stages.size} stages, $planNodes plan nodes;" +
+        s" $compiles compiles in ${sec(compileMs)} s") +:
         stages.map(x => s"[ledger]   stage ${x.id}: wall ${sec(x.wallMs)} s, ${x.tasks} tasks, executor " +
           s"${sec(x.executorMs)} s, skew ${r2(x.skew)}, shuffle write ${mb(x.bytes.shuffleWrite)} MB  ${x.name}")
     }
@@ -62,6 +71,7 @@ object QueryLedger {
       "phases" -> obj("construct" -> sec(phases.construct), "optimize" -> sec(phases.optimize),
         "plan" -> sec(phases.plan), "execute" -> sec(phases.execute), "unattributed" -> sec(phases.unattributed)),
       "driver_gap" -> sec(driverGapMs), "plan_nodes" -> planNodes, "jobs" -> jobs,
+      "compiles" -> compiles, "compile_ms" -> compileMs,
       "bytes" -> obj("sw_mb" -> mb(bytes.shuffleWrite), "sr_mb" -> mb(bytes.shuffleRead),
         "spill_mb" -> mb(bytes.spill), "in_mb" -> mb(bytes.input), "peak_task_mb" -> mb(bytes.peakExecMem)),
       "stages" -> stages.map(x => obj("id" -> x.id, "wall" -> sec(x.wallMs), "tasks" -> x.tasks,
@@ -86,18 +96,26 @@ object QueryLedger {
     sc.addSparkListener(l)
     sc.setJobGroup(l.tag, s"ledger $name", interruptOnCancel = false)
     try {
+      val (n0, ns0) = compiled
       val t0 = System.currentTimeMillis() // the clock Spark's events use
       val df = build(spark, sfDir)
       val t1 = System.currentTimeMillis()
       df.write.format("noop").mode("overwrite").save()
       val t2 = System.currentTimeMillis()
+      val (n1, ns1) = compiled
       org.apache.spark.sql.graft.shims.waitListenerBus(spark)
-      l.record(name, t0, t1, t2)
+      l.record(name, t0, t1, t2, n1 - n0, (ns1 - ns0) / 1000000L)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(l)
     }
   }
+
+  /** Generated classes compiled in this JVM so far, and their total
+    * compile time in ns. Cache hits count in neither. */
+  private def compiled: (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
   private final class StageAcc {
     var info: Option[StageInfo] = None // set on completion
@@ -159,10 +177,12 @@ object QueryLedger {
     }
 
     /** The record of a query built over [t0, t1] whose write ran over
-      * [t1, t2]. The write is the group's last root execution; earlier ones
-      * are cache builds inside the construct phase.
+      * [t1, t2], compiling `compiles` classes in `compileMs`. The write is
+      * the group's last root execution; earlier ones are cache builds
+      * inside the construct phase.
       */
-    def record(name: String, t0: Long, t1: Long, t2: Long): Record = synchronized {
+    def record(name: String, t0: Long, t1: Long, t2: Long,
+        compiles: Long, compileMs: Long): Record = synchronized {
       val write = executions.values.filter(_.startMs >= t1).lastOption
       // each phase starts where the previous one ended, clipped to the wall
       var at = t1
@@ -186,7 +206,7 @@ object QueryLedger {
         Phases(t1 - t0, len(opt), len(pln), len(exe), (t2 - t1) - len(opt) - len(pln) - len(exe)),
         jobs.size, done.map(_._2), stages.values.map(_.bytes).fold(NoBytes)(_ + _),
         len(exe) - covered(exe, done.map { case (start, st) => (start, start + st.wallMs) }),
-        write.fold(0)(_.nodes))
+        write.fold(0)(_.nodes), compiles, compileMs)
     }
   }
 

@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions._
   *
   * Split per SURVEY.md §7.3: anything expressible as built-in column math
   * is plain column composition (normalize-angle, center distance, max
-  * dimension, seeded randomness, depth stats); the hot-path kernels
-  * (vertices, 8×8 min distance, camera distance, frame transform, relative
-  * position) are native ArrayData expressions in [[graft.functions]]; only
-  * cold kernels (camera position and orientation, vertex-extremes relative
-  * position, box IoU, quaternion conversion) remain Scala UDFs.
+  * dimension, seeded randomness, depth stats, camera position); the
+  * hot-path kernels (vertices, 8×8 min distance, camera distance, frame
+  * transform, relative position) are native ArrayData expressions in
+  * [[graft.functions]]; only cold kernels (camera orientation,
+  * vertex-extremes relative position, box IoU, quaternion conversion)
+  * remain Scala UDFs.
   */
 object GeoFunctions {
 
@@ -25,6 +26,14 @@ object GeoFunctions {
     */
   def centerDistanceCol(x: Column, y: Column, z: Column): Column =
     sqrt(x * x + y * y + z * z)
+
+  /** Camera position E[:3, 3] of a 4×4 camera-to-world extrinsics, null
+    * unless 4×4 — [[Geo.cameraPosition]] as column math
+    * (geometry.py:135-162).
+    */
+  def cameraPositionCol(extrinsics: Column): Column =
+    when(size(extrinsics) === 4 && forall(extrinsics, row => size(row) === 4),
+      array((0 until 3).map(i => extrinsics(i)(3)): _*))
 
   /** Max box dimension (geometry.py:121-132). */
   def maxDimCol(xl: Column, yl: Column, zl: Column): Column =
@@ -108,13 +117,6 @@ object GeoFunctions {
     graft.functions.relativePosition(a, b)
 
   // ------------------------------------------------------------------ UDFs
-
-  /** Camera position from 4×4 extrinsics, null-safe (geometry.py:135-162). */
-  val cameraPositionUdf = udf {
-    (extrinsics: Seq[Seq[Double]]) =>
-      if (extrinsics == null) None
-      else Geo.cameraPosition(extrinsics.map(_.toArray).toArray).map(_.toSeq)
-  }
 
   /** G8 camera orientation basis vectors from 4×4 extrinsics: struct of
     * (right, down, up, forward, back) world vectors

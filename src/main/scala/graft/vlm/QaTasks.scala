@@ -7,7 +7,8 @@ import org.apache.spark.sql.expressions.Window
 /** The six 3D QA task generators as declarative `DataFrame => DataFrame`
   * transforms over unified frame records (SURVEY.md §7.1 step 5).
   *
-  * Every task is per-frame work: explode → column math/UDF → re-assemble.
+  * Every task is per-frame work: explode → column math and native
+  * expressions → re-assemble.
   * The two pair tasks form their `i < j` box pairs inside each frame row
   * ([[boxPairs]]), so no task joins boxes back to boxes. The plans shuffle
   * only for per-frame aggregates and for the contiguous QA ids, which
@@ -70,13 +71,16 @@ object QaTasks {
   private def withSource(frames: DataFrame): DataFrame =
     FrameSchema.withSourceTag(frames)
 
-  /** Exploded 3D boxes with positional index. */
-  private def boxes(frames: DataFrame): DataFrame =
+  /** Exploded 3D boxes with positional index, carrying the frame columns
+    * `keep` (a per-frame value computed before the explode is computed once
+    * per frame, not once per box).
+    */
+  private def boxes(frames: DataFrame, keep: String*): DataFrame =
     withSource(frames)
       .filter(size(col("bounding_boxes_3d")) > 0)
       .select(
-        col("image_id"), col("scene_id"), col("frame_id"), col("_source_file"), col("camera"),
-        posexplode(col("bounding_boxes_3d")).as(Seq("bbox_idx", "bbox"))
+        Seq(col("image_id"), col("scene_id"), col("frame_id"), col("_source_file"), col("camera")) ++
+          keep.map(col) :+ posexplode(col("bounding_boxes_3d")).as(Seq("bbox_idx", "bbox")): _*
       )
 
   private def vertsOf(b: Column): Column =
@@ -316,9 +320,10 @@ object QaTasks {
     * SURVEY §7.3), three variants with seeded sampling.
     */
   def camObjRelDist(frames: DataFrame, datasetName: String): DataFrame = {
-    val withCam = boxes(frames)
-      .withColumn("cam_pos", cameraPositionUdf(col("camera").getField("extrinsics")))
+    val framesWithCam = frames
+      .withColumn("cam_pos", cameraPositionCol(col("camera").getField("extrinsics")))
       .filter(col("cam_pos").isNotNull)
+    val withCam = boxes(framesWithCam, "cam_pos")
       .withColumn("verts", vertsOf(col("bbox")))
       .withColumn("dist", cameraToBoxDistanceCol(col("cam_pos"), col("verts")))
     val perFrame = withCam

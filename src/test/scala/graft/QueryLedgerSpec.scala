@@ -87,6 +87,14 @@ class QueryLedgerSpec extends SparkSpec {
     assert(r.stages.exists(s => s.tasks > 0 && s.bytes.shuffleWrite > 0), r.lines.mkString("\n"))
   }
 
+  test("a query measured again compiles no class, and both records print their compiles") {
+    val Seq(first, second) = Seq.fill(2)(QueryLedger.measure(spark, sf, "q1_agg"))
+    assert(second.compiles == 0 && second.compileMs == 0, second.lines.head)
+    for (r <- Seq(first, second))
+      assert(r.json.contains(s""""compiles":${r.compiles},"compile_ms":${r.compileMs}""") &&
+        r.lines.head.contains(s"${r.compiles} compiles"), r.json)
+  }
+
   test("covered counts the union of intervals inside the window once") {
     val intervals = Seq((0L, 12L), (11L, 15L), (18L, 30L), (25L, 40L), (0L, 5L), (22L, 21L))
     assert(QueryLedger.covered((10L, 20L), intervals) == 7) // [10, 15] and [18, 20]

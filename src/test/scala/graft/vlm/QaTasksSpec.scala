@@ -203,6 +203,16 @@ class QaTasksSpec extends SparkSpec {
     }
   }
 
+  test("cameraPositionCol equals Geo.cameraPosition on null, 3×4, 4×3 and 4×4 extrinsics") {
+    val e4 = Seq(Seq(1.0, 0, 0, 10), Seq(0, 1.0, 0, -20.5), Seq(0, 0, 1.0, 30.25), Seq(0, 0, 0, 1.0))
+    val cases: Seq[Option[Seq[Seq[Double]]]] = Seq(None, Some(e4.take(3)), Some(e4.map(_.take(3))), Some(e4))
+    val got = cases.toDF("e").select(GeoFunctions.cameraPositionCol(org.apache.spark.sql.functions.col("e")))
+      .collect().map(r => Option(r.getSeq[Double](0))).toSeq
+    val want = cases.map(e => Geo.cameraPosition(e.map(_.map(_.toArray).toArray).orNull).map(_.toSeq))
+    assert(got == want)
+    assert(want.count(_.nonEmpty) == 1)
+  }
+
   test("all tasks are deterministic across runs (seeded M3 randomness)") {
     QaTasks.all.foreach { case (name, fn) =>
       val a = fn(fixture, "testds").collect().map(_.toString).sorted

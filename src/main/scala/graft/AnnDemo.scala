@@ -36,18 +36,69 @@ import org.apache.spark.sql.functions._
   * same committed artifact. One JSON line → `ann_demo_last.json`
   * (SPARK_GRAFT_ANN_OUT to override).
   *
+  * The serving, sweep, SQ8 and filtered legs are compositions of the
+  * IvfCentroids search core (probeRanking, the score kernels, topK) — the
+  * same functions the v-family's catalog queries run under the oracle.
+  *
   *   runMain graft.AnnDemo [sfDir] [workDir] [scale]
+  *
+  * Without a `workDir` the demo works in a fresh temp directory (the ×30
+  * corpus, the codebook and every list layout) and deletes it on exit; a
+  * given `workDir` is left in place.
   */
 object AnnDemo {
+  import graft.queries.IvfCentroids
+  import graft.queries.IvfCentroids.{adist, probeRanking, topK, withAdist, withCos, withL2}
+  import graft.layout.Layout
+  import java.nio.file.{Files, Path, Paths}
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val workDir = args.lift(1).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft-ann-demo").toString)
+    val ownWorkDir = args.lift(1).isEmpty
+    val workDir = args.lift(1).getOrElse(Files.createTempDirectory("graft-ann-demo").toString)
     val scale = args.lift(2).map(_.toInt).getOrElse(30)
     val spark = GraftSession.getOrCreate()
-    import graft.queries.IvfCentroids
-    import graft.layout.Layout
+    val line =
+      try run(spark, sfDir, workDir, scale)
+      finally {
+        spark.stop()
+        if (ownWorkDir) deleteTree(Paths.get(workDir))
+      }
+    println(line)
+    Console.out.flush()
+  }
 
+  private def deleteTree(root: Path): Unit = {
+    val paths = Files.walk(root)
+    try paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+    finally paths.close()
+  }
+
+  /** Rows the parquet scan under `df` emitted after footer row-group skip:
+    * the leaves' own numOutputRows from `df`'s execution (a bare
+    * scan+filter has no exchange, so the plan is non-adaptive and the leaf
+    * metrics live on this Dataset).
+    */
+  private def rowsScanned(df: DataFrame): Long = {
+    df.collect()
+    df.queryExecution.executedPlan.collectLeaves()
+      .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
+  }
+
+  /** The sorted cell ids of `df`. */
+  private def cellsOf(df: DataFrame): Array[Long] =
+    df.select("cell").collect().map(_.getLong(0)).sorted
+
+  /** The k nearest rows of `cands` to one query vector `qq` (id `qid`,
+    * excluded) by exact L2 — the driver-side router's per-query rerank.
+    */
+  private def nearest(cands: DataFrame, qid: Long, qq: Array[Long], k: Int): DataFrame =
+    topK(cands.filter(col("vec_id") =!= qid).withColumn("query_id", lit(qid))
+      .withColumn("adist", adist(col("q"), graft.functions.longDot(col("q"), col("q")),
+        typedLit(qq), lit(qq.map(x => x * x).sum))), "adist", k, asc = true)
+
+  private def run(spark: SparkSession, sfDir: String, workDir: String, scale: Int): String = {
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f
       (r, (System.nanoTime() - t0) / 1e9)
@@ -63,12 +114,12 @@ object AnnDemo {
     // synthesized ×30 corpus (~15 MB parquet) into 1–2 scan partitions,
     // and every downstream map-side job — the Lloyd rounds' sample×cent
     // argmin, the full-corpus assignment — inherits that width and runs
-    // on 1 of 32 cores. THIS, not the flat-vs-routed dispatch, was the
-    // round-15 "preset-sensitive build" finding: the demo preset's 109.9 s
-    // build was ~3e7 single-threaded distance rows (the 100tb preset's
-    // routed path does 15× less work per row, which merely masked the
-    // under-split scan). One cheap shuffle of the skinny rows buys full
-    // width; at production split counts the branch never fires.
+    // on 1 of 32 cores. THIS, not the flat-vs-routed dispatch, made the
+    // build look preset-sensitive: the demo preset's 109.9 s build was
+    // ~3e7 single-threaded distance rows (the 100tb preset's routed path
+    // does 15× less work per row, which merely masked the under-split
+    // scan). One cheap shuffle of the skinny rows buys full width; at
+    // production split counts the branch never fires.
     val rawEmb = spark.read.parquet(s"$corpusDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val par = spark.sparkContext.defaultParallelism
@@ -84,12 +135,11 @@ object AnnDemo {
       .localCheckpoint(eager = true)
 
     // 1. index build: trained codebook parquet + corpus→cell assignment.
-    // Training is FLAT at every preset (round-17 decision, superseding the
-    // round-15 preset dispatch): routed Lloyd degrades the centroids
+    // Training is FLAT at every preset: routed Lloyd degrades the centroids
     // themselves, not just the routing — measured true-neighbor cell
     // coverage@np16 on this corpus: 2/24 routed-trained vs 12/24
-    // flat-trained at the same routed assignment (and the round-15 sweep
-    // had already measured np1 recall 0.175 routed vs 0.525 flat). Flat
+    // flat-trained at the same routed assignment (and np1 recall 0.175
+    // routed vs 0.525 flat). Flat
     // training is affordable at ANY corpus scale because Lloyd runs on the
     // BOUNDED sample (sampleMod; FAISS-style ~10²–10³ vectors per
     // centroid), so its cost is sample × C, not n × C — the corpus-sized
@@ -130,51 +180,32 @@ object AnnDemo {
     val nProbe = 10
     val nQueries = 8
     val sweepProbes = Seq(1, 2, 4, 8, 10, 16)
-    // exact (dist, cid) ranking — probeRanking's Scaladoc records the two
-    // measured-and-rejected alternatives (group-major mirror, radius
-    // branch-and-bound); the routing loss is paid at ASSIGNMENT time
-    // (ivfRouteWidth multiprobe) instead of per-query read amplification
-    val qside = quantized.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("q"))
-    val probesAll = IvfCentroids.probeRanking(qside, codebook)
+    val probesAll = probeRanking(quantized.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("query_id"), col("q").as("qq"),
+          graft.functions.longDot(col("q"), col("q")).as("qn2")), codebook)
       .filter(col("prk") <= sweepProbes.max)
-      .join(qside, Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("q").as("qq"),
-        graft.functions.longDot(col("q"), col("q")).as("qn2"),
-        col("cell"), col("prk"))
       .cache()
     probesAll.count()
     val probes = probesAll.filter(col("prk") <= nProbe).drop("prk").cache()
     probes.count()
-    val batchCells = probes.select("cell").distinct()
-      .collect().map(_.getLong(0)).sorted
-    val q1Cells = probes.filter(col("query_id") === 0).select("cell")
-      .collect().map(_.getLong(0)).sorted
+    val batchCells = cellsOf(probes.select("cell").distinct())
+    val q1Cells = cellsOf(probes.filter(col("query_id") === 0))
+    def inCells(df: DataFrame, cells: Seq[Long]) = df.filter(col("cell").isin(cells.map(Long.box): _*))
 
     // 3. serving, the timed job: literal cell filter (parquet-pushed, so
     // footer stats skip non-probed files' row groups) → broadcast-join the
     // probe table for rerank pairs → exact cosine → top-3 per query
-    def serve(cells: Array[Long], probeTbl: org.apache.spark.sql.DataFrame) =
-      lists.filter(col("cell").isin(cells.map(Long.box): _*))
-        .join(broadcast(probeTbl), Seq("cell"))
+    def candidates(src: DataFrame, cells: Seq[Long], probeTbl: DataFrame) =
+      inCells(src, cells).join(broadcast(probeTbl), Seq("cell"))
         .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cos", graft.functions.longDot(col("q"), col("qq")).cast("double") /
-          (sqrt(col("n2").cast("double")) * sqrt(col("qn2").cast("double"))))
-        .withColumn("rk", row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)))
-        .filter(col("rk") <= 3)
-    val (topk, probeS) = timed { serve(batchCells, probes).count() }
+    val (topk, probeS) = timed {
+      topK(withCos(candidates(lists, batchCells, probes)), "cos", 3, asc = false).count()
+    }
 
     // instrumentation, all untimed:
-    //  - a single query's candidate read with scan metrics: the parquet
-    //    scan's OWN numOutputRows after footer row-group skip — the same
-    //    pushed `cell IN` filter the serve runs, measured on the bare
-    //    scan+filter (no exchange → non-adaptive plan, leaf metrics live
-    //    on this Dataset's own execution, populated by its collect())
-    val q1scan = lists.filter(col("cell").isin(q1Cells.map(Long.box): _*))
-    q1scan.collect()
-    val rowsRead1q = q1scan.queryExecution.executedPlan.collectLeaves()
-      .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
+    //  - a single query's candidate read with scan metrics: the same
+    //    pushed `cell IN` filter the serve runs, on the bare scan+filter
+    val rowsRead1q = rowsScanned(inCells(lists, q1Cells))
     //  - files contributing candidate rows, batch union + per-query
     val cand = lists.withColumn("src_file", input_file_name())
       .join(broadcast(probes), Seq("cell"))
@@ -193,34 +224,22 @@ object AnnDemo {
     //    pass over the corpus for the 8-query batch (bounded, untimed);
     //    each approx arm reuses the shared probe ranking, so the sweep's
     //    marginal cost is nprobe/C of the corpus per point.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)
-    def top5(cands: org.apache.spark.sql.DataFrame) = cands
-      .withColumn("cos", graft.functions.longDot(col("q"), col("qq")).cast("double") /
-        (sqrt(col("n2").cast("double")) * sqrt(col("qn2").cast("double"))))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select(col("query_id"), col("vec_id"))
+    def top5(cands: DataFrame) =
+      topK(withCos(cands), "cos", 5, asc = false).select(col("query_id"), col("vec_id"))
     val queriesTbl = probesAll.select(col("query_id"), col("qq"), col("qn2")).distinct()
     val exactTop = top5(
-      assigned.withColumn("n2", graft.functions.longDot(col("q"), col("q")))
-        .join(broadcast(queriesTbl), col("vec_id") =!= col("query_id"))).cache()
+      assigned.join(broadcast(queriesTbl), col("vec_id") =!= col("query_id"))).cache()
     val nExact = exactTop.count() // nQueries × 5
+    def recallOf(approxTop: DataFrame) =
+      exactTop.join(approxTop, Seq("query_id", "vec_id"), "left_semi").count().toDouble / nExact
     val sweep = sweepProbes.map { np =>
       val probeN = probesAll.filter(col("prk") <= np)
       val approxTop = top5(lists
         .join(broadcast(probeN), Seq("cell"))
         .filter(col("vec_id") =!= col("query_id")))
-      val hit = exactTop.join(approxTop, Seq("query_id", "vec_id"), "left_semi").count()
       // measured read cost at this operating point: the parquet scan's own
       // numOutputRows for query 0's pushed `cell IN` filter (row-group skip)
-      val cellsNp = probeN.filter(col("query_id") === 0).select("cell")
-        .collect().map(_.getLong(0)).sorted
-      val scanNp = lists.filter(col("cell").isin(cellsNp.map(Long.box): _*))
-      scanNp.collect()
-      val rowsNp = scanNp.queryExecution.executedPlan.collectLeaves()
-        .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
-      (np, hit.toDouble / nExact, rowsNp)
+      (np, recallOf(approxTop), rowsScanned(inCells(lists, cellsOf(probeN.filter(col("query_id") === 0)))))
     }
     def fmt4(v: Double) = String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     val sweepJson = sweep.map { case (np, rec, rows) =>
@@ -238,47 +257,24 @@ object AnnDemo {
     // (Layout.touchedFiles — per-file min-cell spans), the same numbers a
     // 100 TB query router computes per batch.
     val dim = codebook.head().getSeq[Long](1).size
-    val statAggs = (0 until dim).map(i => min(element_at(col("q"), i + 1)).as(s"mn$i")) ++
-      (0 until dim).map(i => max(element_at(col("q"), i + 1)).as(s"mx$i"))
-    val sq8Stats = assigned.agg(statAggs.head, statAggs.tail: _*).select(
-      array((0 until dim).map(i => col(s"mn$i")): _*).as("mns"),
-      array((0 until dim).map(i => col(s"mx$i") - col(s"mn$i")): _*).as("rng"))
+    val sq8Stats = IvfCentroids.sq8Stats(assigned, dim)
     val sq8Path = s"$workDir/lists_sq8"
     val (_, layoutSq8S) = timed {
       val codes = assigned.crossJoin(broadcast(sq8Stats))
-        .withColumn("dq", zip_with(col("q"), col("mns"), (x, m) => x - m))
         .withColumn("code", graft.functions.packU8(
-          zip_with(col("dq"), col("rng"), (dd, r) =>
-            when(r === 0L, 0L).otherwise(
-              (((dd * 255L) - ((dd * 255L) % r)) / r).cast("long")))))
+          IvfCentroids.sq8Encode(col("q"), col("mns"), col("rng"))))
         .select(col("vec_id"), col("cell"), col("code"))
       Layout.writeIvfClustered(codes, sq8Path, nFiles)
     }
     val listsSq8 = Layout.readIvfLists(spark, sq8Path)
-    def sq8Candidates(probeTbl: org.apache.spark.sql.DataFrame, cells: Array[Long]) =
-      listsSq8.filter(col("cell").isin(cells.map(Long.box): _*))
-        .join(broadcast(probeTbl), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .crossJoin(broadcast(sq8Stats))
-        .withColumn("xh", zip_with(col("mns"),
-          zip_with(graft.functions.unpackU8(col("code")), col("rng"), (ci, r) =>
-            (((ci * r) - ((ci * r) % 255L)) / 255L).cast("long")),
-          (m, v) => m + v))
-        .withColumn("dd", zip_with(col("qq"), col("xh"), (a, b) => a - b))
-        .withColumn("adist", graft.functions.longDot(col("dd"), col("dd")))
-    val (topkSq8, probeSq8S) = timed {
-      sq8Candidates(probes, batchCells)
-        .withColumn("rk", row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id")).orderBy(col("adist").asc, col("vec_id").asc)))
-        .filter(col("rk") <= 3).count()
-    }
+    val sq8Candidates = withL2(candidates(listsSq8, batchCells, probes)
+      .crossJoin(broadcast(sq8Stats))
+      .withColumn("xh", IvfCentroids.sq8Decode(
+        graft.functions.unpackU8(col("code")), col("mns"), col("rng"))), "qq", "xh", "adist")
+    val (topkSq8, probeSq8S) = timed { topK(sq8Candidates, "adist", 3, asc = true).count() }
     // recall@5 of the SQ8 tier against the exact top-5 (untimed)
-    val sq8Top5 = sq8Candidates(probes, batchCells)
-      .withColumn("rk", row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id")).orderBy(col("adist").asc, col("vec_id").asc)))
-      .filter(col("rk") <= 5).select(col("query_id"), col("vec_id"))
-    val recallSq8 = exactTop.join(sq8Top5, Seq("query_id", "vec_id"), "left_semi")
-      .count().toDouble / nExact
+    val recallSq8 = recallOf(
+      topK(sq8Candidates, "adist", 5, asc = true).select(col("query_id"), col("vec_id")))
     // byte accounting across THREE storage tiers at the same corpus state:
     //  - fp32: the raw-VECTOR serving state a float deployment stores
     //    (4 B/dim floats — the baseline the SQ8 compression claim is
@@ -328,34 +324,19 @@ object AnnDemo {
     }
     val q0label = labelsTbl.filter(col("vec_id") === 0L).head().getInt(1)
     val probe0 = probes.filter(col("query_id") === 0L)
-    def top3(cands: org.apache.spark.sql.DataFrame) = cands
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adist",
-        col("n2") - lit(2L) * graft.functions.longDot(col("q"), col("qq")) + col("qn2"))
-      .withColumn("rk", row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id")).orderBy(col("adist").asc, col("vec_id").asc)))
-      .filter(col("rk") <= 3).select(col("vec_id"), col("adist"))
+    def top3(cands: DataFrame) =
+      topK(withAdist(cands), "adist", 3, asc = true)
+        .select(col("vec_id"), col("adist"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     // post-filter path: probed cells of the UNPARTITIONED lists, label
-    // applied after the read (qn2 recomputed — lists carry q and n2)
-    val postScan = lists.filter(col("cell").isin(q1Cells.map(Long.box): _*))
-    val postTop = top3(postScan
-      .join(broadcast(probe0.withColumn("qn2", graft.functions.longDot(col("qq"), col("qq")))),
-        Seq("cell"))
+    // applied after the read
+    val postTop = top3(candidates(lists, q1Cells, probe0)
       .join(labelsTbl, Seq("vec_id")).filter(col("label") === q0label))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    postScan.collect()
-    val rowsPost = postScan.queryExecution.executedPlan.collectLeaves()
-      .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
+    val rowsPost = rowsScanned(inCells(lists, q1Cells))
     // partitioned path: ONE label directory, probed cells inside it
-    val partScan = Layout.readPartitionedIvf(spark, byLabelPath, "label", q0label)
-      .filter(col("cell").isin(q1Cells.map(Long.box): _*))
-    val partTop = top3(partScan
-      .join(broadcast(probe0.withColumn("qn2", graft.functions.longDot(col("qq"), col("qq")))),
-        Seq("cell")))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    partScan.collect()
-    val rowsPart = partScan.queryExecution.executedPlan.collectLeaves()
-      .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
+    val partLists = Layout.readPartitionedIvf(spark, byLabelPath, "label", q0label)
+    val partTop = top3(candidates(partLists, q1Cells, probe0))
+    val rowsPart = rowsScanned(inCells(partLists, q1Cells))
     assert(postTop == partTop,
       s"partitioned filtered serving diverged: $postTop vs $partTop")
     // post-filter bytes = the unpartitioned probe read already measured
@@ -383,17 +364,14 @@ object AnnDemo {
         codebookArr)
       .withColumn("n2", graft.functions.longDot(col("q"), col("q")))
     val ((filesRewritten, filesAfter), mergeS) = timed {
-      graft.layout.Layout.mergeIvfDelta(spark, s"$workDir/lists", delta)
+      Layout.mergeIvfDelta(spark, s"$workDir/lists", delta)
     }
     // post-merge reads go through the manifest: the directory also holds
     // the GC-retention copy of the previous snapshot, which a raw dir
     // scan would double-count
-    val listsAfter = graft.layout.Layout.readIvfLists(spark, s"$workDir/lists")
+    val listsAfter = Layout.readIvfLists(spark, s"$workDir/lists")
     val rowsAfter = listsAfter.count()
-    val q1after = listsAfter.filter(col("cell").isin(q1Cells.map(Long.box): _*))
-    q1after.collect()
-    val rowsRead1qAfter = q1after.queryExecution.executedPlan.collectLeaves()
-      .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
+    val rowsRead1qAfter = rowsScanned(inCells(listsAfter, q1Cells))
 
     // 5. content UPDATE (the CDC shape): a third of the just-ingested
     // batch re-embeds — perturbed vectors route through the same
@@ -413,9 +391,9 @@ object AnnDemo {
       .withColumn("n2", graft.functions.longDot(col("q"), col("q")))
     val nTombs = tombstones.count()
     val ((upsertRewritten, _), upsertS) = timed {
-      graft.layout.Layout.mergeIvfDeltaUpsert(spark, s"$workDir/lists", updVecs, tombstones)
+      Layout.mergeIvfDeltaUpsert(spark, s"$workDir/lists", updVecs, tombstones)
     }
-    val afterUpsert = graft.layout.Layout.readIvfLists(spark, s"$workDir/lists")
+    val afterUpsert = Layout.readIvfLists(spark, s"$workDir/lists")
     val rowsAfterUpsert = afterUpsert.count()
     assert(rowsAfterUpsert == rowsAfter,
       s"upsert must replace, not grow: $rowsAfter -> $rowsAfterUpsert")
@@ -467,7 +445,7 @@ object AnnDemo {
     // hold fewer than k matches, so it returns short results; histogram
     // escalation (v24) restores k RESULTS but not the right ones for the
     // rare class, because a ~30-row class scattered over 1000 cells gives
-    // IVF routing no signal (round-14 measured recall 0.0 at np 10→34).
+    // IVF routing no signal (measured recall 0.0 at np 10→34).
     // The router therefore DISPATCHES on per-label mass (v26's rule): a
     // class whose candidate mass sits at or under the I/O break-even —
     // nprobe × average cell occupancy, the rows a FLOOR probe reads
@@ -480,10 +458,9 @@ object AnnDemo {
     // force, and rows read.
     // --- prep (untimed ROUTER/BUILD state): synthetic classes, router
     // metadata, and the rare tier's partitioned layout. The layout write
-    // is INDEX-BUILD cost and is timed separately (adaptive_build_s) —
-    // round-15 advice: it previously sat inside the timed serving block,
-    // charging one-time build cost to the adaptive leg's serving time,
-    // inconsistent with the build-vs-serve separation Bench enforces.
+    // is INDEX-BUILD cost and is timed separately (adaptive_build_s), not
+    // inside the timed serving block — the build-vs-serve separation Bench
+    // enforces.
     val kAdapt = 3
     // MASS-COVERAGE target (the v27 rule): probe until the ranked-cell
     // prefix's cumulative same-class histogram mass reaches α·k, not
@@ -527,7 +504,7 @@ object AnnDemo {
     // directory-pruned read path the dispatch routes to
     val byClassPath = s"$workDir/lists_by_class"
     val (_, adaptiveBuildS) = timed {
-      graft.layout.Layout.writePartitionedIvf(slabeled, byClassPath, "slabel", 2)
+      Layout.writePartitionedIvf(slabeled, byClassPath, "slabel", 2)
     }
     def il2(a: Array[Long], b: Array[Long]): Long = {
       var s = 0L; var i = 0
@@ -537,7 +514,7 @@ object AnnDemo {
     // measured-and-rejected alternatives are documented there)
     def rankCells(qq: Array[Long]): Seq[Long] =
       codebookArr.map { case (cid, cq) => (il2(qq, cq), cid) }.sorted.map(_._2)
-    // CALIBRATED dense-tier depth (round-17 rule, untimed ROUTER
+    // CALIBRATED dense-tier depth (untimed ROUTER
     // maintenance like the layout write above): for labels the dispatch
     // keeps on the IVF tier, mass coverage saturates instantly — a
     // 95%-selectivity label covers α·k inside any one cell — yet the
@@ -565,11 +542,7 @@ object AnnDemo {
         val qrow = slabeled.filter(col("vec_id") === qid).head()
         assert(qrow.getString(3) == "common", s"calibration query $qid is not common-class")
         val qq = qrow.getSeq[Long](1).toArray
-        val qlit = array(qq.map(lit): _*)
-        val gtCells = slabeled.filter(col("slabel") === "common" && col("vec_id") =!= qid)
-          .withColumn("adist", graft.functions.longDot(col("q"), col("q")) -
-            lit(2L) * graft.functions.longDot(col("q"), qlit))
-          .orderBy(col("adist").asc, col("vec_id").asc).limit(kAdapt)
+        val gtCells = nearest(slabeled.filter(col("slabel") === "common"), qid, qq, kAdapt)
           .select("cell").collect().map(_.getLong(0))
         val rank = rankCells(qq).zipWithIndex.toMap
         gtCells.map(c => rank(c) + 1) // smallest np that probes this neighbor
@@ -582,10 +555,10 @@ object AnnDemo {
     }
     val (adaptiveJson, adaptiveS) = timed {
       val k = kAdapt
-      // 8 queries per class (the sweep's nQueries discipline): the
-      // round-15 single-query-per-class numbers carried ~full-range
-      // variance — one query's 3 neighbors either route or don't — so
-      // per-class recall is now an average the rule can be graded on
+      // 8 queries per class (the sweep's nQueries discipline): single-
+      // query-per-class numbers carry ~full-range variance — one query's
+      // 3 neighbors either route or don't — so per-class recall is an
+      // average the rule can be graded on
       val classQueries = Seq(
         "rare" -> Seq(1000L, 1001L, 2000L, 2001L, 3000L, 3001L, 4000L, 4001L),
         "mid" -> Seq(101L, 102L, 103L, 104L, 201L, 202L, 203L, 204L),
@@ -595,7 +568,7 @@ object AnnDemo {
         val exactTier = avail <= exactTierMax
         val partRows =
           if (exactTier)
-            graft.layout.Layout.readPartitionedIvf(spark, byClassPath, "slabel", c).count()
+            Layout.readPartitionedIvf(spark, byClassPath, "slabel", c).count()
           else 0L
         val perQuery = qids.map { qid =>
           val qrow = slabeled.filter(col("vec_id") === qid).head()
@@ -615,21 +588,11 @@ object AnnDemo {
             case -1 => rankedCells.length
             case i  => i + 1
           })
-          val qlit = array(qq.map(lit): _*)
-          def top3Ids(np: Int): Seq[Long] = {
-            val cells = rankedCells.take(np)
-            slabeled.filter(col("cell").isin(cells.map(Long.box): _*))
-              .filter(col("slabel") === c && col("vec_id") =!= qid)
-              .withColumn("adist", graft.functions.longDot(col("q"), col("q")) -
-                lit(2L) * graft.functions.longDot(col("q"), qlit))
-              .orderBy(col("adist").asc, col("vec_id").asc).limit(k)
-              .select("vec_id").collect().map(_.getLong(0)).toSeq
-          }
-          val exact3 = slabeled.filter(col("slabel") === c && col("vec_id") =!= qid)
-            .withColumn("adist", graft.functions.longDot(col("q"), col("q")) -
-              lit(2L) * graft.functions.longDot(col("q"), qlit))
-            .orderBy(col("adist").asc, col("vec_id").asc).limit(k)
-            .select("vec_id").collect().map(_.getLong(0)).toSet
+          def nearestIds(cands: DataFrame): Seq[Long] =
+            nearest(cands, qid, qq, k).select("vec_id").collect().map(_.getLong(0)).toSeq
+          val sameClass = slabeled.filter(col("slabel") === c)
+          def top3Ids(np: Int): Seq[Long] = nearestIds(inCells(sameClass, rankedCells.take(np)))
+          val exact3 = nearestIds(sameClass).toSet
           def leg(np: Int) = {
             val ids = top3Ids(np)
             val rowsRead = rankedCells.take(np).map(cellRowCount.getOrElse(_, 0L)).sum
@@ -646,13 +609,7 @@ object AnnDemo {
           // manifest, rows read = the partition's rows
           val (npA, resA, hitA, rowsA) =
             if (exactTier) {
-              val ids = graft.layout.Layout
-                .readPartitionedIvf(spark, byClassPath, "slabel", c)
-                .filter(col("vec_id") =!= qid)
-                .withColumn("adist", graft.functions.longDot(col("q"), col("q")) -
-                  lit(2L) * graft.functions.longDot(col("q"), qlit))
-                .orderBy(col("adist").asc, col("vec_id").asc).limit(k)
-                .select("vec_id").collect().map(_.getLong(0)).toSeq
+              val ids = nearestIds(Layout.readPartitionedIvf(spark, byClassPath, "slabel", c))
               (0, ids.size, ids.count(exact3), partRows)
             } else {
               // the IVF tier serves at the deeper of the two escalation
@@ -688,8 +645,8 @@ object AnnDemo {
         // npCal), recorded per query), not the npCal formula alone: with
         // small-nCells geometry npCal can sit under 16 while mass
         // escalation still drives every query's served depth past it —
-        // the superset argument holds there too, and the old
-        // npCal-only guard skipped exactly that check (round-17 advice).
+        // the superset argument holds there too, and an npCal-only guard
+        // would skip exactly that check.
         if (exactTier || perQuery.map(_._6).min >= 16) assert(hitA >= hitF16,
           s"dispatch under fixed np16 for class $c: $hitA < $hitF16")
         s"""{"class":"$c","selectivity":${fmt4(
@@ -702,7 +659,7 @@ object AnnDemo {
       perClass.mkString("[", ",", "]")
     }
 
-    val preset = sys.env.getOrElse("GRAFT_PRESET", "demo")
+    val preset = GraftConfig.activeName
     val line =
       s"""{"metric":"ann_serving","preset":${Artifacts.jsonStr(preset)},"scale":$scale,""" +
         s""""build_s":${fmt(buildS)},"build_profile":{"routed_train":$routedTrain,"seed_s":${fmt(seedS)},""" +
@@ -740,8 +697,6 @@ object AnnDemo {
         s""""sf":${Artifacts.jsonStr(sfDir)}}"""
     Artifacts.upsertLine(sys.env.getOrElse("SPARK_GRAFT_ANN_OUT", "ann_demo_last.json"),
       s""""preset":${Artifacts.jsonStr(preset)}""", line)
-    spark.stop()
-    println(line)
-    Console.out.flush()
+    line
   }
 }

@@ -130,4 +130,10 @@ object GraftConfig {
     // candidates with no warning anywhere)
     case Some(other) => sys.error(s"unknown GRAFT_PRESET '$other' (expected 'demo' or '100tb')")
   }
+
+  /** The active preset's name ("demo" / "100tb") — the stamp every main
+    * writes into its records, derived here so the variable is read (and
+    * validated) in one place.
+    */
+  val activeName: String = if (active == Preset100TB) "100tb" else "demo"
 }

@@ -242,7 +242,7 @@ object PlanContracts {
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val preset = sys.env.getOrElse("GRAFT_PRESET", "demo")
+    val preset = GraftConfig.activeName
     // plan-only JVM: building the dedup queries must not pay the shared
     // pipeline's eager materialization pass (see SharedCaches.eagerMaterialize)
     graft.queries.SharedCaches.eagerMaterialize = false

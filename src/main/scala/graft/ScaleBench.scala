@@ -199,7 +199,7 @@ object ScaleBench {
         require(unknown.isEmpty, s"unknown families: ${unknown.mkString(",")} (known: ${Families.mkString(",")})")
         req
     }
-    val preset = sys.env.getOrElse("GRAFT_PRESET", "demo")
+    val preset = GraftConfig.activeName
     val spark = GraftSession.getOrCreate()
     val calib = Artifacts.calibrate(spark)
 

@@ -58,7 +58,7 @@ object ShuffleAudit {
     // preset+sf adjacent at the tail: the pair is the upsert identity, so
     // one artifact can carry sf0.1 AND capacity-×10 legs per preset
     val marker =
-      s""""preset":${Artifacts.jsonStr(sys.env.getOrElse("GRAFT_PRESET", "demo"))},"sf":${Artifacts.jsonStr(sfDir)}"""
+      s""""preset":${Artifacts.jsonStr(GraftConfig.activeName)},"sf":${Artifacts.jsonStr(sfDir)}"""
     val line =
       s"""{"metric":"shuffle_audit","n":${rows.size},"zero_shuffle":${zero.size},"spilled":${spilled.size},"spilled_queries":${spilled.map(Artifacts.jsonStr).mkString("[", ",", "]")},"total_shuffle_mb":${mb(rows.map(_._2.shuffleWrite).sum)},"total_input_mb":${mb(rows.map(_._2.input).sum)},"queries":$qjson,$marker}"""
     Artifacts.upsertLine(

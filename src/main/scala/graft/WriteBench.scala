@@ -53,7 +53,7 @@ object WriteBench {
   def main(args: Array[String]): Unit = {
     val nFrames = args.headOption.map(_.toInt).getOrElse(50000)
     val workDir = args.lift(1).getOrElse("/tmp/graft_write_bench")
-    val preset = sys.env.getOrElse("GRAFT_PRESET", "demo")
+    val preset = GraftConfig.activeName
     val spark = GraftSession.getOrCreate()
     val calib = Artifacts.calibrate(spark)
 

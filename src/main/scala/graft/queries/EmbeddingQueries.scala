@@ -23,6 +23,8 @@ import org.apache.spark.sql.expressions.Window
   */
 object EmbeddingQueries extends QueryModule {
   import PipelineFns._
+  import IvfCentroids.{NumProbe, cosine, escalate, pqAdc, probeRanking, recall, topK,
+    withAdist, withCos, withL2}
 
   // scale geometry from the active GraftConfig (demo: 6 planes / 8 cells;
   // the 100 TB preset widens to 28 planes / 1e5 cells — see GraftConfig
@@ -32,7 +34,6 @@ object EmbeddingQueries extends QueryModule {
   private val NumPlanes = graft.GraftConfig.active.numHyperplanes
   private val CosineThreshold = 0.4
   private val NumCells = graft.GraftConfig.active.numCells
-  private val NumProbe = 2 // IVF cells probed per query
   private val TrainIters = 2 // sampled-Lloyd rounds for the IVF codebook
   private val SampleMod = 4 // train on vec_id % 4 == 0 (deterministic sample)
   /** v26's dispatch threshold: a label whose candidate mass (excluding the
@@ -286,14 +287,6 @@ object EmbeddingQueries extends QueryModule {
   private val qvecSql =
     "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
 
-  /** Exact integer dot product of two quantized vectors — the custom
-    * codegen'd [[graft.functions.LongDot]] (one tight loop; the built-in
-    * `aggregate(zip_with(...))` chain allocates a zipped array per row and
-    * runs interpreted).
-    */
-  private def idot(a: Column, b: Column): Column =
-    graft.functions.longDot(a, b)
-
   private def idotSql(a: String, b: String): String =
     s"list_sum(list_transform(range(1, $Dim + 1), i -> ($a)[i] * ($b)[i]))"
 
@@ -303,12 +296,7 @@ object EmbeddingQueries extends QueryModule {
   private def inorm2Sql(a: String): String =
     s"list_sum(list_transform($a, x -> x * x))"
 
-  /** Cosine from exact integer parts; the only float ops are two sqrts, one
-    * multiply, one divide — identical on both engines.
-    */
-  private def cosine(dot: Column, n2a: Column, n2b: Column): Column =
-    dot.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
-
+  /** SQL mirror of [[IvfCentroids.cosine]] over precomputed integer parts. */
   private def cosineSql(dot: String, n2a: String, n2b: String): String =
     s"CAST($dot AS DOUBLE) / (sqrt(CAST($n2a AS DOUBLE)) * sqrt(CAST($n2b AS DOUBLE)))"
 
@@ -373,7 +361,7 @@ object EmbeddingQueries extends QueryModule {
     base.filter(!isEval)
       .select(col("vec_id"), col("q"), col("n2"))
       .join(broadcast(evals))
-      .withColumn("cos", cosine(idot(col("q"), col("eq")), col("n2"), col("en2")))
+      .withColumn("cos", cosine(col("q"), col("eq"), col("n2"), col("en2")))
       .groupBy(col("vec_id"))
       .agg(max(struct(col("cos"), (-col("eval_id")).as("nid"))).as("m"))
       .select(col("vec_id"), (-col("m.nid")).as("eval_id"),
@@ -485,9 +473,14 @@ object EmbeddingQueries extends QueryModule {
     * in-line because the corpus is the testdata parquet.
     */
   private def sq8Recon(s: SparkSession, d: String): DataFrame =
-    quantized(s, d).crossJoin(broadcast(sq8Stats(s, d)))
-      .withColumn("xh", sq8Dequant(col("q"), col("mns"), col("rng")))
-      .select(col("vec_id"), col("xh"))
+    withSq8Recon(quantized(s, d), s, d).select(col("vec_id"), col("xh"))
+
+  /** `df` plus the SQ8 reconstruction `xh` of its `q`, dequantized inline
+    * against the broadcast stats row.
+    */
+  private def withSq8Recon(df: DataFrame, s: SparkSession, d: String): DataFrame =
+    df.crossJoin(broadcast(sq8Stats(s, d)))
+      .withColumn("xh", IvfCentroids.sq8Dequant(col("q"), col("mns"), col("rng")))
 
   /** The SQ8 per-dim stats row `(mns, rng)` — ONE partial-aggregated
     * corpus aggregate, broadcast back to every consumer (the scalar-join
@@ -500,29 +493,7 @@ object EmbeddingQueries extends QueryModule {
     * this row's rebuild on the first sample.
     */
   private def sq8Stats(s: SparkSession, d: String): DataFrame =
-    SharedCaches.getTruncated(s, d, "sq8Stats") {
-      val base = quantized(s, d)
-      val aggs = (0 until Dim).map(i => min(element_at(col("q"), i + 1)).as(s"mn$i")) ++
-        (0 until Dim).map(i => max(element_at(col("q"), i + 1)).as(s"mx$i"))
-      base.agg(aggs.head, aggs.tail: _*).select(
-        array((0 until Dim).map(i => col(s"mn$i")): _*).as("mns"),
-        array((0 until Dim).map(i => col(s"mx$i") - col(s"mn$i")): _*).as("rng"))
-    }
-
-  /** Quantize-then-dequantize `q` against the per-dim stats — the SQ8
-    * round trip in pure integer arithmetic (mod-subtract exact division;
-    * operands nonnegative and ≤ ~1e6, so the IEEE divide of exact
-    * multiples is exact in both engines).
-    */
-  private def sq8Dequant(q: Column, mns: Column, rng: Column): Column = {
-    val dq = zip_with(q, mns, (x, m) => x - m)
-    val codes = zip_with(dq, rng, (dd, r) =>
-      when(r === 0L, 0L).otherwise(
-        (((dd * 255L) - ((dd * 255L) % r)) / r).cast("long")))
-    val t = zip_with(codes, rng, (ci, r) =>
-      (((ci * r) - ((ci * r) % 255L)) / 255L).cast("long"))
-    zip_with(mns, t, (m, v) => m + v)
-  }
+    SharedCaches.getTruncated(s, d, "sq8Stats")(IvfCentroids.sq8Stats(quantized(s, d), Dim))
 
   /** SQL mirror of [[sq8Recon]] (CTEs `mm`, `st`, `enc`); requires a
     * `base` CTE of [[quantizedSql]] in scope.
@@ -535,6 +506,57 @@ object EmbeddingQueries extends QueryModule {
        |    mns[i] + ((CASE WHEN rng[i] = 0 THEN 0 ELSE ((q[i] - mns[i]) * 255) // rng[i] END) * rng[i]) // 255) AS xh
        |  FROM base, st)""".stripMargin
 
+  // ---- compositions of the IvfCentroids search core (probeRanking →
+  // escalate → score → topK → recall) shared by the v-family bodies
+
+  /** A top-k as served rows: query_id, `lead`…, rk (long), neighbor_id,
+    * `score`.
+    */
+  private def neighbors(top: DataFrame, score: Column, lead: Column*): DataFrame =
+    top.select(Seq(col("query_id")) ++ lead ++
+      Seq(col("rk").cast("long").as("rk"), col("vec_id").as("neighbor_id"), score): _*)
+
+  /** A top-k as a recall arm: (query_id, neighbor_id). */
+  private def ids(top: DataFrame): DataFrame =
+    top.select(col("query_id"), col("vec_id").as("neighbor_id"))
+
+  /** Filtered-ANN candidates: `assigned` rows in each query's probed
+    * cells (broadcast `probes`), self excluded, whose `label` column (from
+    * `labels`, joined back by pk) matches the query's `qlabel`. At serving
+    * scale the label lives in the inverted-list payload and this is a
+    * scan-level pushdown; in-session the pk join keeps the family on ONE
+    * materialized assignment.
+    */
+  private def probedSameLabel(assigned: DataFrame, probes: DataFrame,
+      labels: DataFrame, label: String): DataFrame =
+    assigned.join(broadcast(probes), Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .join(labels, Seq("vec_id"))
+      .filter(col(label) === col("qlabel"))
+
+  /** The tiered routers (v26/v27): queries where `exactTier` holds are
+    * served top-3 from their label's whole partition (exact, bounded rows;
+    * np_used 0), the rest by [[escalate]] to mass `target` over the
+    * probe ranking and an exact rerank of the probed same-label cells.
+    * `queries` carries (query_id, qlabel, qq, qn2, qcell, …).
+    */
+  private def tiered(s: SparkSession, d: String, queries: DataFrame,
+      exactTier: Column, target: Int): DataFrame = {
+    val labeled = fineLabeled(s, d)
+    def top3(cand: DataFrame) = topK(withAdist(cand), "adist", 3, asc = true)
+    val exact = top3(labeled
+        .join(broadcast(queries.filter(exactTier)
+            .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"))),
+          col("flabel") === col("qlabel") && col("vec_id") =!= col("query_id")))
+    val dense = queries.filter(!exactTier)
+      .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"), col("qcell"))
+    val probes = escalate(probeRanking(dense, cellSeed(s, d)), fineHist(s, d), target)
+    val ivf = top3(probedSameLabel(labeled.select(col("vec_id"), col("q"), col("n2"), col("cell")),
+      probes, labeled.select(col("vec_id"), col("flabel")), "flabel"))
+    neighbors(exact, col("adist"), lit("exact").as("tier"), lit(0L).as("np_used"))
+      .unionByName(neighbors(ivf, col("adist"), lit("ivf").as("tier"), col("np_used")))
+  }
+
   override val defs: Seq[QueryDef] = Seq(
     QueryDef(
       "v1_knn_bruteforce",
@@ -544,12 +566,8 @@ object EmbeddingQueries extends QueryModule {
           .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("qn2"))
         // broadcast the tiny query set: the corpus side is a map-only scan
         // (no shuffle of the big table) — the 100 TB-safe brute-force shape.
-        base.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-          .withColumn("cos", cosine(idot(col("q"), col("qq")), col("n2"), col("qn2")))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)))
-          .filter(col("rk") <= 5)
-          .select(col("query_id"), col("rk").cast("long").as("rk"), col("vec_id").as("neighbor_id"), round(col("cos"), 6).as("cos"))
+        neighbors(topK(withCos(base.join(broadcast(queries), col("vec_id") =!= col("query_id"))),
+          "cos", 5, asc = false), round(col("cos"), 6).as("cos"))
       },
       Some(s"""WITH base AS (SELECT vec_id, q, ${inorm2Sql("q")} AS n2 FROM ($quantizedSql))
              |SELECT query_id, rk, neighbor_id, round(cos, 6) AS cos FROM (
@@ -583,12 +601,9 @@ object EmbeddingQueries extends QueryModule {
           .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("qn2"), col("bucket").as("qbucket"))
         // candidates restricted to the query's bucket: join shuffles on
         // bucket id, quadratic work stays inside buckets.
-        base.join(broadcast(queries), col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
-          .withColumn("cos", cosine(idot(col("q"), col("qq")), col("n2"), col("qn2")))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)))
-          .filter(col("rk") <= 3)
-          .select(col("query_id"), col("rk").cast("long").as("rk"), col("vec_id").as("neighbor_id"), round(col("cos"), 6).as("cos"))
+        neighbors(topK(withCos(base.join(broadcast(queries),
+            col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))),
+          "cos", 3, asc = false), round(col("cos"), 6).as("cos"))
       },
       Some(s"""WITH base AS (
              |  SELECT vec_id, q, ${inorm2Sql("q")} AS n2, $lshBucketSql AS bucket FROM ($quantizedSql))
@@ -610,7 +625,7 @@ object EmbeddingQueries extends QueryModule {
           .withColumn("bucket", lshBucket(col("q")))
         base.as("a")
           .join(base.as("b"), col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-          .withColumn("cos", cosine(idot(col("a.q"), col("b.q")), col("a.n2"), col("b.n2")))
+          .withColumn("cos", cosine(col("a.q"), col("b.q"), col("a.n2"), col("b.n2")))
           .filter(col("cos") >= CosineThreshold)
           .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"), round(col("cos"), 6).as("cos"))
       },
@@ -653,34 +668,17 @@ object EmbeddingQueries extends QueryModule {
         // ([[IvfCentroids]] — deterministic integer k-means; at scale it is
         // its own offline job writing a codebook parquet, IvfCentroids.save/
         // load), broadcast to (a) route every vector to its cell via the
-        // two-level assignment ([[IvfCentroids.assignHier]] — ~2√C distance
-        // terms per vector, not C) and (b) give each query its nprobe=2
-        // closest cells (flat argmin — exact global probes, 10 queries only).
-        // Candidates = vectors in probed cells; exact cosine rerank, top-3.
-        // The only shuffle is the candidate equi-join on cell id.
-        // No label in the assignment payload: nothing downstream reads it,
-        // and aggregate buffers don't get struct-field pruning — a dead
-        // field here ships with every corpus vector through the shuffle.
-        val base = quantized(s, d).withColumn("n2", inorm2(col("q")))
-        val centroids = trainedCodebook(s, d)
-        // exact-integer identity: ‖a−b‖² = ‖a‖² + ‖b‖² − 2·a·b (no zipped
-        // diff array; all three terms are codegen'd LongDot loops)
-        def l2(a: Column, b: Column): Column = IvfCentroids.l2(a, b)
-        val assigned = trainedAssigned(s, d)
-        val probes = base.filter(col("vec_id") < 10)
-          .join(broadcast(centroids))
-          .withColumn("dist", l2(col("q"), col("cq")))
-          .withColumn("prk", row_number().over(
-            Window.partitionBy(col("vec_id")).orderBy(col("dist").asc, col("cid").asc)))
-          .filter(col("prk") <= NumProbe)
-          .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("qn2"), col("cid").as("cell"))
-        assigned.join(broadcast(probes), Seq("cell"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .withColumn("cos", cosine(idot(col("q"), col("qq")), col("n2"), col("qn2")))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)))
-          .filter(col("rk") <= 3)
-          .select(col("query_id"), col("rk").cast("long").as("rk"), col("vec_id").as("neighbor_id"), round(col("cos"), 6).as("cos"))
+        // shared two-level assignment ([[trainedAssigned]]) and (b) give each
+        // query its nprobe=2 closest cells (exact probe ranking, 10 queries
+        // only). Candidates = vectors in probed cells; exact cosine rerank,
+        // top-3. The only shuffle is the candidate equi-join on cell id.
+        val queries = quantized(s, d).withColumn("n2", inorm2(col("q")))
+          .filter(col("vec_id") < 10)
+          .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("qn2"))
+        val probes = probeRanking(queries, trainedCodebook(s, d)).filter(col("prk") <= NumProbe)
+        neighbors(topK(withCos(trainedAssigned(s, d).join(broadcast(probes), Seq("cell"))
+            .filter(col("vec_id") =!= col("query_id"))),
+          "cos", 3, asc = false), round(col("cos"), 6).as("cos"))
       },
       Some(s"""WITH base AS (SELECT vec_id, label, q, ${inorm2Sql("q")} AS n2 FROM ($quantizedSql)),
              |$centroidTrainSql,
@@ -720,7 +718,7 @@ object EmbeddingQueries extends QueryModule {
         val dups = assigned.as("a")
           .join(assigned.as("b"),
             col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-          .filter(cosine(idot(col("a.q"), col("b.q")), col("a.n2"), col("b.n2")) >= theta)
+          .filter(cosine(col("a.q"), col("b.q"), col("a.n2"), col("b.n2")) >= theta)
           .select(col("b.vec_id").as("vec_id")).distinct()
           .withColumn("dup", lit(true))
         assigned.join(dups, Seq("vec_id"), "left")
@@ -769,17 +767,10 @@ object EmbeddingQueries extends QueryModule {
         // per query with the (dist, id) total-order tiebreak. At scale the
         // codes table is 8 bytes/vector and the scan is map-only into a
         // partial top-k.
-        val dtable = pqQueryDtable(s, d)
-        pqAssignments(s, d).select(col("vec_id"), col("sub"), col("code"))
-          .join(broadcast(dtable), Seq("sub", "code"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("qd")).cast("long").as("adist"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("query_id")).orderBy(col("adist").asc, col("vec_id").asc)))
-          .filter(col("rk") <= 3)
-          .select(col("query_id"), col("rk").cast("long").as("rk"),
-            col("vec_id").as("neighbor_id"), col("adist"))
+        val adc = pqAdc(pqAssignments(s, d).select(col("vec_id"), col("sub"), col("code")),
+          pqQueryDtable(s, d), Seq("sub", "code"))
+        neighbors(topK(adc.filter(col("vec_id") =!= col("query_id")), "adist", 3, asc = true),
+          col("adist"))
       },
       Some(s"""WITH $pqAssignSql,
              |$pqDtableSql,
@@ -802,32 +793,18 @@ object EmbeddingQueries extends QueryModule {
         // (8 integer table lookups against the query's broadcast distance
         // table — original vectors are never touched at serving time).
         // Corpus-side state per vector: one cell id + one 8-byte PQ code.
-        val base = quantized(s, d)
-        val coarse = cellSeed(s, d)
+        val queries = quantized(s, d).filter(col("vec_id") < 10)
+          .select(col("vec_id").as("query_id"), col("q").as("qq"))
+        val probes = probeRanking(queries, cellSeed(s, d)).filter(col("prk") <= NumProbe)
         // shared two-level routed assignment — see [[seedAssigned]]
-        val assigned = seedAssigned(s, d)
-          .select(col("vec_id"), col("cell"))
-        val probes = base.filter(col("vec_id") < 10)
-          .join(broadcast(coarse))
-          .withColumn("dist", IvfCentroids.l2(col("q"), col("cq")))
-          .withColumn("prk", row_number().over(
-            Window.partitionBy(col("vec_id")).orderBy(col("dist").asc, col("cid").asc)))
-          .filter(col("prk") <= NumProbe)
-          .select(col("vec_id").as("query_id"), col("cid").as("cell"))
-        val dtable = pqQueryDtable(s, d)
-        val candidates = assigned.join(broadcast(probes), Seq("cell"))
+        val candidates = seedAssigned(s, d).select(col("vec_id"), col("cell"))
+          .join(broadcast(probes), Seq("cell"))
           .filter(col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id"))
-        candidates
-          .join(pqAssignments(s, d).select(col("vec_id"), col("sub"), col("code")), Seq("vec_id"))
-          .join(broadcast(dtable), Seq("query_id", "sub", "code"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("qd")).cast("long").as("adist"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("query_id")).orderBy(col("adist").asc, col("vec_id").asc)))
-          .filter(col("rk") <= 3)
-          .select(col("query_id"), col("rk").cast("long").as("rk"),
-            col("vec_id").as("neighbor_id"), col("adist"))
+        val adc = pqAdc(
+          candidates.join(pqAssignments(s, d).select(col("vec_id"), col("sub"), col("code")), Seq("vec_id")),
+          pqQueryDtable(s, d), Seq("query_id", "sub", "code"))
+        neighbors(topK(adc, "adist", 3, asc = true), col("adist"))
       },
       Some(s"""WITH $pqAssignSql,
              |coarse AS (SELECT vec_id AS cid, q AS cq FROM pqbase WHERE vec_id < ${cellCapSql("pqbase")}),
@@ -859,46 +836,19 @@ object EmbeddingQueries extends QueryModule {
         // (the v3 shape at k=5) against exact brute force (v1) — the
         // measurement every index deployment runs before trading recall
         // for cost. Both sides broadcast the same sampled query set into
-        // the corpus scan; the rank windows filter on row_number <= 5,
-        // which Spark's WindowGroupLimit rewrites into a PER-PARTITION
-        // partial top-5 BELOW the exchange (asserted in PlanSpec), so the
-        // shuffle carries at most k × n_queries rows per input partition —
-        // the corpus×queries candidate expansion itself never shuffles.
-        // The recall join then operates on 2×(k × n_queries) rank rows,
-        // metadata-scale whatever the corpus size.
+        // the corpus scan; both top-5s are partial-top-k shaped and the
+        // recall assembly runs on 2×(k × n_queries) rank rows (see
+        // IvfCentroids.topK / recall).
         val base = quantized(s, d)
           .withColumn("n2", inorm2(col("q")))
           .withColumn("bucket", lshBucket(col("q")))
         val queries = base.filter(col("vec_id") < 10)
           .select(col("vec_id").as("query_id"), col("q").as("qq"),
             col("n2").as("qn2"), col("bucket").as("qbucket"))
-        def topk(cand: DataFrame): DataFrame =
-          cand.withColumn("cos", cosine(idot(col("q"), col("qq")), col("n2"), col("qn2")))
-            .withColumn("rk", row_number().over(
-              Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)))
-            .filter(col("rk") <= 5)
-            .select(col("query_id"), col("vec_id").as("neighbor_id"))
-        val exact = topk(base.join(broadcast(queries), col("vec_id") =!= col("query_id")))
-        val approx = topk(base.join(broadcast(queries),
-          col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id")))
-        val nApprox = approx.groupBy(col("query_id")).agg(count(lit(1)).as("n_approx"))
-        // r19: both rank frames are bounded at k × n_queries rows BY
-        // CONSTRUCTION (WindowGroupLimit top-k over a plan-bounded query
-        // set) — broadcast them so the recall assembly is two
-        // BroadcastHashJoins instead of exchange+sort+SortMergeJoin pairs
-        // over ≤50-row inputs (stats-blind after the window, so the
-        // planner can't see it alone)
-        exact
-          .join(broadcast(approx.withColumn("hit", lit(1L))),
-            Seq("query_id", "neighbor_id"), "left")
-          .groupBy(col("query_id"))
-          .agg(
-            count(lit(1)).as("n_exact"),
-            sum(coalesce(col("hit"), lit(0L))).cast("long").as("n_hit"))
-          .join(broadcast(nApprox), Seq("query_id"), "left")
-          .select(col("query_id"), col("n_exact"),
-            coalesce(col("n_approx"), lit(0L)).as("n_approx"), col("n_hit"),
-            round(col("n_hit").cast("double") / col("n_exact"), 6).as("recall_at_5"))
+        def top5(cand: DataFrame) = ids(topK(withCos(cand), "cos", 5, asc = false))
+        recall(top5(base.join(broadcast(queries), col("vec_id") =!= col("query_id"))),
+          top5(base.join(broadcast(queries),
+            col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))), 5)
       },
       Some(s"""WITH base AS (
              |  SELECT vec_id, q, ${inorm2Sql("q")} AS n2, $lshBucketSql AS bucket FROM ($quantizedSql)),
@@ -987,48 +937,26 @@ object EmbeddingQueries extends QueryModule {
         // measurement that sets a deployment's nprobe (AnnDemo serves at
         // nprobe=10; the 100 TB math assumes 2) before trading candidate
         // reads for recall. Reuses the SHARED routed assignment (the
-        // serving index is built once) and a broadcast probe ranking;
-        // per-branch rank windows are the v11 WindowGroupLimit shape, so
-        // each shuffle carries at most k × n_queries rows. Candidate work
-        // per query is nprobe/C of the corpus — the sweep's whole cost is
-        // ~(1+2+4)/C corpus scans, not three brute-force passes.
+        // serving index is built once) and ONE broadcast probe ranking;
+        // candidate work per query is nprobe/C of the corpus — the sweep's
+        // whole cost is ~(1+2+4)/C corpus scans, not three brute-force
+        // passes. The exact arm runs once: an in-row explode multiplies its
+        // 40 bounded rank rows per nprobe (a union of per-nprobe copies
+        // would re-run the brute-force window once per value).
         val assigned = seedAssigned(s, d)
-        val cent = cellSeed(s, d)
         val queries = assigned.filter(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("qn2"))
-        val probes = queries.join(broadcast(cent))
-          .withColumn("pdist", IvfCentroids.l2(col("qq"), col("cq")))
-          .withColumn("prk", row_number().over(
-            Window.partitionBy(col("query_id")).orderBy(col("pdist").asc, col("cid").asc)))
-          .filter(col("prk") <= 4)
-          .select(col("query_id"), col("qq"), col("qn2"), col("cid").as("cell"), col("prk"))
-        val cands = assigned.join(broadcast(probes), Seq("cell"))
+        val cands = assigned
+          .join(broadcast(probeRanking(queries, cellSeed(s, d)).filter(col("prk") <= 4)), Seq("cell"))
           .filter(col("vec_id") =!= col("query_id"))
-        def top5(cand: DataFrame) = cand
-          .withColumn("cos", cosine(idot(col("q"), col("qq")), col("n2"), col("qn2")))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)))
-          .filter(col("rk") <= 5)
-          .select(col("query_id"), col("vec_id").as("neighbor_id"))
+        def top5(cand: DataFrame) = ids(topK(withCos(cand), "cos", 5, asc = false))
         val nprobes = Seq(1, 2, 4)
         val approx = nprobes.map(np =>
           top5(cands.filter(col("prk") <= np)).withColumn("nprobe", lit(np)))
           .reduce(_ unionAll _)
         val exact = top5(assigned.join(broadcast(queries), col("vec_id") =!= col("query_id")))
-        // r19: one execution of the exact arm — the union-of-lits form
-        // re-ran the brute-force rank window once per nprobe value; an
-        // in-row explode multiplies the 40 bounded rank rows instead.
-        // Same rows, same order-free semantics.
-        val exactPerNp = exact.withColumn("nprobe",
-          explode(array(nprobes.map(np => lit(np)): _*)))
-        exactPerNp
-          .join(broadcast(approx.withColumn("hit", lit(1L))),
-            Seq("nprobe", "query_id", "neighbor_id"), "left")
-          .groupBy(col("nprobe"), col("query_id"))
-          .agg(count(lit(1)).as("n_exact"),
-            sum(coalesce(col("hit"), lit(0L))).cast("long").as("n_hit"))
-          .select(col("nprobe"), col("query_id"), col("n_exact"), col("n_hit"),
-            round(col("n_hit").cast("double") / col("n_exact"), 6).as("recall_at_5"))
+          .withColumn("nprobe", explode(array(nprobes.map(np => lit(np)): _*)))
+        recall(exact, approx, 5, Seq("nprobe", "query_id")).drop("n_approx")
       },
       Some(s"""WITH base AS (SELECT vec_id, q, ${inorm2Sql("q")} AS n2 FROM ($quantizedSql)),
              |cent AS (SELECT vec_id AS cid, q AS cq FROM base WHERE vec_id < ${cellCapSql("base")}),
@@ -1150,19 +1078,10 @@ object EmbeddingQueries extends QueryModule {
         // exact multiples is exact in both engines); adist is an exact
         // integer L2 (longDot of the diff with itself). No doubles anywhere
         // in the output row.
-        val base = quantized(s, d)
-        val enc = sq8Recon(s, d)
-        val queries = base.filter(col("vec_id") < 10)
+        val queries = quantized(s, d).filter(col("vec_id") < 10)
           .select(col("vec_id").as("query_id"), col("q").as("qq"))
-        enc.join(broadcast(queries))
-          .filter(col("vec_id") =!= col("query_id"))
-          .withColumn("diff", zip_with(col("qq"), col("xh"), (a, b) => a - b))
-          .withColumn("adist", graft.functions.longDot(col("diff"), col("diff")))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("query_id")).orderBy(col("adist").asc, col("vec_id").asc)))
-          .filter(col("rk") <= 3)
-          .select(col("query_id"), col("rk").cast("long").as("rk"),
-            col("vec_id").as("neighbor_id"), col("adist"))
+        val cand = sq8Recon(s, d).join(broadcast(queries)).filter(col("vec_id") =!= col("query_id"))
+        neighbors(topK(withL2(cand, "qq", "xh", "adist"), "adist", 3, asc = true), col("adist"))
       },
       Some(s"""WITH base AS ($quantizedSql),
              |$sq8ReconSql,
@@ -1189,35 +1108,16 @@ object EmbeddingQueries extends QueryModule {
         // tier without its recall table is how 100 TB serving deployments
         // end up debugging silent quality loss.
         //
-        // Scale shape: both arms broadcast the same 10-query set, both
-        // rank windows collapse to WindowGroupLimit partial top-k, and
-        // the recall join touches only 2×(k × n_queries) rank rows —
-        // metadata-scale at any corpus size.
+        // Scale shape: both arms broadcast the same 10-query set; both
+        // top-3s and the recall assembly are the core's bounded shapes.
         val base = quantized(s, d)
         val queries = base.filter(col("vec_id") < 10)
           .select(col("vec_id").as("query_id"), col("q").as("qq"))
-        def topk(side: DataFrame, vcol: String): DataFrame =
-          side.join(broadcast(queries))
-            .filter(col("vec_id") =!= col("query_id"))
-            .withColumn("diff", zip_with(col("qq"), col(vcol), (a, b) => a - b))
-            .withColumn("dist", graft.functions.longDot(col("diff"), col("diff")))
-            .withColumn("rk", row_number().over(
-              Window.partitionBy(col("query_id")).orderBy(col("dist").asc, col("vec_id").asc)))
-            .filter(col("rk") <= 3)
-            .select(col("query_id"), col("vec_id").as("neighbor_id"))
-        val exact = topk(base.select(col("vec_id"), col("q")), "q")
-        val approx = topk(sq8Recon(s, d), "xh")
-        // r19: the approx rank frame is k × n_queries rows by construction
-        // — broadcast it (v11 rationale)
-        exact
-          .join(broadcast(approx.withColumn("hit", lit(1L))),
-            Seq("query_id", "neighbor_id"), "left")
-          .groupBy(col("query_id"))
-          .agg(
-            count(lit(1)).as("n_exact"),
-            sum(coalesce(col("hit"), lit(0L))).cast("long").as("n_hit"))
-          .select(col("query_id"), col("n_exact"), col("n_hit"),
-            round(col("n_hit").cast("double") / col("n_exact"), 6).as("recall_at_3"))
+        def top3(side: DataFrame, vcol: String) = ids(topK(withL2(
+          side.join(broadcast(queries)).filter(col("vec_id") =!= col("query_id")),
+          "qq", vcol, "dist"), "dist", 3, asc = true))
+        recall(top3(base.select(col("vec_id"), col("q")), "q"), top3(sq8Recon(s, d), "xh"), 3)
+          .drop("n_approx")
       },
       Some(s"""WITH base AS ($quantizedSql),
              |$sq8ReconSql,
@@ -1265,27 +1165,13 @@ object EmbeddingQueries extends QueryModule {
         // out of the inverted lists — no corpus-wide reconstruction
         // join). Determinism: same integer-exact quantize/dequantize as
         // v17; no doubles in the output row.
-        val base = quantized(s, d)
-        val coarse = cellSeed(s, d)
-        val probes = base.filter(col("vec_id") < 10)
-          .join(broadcast(coarse))
-          .withColumn("dist", IvfCentroids.l2(col("q"), col("cq")))
-          .withColumn("prk", row_number().over(
-            Window.partitionBy(col("vec_id")).orderBy(col("dist").asc, col("cid").asc)))
-          .filter(col("prk") <= NumProbe)
-          .select(col("vec_id").as("query_id"), col("q").as("qq"), col("cid").as("cell"))
-        seedAssigned(s, d).select(col("vec_id"), col("q"), col("cell"))
+        val queries = quantized(s, d).filter(col("vec_id") < 10)
+          .select(col("vec_id").as("query_id"), col("q").as("qq"))
+        val probes = probeRanking(queries, cellSeed(s, d)).filter(col("prk") <= NumProbe)
+        val cand = withSq8Recon(seedAssigned(s, d).select(col("vec_id"), col("q"), col("cell"))
           .join(broadcast(probes), Seq("cell"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .crossJoin(broadcast(sq8Stats(s, d)))
-          .withColumn("xh", sq8Dequant(col("q"), col("mns"), col("rng")))
-          .withColumn("diff", zip_with(col("qq"), col("xh"), (a, b) => a - b))
-          .withColumn("adist", graft.functions.longDot(col("diff"), col("diff")))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("query_id")).orderBy(col("adist").asc, col("vec_id").asc)))
-          .filter(col("rk") <= 3)
-          .select(col("query_id"), col("rk").cast("long").as("rk"),
-            col("vec_id").as("neighbor_id"), col("adist"))
+          .filter(col("vec_id") =!= col("query_id")), s, d)
+        neighbors(topK(withL2(cand, "qq", "xh", "adist"), "adist", 3, asc = true), col("adist"))
       },
       Some(s"""WITH base AS ($quantizedSql),
              |$sq8ReconSql,
@@ -1495,24 +1381,10 @@ object EmbeddingQueries extends QueryModule {
         val queries = quantized(s, d).filter(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
             col("q").as("qq"), inorm2(col("q")).as("qn2"))
-        val probes = queries.join(broadcast(cellSeed(s, d)))
-          .withColumn("prk", row_number().over(Window.partitionBy(col("query_id"))
-            .orderBy(IvfCentroids.l2(col("qq"), col("cq")).asc, col("cid").asc)))
-          .filter(col("prk") <= NumProbe)
-          .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"),
-            col("cid").as("cell"))
-        seedAssigned(s, d).select(col("vec_id"), col("q"), col("n2"), col("cell"))
-          .join(broadcast(probes), Seq("cell"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .join(quantized(s, d).select(col("vec_id"), col("label")), Seq("vec_id"))
-          .filter(col("label") === col("qlabel"))
-          .withColumn("adist",
-            col("n2") - lit(2L) * graft.functions.longDot(col("q"), col("qq")) + col("qn2"))
-          .withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
-            .orderBy(col("adist").asc, col("vec_id").asc)))
-          .filter(col("rk") <= 3)
-          .select(col("query_id"), col("rk").cast("long").as("rk"),
-            col("vec_id").as("neighbor_id"), col("adist"))
+        val probes = probeRanking(queries, cellSeed(s, d)).filter(col("prk") <= NumProbe)
+        val cand = probedSameLabel(seedAssigned(s, d).select(col("vec_id"), col("q"), col("n2"), col("cell")),
+          probes, quantized(s, d).select(col("vec_id"), col("label")), "label")
+        neighbors(topK(withAdist(cand), "adist", 3, asc = true), col("adist"))
       },
       Some(s"""WITH base AS (SELECT vec_id, label, q, ${inorm2Sql("q")} AS n2 FROM ($quantizedSql)),
              |cent AS (SELECT vec_id AS cid, q AS cq FROM base WHERE vec_id < ${cellCapSql("base")}),
@@ -1555,40 +1427,14 @@ object EmbeddingQueries extends QueryModule {
         val queries = base.filter(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
             col("q").as("qq"), col("n2").as("qn2"))
-        def topk(cand: DataFrame): DataFrame =
-          cand.withColumn("adist",
-              col("n2") - lit(2L) * graft.functions.longDot(col("q"), col("qq")) + col("qn2"))
-            .withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
-              .orderBy(col("adist").asc, col("vec_id").asc)))
-            .filter(col("rk") <= 3)
-            .select(col("query_id"), col("vec_id").as("neighbor_id"))
-        val exact = topk(base.join(broadcast(queries),
+        def top3(cand: DataFrame) = ids(topK(withAdist(cand), "adist", 3, asc = true))
+        val exact = top3(base.join(broadcast(queries),
           col("label") === col("qlabel") && col("vec_id") =!= col("query_id")))
-        val probes = queries.join(broadcast(cellSeed(s, d)))
-          .withColumn("prk", row_number().over(Window.partitionBy(col("query_id"))
-            .orderBy(IvfCentroids.l2(col("qq"), col("cq")).asc, col("cid").asc)))
-          .filter(col("prk") <= NumProbe)
-          .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"),
-            col("cid").as("cell"))
-        val approx = topk(
-          seedAssigned(s, d).select(col("vec_id"), col("q"), col("n2"), col("cell"))
-            .join(broadcast(probes), Seq("cell"))
-            .filter(col("vec_id") =!= col("query_id"))
-            .join(quantized(s, d).select(col("vec_id"), col("label")), Seq("vec_id"))
-            .filter(col("label") === col("qlabel")))
-        val nApprox = approx.groupBy(col("query_id")).agg(count(lit(1)).as("n_approx"))
-        // r19: bounded rank frames broadcast (v11 rationale)
-        exact
-          .join(broadcast(approx.withColumn("hit", lit(1L))),
-            Seq("query_id", "neighbor_id"), "left")
-          .groupBy(col("query_id"))
-          .agg(
-            count(lit(1)).as("n_exact"),
-            sum(coalesce(col("hit"), lit(0L))).cast("long").as("n_hit"))
-          .join(broadcast(nApprox), Seq("query_id"), "left")
-          .select(col("query_id"), col("n_exact"),
-            coalesce(col("n_approx"), lit(0L)).as("n_approx"), col("n_hit"),
-            round(col("n_hit").cast("double") / col("n_exact"), 6).as("recall_at_3"))
+        val probes = probeRanking(queries, cellSeed(s, d)).filter(col("prk") <= NumProbe)
+        val approx = top3(probedSameLabel(
+          seedAssigned(s, d).select(col("vec_id"), col("q"), col("n2"), col("cell")),
+          probes, quantized(s, d).select(col("vec_id"), col("label")), "label"))
+        recall(exact, approx, 3)
       },
       Some(s"""WITH base AS (SELECT vec_id, label, q, ${inorm2Sql("q")} AS n2 FROM ($quantizedSql)),
              |cent AS (SELECT vec_id AS cid, q AS cq FROM base WHERE vec_id < ${cellCapSql("base")}),
@@ -1635,72 +1481,26 @@ object EmbeddingQueries extends QueryModule {
         // caveat (a selective predicate thins each probed cell's matching
         // candidates, so a fixed nprobe returns < k rows for rare labels).
         // The router holds a per-(cell, label) candidate HISTOGRAM — C ×
-        // |labels| rows, metadata-scale at any corpus size (1e5 cells ×
-        // 1e3 labels = 1e8 histogram rows worst-case, still index-side
-        // metadata advanced by the same delta the merge applies to the
-        // lists: IncrementalPipeline.updateHistogram, spec-pinned equal
-        // to a recompute after a mixed add/move/retract day)
-        // — and picks each query's probe count np(q) as the SMALLEST
-        // distance-ranked cell prefix whose cumulative same-label count
-        // reaches k, FLOORED at the deployment's recall-tuned NumProbe
-        // (escalate-only: shrinking below the floor for dense labels
-        // would silently trade recall for I/O) and capped at C when the
-        // whole corpus holds fewer than k matches. Candidates are then
-        // fetched from exactly those np(q) cells: a starved query reads
-        // just enough extra cells, and every query gets its full
+        // |labels| rows, metadata-scale at any corpus size, advanced by the
+        // same delta the merge applies to the lists
+        // (IncrementalPipeline.updateHistogram) — and [[escalate]]s each
+        // query to the smallest ranked-cell prefix holding k same-label
+        // candidates (floored at NumProbe, capped at C). A starved query
+        // reads just enough extra cells, and every query gets its full
         // min(k, available) results — the result-count guarantee a
-        // fixed-nprobe plan cannot make. A
-        // deployment without the histogram runs the same rule as bounded
-        // DOUBLING escalation (probe 2, 4, 8… cells until k matches
-        // accumulate); the histogram form is that escalation's fixpoint
-        // computed in one shot, which is what makes it oracle-expressible.
-        // Output carries np_used per query so the artifact shows the
-        // escalation curve across label selectivities.
+        // fixed-nprobe plan cannot make. Output carries np_used per query
+        // so the artifact shows the escalation curve.
         val assigned = seedAssigned(s, d).select(col("vec_id"), col("q"), col("n2"), col("cell"))
-        val labeled = assigned.join(
-          quantized(s, d).select(col("vec_id"), col("label")), Seq("vec_id"))
+        val labels = quantized(s, d).select(col("vec_id"), col("label"))
+        val labeled = assigned.join(labels, Seq("vec_id"))
         val hist = labeled.groupBy(col("cell"), col("label")).agg(count(lit(1)).as("n_cl"))
           .withColumnRenamed("label", "qlabel")
         val queries = labeled.filter(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
             col("q").as("qq"), col("n2").as("qn2"), col("cell").as("qcell"))
-        // every cell ranked per query (queries × C — C is bounded, the
-        // probe table stays broadcast-sized), self excluded from its own
-        // cell's count
-        val ranked = queries.join(broadcast(cellSeed(s, d)))
-          .withColumn("prk", row_number().over(Window.partitionBy(col("query_id"))
-            .orderBy(IvfCentroids.l2(col("qq"), col("cq")).asc, col("cid").asc)))
-          .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"), col("qcell"),
-            col("cid").as("cell"), col("prk"))
-        val cum = ranked.join(broadcast(hist), Seq("cell", "qlabel"), "left")
-          .withColumn("m", coalesce(col("n_cl"), lit(0L)) -
-            when(col("cell") === col("qcell"), lit(1L)).otherwise(lit(0L)))
-          .withColumn("cum", sum(col("m")).over(
-            Window.partitionBy(col("query_id")).orderBy(col("prk"))))
-        // ESCALATE-ONLY: the deployment's recall-tuned nprobe is the FLOOR
-        // (shrinking below it would trade recall for I/O behind the
-        // operator's back — AnnDemo's selectivity rung measured exactly
-        // that regression before the floor); escalation past it happens
-        // only when the floor's cells hold fewer than k matches
-        val np = cum.groupBy(col("query_id")).agg(
-          greatest(lit(NumProbe.toLong),
-            coalesce(min(when(col("cum") >= 3, col("prk"))), max(col("prk"))).cast("long"))
-            .as("np_used"))
-        val probes = cum.join(broadcast(np), Seq("query_id"))
-          .filter(col("prk") <= col("np_used"))
-          .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"),
-            col("cell"), col("np_used"))
-        assigned.join(broadcast(probes), Seq("cell"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .join(quantized(s, d).select(col("vec_id"), col("label")), Seq("vec_id"))
-          .filter(col("label") === col("qlabel"))
-          .withColumn("adist",
-            col("n2") - lit(2L) * graft.functions.longDot(col("q"), col("qq")) + col("qn2"))
-          .withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
-            .orderBy(col("adist").asc, col("vec_id").asc)))
-          .filter(col("rk") <= 3)
-          .select(col("query_id"), col("np_used"), col("rk").cast("long").as("rk"),
-            col("vec_id").as("neighbor_id"), col("adist"))
+        val probes = escalate(probeRanking(queries, cellSeed(s, d)), hist, 3)
+        neighbors(topK(withAdist(probedSameLabel(assigned, probes, labels, "label")), "adist", 3, asc = true),
+          col("adist"), col("np_used"))
       },
       Some(s"""WITH base AS (SELECT vec_id, label, q, ${inorm2Sql("q")} AS n2 FROM ($quantizedSql)),
              |cent AS (SELECT vec_id AS cid, q AS cq FROM base WHERE vec_id < ${cellCapSql("base")}),
@@ -1821,56 +1621,14 @@ object EmbeddingQueries extends QueryModule {
         // ([[fineLabeled]]/[[fineHist]] — the persisted index-side tables
         // v22/v24/v25 maintain), not per-query subplans
         val labeled = fineLabeled(s, d)
-        val assigned = labeled.select(col("vec_id"), col("q"), col("n2"), col("cell"))
-        val hist = fineHist(s, d)
         // the dispatch predicate: the router histogram's per-label rollup
-        val mass = hist.groupBy(col("qlabel")).agg(sum(col("n_cl")).as("n_label"))
+        val mass = fineHist(s, d).groupBy(col("qlabel")).agg(sum(col("n_cl")).as("n_label"))
         val queries = labeled.filter(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("flabel").as("qlabel"),
             col("q").as("qq"), col("n2").as("qn2"), col("cell").as("qcell"))
           .join(broadcast(mass), Seq("qlabel"))
           .withColumn("avail", col("n_label") - 1)
-        def top3(cand: DataFrame): DataFrame =
-          cand.withColumn("adist",
-              col("n2") - lit(2L) * graft.functions.longDot(col("q"), col("qq")) + col("qn2"))
-            .withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
-              .orderBy(col("adist").asc, col("vec_id").asc)))
-            .filter(col("rk") <= 3)
-        // EXACT tier: the rare label's whole partition — ≤ RareMass rows
-        val exact = top3(labeled
-            .join(broadcast(queries.filter(col("avail") <= RareMass)
-                .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"))),
-              col("flabel") === col("qlabel") && col("vec_id") =!= col("query_id")))
-          .select(col("query_id"), lit("exact").as("tier"), lit(0L).as("np_used"),
-            col("rk").cast("long").as("rk"), col("vec_id").as("neighbor_id"), col("adist"))
-        // IVF tier: v24's adaptive rule over the dense queries
-        val denseQ = queries.filter(col("avail") > RareMass)
-          .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"), col("qcell"))
-        val ranked = denseQ.join(broadcast(cellSeed(s, d)))
-          .withColumn("prk", row_number().over(Window.partitionBy(col("query_id"))
-            .orderBy(IvfCentroids.l2(col("qq"), col("cq")).asc, col("cid").asc)))
-          .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"), col("qcell"),
-            col("cid").as("cell"), col("prk"))
-        val cum = ranked.join(broadcast(hist), Seq("cell", "qlabel"), "left")
-          .withColumn("m", coalesce(col("n_cl"), lit(0L)) -
-            when(col("cell") === col("qcell"), lit(1L)).otherwise(lit(0L)))
-          .withColumn("cum", sum(col("m")).over(
-            Window.partitionBy(col("query_id")).orderBy(col("prk"))))
-        val np = cum.groupBy(col("query_id")).agg(
-          greatest(lit(NumProbe.toLong),
-            coalesce(min(when(col("cum") >= 3, col("prk"))), max(col("prk"))).cast("long"))
-            .as("np_used"))
-        val probes = cum.join(broadcast(np), Seq("query_id"))
-          .filter(col("prk") <= col("np_used"))
-          .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"),
-            col("cell"), col("np_used"))
-        val ivf = top3(assigned.join(broadcast(probes), Seq("cell"))
-            .filter(col("vec_id") =!= col("query_id"))
-            .join(labeled.select(col("vec_id"), col("flabel")), Seq("vec_id"))
-            .filter(col("flabel") === col("qlabel")))
-          .select(col("query_id"), lit("ivf").as("tier"), col("np_used"),
-            col("rk").cast("long").as("rk"), col("vec_id").as("neighbor_id"), col("adist"))
-        exact.unionByName(ivf)
+        tiered(s, d, queries, col("avail") <= RareMass, 3)
       },
       Some(s"""WITH base AS (SELECT vec_id, label, q, ${inorm2Sql("q")} AS n2 FROM ($quantizedSql)),
              |cent AS (SELECT vec_id AS cid, q AS cq FROM base WHERE vec_id < ${cellCapSql("base")}),
@@ -1948,12 +1706,25 @@ object EmbeddingQueries extends QueryModule {
         // probes broadcast, C as a broadcast 1-row count, one window over
         // queries × C ranked rows (metadata at any corpus size), exact
         // integer rerank over the probed cells only.
+        //
+        // CATALOG shape vs SERVING shape: this exact tier scans the cached
+        // labeled corpus with the exact-tier queries broadcast, while the
+        // SERVING path (AnnDemo/Layout) dispatches the same tier to the
+        // label-partitioned parquet layout and reads only the query label's
+        // partitions (measured bounded: rows_read 120–2880 of the corpus,
+        // tier "partitioned", ann_demo_last.json). The catalog keeps the
+        // scan shape deliberately: the DuckDB oracle replays the identical
+        // full-scan predicate, so the row/hash compare checks the TIER
+        // SEMANTICS (which neighbors an exact-tier query must return)
+        // rather than the storage layout, and the layout's partition
+        // pruning is asserted where the layout exists — in the serving demo
+        // and LayoutSpec. Cost at catalog scale is a one-pass scan of the
+        // session-cached labeled frame; at 100 TB the serving path is the
+        // shape that runs.
         // shared serving state, same registrations v26 reads (the
         // persisted labeled index + the maintained router histogram)
         val labeled = fineLabeled(s, d)
-        val assigned = labeled.select(col("vec_id"), col("q"), col("n2"), col("cell"))
-        val hist = fineHist(s, d)
-        val mass = hist.groupBy(col("qlabel")).agg(sum(col("n_cl")).as("n_label"))
+        val mass = fineHist(s, d).groupBy(col("qlabel")).agg(sum(col("n_cl")).as("n_label"))
         // C as a broadcast 1-row count, so the density guard stays in-plan
         val cTot = broadcast(cellSeed(s, d).agg(count(lit(1)).as("c_tot")))
         val queries = labeled.filter(col("vec_id") < 8)
@@ -1965,63 +1736,7 @@ object EmbeddingQueries extends QueryModule {
           // rare ∪ can't-cover-α·k ∪ density-below-k → the exact tier
           .withColumn("exact_tier",
             col("avail") <= greatest(lit(ExactTierMax.toLong), lit(3L) * col("c_tot") - 1L))
-        def top3(cand: DataFrame): DataFrame =
-          cand.withColumn("adist",
-              col("n2") - lit(2L) * graft.functions.longDot(col("q"), col("qq")) + col("qn2"))
-            .withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
-              .orderBy(col("adist").asc, col("vec_id").asc)))
-            .filter(col("rk") <= 3)
-        // CATALOG shape vs SERVING shape — recorded disposition (r16 ask
-        // #5 / r17 ask #6): this exact tier scans the cached labeled
-        // corpus with the exact-tier queries broadcast, while the SERVING
-        // path (AnnDemo/Layout) dispatches the same tier to the
-        // label-partitioned parquet layout and reads only the query
-        // label's partitions (measured bounded: rows_read 120–2880 of the
-        // corpus, tier "partitioned", ann_demo_last.json). The catalog
-        // keeps the scan shape deliberately: the DuckDB oracle replays the
-        // identical full-scan predicate, so the row/hash compare checks
-        // the TIER SEMANTICS (which neighbors an exact-tier query must
-        // return) rather than the storage layout, and the layout's
-        // partition pruning is asserted where the layout exists — in the
-        // serving demo and LayoutSpec, not against a bare parquet dir that
-        // has no label partitioning to prune. Cost at catalog scale is a
-        // one-pass scan of the session-cached labeled frame (1.91 s at
-        // sf0.1, SharedCaches-registered); at 100 TB the serving path is
-        // the shape that runs.
-        val exact = top3(labeled
-            .join(broadcast(queries.filter(col("exact_tier"))
-                .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"))),
-              col("flabel") === col("qlabel") && col("vec_id") =!= col("query_id")))
-          .select(col("query_id"), lit("exact").as("tier"), lit(0L).as("np_used"),
-            col("rk").cast("long").as("rk"), col("vec_id").as("neighbor_id"), col("adist"))
-        // IVF tier: v24's escalation with the α·k MASS target
-        val denseQ = queries.filter(!col("exact_tier"))
-          .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"), col("qcell"))
-        val ranked = denseQ.join(broadcast(cellSeed(s, d)))
-          .withColumn("prk", row_number().over(Window.partitionBy(col("query_id"))
-            .orderBy(IvfCentroids.l2(col("qq"), col("cq")).asc, col("cid").asc)))
-          .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"), col("qcell"),
-            col("cid").as("cell"), col("prk"))
-        val cum = ranked.join(broadcast(hist), Seq("cell", "qlabel"), "left")
-          .withColumn("m", coalesce(col("n_cl"), lit(0L)) -
-            when(col("cell") === col("qcell"), lit(1L)).otherwise(lit(0L)))
-          .withColumn("cum", sum(col("m")).over(
-            Window.partitionBy(col("query_id")).orderBy(col("prk"))))
-        val np = cum.groupBy(col("query_id")).agg(
-          greatest(lit(NumProbe.toLong),
-            coalesce(min(when(col("cum") >= MassCoverK, col("prk"))), max(col("prk"))).cast("long"))
-            .as("np_used"))
-        val probes = cum.join(broadcast(np), Seq("query_id"))
-          .filter(col("prk") <= col("np_used"))
-          .select(col("query_id"), col("qlabel"), col("qq"), col("qn2"),
-            col("cell"), col("np_used"))
-        val ivf = top3(assigned.join(broadcast(probes), Seq("cell"))
-            .filter(col("vec_id") =!= col("query_id"))
-            .join(labeled.select(col("vec_id"), col("flabel")), Seq("vec_id"))
-            .filter(col("flabel") === col("qlabel")))
-          .select(col("query_id"), lit("ivf").as("tier"), col("np_used"),
-            col("rk").cast("long").as("rk"), col("vec_id").as("neighbor_id"), col("adist"))
-        exact.unionByName(ivf)
+        tiered(s, d, queries, col("exact_tier"), MassCoverK)
       },
       Some(s"""WITH base AS (SELECT vec_id, label, q, ${inorm2Sql("q")} AS n2 FROM ($quantizedSql)),
              |cent AS (SELECT vec_id AS cid, q AS cq FROM base WHERE vec_id < ${cellCapSql("base")}),
@@ -2074,7 +1789,7 @@ object EmbeddingQueries extends QueryModule {
     QueryDef(
       "v28_calibrated_probe_depth",
       (s, d) => {
-        // CALIBRATED dense-tier depth — the round-17 serving rule pinned
+        // CALIBRATED dense-tier depth — the calibration serving rule pinned
         // under the oracle gate. For labels the tiered dispatch keeps on
         // the IVF tier, mass coverage (v27) saturates instantly — a dense
         // label covers α·k inside any one cell — yet the probe depth a
@@ -2100,20 +1815,11 @@ object EmbeddingQueries extends QueryModule {
           .select(col("vec_id").as("query_id"), col("flabel").as("qlabel"),
             col("q").as("qq"), col("n2").as("qn2"))
         // sampled exact ground truth: same-label top-3 per calibration query
-        val gt = labeled
-          .join(broadcast(calQ), col("flabel") === col("qlabel")
-            && col("vec_id") =!= col("query_id"))
-          .withColumn("adist",
-            col("n2") - lit(2L) * graft.functions.longDot(col("q"), col("qq")) + col("qn2"))
-          .withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
-            .orderBy(col("adist").asc, col("vec_id").asc)))
-          .filter(col("rk") <= 3)
+        val gt = topK(withAdist(labeled.join(broadcast(calQ),
+            col("flabel") === col("qlabel") && col("vec_id") =!= col("query_id"))), "adist", 3, asc = true)
           .select(col("query_id"), col("qq"), col("cell"))
         // np needed per neighbor = its cell's rank in the exact probe order
-        val ranked = calQ.join(broadcast(cellSeed(s, d)))
-          .withColumn("prk", row_number().over(Window.partitionBy(col("query_id"))
-            .orderBy(IvfCentroids.l2(col("qq"), col("cq")).asc, col("cid").asc)))
-          .select(col("query_id"), col("cid").as("cell"), col("prk"))
+        val ranked = probeRanking(calQ, cellSeed(s, d)).select(col("query_id"), col("cell"), col("prk"))
         val needs = gt.join(ranked, Seq("query_id", "cell"))
           .select(col("query_id"), col("prk").as("np_needed"))
         // the coverage curve over the serving grid (in-plan literal), and
@@ -2169,7 +1875,7 @@ object EmbeddingQueries extends QueryModule {
              |npcal AS (SELECT CAST(COALESCE(min(CASE WHEN c.np > ch.min_np THEN c.np END), 128) AS BIGINT) AS np_cal
              |  FROM curve c CROSS JOIN chosen ch)
              |SELECT c.np, c.covered, c.total, p.np_cal FROM curve c CROSS JOIN npcal p""".stripMargin),
-      "Calibrated dense-tier probe depth: a disjoint same-tier calibration set with sampled exact ground truth yields the coverage-vs-depth curve (coverage == served recall for an exact reranker), and serving picks one grid step past the smallest depth meeting the deployment recall target — the round-17 rule that closed the dense-label recall hole mass coverage and admissible distance bounds both miss (AnnDemo: common-class recall@3 0.083 -> 1.0 at the routed preset)."
+      "Calibrated dense-tier probe depth: a disjoint same-tier calibration set with sampled exact ground truth yields the coverage-vs-depth curve (coverage == served recall for an exact reranker), and serving picks one grid step past the smallest depth meeting the deployment recall target — the calibration rule that closed the dense-label recall hole mass coverage and admissible distance bounds both miss (AnnDemo: common-class recall@3 0.083 -> 1.0 at the routed preset)."
     )
   )
 }

@@ -71,8 +71,8 @@ object IvfCentroids {
       // job; there, routing through √C coarse groups drops it to ~2m√C
       // (Lloyd with approximate routed assignment — the standard large-k
       // trick; the update step is unchanged and exact). CAUTION, measured
-      // round 17: routed TRAINING degrades the centroids themselves, not
-      // just the routing (2/24 true-neighbor cell coverage@np16 vs 12/24
+      // on the ×30 AnnDemo corpus: routed TRAINING degrades the centroids
+      // themselves, not just the routing (2/24 true-neighbor cell coverage@np16 vs 12/24
       // flat-trained at identical routed final assignment), and because
       // Lloyd runs on the bounded sample, flat training at full scan
       // width costs seconds at any corpus scale — AnnDemo now trains
@@ -309,10 +309,27 @@ object IvfCentroids {
     attachCell(base, cells, payload)
   }
 
-  /** Query-side PROBE RANKING `(vec_id, cell, prk)` over every cell —
-    * exact (dist, cid)-ascending order against the broadcast codebook.
-    * Cost: queries × C ranked rows, router metadata at any corpus size
-    * (the corpus is never touched).
+  // ------------------------------------------------- the IVF search core
+  // Every v-query and AnnDemo's serving legs compose the same five steps:
+  // probe ranking → (escalation) → candidate scoring → per-query top-k →
+  // (recall against an exact arm). Column conventions: a query frame
+  // carries `query_id` and its vector `qq` (plus `qn2` = ‖qq‖² where the
+  // score needs it); a candidate row carries `vec_id`, `q`, `n2`. The
+  // probe-policy differences between queries (fixed NumProbe, count or
+  // mass escalation, calibrated depth) are the arguments each call site
+  // passes — there is no policy object.
+
+  /** The catalog's recall-tuned probe floor: IVF cells probed per query
+    * at fixed nprobe, and the floor [[escalate]] never goes under.
+    */
+  val NumProbe = 2
+
+  /** Query-side PROBE RANKING: every cell of `cent` (cid, cq) ranked per
+    * `query_id` in exact (L2(qq, cq), cid)-ascending order — output is the
+    * query frame's columns + `cell` + `prk` (1-based). Cost: queries × C
+    * ranked rows, router metadata at any corpus size (the corpus is never
+    * touched); a `prk <= np` filter on the result turns the window into a
+    * WindowGroupLimit partial top-np.
     *
     * Two alternatives were measured and REJECTED on the ×30 demo corpus
     * at the routed preset (true-neighbor cell coverage@np16, common
@@ -334,9 +351,167 @@ object IvfCentroids {
     */
   def probeRanking(queries: DataFrame, cent: DataFrame): DataFrame =
     queries.join(broadcast(cent))
-      .withColumn("prk", row_number().over(Window.partitionBy(col("vec_id"))
-        .orderBy(l2(col("q"), col("cq")).asc, col("cid").asc)))
-      .select(col("vec_id"), col("cid").as("cell"), col("prk"))
+      .withColumn("prk", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(l2(col("qq"), col("cq")).asc, col("cid").asc)))
+      .select(queries.columns.map(col) ++ Seq(col("cid").as("cell"), col("prk")): _*)
+
+  /** Histogram ESCALATION — per-query probe depth as a policy (the
+    * continuously-adaptive-search view: depth is chosen per query, not per
+    * deployment). `ranked` is a [[probeRanking]] of queries carrying
+    * `qlabel` and their own cell `qcell`; `hist` is the router's
+    * per-(cell, label) candidate histogram `(cell, qlabel, n_cl)`. The
+    * cumulative same-label mass `cum` runs over the distance-ranked cell
+    * prefix (the query's own vector excluded from its cell's count), and
+    * `np_used` is the first prefix whose mass reaches `target`:
+    *  - FLOORED at [[NumProbe]] — escalate-only: shrinking below the
+    *    recall-tuned floor for dense labels would trade recall for I/O
+    *    behind the operator's back (AnnDemo's selectivity rung measured
+    *    exactly that regression before the floor);
+    *  - CAPPED at C (the deepest prefix) when the target is unreachable.
+    * A deployment without the histogram runs the same rule as bounded
+    * doubling escalation (probe 2, 4, 8… cells); the histogram form is
+    * that walk's fixpoint computed in one shot, which is what makes it
+    * oracle-expressible. Returns the PROBE TABLE: the ranked rows with
+    * `prk <= np_used`, as the query's columns (less the routing-only
+    * `qcell`) + cell + np_used; histogram and depth table ride as
+    * broadcasts — metadata at any corpus size.
+    */
+  def escalate(ranked: DataFrame, hist: DataFrame, target: Int): DataFrame = {
+    val cum = ranked.join(broadcast(hist), Seq("cell", "qlabel"), "left")
+      .withColumn("m", coalesce(col("n_cl"), lit(0L)) -
+        when(col("cell") === col("qcell"), lit(1L)).otherwise(lit(0L)))
+      .withColumn("cum", sum(col("m")).over(
+        Window.partitionBy(col("query_id")).orderBy(col("prk"))))
+    val np = cum.groupBy(col("query_id")).agg(
+      greatest(lit(NumProbe.toLong),
+        coalesce(min(when(col("cum") >= target, col("prk"))), max(col("prk"))).cast("long"))
+        .as("np_used"))
+    cum.join(broadcast(np), Seq("query_id")).filter(col("prk") <= col("np_used"))
+      .select((ranked.columns.filterNot(Set("qcell", "prk")) :+ "np_used").map(col): _*)
+  }
+
+  /** Cosine from exact integer parts; the only float ops are two sqrts,
+    * one multiply, one divide — identical on every engine.
+    */
+  def cosine(a: Column, b: Column, n2a: Column, n2b: Column): Column =
+    graft.functions.longDot(a, b).cast("double") /
+      (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
+
+  /** Asymmetric exact-integer L2 of candidate `q` (norm `n2`) to query
+    * `qq` (norm `qn2`): ‖q−qq‖² = n2 − 2·q·qq + qn2 — one codegen'd
+    * LongDot per candidate, both norms precomputed.
+    */
+  def adist(q: Column, n2: Column, qq: Column, qn2: Column): Column =
+    n2 - lit(2L) * graft.functions.longDot(q, qq) + qn2
+
+  /** Candidate rows (q, n2) scored by cosine to their query (qq, qn2):
+    * adds `cos`.
+    */
+  def withCos(cand: DataFrame): DataFrame =
+    cand.withColumn("cos", cosine(col("q"), col("qq"), col("n2"), col("qn2")))
+
+  /** Candidate rows (q, n2) scored by asymmetric L2 to their query (qq,
+    * qn2): adds `adist`.
+    */
+  def withAdist(cand: DataFrame): DataFrame =
+    cand.withColumn("adist", adist(col("q"), col("n2"), col("qq"), col("qn2")))
+
+  /** Squared L2 between two integer arrays as a named column `out`, via a
+    * materialized `diff` column (the SQ8 rungs: the query's exact vector
+    * against a dequantized reconstruction).
+    */
+  def withL2(df: DataFrame, a: String, b: String, out: String): DataFrame =
+    df.withColumn("diff", zip_with(col(a), col(b), (x, y) => x - y))
+      .withColumn(out, graft.functions.longDot(col("diff"), col("diff")))
+
+  /** The SQ8 per-dim stats row `(mns, rng)` of `vecs.q` — one partial-
+    * aggregated row, broadcast back to every consumer (the scalar-join
+    * pattern); the codes are meaningless without it.
+    */
+  def sq8Stats(vecs: DataFrame, dim: Int): DataFrame = {
+    val aggs = (0 until dim).map(i => min(element_at(col("q"), i + 1)).as(s"mn$i")) ++
+      (0 until dim).map(i => max(element_at(col("q"), i + 1)).as(s"mx$i"))
+    vecs.agg(aggs.head, aggs.tail: _*).select(
+      array((0 until dim).map(i => col(s"mn$i")): _*).as("mns"),
+      array((0 until dim).map(i => col(s"mx$i") - col(s"mn$i")): _*).as("rng"))
+  }
+
+  /** SQ8 affine 8-bit codes of `q` against the stats row: code =
+    * (x−mn)·255 div rng via mod-subtract exact division (operands
+    * nonnegative and ≤ ~1e6, so the IEEE divide of exact multiples is
+    * exact on every engine).
+    */
+  def sq8Encode(q: Column, mns: Column, rng: Column): Column = {
+    val dq = zip_with(q, mns, (x, m) => x - m)
+    zip_with(dq, rng, (dd, r) =>
+      when(r === 0L, 0L).otherwise((((dd * 255L) - ((dd * 255L) % r)) / r).cast("long")))
+  }
+
+  /** Integer-exact SQ8 reconstruction: mn + code·rng div 255. */
+  def sq8Decode(codes: Column, mns: Column, rng: Column): Column =
+    zip_with(mns, zip_with(codes, rng, (ci, r) =>
+      (((ci * r) - ((ci * r) % 255L)) / 255L).cast("long")), (m, v) => m + v)
+
+  /** The SQ8 round trip of `q` — what a serving tier that stores codes
+    * reads back.
+    */
+  def sq8Dequant(q: Column, mns: Column, rng: Column): Column =
+    sq8Decode(sq8Encode(q, mns, rng), mns, rng)
+
+  /** PQ asymmetric-distance lookups: `codes` rows (…, sub, code) joined to
+    * the per-query broadcast distance table `dtable` (query_id, sub, code,
+    * qd) on `keys`; the approximate distance `adist` per (query_id,
+    * vec_id) is the sum of one table lookup per subspace — original
+    * vectors are never touched.
+    */
+  def pqAdc(codes: DataFrame, dtable: DataFrame, keys: Seq[String]): DataFrame =
+    codes.join(broadcast(dtable), keys)
+      .groupBy(col("query_id"), col("vec_id"))
+      .agg(sum(col("qd")).cast("long").as("adist"))
+
+  /** Per-query TOP-k: rows of `cand` ranked per `query_id` by (`score`,
+    * vec_id) — ascending score for distances, descending for
+    * similarities, the vec_id tiebreak making the order total so the
+    * selected set is engine- and partitioning-independent. Adds `rk`
+    * (1-based int). A query with fewer than k candidates keeps them all.
+    *
+    * Shape: the `rk <= k` filter over row_number is rewritten by Spark
+    * into a WindowGroupLimit PARTIAL top-k below the query_id exchange
+    * and a final one above it — distributed top-k from partition-local
+    * partial top-k, so the shuffle carries at most k × n_queries rows per
+    * input partition and the corpus × queries candidate expansion never
+    * shuffles (asserted per query in PlanSpec).
+    */
+  def topK(cand: DataFrame, score: String, k: Int, asc: Boolean): DataFrame =
+    cand.withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(if (asc) col(score).asc else col(score).desc, col("vec_id").asc)))
+      .filter(col("rk") <= k)
+
+  /** RECALL@k of an approximate arm against an exact one, both
+    * `(keys…, neighbor_id)` top-k frames: per key, `n_exact`, `n_approx`
+    * (0 when the approximate arm returned nothing), `n_hit` and
+    * `recall_at_<k>` = n_hit / n_exact (round 6).
+    *
+    * Both rank frames are bounded at k × n_queries rows BY CONSTRUCTION
+    * ([[topK]] over a plan-bounded query set), so they ride as broadcasts
+    * and the assembly is two BroadcastHashJoins instead of exchange +
+    * sort + SortMergeJoin pairs over tiny inputs — the planner cannot see
+    * that bound alone (row counts are unknown after a window).
+    */
+  def recall(exact: DataFrame, approx: DataFrame, k: Int,
+      keys: Seq[String] = Seq("query_id")): DataFrame = {
+    val nApprox = approx.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_approx"))
+    exact
+      .join(broadcast(approx.withColumn("hit", lit(1L))), keys :+ "neighbor_id", "left")
+      .groupBy(keys.map(col): _*)
+      .agg(
+        count(lit(1)).as("n_exact"),
+        sum(coalesce(col("hit"), lit(0L))).cast("long").as("n_hit"))
+      .join(broadcast(nApprox), keys, "left")
+      .select(keys.map(col) ++ Seq(col("n_exact"),
+        coalesce(col("n_approx"), lit(0L)).as("n_approx"), col("n_hit"),
+        round(col("n_hit").cast("double") / col("n_exact"), 6).as(s"recall_at_$k")): _*)
+  }
 
   /** Offline job: train and persist the codebook parquet. The seed is
     * corpus-capped — the at-scale entry point must not reproduce the

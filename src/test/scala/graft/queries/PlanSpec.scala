@@ -300,12 +300,52 @@ class PlanSpec extends SparkSpec {
       || p.contains("ShuffledHashJoin"), p)
   }
 
+  /** Node id → (header, detail block) of a formatted plan. */
+  private def planNodes(p: String): Map[Int, (String, String)] =
+    """(?ms)^\((\d+)\) ([^\n\[]*?)\s*(?:\[codegen id : \d+\])?\n(.*?)(?=^\(\d+\) |\z)""".r
+      .findAllMatchIn(p).map(m => m.group(1).toInt -> (m.group(2).trim, m.group(3))).toMap
+
+  // query → the number of IvfCentroids.topK arms its result is built from
+  private val topKArms = Seq(
+    "v1_knn_bruteforce" -> 1, "v3_lsh_ann" -> 1, "v6_ivf_ann" -> 1, "v9_pq_adc" -> 1,
+    "v10_ivfpq_ann" -> 1, "v11_ann_recall" -> 2, "v14_ivf_nprobe_sweep" -> 4,
+    "v17_sq8_adc" -> 1, "v18_sq8_recall" -> 2, "v19_ivfsq8_ann" -> 1,
+    "v22_filtered_ann" -> 1, "v23_filtered_recall" -> 2, "v24_adaptive_nprobe" -> 1,
+    "v26_rare_label_dispatch" -> 2, "v27_mass_coverage_router" -> 2,
+    "v28_calibrated_probe_depth" -> 1)
+
+  test("topK pre-reduces: WindowGroupLimit below every rank exchange") {
+    // every per-query top-k (the `rk` row_number of IvfCentroids.topK) must
+    // shuffle only partial top-k rows (k × n_queries per input partition),
+    // never the full corpus×queries candidate expansion: its Window sits on
+    // Final WindowGroupLimit ← Sort ← Exchange ← Partial WindowGroupLimit
+    // (unary chain, so the formatted plan numbers it consecutively)
+    for ((name, arms) <- topKArms) {
+      val p = plan(name)
+      val nodes = planNodes(p)
+      val rankWindows = nodes.collect {
+        case (id, ("Window", body)) if body.contains(" AS rk#") => id
+      }.toSeq
+      assert(rankWindows.size >= arms, s"$name: ${rankWindows.size} rank windows < $arms arms\n$p")
+      for (id <- rankWindows) {
+        val chain = (1 to 4).map(i => nodes.get(id - i).map(_._1).getOrElse("?"))
+        assert(chain == Seq("WindowGroupLimit", "Sort", "Exchange", "WindowGroupLimit"),
+          s"$name: rank window ($id) sits on ${chain.mkString(" <- ")}\n$p")
+      }
+    }
+  }
+
   test("v11_ann_recall pre-reduces per partition: WindowGroupLimit below every rank exchange") {
     // both the exact and approx top-5 sides must shuffle only partial
     // top-k rows (k × n_queries per input partition), never the full
     // corpus×queries candidate expansion
     val p = plan("v11_ann_recall")
     assert("WindowGroupLimit".r.findAllIn(p).size >= 4, p) // partial + final, × 2 sides
+  }
+
+  test("v18_sq8_recall: both arms pre-reduce with WindowGroupLimit partial top-k") {
+    val p = plan("v18_sq8_recall")
+    assert("WindowGroupLimit".r.findAllIn(p).size >= 4, p) // partial + final, × 2 arms
   }
 
   test("v17_sq8_adc: broadcast stats + query set, partial top-k, map-only corpus side") {
@@ -315,11 +355,6 @@ class PlanSpec extends SparkSpec {
     val p = plan("v17_sq8_adc")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"), p)
     assert(p.contains("WindowGroupLimit"), p)
-  }
-
-  test("v18_sq8_recall: both arms pre-reduce with WindowGroupLimit partial top-k") {
-    val p = plan("v18_sq8_recall")
-    assert("WindowGroupLimit".r.findAllIn(p).size >= 4, p) // partial + final, × 2 arms
   }
 
   test("w1_rank_topk benefits from WindowGroupLimit (partial top-k before the shuffle)") {

@@ -7,16 +7,22 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import QaPrimitives.QaTask
+
 /** Registry-driven QA generation orchestration — the Spark re-expression of
   * QA_generation/generate_qa.py:41-171 (§3.1 query lifecycle):
   * scan → per-task transform → per-task sink → combined union → summary.
   *
   * Unlike the reference (whole corpus materialized in driver memory,
   * data_loader.py:40-53), the corpus stays distributed; only per-partition
-  * row counts ever reach the driver. Building a task is eager: its id
-  * assignment ([[QaPrimitives.withContiguousIds]]) runs the task's jobs and
-  * stores its sorted rows on the executors, every sink after that reads
-  * those stored rows, and the summary is made from the row counts.
+  * row counts and a sample of `image_id`s ever reach the driver. A run
+  * samples its `image_id` bounds once, from the frames
+  * ([[QaPrimitives.imageIdBounds]]: one small job), and every task's id
+  * step routes its rows to those ranges. Building a task is eager: its id
+  * assignment ([[QaPrimitives.withContiguousIds]]) runs the routed map
+  * stage and the count job and stores its sorted rows on the executors,
+  * every sink after that reads those stored rows, and the summary is made
+  * from the row counts.
   */
 object QaPipeline {
 
@@ -24,22 +30,24 @@ object QaPipeline {
     * config.py:17-88's dataset→tasks mapping by accepting an explicit task
     * list per run.
     */
-  val taskRegistry: Map[String, (DataFrame, String) => DataFrame] = QaTasks.all ++ QaTasks2D.all
+  val taskRegistry: Map[String, QaTask] = QaTasks.all ++ QaTasks2D.all
 
   def validateTasks(tasks: Seq[String]): Unit = {
     val unknown = tasks.filterNot(taskRegistry.contains)
     require(unknown.isEmpty, s"unknown tasks: ${unknown.mkString(", ")}; known: ${taskRegistry.keys.toSeq.sorted.mkString(", ")}")
   }
 
-  /** Run the given tasks over a frame corpus, one after another; returns
-    * per-task DataFrames over stored rows (see [[QaPrimitives.release]]).
+  /** Run the given tasks over a frame corpus, one after another, over one
+    * set of `image_id` bounds; returns per-task DataFrames over stored rows
+    * (see [[QaPrimitives.release]]).
     */
   def generate(
       frames: DataFrame,
       datasetName: String,
       tasks: Seq[String] = taskRegistry.keys.toSeq.sorted): Map[String, DataFrame] = {
     validateTasks(tasks)
-    tasks.map(t => t -> taskRegistry(t)(frames, datasetName)).toMap
+    val bounds = QaPrimitives.imageIdBounds(frames)
+    tasks.map(t => t -> taskRegistry(t)(frames, datasetName, bounds)).toMap
   }
 
   /** K3: combined output — unionByName over all task outputs. */
@@ -68,6 +76,7 @@ object QaPipeline {
 
   /** Full run: per-task JSON sinks (K2), combined (K3), summary (K4).
     *
+    * The `image_id` bounds are sampled once, before any task is built.
     * The tasks are built and sunk concurrently, one thread each, so one
     * task's driver-side planning and small jobs overlap the others' work.
     * The combined output then reads the same stored rows; the summary and
@@ -89,6 +98,7 @@ object QaPipeline {
     val built = new ConcurrentLinkedQueue[DataFrame]()
     val firstError = new AtomicReference[Throwable]()
     val names = tasks.distinct
+    val bounds = QaPrimitives.imageIdBounds(frames)
     val pool = Executors.newFixedThreadPool(names.size, (r: Runnable) => {
       val th = new Thread(r, "qa-task"); th.setDaemon(true); th
     })
@@ -97,7 +107,7 @@ object QaPipeline {
         pool.submit[(String, DataFrame)](() => {
           sc.addJobTag(tag)
           try {
-            val df = taskRegistry(t)(frames, datasetName)
+            val df = taskRegistry(t)(frames, datasetName, bounds)
             built.add(df) // released below even if its sink fails
             // a task built after another failed skips its sink: the run is lost
             if (firstError.get == null) df.write.mode("overwrite").json(s"$outDir/${datasetName}_${t}_qa")

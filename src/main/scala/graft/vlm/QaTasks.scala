@@ -2,19 +2,21 @@ package graft.vlm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
-/** The six 3D QA task generators as declarative `DataFrame => DataFrame`
-  * transforms over unified frame records (SURVEY.md §7.1 step 5).
+/** The six 3D QA task generators as [[QaPrimitives.QaTask]]s: declarative
+  * `DataFrame => DataFrame` transforms over unified frame records, each
+  * with the in-frame key its rows are numbered by (SURVEY.md §7.1 step 5).
   *
-  * Every task is per-frame work: explode → column math and native
-  * expressions → re-assemble.
-  * The two pair tasks form their `i < j` box pairs inside each frame row
-  * ([[boxPairs]]), so no task joins boxes back to boxes. The plans shuffle
-  * only for per-frame aggregates and for the contiguous QA ids, which
-  * range-partition and sort on each task's unique order key and number the
-  * rows from per-partition offsets ([[QaPrimitives.withContiguousIds]]:
-  * eager, it stores the sorted rows).
+  * Every task is per-frame work, and it stays in the frame's row: array
+  * functions over the frame's box array pick the first box per category
+  * ([[QaPrimitives.firstPerCategory]]), count categories
+  * ([[QaPrimitives.categoryCounts]]), form the `i < j` box pairs
+  * ([[boxPairs]]) and the camera distances, and then explode the frame's
+  * QA rows. So no task joins, groups or windows, and the only exchange in
+  * a task is its id step ([[QaPrimitives.withContiguousIds]]): it routes
+  * the rows to `image_id` ranges sampled once per run, sorts within them by
+  * the task's order key, and numbers the rows from per-partition offsets
+  * (eager, it stores the sorted rows).
   * All randomness (distractors, option shuffles, sampling) is md5-seeded on
   * stable row identity — a documented improvement over the reference's
   * unseeded `random` (SURVEY §7.4 item 3): identical output for any
@@ -25,6 +27,7 @@ import org.apache.spark.sql.expressions.Window
   */
 object QaTasks {
   import GeoFunctions._
+  import QaPrimitives.{FrameMeta, QaTask, categoryCounts, distractor, firstPerCategory, metaMap, shuffleToLetter}
 
   // ---- config mirroring QA_generation/config.py:91-121 -------------------
   val MinCountObjects = 1 // object_count: params.get('min_objects', 1)
@@ -47,41 +50,48 @@ object QaTasks {
     */
   val MaxPairBoxes = 64
 
-  /** All tasks keyed by their reference task name. */
-  def all: Map[String, (DataFrame, String) => DataFrame] = Map(
-    "object_count" -> objectCount,
-    "object_3d_size" -> object3dSize,
-    "cam_obj_distance" -> camObjDistance,
-    "obj_obj_distance" -> objObjDistance,
-    "obj_obj_rel_pos" -> objObjRelPos,
-    "cam_obj_rel_dist" -> camObjRelDist
-  )
+  // ------------------------------------------------------------------ tasks
 
-  private def metaCommon: Seq[(String, Column)] = Seq(
-    "source_file" -> coalesce(col("_source_file"), lit("")),
-    "image_id" -> coalesce(col("image_id"), lit("")),
-    "scene_id" -> coalesce(col("scene_id"), lit("")),
-    "frame_id" -> coalesce(col("frame_id"), lit(""))
-  )
+  /** object_count — tasks/tasks_3d/object_count_qa.py:28-100. */
+  val objectCount = new QaTask("object_count", Nil, objectCountRows)
 
-  private def metaMap(extra: (String, Column)*): Column =
-    map((metaCommon ++ extra).flatMap { case (k, v) => Seq(lit(k), v.cast("string")) }: _*)
+  /** object_3d_size — tasks/tasks_3d/object_3d_size_qa.py:28-100. */
+  val object3dSize = new QaTask("object_3d_size", Seq(col("bbox.category")), object3dSizeRows)
 
-  /** Ensure the frame DF carries a `_source_file` column (S1 tagging). */
-  private def withSource(frames: DataFrame): DataFrame =
-    FrameSchema.withSourceTag(frames)
-
-  /** Exploded 3D boxes with positional index, carrying the frame columns
-    * `keep` (a per-frame value computed before the explode is computed once
-    * per frame, not once per box).
+  /** cam_obj_distance — tasks/tasks_3d/cam_obj_distance_qa.py:28-100;
+    * distance = ‖center‖, boxes already camera-frame (geometry.py:401-421).
     */
-  private def boxes(frames: DataFrame, keep: String*): DataFrame =
-    withSource(frames)
-      .filter(size(col("bounding_boxes_3d")) > 0)
-      .select(
-        Seq(col("image_id"), col("scene_id"), col("frame_id"), col("_source_file"), col("camera")) ++
-          keep.map(col) :+ posexplode(col("bounding_boxes_3d")).as(Seq("bbox_idx", "bbox")): _*
-      )
+  val camObjDistance = new QaTask("cam_obj_distance", Seq(col("bbox.category")), camObjDistanceRows)
+
+  /** obj_obj_distance — tasks/tasks_3d/obj_obj_distance_qa.py:28-100 (J8
+    * in-row i<j pairs; min 8×8 vertex distance; 0.2–20 m gate).
+    */
+  val objObjDistance = new QaTask("obj_obj_distance", Seq(col("i"), col("j")), objObjDistanceRows)
+
+  /** obj_obj_rel_pos — tasks/tasks_3d/obj_obj_rel_pos_qa.py:28-140 over
+    * geometry.py:424-495: camera-frame center diffs, 0.1 m threshold,
+    * seeded aspect choice.
+    */
+  val objObjRelPos = new QaTask("obj_obj_rel_pos", Seq(col("i"), col("j")), objObjRelPosRows)
+
+  /** cam_obj_rel_dist — tasks/tasks_3d/cam_obj_rel_dist_qa.py: distances
+    * from the *extrinsics* camera position to min vertices (the second
+    * distance semantics, deliberately different from cam_obj_distance —
+    * SURVEY §7.3), three variants with seeded sampling.
+    */
+  val camObjRelDist = new QaTask("cam_obj_rel_dist", Seq(col("ord1"), col("ord2")), camObjRelDistRows)
+
+  /** All tasks keyed by their reference task name. */
+  def all: Map[String, QaTask] =
+    Seq(objectCount, object3dSize, camObjDistance, objObjDistance, objObjRelPos, camObjRelDist).map(t => t.name -> t).toMap
+
+  /** The first box of each category of every frame, one row per box
+    * (`bbox`), with the frame columns.
+    */
+  private def firstBoxes(frames: DataFrame): DataFrame =
+    FrameSchema.withSourceTag(frames).select(
+      col("image_id"), col("scene_id"), col("frame_id"), col("_source_file"), col("camera"),
+      explode(firstPerCategory(col("bounding_boxes_3d"))).as("bbox"))
 
   private def vertsOf(b: Column): Column =
     bboxVerticesCol(
@@ -100,7 +110,7 @@ object QaTasks {
     */
   private[vlm] def boxPairs(frames: DataFrame, cameraFrame: Boolean): DataFrame = {
     val extrinsics = col("camera").getField("extrinsics")
-    val multi = withSource(frames).filter(size(col("bounding_boxes_3d")) >= 2)
+    val multi = FrameSchema.withSourceTag(frames).filter(size(col("bounding_boxes_3d")) >= 2)
     val framed = if (cameraFrame) multi.filter(extrinsics.isNotNull) else multi
     val world = transform(slice(col("bounding_boxes_3d"), 1, MaxPairBoxes),
       (b, k) => struct(k.as("idx"), b.as("bbox"), vertsOf(b).as("w")))
@@ -120,41 +130,20 @@ object QaTasks {
         (x, i) => transform(slice(col("bx"), i + 2, n - i - 1), y => pair(x, y))))))
   }
 
-  import QaPrimitives.{assignQaIds, distractor, shuffleToLetter}
-
-  // ------------------------------------------------------------------ tasks
-
-  /** object_count — tasks/tasks_3d/object_count_qa.py:28-100. */
-  def objectCount(frames: DataFrame, datasetName: String): DataFrame = {
-    val b = boxes(frames)
-      .withColumn("readable", parseClassCategoryCol(col("bbox").getField("category")))
-    val counts = b
-      .groupBy(col("image_id"), col("readable"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        min(col("bbox_idx")).as("first_idx"),
-        first(col("scene_id")).as("scene_id"),
-        first(col("frame_id")).as("frame_id"),
-        first(col("_source_file")).as("_source_file")
-      )
-      .filter(col("readable") =!= "unknown" && col("cnt") >= MinCountObjects)
-    val perFrame = counts
-      .groupBy(col("image_id"))
-      .agg(
-        sum(col("cnt")).as("total"),
-        count(lit(1)).as("ncats"),
-        // argmax count, tie → earliest first occurrence (Python max() over
-        // Counter insertion order)
-        max_by(
-          struct(col("readable").as("target"), col("cnt").as("tcnt")),
-          struct(col("cnt"), -col("first_idx"))
-        ).as("tstruct"),
-        map_from_entries(sort_array(collect_list(struct(col("readable"), col("cnt"))))).as("cat_counts"),
-        first(col("scene_id")).as("scene_id"),
-        first(col("frame_id")).as("frame_id"),
-        first(col("_source_file")).as("_source_file")
-      )
-    val q = perFrame
+  private def objectCountRows(frames: DataFrame): DataFrame = {
+    val cats = filter(transform(col("bounding_boxes_3d"), b => parseClassCategoryCol(b.getField("category"))),
+      r => r =!= "unknown")
+    val perFrame = FrameSchema.withSourceTag(frames)
+      .withColumn("counts", filter(categoryCounts(cats), c => c("cnt") >= MinCountObjects))
+      .filter(size(col("counts")) > 0)
+      .withColumn("total", aggregate(col("counts"), lit(0), (acc, c) => acc + c("cnt")))
+      .withColumn("ncats", size(col("counts")))
+      // argmax count, tie → earliest first occurrence (Python max() over
+      // Counter insertion order)
+      .withColumn("tstruct", array_max(transform(col("counts"),
+        (c, k) => struct(c("cnt").as("tcnt"), (-k).as("first"), c("readable").as("target")))))
+      .withColumn("cat_counts", map_from_entries(sort_array(col("counts"))))
+    perFrame
       .withColumn("target", col("tstruct").getField("target"))
       .withColumn("target_cnt", col("tstruct").getField("tcnt"))
       .withColumn("specific", col("ncats") === 1 || col("total") <= MaxTotalForCategorySpecific)
@@ -167,23 +156,17 @@ object QaTasks {
       .withColumn("options", lit(null).cast("array<string>"))
       .withColumn(
         "metadata",
-        metaMap(
+        metaMap(FrameMeta,
           "question_type" -> when(col("specific"), lit("category_specific")).otherwise(lit("total_count")),
           "target_category" -> when(col("specific"), col("target")).otherwise(lit("all_objects")),
           "total_objects" -> col("total"),
           "category_counts" -> to_json(col("cat_counts")),
           "unit" -> lit("count")
         ))
-    assignQaIds(q, datasetName, "object_count", Seq(col("image_id")))
   }
 
-  /** object_3d_size — tasks/tasks_3d/object_3d_size_qa.py:28-100. */
-  def object3dSize(frames: DataFrame, datasetName: String): DataFrame = {
-    val w = Window.partitionBy(col("image_id"), col("bbox.category")).orderBy(col("bbox_idx"))
-    val firstPerCat = boxes(frames)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-    val sized = firstPerCat
+  private def object3dSizeRows(frames: DataFrame): DataFrame = {
+    val sized = firstBoxes(frames)
       .withColumn("readable", parseClassCategoryCol(col("bbox").getField("category")))
       .withColumn("size_cm", maxDimCol(col("bbox.xl"), col("bbox.yl"), col("bbox.zl")) * 100)
       .withColumn("seed", concat(col("image_id"), lit("|object_3d_size|"), col("bbox.category")))
@@ -194,31 +177,24 @@ object QaTasks {
           round(col("size_cm"), 1) +:
             (1 to SizeNumOptions - 1).map(k => round(distractor(col("size_cm"), col("seed"), k, SizeDistractorRange), 1)): _*
         ).cast("array<string>"))
-    val shuffled = shuffleToLetter(sized, col("opts"), col("ans").cast("string"), col("seed"))
+    shuffleToLetter(sized, col("opts"), col("ans").cast("string"), col("seed"))
       .withColumn("question", format_string("What is the length of the longest dimension of the %s in centimeters?", col("readable")))
       .withColumn("answer", col("_letter"))
       .withColumn("answer_type", lit("multiple_choice"))
       .withColumn("options", col("_shuffled"))
       .withColumn(
         "metadata",
-        metaMap(
+        metaMap(FrameMeta,
           "category" -> col("bbox.category"),
           "readable_category" -> col("readable"),
           "correct_size_cm" -> col("ans"),
           "answer_value" -> col("ans"),
           "unit" -> lit("centimeters")
         ))
-    assignQaIds(shuffled, datasetName, "object_3d_size", Seq(col("image_id"), col("bbox.category")))
   }
 
-  /** cam_obj_distance — tasks/tasks_3d/cam_obj_distance_qa.py:28-100;
-    * distance = ‖center‖, boxes already camera-frame (geometry.py:401-421).
-    */
-  def camObjDistance(frames: DataFrame, datasetName: String): DataFrame = {
-    val w = Window.partitionBy(col("image_id"), col("bbox.category")).orderBy(col("bbox_idx"))
-    val q = boxes(frames)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+  private def camObjDistanceRows(frames: DataFrame): DataFrame =
+    firstBoxes(frames)
       .withColumn("dist", centerDistanceCol(col("bbox.x"), col("bbox.y"), col("bbox.z")))
       .filter(col("dist") >= CamObjMinDistance)
       .withColumn("readable", parseClassCategoryCol(col("bbox").getField("category")))
@@ -229,21 +205,16 @@ object QaTasks {
       .withColumn("options", lit(null).cast("array<string>"))
       .withColumn(
         "metadata",
-        metaMap(
+        metaMap(FrameMeta,
           "category" -> col("bbox.category"),
           "readable_category" -> col("readable"),
           "distance_meters" -> round(col("dist"), 1),
           "unit" -> lit("meters"),
           "uses_extrinsics" -> col("camera").getField("extrinsics").isNotNull
         ))
-    assignQaIds(q, datasetName, "cam_obj_distance", Seq(col("image_id"), col("bbox.category")))
-  }
 
-  /** obj_obj_distance — tasks/tasks_3d/obj_obj_distance_qa.py:28-100 (J8
-    * in-row i<j pairs; min 8×8 vertex distance; 0.2–20 m gate).
-    */
-  def objObjDistance(frames: DataFrame, datasetName: String): DataFrame = {
-    val q = boxPairs(frames, cameraFrame = false)
+  private def objObjDistanceRows(frames: DataFrame): DataFrame =
+    boxPairs(frames, cameraFrame = false)
       .withColumn("dist", minBoxDistanceCol(col("w1"), col("w2")))
       .filter(col("dist") >= ObjObjMinDistance && col("dist") <= ObjObjMaxDistance)
       .withColumn("question",
@@ -254,20 +225,14 @@ object QaTasks {
       .withColumn("options", lit(null).cast("array<string>"))
       .withColumn(
         "metadata",
-        metaMap(
+        metaMap(FrameMeta,
           "object1_category" -> col("b1").getField("category"),
           "object2_category" -> col("b2").getField("category"),
           "distance_meters" -> round(col("dist"), 1),
           "unit" -> lit("meters")
         ))
-    assignQaIds(q, datasetName, "obj_obj_distance", Seq(col("image_id"), col("i"), col("j")))
-  }
 
-  /** obj_obj_rel_pos — tasks/tasks_3d/obj_obj_rel_pos_qa.py:28-140 over
-    * geometry.py:424-495: camera-frame center diffs, 0.1 m threshold,
-    * seeded aspect choice.
-    */
-  def objObjRelPos(frames: DataFrame, datasetName: String): DataFrame = {
+  private def objObjRelPosRows(frames: DataFrame): DataFrame = {
     val rel = boxPairs(frames, cameraFrame = true)
       .withColumn("min_dist", minBoxDistanceCol(col("w1"), col("w2")))
       .withColumn("rp", relativePositionCol(col("c1"), col("c2")))
@@ -288,7 +253,7 @@ object QaTasks {
       .filter(size(col("aspects")) > 0)
       .withColumn("seed", concat(col("image_id"), lit("|obj_obj_rel_pos|"), col("i"), lit("_"), col("j")))
       .withColumn("pick", element_at(col("aspects"), (floor(seededUniform(col("seed")) * size(col("aspects"))) + 1).cast("int")))
-    val q = withAspects
+    withAspects
       .withColumn(
         "question",
         when(col("pick.t") === "depth",
@@ -301,7 +266,7 @@ object QaTasks {
       .withColumn("options", lit(null).cast("array<string>"))
       .withColumn(
         "metadata",
-        metaMap(
+        metaMap(FrameMeta,
           "object1_category" -> col("b1").getField("category"),
           "object2_category" -> col("b2").getField("category"),
           "aspect" -> col("pick.t"),
@@ -311,30 +276,16 @@ object QaTasks {
           "center_distance" -> round(col("rp").getField("_4"), 3),
           "min_distance" -> round(col("min_dist"), 3)
         ))
-    assignQaIds(q, datasetName, "obj_obj_rel_pos", Seq(col("image_id"), col("i"), col("j")))
   }
 
-  /** cam_obj_rel_dist — tasks/tasks_3d/cam_obj_rel_dist_qa.py: distances
-    * from the *extrinsics* camera position to min vertices (the second
-    * distance semantics, deliberately different from cam_obj_distance —
-    * SURVEY §7.3), three variants with seeded sampling.
-    */
-  def camObjRelDist(frames: DataFrame, datasetName: String): DataFrame = {
-    val framesWithCam = frames
+  private def camObjRelDistRows(frames: DataFrame): DataFrame = {
+    val perFrame = FrameSchema.withSourceTag(frames)
       .withColumn("cam_pos", cameraPositionCol(col("camera").getField("extrinsics")))
-      .filter(col("cam_pos").isNotNull)
-    val withCam = boxes(framesWithCam, "cam_pos")
-      .withColumn("verts", vertsOf(col("bbox")))
-      .withColumn("dist", cameraToBoxDistanceCol(col("cam_pos"), col("verts")))
-    val perFrame = withCam
-      .groupBy(col("image_id"))
-      .agg(
-        sort_array(collect_list(struct(col("bbox_idx").as("idx"), col("bbox").getField("category").as("cat"), col("dist").as("dist")))).as("by_idx"),
-        first(col("scene_id")).as("scene_id"),
-        first(col("frame_id")).as("frame_id"),
-        first(col("_source_file")).as("_source_file")
-      )
-      .filter(size(col("by_idx")) >= 2)
+      .filter(col("cam_pos").isNotNull && size(col("bounding_boxes_3d")) >= 2)
+      .select(
+        col("image_id"), col("scene_id"), col("frame_id"), col("_source_file"),
+        transform(col("bounding_boxes_3d"), (b, i) => struct(i.as("idx"), b.getField("category").as("cat"),
+          cameraToBoxDistanceCol(col("cam_pos"), vertsOf(b)).as("dist"))).as("by_idx"))
       .withColumn("n", size(col("by_idx")))
       .withColumn("by_dist", array_sort(transform(col("by_idx"), x => struct(x.getField("dist").as("dist"), x.getField("idx").as("idx"), x.getField("cat").as("cat")))))
       .withColumn("seed", concat(col("image_id"), lit("|cam_obj_rel_dist")))
@@ -364,7 +315,7 @@ object QaTasks {
       .withColumn("options", lit(null).cast("array<string>"))
       .withColumn(
         "metadata",
-        metaMap(
+        metaMap(FrameMeta,
           "variant" -> col("variant"),
           "object1" -> col("o1.cat"),
           "object2" -> col("o2.cat"),
@@ -397,7 +348,7 @@ object QaTasks {
       .withColumn("options", col("_shuffled"))
       .withColumn(
         "metadata",
-        metaMap(
+        metaMap(FrameMeta,
           "variant" -> lit("v2_multiple_choice"),
           "answer_value" -> col("correct"),
           "distances" -> to_json(map_from_entries(transform(col("sampled"), x => struct(x.getField("o").getField("cat"), round(x.getField("o").getField("dist"), 2)))))
@@ -427,17 +378,17 @@ object QaTasks {
       .withColumn("options", lit(null).cast("array<string>"))
       .withColumn(
         "metadata",
-        metaMap(
+        metaMap(FrameMeta,
           "variant" -> lit("v3_ranking"),
           "ordered_objects" -> to_json(col("cats")),
           "distances" -> to_json(map_from_entries(transform(col("sampled"), x => struct(x.getField("o").getField("cat"), round(x.getField("o").getField("dist"), 2)))))
         ))
       .withColumn("ord1", lit(200)).withColumn("ord2", lit(0))
 
-    val cols = Seq("image_id", "question", "answer", "answer_type", "options", "metadata", "ord1", "ord2")
-    val unioned = v1.selectExpr(cols: _*)
+    val cols = Seq("image_id", "_source_file", "scene_id", "frame_id",
+      "question", "answer", "answer_type", "options", "metadata", "ord1", "ord2")
+    v1.selectExpr(cols: _*)
       .unionByName(v2.selectExpr(cols: _*))
       .unionByName(v3.selectExpr(cols: _*))
-    assignQaIds(unioned, datasetName, "cam_obj_rel_dist", Seq(col("image_id"), col("ord1"), col("ord2")))
   }
 }

@@ -2,50 +2,53 @@ package graft.vlm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** The three legacy 2D QA task generators (tasks/tasks_2d/), completing the
   * reference's nine-task surface (SURVEY.md §7.1 step 5). Same declarative
-  * shape as [[QaTasks]]: per-frame explode → filters → column math →
-  * seeded distractors → contiguous ids.
+  * shape as [[QaTasks]]: in-row per-frame array steps → explode → filters →
+  * column math → seeded distractors → contiguous ids.
   *
   * 2D boxes are the ingest-normalized single encoding
   * ([[FrameSchema.Bbox2D]]: x, y, w, h, area?, category) — the reference's
   * three raw encodings are folded at read time (SURVEY §7.4 item 5).
   */
 object QaTasks2D {
-  import QaPrimitives.{assignQaIds, distractor, shuffleToLetter}
+  import QaPrimitives.{FrameMeta2d, QaTask, categoryCounts, distractor, firstPerCategory, metaMap, shuffleToLetter}
 
   val MinBboxArea = 100.0 // F5: skip boxes under 100 px² (bbox_2d_size_qa.py:71-73)
   val CountBounds = (1, 20) // F6: frames with 1..20 objects (object_count_2d_qa.py:61-63)
   val SizeNumOptions = 4
   val SizeDistractorRange = (0.4, 1.8)
 
-  def all: Map[String, (DataFrame, String) => DataFrame] = Map(
-    "object_count_2d" -> objectCount2d,
-    "bbox_2d_size" -> bbox2dSize,
-    "object_2d_size" -> object2dSize
-  )
+  /** object_count_2d — tasks_2d/object_count_2d_qa.py: per-frame category
+    * counts over 2D boxes, `unknown` excluded (F4), numerical answer.
+    */
+  val objectCount2d = new QaTask("object_count_2d", Seq(col("readable")), objectCount2dRows)
 
-  private def metaCommon: Seq[(String, Column)] = Seq(
-    "source_file" -> coalesce(col("_source_file"), lit("")),
-    "image_id" -> coalesce(col("image_id"), lit(""))
-  )
+  /** bbox_2d_size — tasks_2d/bbox_2d_size_qa.py: first box per category
+    * (W4), area >= 100 px² (F5), multiple-choice width×height.
+    */
+  val bbox2dSize = new QaTask("bbox_2d_size", Seq(col("bbox.category")), bbox2dSizeRows)
 
-  private def metaMap(extra: (String, Column)*): Column =
-    map((metaCommon ++ extra).flatMap { case (k, v) => Seq(lit(k), v.cast("string")) }: _*)
+  /** object_2d_size — tasks_2d/object_2d_size_qa.py: first box per category,
+    * area >= 100 px² (F5), multiple-choice area in pixels.
+    */
+  val object2dSize = new QaTask("object_2d_size", Seq(col("bbox.category")), object2dSizeRows)
 
-  private def withSource(frames: DataFrame): DataFrame =
+  def all: Map[String, QaTask] = Seq(objectCount2d, bbox2dSize, object2dSize).map(t => t.name -> t).toMap
+
+  /** Frames passing the F1 availability gate and the F6 count bounds. */
+  private def framesWith2d(frames: DataFrame): DataFrame =
     FrameSchema.withSourceTag(frames)
-
-  /** Exploded 2D boxes; F1 availability gate + F6 count bounds. */
-  private def boxes2d(frames: DataFrame): DataFrame =
-    withSource(frames)
       .filter(size(col("bounding_boxes_2d")).between(CountBounds._1, CountBounds._2))
-      .select(
-        col("image_id"), col("_source_file"),
-        posexplode(col("bounding_boxes_2d")).as(Seq("bbox_idx", "bbox"))
-      )
+
+  /** The first 2D box of each category of every gated frame, one row per
+    * box (`bbox`), with the frame columns.
+    */
+  private def firstBoxes2d(frames: DataFrame): DataFrame =
+    framesWith2d(frames).select(
+      col("image_id"), col("scene_id"), col("frame_id"), col("_source_file"),
+      explode(firstPerCategory(col("bounding_boxes_2d"))).as("bbox"))
 
   /** Area with the reference's fallback: stored `area` if present, else w·h
     * (geometry.py:318-335).
@@ -53,37 +56,27 @@ object QaTasks2D {
   private def areaOf(b: Column): Column =
     coalesce(b.getField("area"), b.getField("w") * b.getField("h"))
 
-  /** object_count_2d — tasks_2d/object_count_2d_qa.py: per-frame category
-    * counts over 2D boxes, `unknown` excluded (F4), numerical answer.
-    */
-  def objectCount2d(frames: DataFrame, datasetName: String): DataFrame = {
-    val counts = boxes2d(frames)
-      .withColumn("readable", GeoFunctions.parseClassCategoryCol(col("bbox").getField("category")))
-      .filter(col("readable") =!= "unknown")
-      .groupBy(col("image_id"), col("readable"))
-      .agg(count(lit(1)).as("cnt"), first(col("_source_file")).as("_source_file"))
-    val q = counts
+  private def objectCount2dRows(frames: DataFrame): DataFrame = {
+    val cats = filter(transform(col("bounding_boxes_2d"), b => GeoFunctions.parseClassCategoryCol(b.getField("category"))),
+      r => r =!= "unknown")
+    val counts = framesWith2d(frames)
+      .select(col("image_id"), col("scene_id"), col("frame_id"), col("_source_file"),
+        inline(categoryCounts(cats)))
+    counts
       .withColumn("question", format_string("How many %ss are in this image?", col("readable")))
       .withColumn("answer", col("cnt").cast("string"))
       .withColumn("answer_type", lit("numerical"))
       .withColumn("options", lit(null).cast("array<string>"))
-      .withColumn("metadata", metaMap(
+      .withColumn("metadata", metaMap(FrameMeta2d,
         "question_type" -> lit("category_specific_2d"),
         "target_category" -> col("readable"),
         "count" -> col("cnt"),
         "unit" -> lit("count")
       ))
-    assignQaIds(q, datasetName, "object_count_2d", Seq(col("image_id"), col("readable")))
   }
 
-  /** bbox_2d_size — tasks_2d/bbox_2d_size_qa.py: first box per category
-    * (W4), area >= 100 px² (F5), multiple-choice width×height.
-    */
-  def bbox2dSize(frames: DataFrame, datasetName: String): DataFrame = {
-    val w = Window.partitionBy(col("image_id"), col("bbox.category")).orderBy(col("bbox_idx"))
-    val sized = boxes2d(frames)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+  private def bbox2dSizeRows(frames: DataFrame): DataFrame = {
+    val sized = firstBoxes2d(frames)
       .withColumn("area", areaOf(col("bbox")))
       .filter(col("area") >= MinBboxArea)
       .withColumn("readable", GeoFunctions.parseClassCategoryCol(col("bbox").getField("category")))
@@ -97,12 +90,12 @@ object QaTasks2D {
             format_string("%d x %d",
               greatest(round(distractor(col("wpx"), col("seed"), 2 * k, SizeDistractorRange), 0).cast("int"), lit(1)),
               greatest(round(distractor(col("hpx"), col("seed"), 2 * k + 1, SizeDistractorRange), 0).cast("int"), lit(1)))): _*))
-    val shuffled = shuffleToLetter(sized, col("opts"), col("ans"), col("seed"))
+    shuffleToLetter(sized, col("opts"), col("ans"), col("seed"))
       .withColumn("question", format_string("What is the approximate size of the %s's bounding box in pixels (width x height)?", col("readable")))
       .withColumn("answer", col("_letter"))
       .withColumn("answer_type", lit("multiple_choice"))
       .withColumn("options", col("_shuffled"))
-      .withColumn("metadata", metaMap(
+      .withColumn("metadata", metaMap(FrameMeta2d,
         "category" -> col("bbox.category"),
         "readable_category" -> col("readable"),
         "bbox_width_px" -> col("wpx"),
@@ -110,17 +103,10 @@ object QaTasks2D {
         "answer_value" -> col("ans"),
         "unit" -> lit("pixels")
       ))
-    assignQaIds(shuffled, datasetName, "bbox_2d_size", Seq(col("image_id"), col("bbox.category")))
   }
 
-  /** object_2d_size — tasks_2d/object_2d_size_qa.py: first box per category,
-    * area >= 100 px² (F5), multiple-choice area in pixels.
-    */
-  def object2dSize(frames: DataFrame, datasetName: String): DataFrame = {
-    val w = Window.partitionBy(col("image_id"), col("bbox.category")).orderBy(col("bbox_idx"))
-    val sized = boxes2d(frames)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+  private def object2dSizeRows(frames: DataFrame): DataFrame = {
+    val sized = firstBoxes2d(frames)
       .withColumn("area", areaOf(col("bbox")))
       .filter(col("area") >= MinBboxArea)
       .withColumn("readable", GeoFunctions.parseClassCategoryCol(col("bbox").getField("category")))
@@ -130,18 +116,17 @@ object QaTasks2D {
         round(col("area"), 0) +:
           (1 to SizeNumOptions - 1).map(k => greatest(round(distractor(col("area"), col("seed"), k, SizeDistractorRange), 0), lit(1.0))): _*
       ).cast("array<string>"))
-    val shuffled = shuffleToLetter(sized, col("opts"), col("ans").cast("string"), col("seed"))
+    shuffleToLetter(sized, col("opts"), col("ans").cast("string"), col("seed"))
       .withColumn("question", format_string("What is the approximate area of the %s in square pixels?", col("readable")))
       .withColumn("answer", col("_letter"))
       .withColumn("answer_type", lit("multiple_choice"))
       .withColumn("options", col("_shuffled"))
-      .withColumn("metadata", metaMap(
+      .withColumn("metadata", metaMap(FrameMeta2d,
         "category" -> col("bbox.category"),
         "readable_category" -> col("readable"),
         "area_px" -> col("ans"),
         "answer_value" -> col("ans"),
         "unit" -> lit("square_pixels")
       ))
-    assignQaIds(shuffled, datasetName, "object_2d_size", Seq(col("image_id"), col("bbox.category")))
   }
 }

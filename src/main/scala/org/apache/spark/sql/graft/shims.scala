@@ -1,12 +1,16 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{PartitionIdPassthrough, ShuffleDependency}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.{CoalescedPartitionSpec, QueryExecution, SQLExecution, ShuffledRowRDD, UnsafeRowSerializer}
+import org.apache.spark.sql.execution.adaptive.ShufflePartitionsUtil
+import org.apache.spark.sql.execution.metric.SQLShuffleReadMetricsReporter
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Bridge between custom Catalyst expressions and the public Column API.
@@ -41,6 +45,38 @@ object shims {
     */
   def withSQLConfPropagated[T](spark: SparkSession)(body: => T): T =
     SQLExecution.withSQLConfPropagated(classic(spark))(body)
+
+  /** The partition count AQE starts a shuffle at: `initialPartitionNum`,
+    * else `spark.sql.shuffle.partitions`.
+    */
+  def initialPartitionNum(spark: SparkSession): Int = classic(spark).sessionState.conf.numShufflePartitions
+
+  /** Shuffles `rows`, unsafe rows of `numFields` fields each paired with
+    * its bucket in `[0, buckets)`, and runs the map stage at once. Then
+    * coalesces contiguous buckets from the map output sizes, reading the
+    * same session confs AQE's coalescing reads, and returns the reading
+    * side: one partition per bucket range, in bucket order.
+    */
+  def routeToBuckets(spark: SparkSession, rows: RDD[_ <: Product2[Int, InternalRow]], buckets: Int,
+      numFields: Int): RDD[InternalRow] = {
+    val sc = spark.sparkContext
+    val dep = new ShuffleDependency[Int, InternalRow, InternalRow](
+      rows, new PartitionIdPassthrough(buckets), new UnsafeRowSerializer(numFields))
+    // a map stage needs a map task: with no input partition nothing is written
+    val stats = if (rows.partitions.isEmpty) None else Option(sc.submitMapStage(dep).get())
+    val conf = classic(spark).sessionState.conf
+    val coalesced =
+      if (!conf.coalesceShufflePartitionsEnabled) Nil
+      else ShufflePartitionsUtil.coalescePartitions(
+        Seq(stats), Seq(None),
+        advisoryTargetSize = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+        minNumPartitions = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM).getOrElse(
+          if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) sc.defaultParallelism else 1),
+        minPartitionSize = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)).headOption.getOrElse(Nil)
+    // no spec: nothing to coalesce, so every bucket is read on its own
+    val specs = if (coalesced.nonEmpty) coalesced else (0 until buckets).map(b => CoalescedPartitionSpec(b, b + 1))
+    new ShuffledRowRDD(dep, SQLShuffleReadMetricsReporter.createShuffleReadMetrics(sc), specs.toArray)
+  }
 
   /** Number of SQL executions the driver's status store holds
     * (`sharedState` is only on the classic session).

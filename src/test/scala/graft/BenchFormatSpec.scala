@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * query that breaks key-uniqueness or blows the window fails CI, not
   * the round record.
   */
-class BenchFormatSpec extends AnyFunSuite {
+class BenchFormatSpec extends AnyFunSuite with TempDirs {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val names = SparkEntry.queries.keys.toSeq.sorted
@@ -80,7 +80,7 @@ class BenchFormatSpec extends AnyFunSuite {
   }
 
   test("priorMids maps the prior artifact's short keys back to full names and skips unknowns") {
-    val tmp = java.nio.file.Files.createTempFile("bench-prior", ".json")
+    val tmp = tempFile("bench-prior", ".json")
     java.nio.file.Files.write(tmp,
       """{"queries":{"qa":0.1},"queries_mid":{"qa":0.15,"qb":0.30,"gone":9.9}}"""
         .getBytes("UTF-8"))

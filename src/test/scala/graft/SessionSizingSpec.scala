@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * plus the 4× cap (measured: 4× made banded dedup ~40% slower at ×10,
   * so growth past it must come from added cores, not more partitions).
   */
-class SessionSizingSpec extends AnyFunSuite {
+class SessionSizingSpec extends AnyFunSuite with TempDirs {
 
   test("demo-scale input keeps the 1x start") {
     assert(GraftSession.initialPartitions(18L << 20, 32) == 32)
@@ -37,7 +37,7 @@ class SessionSizingSpec extends AnyFunSuite {
   }
 
   test("dirBytes walks a directory tree and tolerates a missing path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sizing").toFile
+    val dir = tempDir("graft_sizing").toFile
     val sub = new java.io.File(dir, "sub"); sub.mkdirs()
     java.nio.file.Files.write(new java.io.File(dir, "a.parquet").toPath, new Array[Byte](1000))
     java.nio.file.Files.write(new java.io.File(sub, "b.parquet").toPath, new Array[Byte](234))

@@ -57,7 +57,7 @@ class SqCodesSpec extends SparkSpec {
     val rows = (0 until n).map(i =>
       (i.toLong, Seq.fill(dim)(rnd.nextInt(256).toLong), (i % 50).toLong))
     val df = rows.toDF("vec_id", "codes", "cell")
-    val dir = java.nio.file.Files.createTempDirectory("graft-sq8-bytes").toString
+    val dir = tempDir("graft-sq8-bytes").toString
     def bytesOf(sub: String): Long = new java.io.File(s"$dir/$sub").listFiles
       .filter(_.getName.endsWith(".parquet")).map(_.length).sum
     // PIN the writer geometry the ratio windows assume: snappy + format v1

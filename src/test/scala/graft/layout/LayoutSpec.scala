@@ -14,7 +14,7 @@ class LayoutSpec extends SparkSpec {
     graft.Tables.events(spark, "/root/testdata/sf0.001")
 
   private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft-layout-$name")
+    val d = tempDir(s"graft-layout-$name")
     d.toFile.deleteOnExit()
     s"$d/out"
   }

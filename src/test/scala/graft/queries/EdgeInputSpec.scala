@@ -68,7 +68,7 @@ class EdgeInputSpec extends SparkSpec {
     // docs (null/empty/whitespace) would make nd/nt = 0/0 → NaN and an
     // ANSI long-cast error without the nt > 0 gate; the testdata floor
     // (10 tokens/doc) can never exercise this
-    val dir = java.nio.file.Files.createTempDirectory("graft_edge_m11").toString
+    val dir = tempDir("graft_edge_m11").toString
     val s = spark
     import s.implicits._
     // doc 8 is the only one that FITS its source's budget: totals 13
@@ -101,7 +101,7 @@ class EdgeInputSpec extends SparkSpec {
     // but would read nprobe cells to learn it; worse, an unguarded
     // min-over-empty in the np rule could throw. 10 vectors: vec 7 is
     // the lone vec_id % 50 == 7 row → fine class 101 of size 1.
-    val dir = java.nio.file.Files.createTempDirectory("graft_edge_v26").toString
+    val dir = tempDir("graft_edge_v26").toString
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(3)

@@ -60,7 +60,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // read-back moves band_idx to the END of the schema — the fold must be
     // immune to that reordering (regression: positional union misaligned
     // band under band_idx and failed casting an md5 band string to long)
-    val dir = java.nio.file.Files.createTempDirectory("graft-incr-store").toString
+    val dir = tempDir("graft-incr-store").toString
     val (kept1, store1) = DedupQueries.incrementalNearDup(docsDF(docs.take(2)), emptyStore)
     store1.write.mode("overwrite").partitionBy("band_idx").parquet(dir)
     val readBack = spark.read.parquet(dir)

@@ -74,7 +74,7 @@ class IncrementalPipelineSpec extends SparkSpec {
   }
 
   test("end to end: merge lands exactly yesterday's vectors plus the delta's, exactly once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-incrpipe").toFile
+    val dir = tempDir("graft-incrpipe").toFile
     dir.deleteOnExit()
     val lists = s"${dir.getAbsolutePath}/lists"
     val dim = 8
@@ -104,7 +104,7 @@ class IncrementalPipelineSpec extends SparkSpec {
   }
 
   test("end to end with supersede: upsert leaves exactly one live vector per current doc") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-incrupsert").toFile
+    val dir = tempDir("graft-incrupsert").toFile
     dir.deleteOnExit()
     val lists = s"${dir.getAbsolutePath}/lists"
     val dim = 8
@@ -144,7 +144,7 @@ class IncrementalPipelineSpec extends SparkSpec {
   test("updateCatalog keeps victim coordinates fresh: a moved doc's SECOND edit tombstones its day-1 cell") {
     import spark.implicits._
     def freshLayout(): String = {
-      val p = java.nio.file.Files.createTempDirectory("graft-catalog-fresh").toString + "/lists"
+      val p = tempDir("graft-catalog-fresh").toString + "/lists"
       val base = (0L to 7L).map(v => (v, v % 4)).toDF("vec_id", "cell")
       graft.layout.Layout.writeIvfClustered(base, p, numFiles = 2)
       p
@@ -234,7 +234,7 @@ class IncrementalPipelineSpec extends SparkSpec {
       (3L, Seq(10L, 10L), 1L), (4L, Seq(10L, 10L), 1L))
       .toDF("vec_id", "q", "cell")
     val cb = Seq((0L, Seq(0L, 0L)), (1L, Seq(10L, 10L))).toDF("cid", "cq")
-    val path = java.nio.file.Files.createTempDirectory("graft-reseed").toString + "/cb"
+    val path = tempDir("graft-reseed").toString + "/cb"
     assert(IvfCentroids.publish(cb, path) === 1L)
 
     // a reader PINS rev 1 (resolve version, then read that revision's

@@ -22,7 +22,7 @@ class IvfCentroidsSpec extends SparkSpec {
     val b = collectCentroids(IvfCentroids.train(quantized, k = 8, iters = 2, sampleMod = 4))
     assert(a == b)
     assert(a.size == 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString + "/codebook"
+    val dir = tempDir("graft-ivf").toString + "/codebook"
     IvfCentroids.save(quantized, dir, k = 8, iters = 2, sampleMod = 4)
     assert(collectCentroids(IvfCentroids.load(spark, dir)) == a)
     // Lloyd actually moved the centroids off the first-N seed
@@ -41,7 +41,7 @@ class IvfCentroidsSpec extends SparkSpec {
     // greatest(1, …): a 1-vector corpus still gets one cell ((0.5)^0.75 → 0)
     assert(IvfCentroids.cappedSeed(quantized.filter(col("vec_id") < 1), 1000).count() == 1)
     // the offline trainer persists the capped codebook, not k cells
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-cap").toString + "/codebook"
+    val dir = tempDir("graft-ivf-cap").toString + "/codebook"
     IvfCentroids.save(tiny, dir, k = 1000, iters = 1, sampleMod = 4)
     assert(IvfCentroids.load(spark, dir).count() == 18)
   }
@@ -220,7 +220,7 @@ class IvfCentroidsSpec extends SparkSpec {
 
   test("codebook publish: marker-committed revisions, reader isolation, one-revision retention") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-cb-pub").toString + "/cb"
+    val path = tempDir("graft-cb-pub").toString + "/cb"
     def cb(tag: Long) = Seq((0L, Seq(tag, 2L)), (1L, Seq(tag, 4L))).toDF("cid", "cq")
     def current = IvfCentroids.loadCurrent(spark, path).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).head).toMap

@@ -35,7 +35,7 @@ class TuningTableSpec extends SparkSpec {
       val b = toks.updated(69, s"g${g}alt").mkString(" ")
       Seq((passing(2 * g), a), (passing(2 * g + 1), b))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-d18-tune").toString
+    val dir = tempDir("graft-d18-tune").toString
     docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val table = graft.SparkEntry.queries("d18_lsh_geometry_audit")(spark, dir)

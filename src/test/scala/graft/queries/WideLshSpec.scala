@@ -72,7 +72,7 @@ class WideLshSpec extends SparkSpec {
     }
     val fillers = ids.slice(10, 40).map(id =>
       id -> (0 until 60).map(k => s"f${id}t$k").mkString(" "))
-    val dir = java.nio.file.Files.createTempDirectory("graft-d18").toString
+    val dir = tempDir("graft-d18").toString
     val s = spark
     import s.implicits._
     (engineered ++ fillers).toDF("doc_id", "text")

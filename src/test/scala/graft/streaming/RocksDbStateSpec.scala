@@ -71,8 +71,8 @@ class RocksDbStateSpec extends SparkSpec {
       .map(k => k -> s.conf.getOption(k)).toMap
     StreamingOps.RocksDbStateStoreConf.foreach { case (k, v) => s.conf.set(k, v) }
     try {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-rocks-ckpt").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-rocks-out").toString
+      val ckpt = tempDir("graft-rocks-ckpt").toString
+      val out = tempDir("graft-rocks-out").toString
       val dupText = "alpha beta gamma delta epsilon zeta eta theta"
       val mem = MemoryStream[Doc]
       def start() = StreamingOps.nearDupHits(StreamingOps.nearDupBandRows(mem.toDF()))

@@ -76,8 +76,8 @@ class StreamingOpsSpec extends SparkSpec {
 
     // memory sink refuses checkpoint recovery; the (recoverable) file sink
     // is also the honest fixture — it's what a production run restarts into
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-dedup-ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-dedup-out").toString
+    val ckpt = tempDir("graft-dedup-ckpt").toString
+    val out = tempDir("graft-dedup-out").toString
     val mem = MemoryStream[Event]
     def start() = StreamingOps.dedupEvents(mem.toDF())
       .writeStream.format("parquet").outputMode("append")
@@ -105,7 +105,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("readEventStream ingests a JSON event directory file-by-file (S1 lifted to readStream)") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-in")
+    val dir = tempDir("graft-stream-in")
     java.nio.file.Files.writeString(dir.resolve("batch1.json"),
       """{"event_id": 1, "ts": "2024-01-01T10:00:00.000Z", "user_id": 1, "event_type": "view", "value": 2.0}
         |{"event_id": 2, "ts": "2024-01-01T10:01:00.000Z", "user_id": 2, "event_type": "click", "value": 3.0}""".stripMargin)
@@ -515,7 +515,7 @@ class StreamingOpsSpec extends SparkSpec {
     // there), so parity is asserted on a fixture with real contamination:
     // doc 0 is eval (0 % 97 == 0); docs 1-2 are near-dups of it, doc 3 an
     // exact dup, doc 97 a second unrelated eval, the rest clean filler
-    val dir = java.nio.file.Files.createTempDirectory("graft-d17-stream").toString
+    val dir = tempDir("graft-d17-stream").toString
     val base = "the quick brown fox jumps over the lazy dog while rain falls on the quiet town square tonight"
     val docs = Seq(
       (0L, base),
@@ -574,7 +574,7 @@ class StreamingOpsSpec extends SparkSpec {
     // pair into a BigDecimal(NaN) throw that fails the whole trigger.
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-d17-empty").toString
+    val dir = tempDir("graft-d17-empty").toString
     Seq(
       (0L, ""),           // eval member (0 % 97 == 0), empty text
       (5L, ""),           // train doc, empty text → exact match of eval 0
@@ -725,12 +725,12 @@ class StreamingOpsSpec extends SparkSpec {
       2L -> Array(0L, 100L), 3L -> Array(100L, 100L))
     val base = Seq((0L, Seq(1L, 1L)), (1L, Seq(99L, 2L)),
       (2L, Seq(2L, 98L)), (3L, Seq(101L, 99L))).toDF("vec_id", "q")
-    val lists = java.nio.file.Files.createTempDirectory("graft-ann-lists").toString
+    val lists = tempDir("graft-ann-lists").toString
     Layout.writeIvfClustered(
       StreamingOps.assignVectors(base, codebook, routed = false), lists, numFiles = 4)
     assert(Layout.readIvfLists(s, lists).count() === 4)
 
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ann-ckpt").toString
+    val ckpt = tempDir("graft-ann-ckpt").toString
     val mem = MemoryStream[(Long, Seq[Long])]
     def start() = StreamingOps.assignVectors(
         mem.toDF().toDF("vec_id", "q"), codebook, routed = false)

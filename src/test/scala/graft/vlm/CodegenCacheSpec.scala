@@ -36,7 +36,7 @@ class CodegenCacheSpec extends SparkSpec {
   }.toDF()
 
   test("a second QaPipeline.run over the same frames compiles no class") {
-    val out = Files.createTempDirectory("graft_codegen").toString
+    val out = tempDir("graft_codegen").toString
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val c0 = compiles
     val counts = QaPipeline.run(spark, frames, "cache", out)

@@ -61,7 +61,7 @@ class ConformSpec extends SparkSpec {
   }
 
   test("processor -> conform -> K1 snapshot -> S1 re-read round-trips") {
-    val out = java.nio.file.Files.createTempDirectory("graft-roundtrip").resolve("corpus")
+    val out = tempDir("graft-roundtrip").resolve("corpus")
     val conformed = FrameSchema.conform(matterportFrames())
     Ingest.writeFrames(conformed, out.toString)
     val back = Ingest.readFrames(spark, out.toString)

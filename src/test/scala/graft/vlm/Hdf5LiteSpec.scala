@@ -75,7 +75,7 @@ class Hdf5LiteSpec extends SparkSpec {
   }
 
   test("hdf5DepthDecoder plugs into the landing-zone raster job (S7 -> A5)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-h5")
+    val dir = tempDir("graft-h5")
     val vals = Array(1.0f, 2.0f, 3.0f)
     val bytes = Hdf5Fixtures.makeHdf5("dataset", Seq(3L), 4, dtClass = 1, compact = false, nElems = 3) {
       (b, i) => b.putFloat(vals(i))
@@ -88,7 +88,7 @@ class Hdf5LiteSpec extends SparkSpec {
   }
 
   test("gzip-chunked float16 raster flows through fullDepthStats end-to-end (real Hypersim depth shape)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-h5c")
+    val dir = tempDir("graft-h5c")
     // 2×2 float16 raster (1.0, 2.0, 3.0, 4.0), shuffle+gzip chunks — the
     // dtype/layout/filter combination real Hypersim depth_meters files use
     val half = Array(0x3c00, 0x4000, 0x4200, 0x4400)

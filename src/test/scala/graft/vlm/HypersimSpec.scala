@@ -17,7 +17,7 @@ class HypersimSpec extends SparkSpec {
     * (depth + semantic) and 0004 (depth only).
     */
   private def fixture(): Path = {
-    val root = Files.createTempDirectory("graft-hypersim")
+    val root = tempDir("graft-hypersim")
     val detail = root.resolve("ai_001/_detail")
     val cam = detail.resolve("cam_00")
     val mesh = detail.resolve("mesh")

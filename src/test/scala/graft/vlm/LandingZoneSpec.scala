@@ -18,7 +18,7 @@ class LandingZoneSpec extends SparkSpec {
   }
 
   test("pngDepthDecoder: 16-bit PNG mm codes -> meters, row-major (S11; sunrgbd_processor.py:195-200)") {
-    val dir = Files.createTempDirectory("graft-png")
+    val dir = tempDir("graft-png")
     val f = dir.resolve("d.png")
     writeDepthPng(f, Seq(Seq(1000, 2000), Seq(0, 60000)))
     val decoded = LandingZone.pngDepthDecoder(Files.readAllBytes(f))
@@ -26,7 +26,7 @@ class LandingZoneSpec extends SparkSpec {
   }
 
   test("depthSamples + depthStats: PNG decode to valid-masked stats (S11/A5)") {
-    val dir = Files.createTempDirectory("graft-raster")
+    val dir = tempDir("graft-raster")
     // depths: 1000mm, 2000mm, 3000mm, 0 (invalid), 60000mm (60 m, valid <100)
     writeDepthPng(dir.resolve("frame0.png"), Seq(Seq(1000, 2000, 3000, 0, 60000)))
 
@@ -42,8 +42,8 @@ class LandingZoneSpec extends SparkSpec {
   }
 
   test("run writes a parquet snapshot joinable on path") {
-    val in = Files.createTempDirectory("graft-raster-in")
-    val out = Files.createTempDirectory("graft-raster-out").resolve("stats")
+    val in = tempDir("graft-raster-in")
+    val out = tempDir("graft-raster-out").resolve("stats")
     writeDepthPng(in.resolve("a.png"), Seq(Seq(1500, 2500)))
     LandingZone.run(spark, in.toString, out.toString)
     val back = spark.read.parquet(out.toString)
@@ -52,7 +52,7 @@ class LandingZoneSpec extends SparkSpec {
   }
 
   test("fullDepthStats: whole-raster stats; corrupt files skipped per-file") {
-    val dir = Files.createTempDirectory("graft-full-stats")
+    val dir = tempDir("graft-full-stats")
     // 4096+ pixels to prove no sample truncation: 100x50 of 2000mm
     writeDepthPng(dir.resolve("big.png"), Seq.fill(50)(Seq.fill(100)(2000)))
     Files.write(dir.resolve("corrupt.png"), "not a png".getBytes)

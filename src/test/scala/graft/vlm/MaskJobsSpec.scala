@@ -21,7 +21,7 @@ class MaskJobsSpec extends SparkSpec {
   private def inInst2(u: Int, v: Int) = u >= 15 && u <= 16 && v >= 15 && v <= 16
 
   private def fixtureDirs(): (Path, Path, Path) = {
-    val root = Files.createTempDirectory("graft-mask")
+    val root = tempDir("graft-mask")
     val (maskDir, depthDir, semDir) =
       (root.resolve("mask"), root.resolve("depth"), root.resolve("sem"))
     Seq(maskDir, depthDir, semDir).foreach(Files.createDirectories(_))

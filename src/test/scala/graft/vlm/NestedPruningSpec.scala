@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 class NestedPruningSpec extends SparkSpec {
 
   private lazy val snapshotDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-frames-parquet").toString
+    val dir = tempDir("graft-frames-parquet").toString
     graft.PipelineDemo.synthFrames(spark, 200)
       .write.mode("overwrite").parquet(dir)
     dir

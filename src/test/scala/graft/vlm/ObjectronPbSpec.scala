@@ -115,7 +115,7 @@ class ObjectronPbSpec extends SparkSpec {
   }
 
   test("a corrupt pbdata file is skipped, not fatal (objectron_processor.py:100-104)") {
-    val dir = Files.createTempDirectory("graft-pbdata-corrupt")
+    val dir = tempDir("graft-pbdata-corrupt")
     Files.write(dir.resolve("good.pbdata"), fixture())
     Files.write(dir.resolve("bad.pbdata"), Array.fill[Byte](64)(0x7f))
     val df = ObjectronPb.objectronFrames(spark, dir.toString, "shoe", sampleRate = 1)
@@ -123,7 +123,7 @@ class ObjectronPbSpec extends SparkSpec {
   }
 
   test("objectronFrames: binaryFile -> sampled unified frame rows (S9/F12)") {
-    val dir = Files.createTempDirectory("graft-pbdata")
+    val dir = tempDir("graft-pbdata")
     Files.write(dir.resolve("video_01.pbdata"), fixture())
     val df = ObjectronPb.objectronFrames(spark, dir.toString, "shoe", sampleRate = 1)
     // F15 contract: conforms to the canonical schema and stays collectable

@@ -8,6 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, count, current_timestamp, date_format, lit, raise_error, udf}
 import org.apache.spark.sql.graft.shims
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** End-to-end: write a unified-JSON mini-corpus to disk, ingest with the
@@ -16,7 +17,7 @@ import org.apache.spark.storage.StorageLevel
 class PipelineSpec extends SparkSpec {
 
   test("corrupt documents: audit counts them per file, strict mode fails loudly") {
-    val dir = Files.createTempDirectory("graft_corrupt").toString
+    val dir = tempDir("graft_corrupt").toString
     val sceneDir = new java.io.File(s"$dir/ds/scene0"); sceneDir.mkdirs()
     Files.writeString(new java.io.File(sceneDir, "good.json").toPath,
       """{"dataset":"ds","split":"s0","image_id":"ok","scene_id":"scene0","bounding_boxes_2d":[],"bounding_boxes_3d":[]}""")
@@ -81,7 +82,7 @@ class PipelineSpec extends SparkSpec {
     * returns the corpus root.
     */
   private def writeCorpus(): String = {
-    val dir = Files.createTempDirectory("graft_corpus").toString
+    val dir = tempDir("graft_corpus").toString
     val sceneDir = new java.io.File(s"$dir/testds/scene0"); sceneDir.mkdirs()
     def doc(imageId: String, boxes: String): String =
       s"""{"dataset":"testds","split":"s0","image_id":"$imageId","scene_id":"scene0",
@@ -106,7 +107,7 @@ class PipelineSpec extends SparkSpec {
 
   test("ingest → generate → sinks round trip") {
     val dir = writeCorpus()
-    val out = Files.createTempDirectory("graft_qa").toString
+    val out = tempDir("graft_qa").toString
     val frames = Ingest.readFrames(spark, dir)
     assert(frames.count() == 2) // summary.json excluded
     assert(frames.columns.contains("_source_file"))
@@ -137,7 +138,7 @@ class PipelineSpec extends SparkSpec {
     }
 
     // K1: partitioned snapshot write round-trips
-    val snap = Files.createTempDirectory("graft_snap").toString
+    val snap = tempDir("graft_snap").toString
     Ingest.writeFrames(frames, snap)
     val back = Ingest.readFrames(spark, snap)
     assert(back.count() == 2)
@@ -150,14 +151,14 @@ class PipelineSpec extends SparkSpec {
     val canary = sc.parallelize(1 to 4).persist()
     canary.count()
     val before = sc.getPersistentRDDs.keySet
-    QaPipeline.run(spark, frames, "testds", Files.createTempDirectory("graft_qa").toString)
+    QaPipeline.run(spark, frames, "testds", tempDir("graft_qa").toString)
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
 
     // the 2D boxes raise an error: object_count_2d fails, the 3D tasks do not
     val boxes2d = frames.schema("bounding_boxes_2d").dataType
     val broken = frames.withColumn("bounding_boxes_2d", raise_error(lit("boom2d")).cast(boxes2d))
     val e = intercept[Exception](QaPipeline.run(spark, broken, "testds",
-      Files.createTempDirectory("graft_qa").toString, Seq("object_count", "obj_obj_distance", "object_count_2d")))
+      tempDir("graft_qa").toString, Seq("object_count", "obj_obj_distance", "object_count_2d")))
     assert(msgs(e).exists(_.contains("boom2d")), msgs(e).mkString(" | "))
     shims.waitListenerBus(spark) // the status tracker reads listener events
     assert(sc.statusTracker.getActiveJobIds.isEmpty)
@@ -169,7 +170,7 @@ class PipelineSpec extends SparkSpec {
   test("summary comes from the id step's row counts: no job, same schema and totals as the aggregate") {
     val sc = spark.sparkContext
     val frames = Ingest.readFrames(spark, writeCorpus())
-    val out = Files.createTempDirectory("graft_qa").toString
+    val out = tempDir("graft_qa").toString
     val counts = QaPipeline.run(spark, frames, "testds", out)
     // cam_obj_rel_dist has rows, object_count_2d has none (no 2D boxes)
     assert(counts("cam_obj_rel_dist") > 0 && counts("object_count_2d") == 0)
@@ -211,13 +212,51 @@ class PipelineSpec extends SparkSpec {
     } finally perTask.values.foreach(QaPrimitives.release)
   }
 
+  test("every task's rows reach the id step without an exchange") {
+    val frames = Ingest.readFrames(spark, writeCorpus())
+    QaPipeline.taskRegistry.foreach { case (name, task) =>
+      val plan = task.rows(frames).queryExecution.executedPlan.toString
+      assert(plan.contains("FileScan") && !plan.contains("Exchange"), s"$name:\n$plan")
+    }
+  }
+
+  test("a run samples its image_id bounds once, and each task's id step runs at most two jobs") {
+    val sc = spark.sparkContext
+    val frames = Ingest.readFrames(spark, writeCorpus())
+    val out = tempDir("graft_qa").toString
+    // per job, the names of its final stage's RDDs, the stage's own RDD first
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.maxBy(_.stageId).rddInfos.map(_.name))
+    }
+    shims.waitListenerBus(spark)
+    sc.addSparkListener(listener)
+    try {
+      QaPipeline.run(spark, frames, "testds", out)
+      shims.waitListenerBus(spark)
+    } finally sc.removeSparkListener(listener)
+    val all = jobs.toArray(Array.empty[Seq[String]]).toSeq
+    assert(all.count(_.contains("qa id bounds")) == 1, all.mkString("\n"))
+    // the routed map stage and the count job of each task's id step
+    val idSteps = all.filter(j => j.head.startsWith("qa id route: ") || j.head.startsWith("qa id rows: "))
+      .groupBy(_.head.split(": ", 2)(1))
+    assert(idSteps.keySet == QaPipeline.taskRegistry.keySet.map(t => s"testds_${t}_%06d"))
+    assert(idSteps.values.forall(_.size <= 2), idSteps)
+    // no other job but the writes: the nine task sinks, the combined output
+    // and the summary
+    assert(all.size == 1 + idSteps.values.map(_.size).sum + QaPipeline.taskRegistry.size + 2, all.mkString("\n"))
+  }
+
   test("withContiguousIds unpersists its rows when its own count job fails") {
     import PipelineSpec.CountJobGate
     val sc = spark.sparkContext
-    // the sort runs in the count job, and so does the order key's UDF: there
-    // it waits until the listener has cancelled that job's stage
+    // the order key's UDF routes the rows in the map stage, and the sort
+    // runs it again in the count job: there it waits until the listener has
+    // cancelled that job's stage
     val key = udf { (id: Long) => CountJobGate.await(); id }
     val df = spark.range(0, 200, 1, 4).toDF("id")
+    val bounds = QaPrimitives.sampleBounds(df, col("id"), 4)
     val listener = new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
         val counting = e.stageInfo.rddInfos.exists(_.storageLevel != StorageLevel.NONE)
@@ -229,7 +268,7 @@ class PipelineSpec extends SparkSpec {
     val before = sc.getPersistentRDDs.keySet
     sc.addSparkListener(listener)
     try {
-      val e = intercept[Exception](QaPrimitives.withContiguousIds(df, "qid", "q%03d", Seq(key(col("id")))))
+      val e = intercept[Exception](QaPrimitives.withContiguousIds(df, "qid", "q%03d", Seq(key(col("id"))), bounds))
       assert(msgs(e).exists(_.contains("forced count job failure")), msgs(e).mkString(" | "))
       assert(CountJobGate.stages.containsValue(true), "the count job ran and was cancelled")
     } finally {
@@ -239,8 +278,18 @@ class PipelineSpec extends SparkSpec {
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
+  test("withContiguousIds numbers an input with no partitions") {
+    val schema = new StructType().add("id", LongType)
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    assert(empty.rdd.getNumPartitions == 0)
+    val out = QaPrimitives.withContiguousIds(empty, "qid", "q%03d", Seq(col("id")),
+      QaPrimitives.sampleBounds(empty, col("id"), 4))
+    try assert(QaPrimitives.rowCount(out) == 0 && out.collect().isEmpty)
+    finally QaPrimitives.release(out)
+  }
+
   test("limit and bbox-availability gate (F1/F17)") {
-    val dir = Files.createTempDirectory("graft_corpus2").toString
+    val dir = tempDir("graft_corpus2").toString
     val d = new java.io.File(dir); d.mkdirs()
     Files.writeString(new java.io.File(d, "empty.json").toPath,
       """{"dataset":"t","split":"s","image_id":"e1","depth_type":"none",

@@ -203,6 +203,41 @@ class QaTasksSpec extends SparkSpec {
     }
   }
 
+  test("two frames that share an image_id get the same ids at any bounds count and input order") {
+    import org.apache.spark.sql.functions.col
+    val b2 = Seq(Bbox2D(0, 0, 40, 30, None, "cup"), Bbox2D(5, 5, 20, 20, None, "cup"), Bbox2D(9, 9, 50, 60, None, "pen"))
+    def withSource(f: FrameRecord, file: String, boxes2d: Seq[Bbox2D] = b2) = (f.copy(bounding_boxes_2d = boxes2d), file)
+    // two frames "dup" from different files (same scene and frame ids), and
+    // six other frames, so that four buckets split the image_ids
+    val tagged = Seq(
+      withSource(frame("dup", Seq(box("a", 0, 0, 2), box("b", 1, 0, 2), box("a", 2, 0, 2))), "x/f1.json"),
+      withSource(frame("dup", Seq(box("d", 0, 0, 5), box("e", 3, 0, 5), box("d", 1, 1, 4))), "y/f1.json",
+        b2.reverse)) ++
+      (1 to 6).map(k => withSource(frame(s"img_$k", Seq(box("c", k, 0, 2), box("f", 0, k, 3), box("c", 1, 1, 1))), s"z/$k.json"))
+    def frames(order: Seq[(FrameRecord, String)]): DataFrame =
+      order.toDF("f", "_source_file").select(col("f.*"), col("_source_file"))
+    def run(order: Seq[(FrameRecord, String)], buckets: Int): Seq[String] = {
+      val fs = frames(order)
+      val bounds = QaPrimitives.sampleBounds(fs, col("image_id"), buckets)
+      assert(bounds.buckets == buckets)
+      QaPipeline.taskRegistry.toSeq.sortBy(_._1).flatMap { case (name, task) =>
+        val out = task(fs, "testds", bounds)
+        try out.collect().map(r => s"$name $r").toSeq finally QaPrimitives.release(out)
+      }
+    }
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false") // every bucket is read on its own
+    try {
+      val one = run(tagged, 1)
+      val four = run(tagged.reverse, 4)
+      assert(one.sorted == four.sorted)
+      // both frames have their rows
+      val dup = one.filter(r => r.startsWith("obj_obj_distance") && r.contains("image_id -> dup"))
+      assert(dup.exists(_.contains("x/f1.json")) && dup.exists(_.contains("y/f1.json")), dup)
+    } finally spark.conf.set(coalesce, was)
+  }
+
   test("cameraPositionCol equals Geo.cameraPosition on null, 3×4, 4×3 and 4×4 extrinsics") {
     val e4 = Seq(Seq(1.0, 0, 0, 10), Seq(0, 1.0, 0, -20.5), Seq(0, 0, 1.0, 30.25), Seq(0, 0, 0, 1.0))
     val cases: Seq[Option[Seq[Seq[Double]]]] = Seq(None, Some(e4.take(3)), Some(e4.map(_.take(3))), Some(e4))
@@ -224,15 +259,15 @@ class QaTasksSpec extends SparkSpec {
   test("withContiguousIds runs its jobs under the session's SQL confs, from any thread") {
     import org.apache.spark.sql.functions._
     // a duplicate map key is legal under the session's LAST_WIN and an
-    // error under the default policy. The map is built in the map stage of
-    // the range shuffle, which withContiguousIds itself runs, and inside a
-    // lambda: Spark evaluates that without generated code, so the policy is
-    // read from the task's SQL conf, not captured on the driver
+    // error under the default policy. The map is built in the routed map
+    // stage, which withContiguousIds itself runs, and inside a lambda: Spark
+    // evaluates that without generated code, so the policy is read from the
+    // task's SQL conf, not captured on the driver
     val dupMap = map(lit("k"), col("id"), lit("k"), col("id") + 1)
     val df = spark.range(0, 200, 1, 4)
       .select(col("id"), element_at(transform(array(lit(0)), _ => dupMap), 1).as("m"))
     def numbered(): Seq[(String, Long)] = {
-      val out = QaPrimitives.withContiguousIds(df, "qid", "q%03d", Seq(col("id")))
+      val out = QaPrimitives.withContiguousIds(df, "qid", "q%03d", Seq(col("id")), QaPrimitives.sampleBounds(df, col("id"), 4))
       try out.select(col("qid"), col("m")("k")).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       finally QaPrimitives.release(out)
     }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Raw-source readers on temp-dir fixtures shaped like the native formats. */
 class RawSourcesSpec extends SparkSpec {
 
-  private def tmp(): Path = Files.createTempDirectory("graft-raw")
+  private def tmp(): Path = tempDir("graft-raw")
 
   test("readCoco splits one labels.json into three tables; cocoToFrames joins them (S3/J4)") {
     val dir = tmp()

@@ -2,13 +2,13 @@ package graft.vlm
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for specs (small parallelism: tiny fixtures). */
-trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+/** Shared local SparkSession for specs (small parallelism: tiny fixtures).
+  * The session is shared across suites and never stopped here (JVM exit
+  * cleans up); each suite's temp dirs are deleted after it ([[graft.TempDirs]]).
+  */
+trait SparkSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = SparkSpec.session
-
-  override def afterAll(): Unit = () // session shared across suites; JVM exit cleans up
 }
 
 object SparkSpec {

@@ -20,7 +20,7 @@ class TaskonomySpec extends SparkSpec {
     * fx = 10·... chosen for fx = resolution/(2·tan(fov/2)).
     */
   private def fixture(): Path = {
-    val root = Files.createTempDirectory("graft-taskonomy")
+    val root = tempDir("graft-taskonomy")
     val loc = "loc_a"
     val dirs = Seq("point_info", "segment_unsup25d", "segment_semantic", "depth_euclidean")
       .map(d => d -> root.resolve(s"$d/taskonomy/$loc")).toMap
@@ -46,7 +46,7 @@ class TaskonomySpec extends SparkSpec {
   }
 
   test("multi-location roots do not cross-match same-named views (viewKey carries the location)") {
-    val root = Files.createTempDirectory("graft-taskonomy-multi")
+    val root = tempDir("graft-taskonomy-multi")
     val fov = 2 * math.atan(0.1)
     for ((loc, mm) <- Seq(("loc_a", 1000), ("loc_b", 2000))) {
       val dirs = Seq("point_info", "segment_unsup25d", "depth_euclidean")

@@ -195,7 +195,7 @@ class TfRecordsSpec extends SparkSpec {
   }
 
   test("objectronEvalFrames: binaryFile scan over a shard dir end-to-end") {
-    val dir = java.nio.file.Files.createTempDirectory("tfrec").toFile
+    val dir = tempDir("tfrec").toFile
     java.nio.file.Files.write(new java.io.File(dir, "part-0.tfrecord").toPath,
       tfrecord(Seq(fixtureExample, fixtureExample)))
     val df = TfRecords.objectronEvalFrames(spark, dir.getAbsolutePath)

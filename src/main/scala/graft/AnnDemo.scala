@@ -33,8 +33,7 @@ import org.apache.spark.sql.functions._
   * array is the serving-knob table — recall@5 vs measured rows read per
   * nprobe ∈ {1,2,4,8,10,16} at this index's geometry — so the demo's
   * nprobe=10 choice and the 100 TB nprobe=2 math are justified by the
-  * same committed artifact. One JSON line → `ann_demo_last.json`
-  * (SPARK_GRAFT_ANN_OUT to override).
+  * same committed artifact. One JSON line → `ann_demo_last.json`.
   *
   * The serving, sweep, SQ8 and filtered legs are compositions of the
   * IvfCentroids search core (probeRanking, the score kernels, topK) — the
@@ -695,7 +694,7 @@ object AnnDemo {
         s""""cal_curve":${calCurve.map { case (np, c) => s"""[$np,${fmt4(c)}]""" }
           .mkString("[", ",", "]")},"cal_s":${fmt(calS)},""" +
         s""""sf":${Artifacts.jsonStr(sfDir)}}"""
-    Artifacts.upsertLine(sys.env.getOrElse("SPARK_GRAFT_ANN_OUT", "ann_demo_last.json"),
+    Artifacts.upsertLine(Artifacts.outPath("ann_demo_last.json"),
       s""""preset":${Artifacts.jsonStr(preset)}""", line)
     line
   }

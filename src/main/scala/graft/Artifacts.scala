@@ -7,12 +7,28 @@ package graft
   * regression-diffable artifact.
   */
 object Artifacts {
+  /** Where a main's record named `name` goes: under `SPARK_GRAFT_OUT_DIR`,
+    * else the working directory. The one setting for every main, so
+    * records of two presets or corpora are kept apart by running each in
+    * its own directory, not by one variable per file.
+    */
+  def outPath(name: String): String = outPath(name, sys.env.get("SPARK_GRAFT_OUT_DIR"))
+
+  private[graft] def outPath(name: String, dir: Option[String]): String =
+    dir.filter(_.nonEmpty).fold(name)(d => java.nio.file.Paths.get(d, name).toString)
+
+  /** `path`, its directory created if missing. */
+  private def prepared(path: String): java.nio.file.Path = {
+    val p = java.nio.file.Paths.get(path)
+    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
+    p
+  }
+
   /** Write `line` (one JSON object) to `path`, overwriting. Failures warn
     * and never kill the run — the artifact is a recording, not a gate.
     */
   def writeLine(path: String, line: String): Unit =
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(path), (line + "\n").getBytes("UTF-8"))
+    try java.nio.file.Files.write(prepared(path), (line + "\n").getBytes("UTF-8"))
     catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[artifact] write $path failed: ${e.getMessage}")
@@ -25,12 +41,18 @@ object Artifacts {
     * the file stays canonical: at most one line per marker.
     */
   def upsertLine(path: String, marker: String, line: String): Unit =
+    upsertWhere(path, _.contains(marker), line)
+
+  /** As [[upsertLine]], for a record whose identity is not one substring:
+    * drop every existing line `same` accepts, then append `line`.
+    */
+  def upsertWhere(path: String, same: String => Boolean, line: String): Unit =
     try {
-      val p = java.nio.file.Paths.get(path)
+      val p = prepared(path)
       val kept =
         if (java.nio.file.Files.exists(p))
           scala.jdk.CollectionConverters.ListHasAsScala(java.nio.file.Files.readAllLines(p))
-            .asScala.filterNot(l => l.contains(marker) || l.trim.isEmpty).toSeq
+            .asScala.filterNot(l => same(l) || l.trim.isEmpty).toSeq
         else Seq.empty
       java.nio.file.Files.write(p, ((kept :+ line).mkString("\n") + "\n").getBytes("UTF-8"))
     } catch {

@@ -154,7 +154,22 @@ object Bench {
       s""","stat":"min","samples":$nSamples,"reran":${reran.size},"calib_rng":$rng,"calib_pts":$pts,"queries_mid":${qmap(median)},"queries_max":${qmap(_.max)},"reran_queries":$reranList}""")
   }
 
+  /** The queries a run benches, in catalog order: the names on the
+    * command line, else the whole catalog. Unknown names fail here, before
+    * the session starts, so a typo cannot overwrite the record with an
+    * empty run. A subset's durable line carries `"diag":{"only":N}`, so a
+    * partial run never passes for a full-catalog record.
+    */
+  private[graft] def selection(args: Seq[String]): (Seq[String], Option[String]) = {
+    val names = SparkEntry.queryNames(args).distinct.sorted
+    (names, if (args.isEmpty) None else Some(s""""diag":{"only":${names.size}}"""))
+  }
+
   def main(args: Array[String]): Unit = {
+    val (names, diag) = selection(args.toSeq)
+    // the record this run replaces is also the tripwire's prior, so a run
+    // is compared with an earlier run written to the same directory
+    val out = Artifacts.outPath("bench_last.json")
     val sfDir = GraftSession.defaultSfDir
     // the product session, its start size fitted to the corpus benched
     val spark = GraftSession.getOrCreate(sfDir)
@@ -170,33 +185,21 @@ object Bench {
     // (IvfCentroids.save), so serving samples must not pay sampled-Lloyd
     // training — the ×10 sweep showed v6 max/min ≈ 4 from exactly that
     // (build cost lives in AnnDemo's build_s, not here)
-    // SPARK_GRAFT_BENCH_WARM (diagnostic only; the committed record always
-    // runs the default "all"): "index" skips the dedup warm, "none" skips
-    // both — lets an A/B isolate cache-residency effects on other queries
-    val warm = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "all")
-    if (warm != "none")
-      try graft.queries.EmbeddingQueries.warmIndexCaches(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] index-cache warmup failed: ${e.getMessage}") }
+    try graft.queries.EmbeddingQueries.warmIndexCaches(spark, sfDir)
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] index-cache warmup failed: ${e.getMessage}") }
     // …and the dedup family's shared pipeline (shingle sets, band table,
     // the memoized d8/d13/d20 group pipeline): persisted artifacts at a
     // deployment, and the ×10 sweep's d13 13× max/mid tail was exactly
     // the first d-query's first sample absorbing this build
-    if (warm == "all")
-      try graft.queries.DedupQueries.warmCaches(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] dedup-cache warmup failed: ${e.getMessage}") }
+    try graft.queries.DedupQueries.warmCaches(spark, sfDir)
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] dedup-cache warmup failed: ${e.getMessage}") }
     // host-speed yardstick for cross-round comparison (see Artifacts.calibrate)
     val calib0 = Artifacts.calibrate(spark)
     // fixed name order: residual JVM warmup lands on the same queries every
-    // round, so per-query numbers stay comparable across rounds.
-    // SPARK_GRAFT_BENCH_ONLY (diagnostic only): comma-separated names to
-    // bench a subset for A/B bisects — the committed record is always the
-    // full catalog (the driver never sets this)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    // round, so per-query numbers stay comparable across rounds
+    val catalog = names.map(n => n -> SparkEntry.queries(n))
     // interleaved calib probes every ~15 queries (the round-13 lesson: the
     // old 3-point grid let a ~50s contention window fall entirely between
     // probes — a dense grid brackets any contaminated band in calib_pts)
@@ -233,8 +236,7 @@ object Bench {
     // tripwire pass: queries that ran >3× their prior committed median get
     // ONE more sample now, after any transient contention window has
     // passed; the min over all samples is the headline
-    val prior = priorMids(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "bench_last.json"), catalog.map(_._1))
+    val prior = priorMids(out, names)
     val flagged = flagContaminated(swept, prior)
     if (flagged.nonEmpty)
       System.err.println(s"[bench] tripwire: re-sampling ${flagged.size} " +
@@ -245,18 +247,7 @@ object Bench {
     }
     val (line, full) = renderLines(results,
       calib0 +: midProbes.toSeq :+ calibEnd, sfDir, flagged)
-    // DIAGNOSTIC STAMP (round-17 advice): a subset (SPARK_GRAFT_BENCH_ONLY)
-    // or reduced-warm (SPARK_GRAFT_BENCH_WARM) run writes the same artifact
-    // path as a full-catalog record, and "the driver never sets these" is
-    // convention, not enforcement — so when either knob deviates from the
-    // default, the deviation is stamped into the durable line itself and a
-    // stray diagnostic can never pass as a committable record.
-    val diag = only.map(s => s""""only":${s.size}""").toSeq ++
-      (if (warm != "all") Seq(s""""warm":${Artifacts.jsonStr(warm)}""") else Seq.empty)
-    val fullStamped =
-      if (diag.isEmpty) full
-      else full.dropRight(1) + s""","diag":{${diag.mkString(",")}}}"""
-    Artifacts.writeLine(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json"), fullStamped)
+    Artifacts.writeLine(out, diag.fold(full)(d => full.dropRight(1) + "," + d + "}"))
     // Stop Spark BEFORE printing: executor/blockmanager shutdown logs land on
     // stderr first, leaving the JSON as the process's final stdout line (the
     // driver parses exactly that — build.sbt strips sbt's prefix/success noise).

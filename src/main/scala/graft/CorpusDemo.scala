@@ -182,9 +182,7 @@ object CorpusDemo {
     // a copies=32 refresh silently deleted the copies=320 capacity line
     // before the terminator was added.
     val key = s""""src":${Artifacts.jsonStr(sfDir)},"copies":$copies,"""
-    Artifacts.upsertLine(
-      sys.env.getOrElse("SPARK_GRAFT_TPUT_CORPUS_OUT", "throughput_corpus.json"),
-      key,
+    Artifacts.upsertLine(Artifacts.outPath("throughput_corpus.json"), key,
       f"""{"metric":"corpus_docs_per_s",$key%s"value":${n / secs}%.0f,"docs":$n%d,"quality":${stages.getLong(1)}%d,"exact":${stages.getLong(2)}%d,"near":${stages.getLong(3)}%d,"decon":${stages.getLong(4)}%d,"lm":${stages.getLong(5)}%d,"sampled":${stages.getLong(6)}%d,"budget_selected":$budgetSelected%d,"budget_tokens":$budgetTokens%d,"budget_targets":$budgetTargets%d,"packs":$packs%d,"sec":$secs%.1f}""")
     selected.unpersist()
     funnel.unpersist()

@@ -136,18 +136,6 @@ object GraftSession {
   /** Corpus a session is sized for when its caller names none. */
   def defaultSfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-  /** Value of the boolean env knob `name` (`raw` is its setting, if any;
-    * unset is false): exactly `true` or `false`, else the session refuses
-    * to start — Spark's boolean confs reject "1" only later, inside
-    * session-state construction, where the error no longer names the
-    * variable.
-    */
-  def envFlag(name: String, raw: Option[String]): Boolean = raw match {
-    case None | Some("false") => false
-    case Some("true") => true
-    case Some(other) => sys.error(s"$name must be 'true' or 'false', got '$other'")
-  }
-
   /** Every conf a graft session runs with, for `cores` local cores and the
     * corpus at `sfDir`. The product mains, Bench, Verify and the test
     * session all start from this one map.
@@ -174,9 +162,8 @@ object GraftSession {
     // only chooses it when one side's per-partition build fits memory, so
     // sort-merge remains the fallback for unbounded sides. Measured r19
     // (warm A/B, same window): j7 1.55 → 1.37, j4 0.96 → 0.87, j8 1.09 →
-    // 1.02 at sf0.1. SPARK_GRAFT_PREFER_SMJ=true is the A/B control.
-    "spark.sql.join.preferSortMergeJoin" ->
-      envFlag("SPARK_GRAFT_PREFER_SMJ", sys.env.get("SPARK_GRAFT_PREFER_SMJ")).toString,
+    // 1.02 at sf0.1. Setting this to true is the A/B control.
+    "spark.sql.join.preferSortMergeJoin" -> "false",
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     // Size-adaptive shuffle parallelism, BY STAGE INPUT BYTES (see

@@ -180,8 +180,7 @@ object IncrementalDemo {
       s"""{"metric":"incremental_dedup","sf":${Artifacts.jsonStr(sfDir)},"batches":${nBatches + 1},"store_buckets":$nBuckets,"store_bucketed":true,"per_batch":[${records.result().mkString(",")}]}"""
     // per-sf upsert (like leg 2): a capacity-corpus run must not overwrite
     // the sf0.1 record — the artifact carries one line per corpus
-    Artifacts.upsertLine(
-      sys.env.getOrElse("SPARK_GRAFT_INCR_OUT", "incremental_dedup_last.json"),
+    Artifacts.upsertLine(Artifacts.outPath("incremental_dedup_last.json"),
       s""""sf":${Artifacts.jsonStr(sfDir)}""", line)
 
     // ---- leg 2: the COMPOSED incremental story (snapshot diff → delta
@@ -201,8 +200,7 @@ object IncrementalDemo {
       overlapLeg(spark, sfDir, workDir))
     val pipeLine =
       s"""{"metric":"incremental_pipeline","sf":${Artifacts.jsonStr(sfDir)},"legs":[${legs.mkString(",")}]}"""
-    Artifacts.upsertLine(
-      sys.env.getOrElse("SPARK_GRAFT_INCRPIPE_OUT", "incremental_pipeline_last.json"),
+    Artifacts.upsertLine(Artifacts.outPath("incremental_pipeline_last.json"),
       s""""sf":${Artifacts.jsonStr(sfDir)}""", pipeLine)
     spark.stop()
     println(line)

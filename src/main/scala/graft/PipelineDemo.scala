@@ -65,9 +65,7 @@ object PipelineDemo {
     // claim lives on a scale curve, not a single point — re-runs replace
     // their own scale's line and leave the others comparable
     val calib = Artifacts.calibrate(spark)
-    Artifacts.upsertLine(
-      sys.env.getOrElse("SPARK_GRAFT_TPUT_PIPELINE_OUT", "throughput_pipeline.json"),
-      s""""frames":$nFrames,""",
+    Artifacts.upsertLine(Artifacts.outPath("throughput_pipeline.json"), s""""frames":$nFrames,""",
       f"""{"metric":"pipeline_frames_per_s","value":${nFrames / secs}%.0f,"frames":$nFrames,"qa_pairs":$total,"sec":$secs%.1f,"calib":$calib%.2f}""")
     spark.stop()
   }

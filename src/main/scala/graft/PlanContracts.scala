@@ -262,9 +262,7 @@ object PlanAudit {
         s""""flagships":${PlanContracts.Flagships.size},""" +
         s""""violations":${violations.size},"details":$vs,""" +
         s""""allowed":${allowedHits.size},"allowed_details":$as,"sf":"$sfDir"}"""
-    Artifacts.upsertLine(
-      sys.env.getOrElse("SPARK_GRAFT_PLAN_AUDIT_OUT", "plan_audit_last.json"),
-      s""""preset":"$preset"""", line)
+    Artifacts.upsertLine(Artifacts.outPath("plan_audit_last.json"), s""""preset":"$preset"""", line)
     spark.stop()
     println(line)
     Console.out.flush()

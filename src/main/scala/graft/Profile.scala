@@ -34,8 +34,7 @@ object Profile {
     val warm = records.map(r => r.name -> r.wallMs / 1e3)
     val qs = warm.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val ledger = records.map(r => Artifacts.jsonStr(r.name) + ":" + r.json).mkString("{", ",", "}")
-    Artifacts.writeLine(
-      sys.env.getOrElse("SPARK_GRAFT_PROFILE_OUT", "profile_last.json"),
+    Artifacts.writeLine(Artifacts.outPath("profile_last.json"),
       s"""{"metric":"warm_total","value":${fmt(warm.map(_._2).sum)},"unit":"sec","calib":${fmt(calib)},"queries":$qs,"sf":"$sfDir","ledger":$ledger}""")
     spark.stop()
   }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * says nothing about GROWTH; this main synthesizes k× corpora from sf0.1
   * by deterministic reseeding and times the band-join/IVF query families
   * at each scale, at whichever GraftConfig preset the JVM was launched
-  * under. One JSON line per run is appended to `bench_scale_last.json`.
+  * under. One JSON line per preset and family list is upserted into
+  * `bench_scale_last.json` (see [[sameCurve]]).
   *
   * Reseeding is built so corpus STATISTICS stay scale-invariant — the
   * point is to grow n, not to inject artificial duplicate mass:
@@ -40,9 +41,8 @@ import org.apache.spark.sql.functions._
   *
   * `familiesCsv` restricts the run to a subset of [[Families]] — for deep
   * single-family curves (e.g. the dedup family at ×30) whose full-family
-  * runtime would be prohibitive. Subset runs should redirect
-  * `SPARK_GRAFT_SCALE_OUT` to their own artifact so the full-family line in
-  * bench_scale_last.json (upsert-keyed on preset alone) isn't clobbered.
+  * runtime would be prohibitive. A subset curve gets its own line next to
+  * the full-family one.
   */
 object ScaleBench {
 
@@ -186,6 +186,18 @@ object ScaleBench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Whether `line` is an earlier curve of the same preset and family
+    * set, the one a new run replaces: a subset curve must not overwrite
+    * the full-family line, nor one subset another. Unparsable lines are
+    * kept.
+    */
+  private[graft] def sameCurve(preset: String, families: Seq[String])(line: String): Boolean =
+    try {
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+      val names = scala.jdk.CollectionConverters.IteratorHasAsScala(node.path("queries").fieldNames).asScala
+      node.path("preset").asText == preset && names.toSet == families.toSet
+    } catch { case scala.util.control.NonFatal(_) => false }
+
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(1).getOrElse("/tmp/graft_scale")
@@ -259,9 +271,7 @@ object ScaleBench {
         s""","doc_rows":[${scales.map(rows(_)._1).mkString(",")}]""" +
         s""","vec_rows":[${scales.map(rows(_)._2).mkString(",")}]""" +
         s""","queries":$qs,"queries_max":$qsMax}"""
-    Artifacts.upsertLine(
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "bench_scale_last.json"),
-      s""""preset":"$preset"""", line)
+    Artifacts.upsertWhere(Artifacts.outPath("bench_scale_last.json"), sameCurve(preset, families), line)
     spark.stop()
     println(line)
     Console.out.flush()

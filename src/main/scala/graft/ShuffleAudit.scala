@@ -38,7 +38,7 @@ package graft
   *
   * Usage: runMain graft.ShuffleAudit [sfDir] [queryName...]
   * (defaults: SPARK_GRAFT_SF_DIR or sf0.1, full catalog). Artifact:
-  * shuffle_audit_last.json (override SPARK_GRAFT_SHUFFLE_OUT).
+  * shuffle_audit_last.json.
   */
 object ShuffleAudit {
 
@@ -61,8 +61,7 @@ object ShuffleAudit {
       s""""preset":${Artifacts.jsonStr(GraftConfig.activeName)},"sf":${Artifacts.jsonStr(sfDir)}"""
     val line =
       s"""{"metric":"shuffle_audit","n":${rows.size},"zero_shuffle":${zero.size},"spilled":${spilled.size},"spilled_queries":${spilled.map(Artifacts.jsonStr).mkString("[", ",", "]")},"total_shuffle_mb":${mb(rows.map(_._2.shuffleWrite).sum)},"total_input_mb":${mb(rows.map(_._2.input).sum)},"queries":$qjson,$marker}"""
-    Artifacts.upsertLine(
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_OUT", "shuffle_audit_last.json"), marker, line)
+    Artifacts.upsertLine(Artifacts.outPath("shuffle_audit_last.json"), marker, line)
     // compact stdout line (scrape-window discipline, see Bench.renderLines)
     println(s"""{"metric":"shuffle_audit","n":${rows.size},"zero_shuffle":${zero.size},"spilled":${spilled.size},"total_shuffle_mb":${mb(rows.map(_._2.shuffleWrite).sum)},"total_input_mb":${mb(rows.map(_._2.input).sum)},"sf":${Artifacts.jsonStr(sfDir)}}""")
     spark.stop()

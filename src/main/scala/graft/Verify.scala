@@ -3,12 +3,17 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The queries a dump covers: the optional comma-separated `filter`
+    * (for iterating on a few queries), else the whole catalog. An
+    * unknown name fails before anything runs — dropping it would dump
+    * nothing and leave an empty oracle_sql.json that checks green.
+    */
+  private[graft] def selection(filter: Option[String]): Set[String] =
+    SparkEntry.queryNames(filter.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)).toSet
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg (dev-only; the driver passes two): comma-separated
-    // query-name filter so a single operator can be oracle-checked without
-    // a full catalog dump
-    val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
+    val names = selection(args.lift(2))
     // the product session, so the oracle checks the plans that ship
     val spark = GraftSession.getOrCreate(sfDir)
     new java.io.File(outDir).mkdirs()
@@ -18,7 +23,7 @@ object Verify {
     // and collect the messages into errors.json for humans.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => names(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -52,7 +57,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

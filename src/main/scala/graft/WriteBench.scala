@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
   *     size-targeted files. Records files before/after, the compaction
   *     ratio, and compaction MB/s.
   *
-  * One JSON line per preset is upserted into `write_bench_last.json`
-  * (`SPARK_GRAFT_WRITE_OUT` overrides).
+  * One JSON line per preset is upserted into `write_bench_last.json`.
   *
   *   runMain graft.WriteBench [nFrames] [workDir]
   *   GRAFT_PRESET=100tb runMain graft.WriteBench
@@ -114,9 +113,7 @@ object WriteBench {
         s""","compaction":{"sec":${fmt(tCompact)},"files_before":${before.size},"files_after":${after.size}""" +
         s""","target_files":$nAfterTarget,"ratio":${fmt(before.size.toDouble / math.max(1, after.size))}""" +
         s""","mb_per_s":${fmt(fragBytes / 1e6 / tCompact)}}}"""
-    Artifacts.upsertLine(
-      sys.env.getOrElse("SPARK_GRAFT_WRITE_OUT", "write_bench_last.json"),
-      s""""preset":"$preset"""", line)
+    Artifacts.upsertLine(Artifacts.outPath("write_bench_last.json"), s""""preset":"$preset"""", line)
     spark.stop()
     println(line)
     Console.out.flush()

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Raw-side dataset readers (SURVEY.md §2.1): the native formats that are
-  * directly Spark-readable. Binary formats (HDF5/protobuf/pickle — S7, S9,
-  * S10) are landing-zone conversions by design (SURVEY §7.4 item 1) and are
-  * not re-parsed here.
+  * directly Spark-readable. The binary formats have readers of their own:
+  * HDF5 in [[Hdf5Lite]], Objectron protobuf in [[ObjectronPb]] and
+  * [[TfRecords]]; pickle (S10) stays a landing-zone conversion
+  * (`tools/embodiedscan_to_parquet.py`).
   */
 object RawSources {
 
@@ -239,36 +240,6 @@ object RawSources {
         col("depth_stats"),
         coalesce(col("bounding_boxes_3d"), array().cast(bbox3dDdl)).as("bounding_boxes_3d")
       )
-  }
-
-  // ---- S9: binary sequence file → many rows (generator source) -----------
-
-  /** One decoded frame of a binary sequence file. */
-  final case class SeqFrame(file: String, frame_idx: Int, timestamp: Long, values: Array[Float])
-
-  /** The S9 source topology — `binaryFile` scan + `flatMap` generator, one
-    * file → many frame rows (objectron_processor.py:40-104). Objectron's
-    * real `.pbdata` decode needs generated protobuf classes and is a
-    * landing-zone job (SURVEY §7.4 item 1); this reader runs the identical
-    * Spark plumbing on a little-endian length-prefixed format:
-    * `[n:int32] n × [timestamp:int64][k:int32][k × float32]`.
-    */
-  def readBinarySequences(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val n = buf.getInt
-        (0 until n).map { i =>
-          val ts = buf.getLong
-          val k = buf.getInt
-          val vals = Array.fill(k)(buf.getFloat)
-          SeqFrame(path, i, ts, vals)
-        }
-      }
-      .toDF()
   }
 
   // ---- G11: 2D-bbox encoding normalization -------------------------------

@@ -4,7 +4,8 @@ import graft.vlm.SparkSpec
 
 /** One session factory: the test session runs the product session's confs,
   * and no main builds a session of its own. One listener: every measuring
-  * tool reads QueryLedger instead of attaching its own.
+  * tool reads QueryLedger instead of attaching its own. Four env knobs:
+  * everything else is a conf, a preset field or a command-line argument.
   */
 class SessionParitySpec extends SparkSpec {
 
@@ -18,11 +19,7 @@ class SessionParitySpec extends SparkSpec {
   }
 
   test("SparkSession.builder and SparkListener each have one home in src/main") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(files) else Seq(f).filter(_.getName.endsWith(".scala"))
-    val sources = files(root).map(f => f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    val sources = SourceScan.sources(new java.io.File("src/main/scala"))
     for ((pattern, home) <- Seq(
         """SparkSession\s*\.\s*builder""" -> "GraftSession.scala",
         """extends\s+[\w.]*SparkListener\b|new\s+[\w.]*SparkListener\s*\{|addSparkListener""" -> "QueryLedger.scala")) {
@@ -31,13 +28,39 @@ class SessionParitySpec extends SparkSpec {
     }
   }
 
-  test("boolean env knobs take exactly true or false, and name the variable otherwise") {
-    assert(!GraftSession.envFlag("SPARK_GRAFT_PREFER_SMJ", None))
-    assert(GraftSession.envFlag("SPARK_GRAFT_PREFER_SMJ", Some("true")))
-    assert(!GraftSession.envFlag("SPARK_GRAFT_PREFER_SMJ", Some("false")))
-    for (bad <- Seq("1", "0", "TRUE", "yes", "")) {
-      val e = intercept[RuntimeException](GraftSession.envFlag("SPARK_GRAFT_PREFER_SMJ", Some(bad)))
-      assert(e.getMessage.contains("SPARK_GRAFT_PREFER_SMJ") && e.getMessage.contains(s"'$bad'"), e.getMessage)
-    }
+  test("src/main reads four env variables, each in README's knob table, and the artifact dir only in Artifacts") {
+    val read = SourceScan.reads(SourceScan.sources(new java.io.File("src/main/scala")))
+    assert(read.keySet == Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "GRAFT_PRESET", "SPARK_GRAFT_OUT_DIR"),
+      read.toSeq.sortBy(_._1).mkString("; "))
+    assert(read("SPARK_GRAFT_OUT_DIR") == Set("Artifacts.scala"))
+    val table = SourceScan.knobTable(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8"))
+    assert(table == read.keySet, s"README knob table: ${table.toSeq.sorted.mkString(", ")}")
   }
+}
+
+/** The `.scala` files of a source tree, and which environment variables they read. */
+object SourceScan {
+  def sources(root: java.io.File): Seq[(String, String)] = {
+    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(files) else Seq(f).filter(_.getName.endsWith(".scala"))
+    files(root).map(f => f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
+  /** Every name passed to `sys.env`/`System.getenv`, and every string
+    * literal shaped like a graft knob (a name handed to a helper), mapped
+    * to the files it appears in.
+    */
+  def reads(sources: Seq[(String, String)]): Map[String, Set[String]] = {
+    val env = """(?:sys\.env|System\.getenv)\s*(?:\.\s*\w+\s*)?\(\s*"(\w+)"""".r
+    val knob = """"((?:SPARK_)?GRAFT_\w+)"""".r
+    sources.flatMap { case (file, src) =>
+      (env.findAllMatchIn(src) ++ knob.findAllMatchIn(src)).map(_.group(1) -> file)
+    }.groupMap(_._1)(_._2).map { case (k, v) => k -> v.toSet }
+  }
+
+  /** The variable names in the first column of README's knob table. */
+  def knobTable(readme: String): Set[String] =
+    """(?m)^\| `((?:SPARK_)?GRAFT_\w+)` \|""".r.findAllMatchIn(readme).map(_.group(1)).toSet
 }

@@ -85,19 +85,6 @@ class RawSourcesSpec extends SparkSpec {
     assert(r.getAs[Double]("yaw") == 0.0)
   }
 
-  test("readBinarySequences expands one binary file into many frame rows (S9)") {
-    val dir = tmp()
-    val buf = java.nio.ByteBuffer.allocate(4 + 2 * (8 + 4 + 2 * 4)).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.putInt(2)
-    buf.putLong(1000L); buf.putInt(2); buf.putFloat(1.5f); buf.putFloat(2.5f)
-    buf.putLong(2000L); buf.putInt(2); buf.putFloat(3.5f); buf.putFloat(4.5f)
-    Files.write(dir.resolve("seq0.bin"), buf.array())
-    val rows = RawSources.readBinarySequences(spark, dir.toString).orderBy("frame_idx").collect()
-    assert(rows.length == 2)
-    assert(rows(0).getAs[Int]("frame_idx") == 0 && rows(0).getAs[Long]("timestamp") == 1000L)
-    assert(rows(1).getSeq[Float](rows(1).fieldIndex("values")) == Seq(3.5f, 4.5f))
-  }
-
   test("normalizeBoxes2d reads all three raw encodings (G11, geometry.py:272-335)") {
     val s = spark
     import s.implicits._

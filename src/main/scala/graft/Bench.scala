@@ -34,6 +34,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** Samples per query in the sweep, before any tripwire re-sample. */
+  private[graft] val Samples = 3
+
   /** The harness keeps only the last ~2000 chars of output; a full-name
     * 9-decimal map for 120+ queries overflows that window and the JSON
     * line gets decapitated ("parsed": null — it happened two rounds
@@ -130,11 +133,6 @@ object Bench {
     val mins = results.map { case (_, v) => if (v.exists(_ < 0)) -1.0 else v.min }
     val total = mins.filter(_ >= 0).sum
     val nFailed = mins.count(_ < 0)
-    // the BASE sample count: min over non-failed vectors (reran queries
-    // carry one extra sample, failed ones a single -1 — "samples" stays
-    // the protocol constant so cross-round artifact semantics hold)
-    val nSamples = results.collect { case (_, v) if !v.exists(_ < 0) => v.size }
-      .minOption.getOrElse(0)
     // the DENSE probe grid (one point per ~15 queries) and the protocol
     // markers beyond the headline would blow the scrape window at catalog
     // size (148 queries measured 1906 chars with the calib envelope +
@@ -151,7 +149,7 @@ object Bench {
     val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calib":${fmt(calibPts.head)},"n":${results.size},"failed":$nFailed,"queries":${qmap(_.min)},"sf":${Artifacts.jsonStr(sfDir)}}"""
     val reranList = reran.map(n => "\"" + short(n) + "\"").mkString("[", ",", "]")
     (line, line.dropRight(1) +
-      s""","stat":"min","samples":$nSamples,"reran":${reran.size},"calib_rng":$rng,"calib_pts":$pts,"queries_mid":${qmap(median)},"queries_max":${qmap(_.max)},"reran_queries":$reranList}""")
+      s""","stat":"min","samples":$Samples,"reran":${reran.size},"calib_rng":$rng,"calib_pts":$pts,"queries_mid":${qmap(median)},"queries_max":${qmap(_.max)},"reran_queries":$reranList}""")
   }
 
   /** The queries a run benches, in catalog order: the names on the
@@ -222,7 +220,7 @@ object Bench {
       if (i > 0 && i % probeEvery == 0) midProbes += Artifacts.calibrate(spark)
       val s1 = sample(name, fn)
       // don't burn further samples on a failed query
-      val rest = if (s1 < 0) Seq.empty else Seq(sample(name, fn), sample(name, fn))
+      val rest = if (s1 < 0) Seq.empty else Seq.fill(Samples - 1)(sample(name, fn))
       // PROTOCOL BOUNDARY (round 10 → min-of-N; round 13 → N=3 with the
       // median+max spread in the durable artifact): headline = min, where
       // later samples run with a warm OS page cache — totals are

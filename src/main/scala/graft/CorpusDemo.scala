@@ -122,10 +122,12 @@ object CorpusDemo {
       coalesce(sum(when(col("keep_quality") && !col("exact_dup") && !col("near_dup") && !col("contaminated") && col("lm_ok") && col("keep_sample"), 1L).otherwise(0L)), lit(0L)).as("sampled")
     ).collect()(0)
 
-    // survivors → m11 BUDGET SELECTION (the materialization step that
-    // emits the curated training set, run as the funnel's selection leg:
-    // per source, quality-ranked prefix under the tiered token target —
-    // the SAME CurationQueries.budgetSelect the oracle gate checks)
+    // survivors → BUDGET SELECTION (the materialization step that emits
+    // the curated training set: per source, quality-ranked prefix under
+    // the tiered token target). CurationQueries.budgetSelect runs m11's
+    // rule eagerly on range buckets; the oracle checks m11's lazy plan,
+    // and BudgetSelectParitySpec pins the two equal row for row. It stores
+    // nothing, so the three reads below share one cache
     val survivors = funnel.filter(
       col("keep_quality") && !col("exact_dup") && !col("near_dup") && !col("contaminated") && col("lm_ok") && col("keep_sample"))
     val selected = CurationQueries.budgetSelect(
@@ -156,7 +158,8 @@ object CorpusDemo {
       .agg(coalesce(sum(col("n_packs")), lit(0L))).collect()(0).getLong(0)
 
     // export stage: the budget-selected set as size-bounded parquet shards
-    // (the training export shape — bounded files regardless of skew)
+    // (the training export shape — bounded files regardless of skew); one
+    // writer per budget bucket, so the shard count follows the buckets
     val outDir = args.lift(2).getOrElse("/tmp/graft_corpus_demo/packed")
     selected.select(col("doc_id"), col("source"), col("nt").as("n_tokens"), col("qi"))
       .write.mode("overwrite")

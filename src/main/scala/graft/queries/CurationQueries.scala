@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructType}
 
 /** Corpus-curation operators a production LLM training-data pipeline runs
   * between raw ingest and tokenization — the stages the reference stops
@@ -82,42 +83,93 @@ object CurationQueries extends QueryModule {
     when(col("source") === "src1", lit(200L))
       .when(col("source") === "src2", lit(800L)).otherwise(lit(500L))
 
-  /** m11's budget selection as ONE function — the materialization step
-    * that emits the curated training set, shared by the m11_budget_select
-    * catalog query and [[graft.CorpusDemo]]'s funnel selection leg (a
-    * re-implementation in either place could silently drift from the
-    * oracle-gated rule). Input: one row per candidate document with
+  /** A source's mixture tier (m7's rule): 1 + (source suffix % 3), over
+    * the unbounded suffix (the oracle's 2-arg substring); source ids are
+    * 'src<N>' by the documents-table contract.
+    */
+  private def sourceTier(source: Column): Column =
+    lit(1L) + pmod(source.substr(lit(4), length(source)).cast("long"), lit(3L))
+
+  /** The corpus totals over `rs`, the per-source rows folded into one
+    * array of `(source, n_tokens, tier, …)` structs (metadata-scale).
+    */
+  private def mixTotals(rs: Column): Seq[Column] = Seq(
+    aggregate(rs, lit(0L), (a, x) => a + x.getField("n_tokens")).as("total_tokens"),
+    aggregate(rs, lit(0L), (a, x) => a + x.getField("tier")).as("total_tier"))
+
+  /** A source's token target next to [[mixTotals]]' columns: the budget
+    * is half the corpus tokens, split across sources by tier.
+    */
+  private def tierTarget(tier: Column): Column =
+    floor(floor(col("total_tokens").cast("double") / 2).cast("long").cast("double") * tier / col("total_tier"))
+      .cast("long")
+
+  /** The curation funnel's budget selection, the step that emits the
+    * curated training set. Input: one row per candidate document with
     * `(doc_id, source, nt, qi)` — token count and integer-ppm quality.
     * Per source, documents rank by (quality desc, doc_id asc) — the
     * COMPOSITE key, no packed-long domain bound — and the selection keeps
     * the cumulative-token PREFIX under the source's tiered target: tier =
     * 1 + (source suffix % 3), budget = half the total token supply, each
-    * source's target = budget × tier / Σtier (m7's rule). Scale shape:
-    * one pass over the candidates, one (source, segment) shuffle for the
-    * segmented prefix sum, budgets and offsets broadcast.
+    * source's target = budget × tier / Σtier (m7's rule).
     * Returns `(source, doc_id, nt, qi, cum_tokens, target_tokens)` for
     * the KEPT rows.
+    *
+    * A pipeline entry point, so it runs eagerly, on [[graft.RangeBuckets]],
+    * in three small jobs: bounds on `(source, −qi, doc_id)` sampled into
+    * `segments` buckets, the routed map stage, and each bucket's token sum
+    * per source. The driver then derives each source's total, its target
+    * and each bucket's exclusive offset. The result is a frame over the
+    * routed buckets, each sorted by the rank key: `cum_tokens` is the
+    * offset plus the in-bucket running sum. It stores nothing; a caller
+    * that reads it more than once caches it. The m11 catalog query keeps
+    * the lazy plan ([[budgetSelectPlan]]), which the oracle checks; the
+    * two are equal row for row and by schema (BudgetSelectParitySpec).
     */
-  def budgetSelect(base: org.apache.spark.sql.DataFrame, segments: Int): org.apache.spark.sql.DataFrame = {
+  def budgetSelect(base: DataFrame, segments: Int): DataFrame = {
+    val rows = base.select(col("source"), col("doc_id"), col("nt"), col("qi"))
+    val order = Seq(col("source"), -col("qi"), col("doc_id"))
+    val bounds = graft.RangeBuckets.sampleBounds(rows, order, segments, "budget bounds")
+    val routed = graft.RangeBuckets.route(rows, order, bounds, "budget route")
+    val sums = graft.RangeBuckets.groupSums(routed, Seq("source"), "nt", "budget sums")
+    // the targets on the driver, from the per-source supply folded into
+    // one local row: a projection of a local relation runs no job
+    val supply = sums.totals.toSeq.map { case (g, n) => Row(g.get(0), n) }
+    val rs = new StructType().add("source", StringType).add("n_tokens", LongType)
+    val targets = base.sparkSession
+      .createDataFrame(java.util.List.of(Row(supply)), new StructType().add("rs", ArrayType(rs)))
+      .select(transform(col("rs"), r => struct(r.getField("source").as("source"),
+        r.getField("n_tokens").as("n_tokens"), sourceTier(r.getField("source")).as("tier"))).as("rs"))
+      .select(col("rs") +: mixTotals(col("rs")): _*)
+      .select(transform(col("rs"), r => struct(r.getField("source"), tierTarget(r.getField("tier")))))
+      .collect()(0).getSeq[Row](0)
+      .collect { case Row(source: String, target: Long) => source -> target }
+    graft.RangeBuckets.withRunningSum(routed.sortWithinPartitions(order: _*), Seq("source"), "nt", sums,
+        "cum_tokens")
+      .withColumn("target_tokens", element_at(typedLit(targets.toMap), col("source")))
+      .filter(col("cum_tokens") <= col("target_tokens"))
+  }
+
+  /** [[budgetSelect]] as one lazy plan, the m11 catalog query's: one pass
+    * over the candidates, one (source, segment) shuffle for the segmented
+    * prefix sum ([[PipelineFns.segmentedCumSumMulti]]), budgets and
+    * offsets broadcast. Catalog plans stay lazy: the oracle checks them.
+    */
+  private[queries] def budgetSelectPlan(base: DataFrame, segments: Int): DataFrame = {
     val withOrd = base.withColumn("negq", -col("qi"))
     val per = base.groupBy(col("source"))
       .agg(sum(col("nt")).cast("long").as("n_tokens"))
-      .withColumn("tier", lit(1L) +
-        pmod(col("source").substr(lit(4), length(col("source"))).cast("long"), lit(3L)))
+      .withColumn("tier", sourceTier(col("source")))
     // corpus totals via the m7 fold (collect_list over the n_sources-row
     // aggregate — metadata-scale, no partition-less window, no second
     // corpus scan)
     val asArray = per
       .agg(collect_list(struct(col("source"), col("n_tokens"), col("tier"))).as("rs"))
-      .select(col("rs"),
-        aggregate(col("rs"), lit(0L), (a, x) => a + x.getField("n_tokens")).as("total_tokens"),
-        aggregate(col("rs"), lit(0L), (a, x) => a + x.getField("tier")).as("total_tier"))
+      .select(col("rs") +: mixTotals(col("rs")): _*)
     val budgets = asArray
       .select(explode(col("rs")).as("r"), col("total_tokens"), col("total_tier"))
-      .withColumn("budget", floor(col("total_tokens").cast("double") / 2).cast("long"))
       .select(col("r").getField("source").as("source"),
-        floor(col("budget").cast("double") * col("r").getField("tier") / col("total_tier"))
-          .cast("long").as("target_tokens"))
+        tierTarget(col("r").getField("tier")).as("target_tokens"))
     segmentedCumSumMulti(
         withOrd.select(col("doc_id"), col("source"), col("nt"), col("qi"), col("negq")),
         Seq("source"), Seq("negq", "doc_id"), col("nt"), "cum_tokens", segments)
@@ -342,10 +394,7 @@ object CurationQueries extends QueryModule {
           .select(col("source"), size(tokens(col("text"))).cast("long").as("nt"))
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"), sum(col("nt")).cast("long").as("n_tokens"))
-          // unbounded suffix (mirrors the oracle's 2-arg substring); source
-          // ids are 'src<N>' by the documents-table contract
-          .withColumn("tier", lit(1L) +
-            pmod(col("source").substr(lit(4), length(col("source"))).cast("long"), lit(3L)))
+          .withColumn("tier", sourceTier(col("source")))
         // corpus totals WITHOUT a partition-less window (which would funnel
         // rows into one task and warn "No Partition Defined") and WITHOUT a
         // self-join stats branch (which re-scans the corpus — pruning makes
@@ -358,9 +407,7 @@ object CurationQueries extends QueryModule {
         val asArray = perSource
           .agg(collect_list(struct(
             col("source"), col("n_docs"), col("n_tokens"), col("tier"))).as("rs"))
-          .select(col("rs"),
-            aggregate(col("rs"), lit(0L), (a, x) => a + x.getField("n_tokens")).as("total_tokens"),
-            aggregate(col("rs"), lit(0L), (a, x) => a + x.getField("tier")).as("total_tier"))
+          .select(col("rs") +: mixTotals(col("rs")): _*)
         asArray
           .select(explode(col("rs")).as("r"), col("total_tokens"), col("total_tier"))
           .select(
@@ -369,10 +416,7 @@ object CurationQueries extends QueryModule {
             col("r").getField("n_tokens").as("n_tokens"),
             col("r").getField("tier").as("tier"),
             col("total_tokens"), col("total_tier"))
-          // budget = half the corpus tokens, split across sources by tier
-          .withColumn("budget", floor(col("total_tokens").cast("double") / 2).cast("long"))
-          .withColumn("target_tokens",
-            floor(col("budget").cast("double") * col("tier") / col("total_tier")).cast("long"))
+          .withColumn("target_tokens", tierTarget(col("tier")))
           .select(
             col("source"), col("n_docs"), col("n_tokens"), col("tier"), col("target_tokens"),
             round(least(lit(1.0), col("target_tokens").cast("double") / col("n_tokens")), 6).as("sample_rate"),
@@ -813,8 +857,8 @@ object CurationQueries extends QueryModule {
         // operands ≤ 1e12 are exactly representable and a non-multiple
         // quotient sits ≥ 1/nt > ulp away from any integer, so floor
         // can't flip) and the selection keeps the cumulative-token PREFIX
-        // under the source's tiered target budget (m7's rule recomputed
-        // here so the two queries can't drift). Rank totality: the order
+        // under the source's tiered target budget (m7's rule, from the
+        // same tier and target functions, so the two can't drift). Rank totality: the order
         // key is the COMPOSITE (−quality asc, doc_id asc) — two columns,
         // not a packed long, so no doc_id domain bound exists (a packed
         // doc_id − ppm×1e9 silently mis-ranks once ids reach 1e9, exactly
@@ -844,9 +888,10 @@ object CurationQueries extends QueryModule {
           .filter(col("nt") > 0)
           .withColumn("qi",
             floor(col("nd").cast("double") * lit(1000000) / col("nt").cast("double")).cast("long"))
-        // the selection itself is the shared [[budgetSelect]] — one
-        // definition for the catalog gate and the funnel demo's leg
-        budgetSelect(base.select(col("doc_id"), col("source"), col("nt"), col("qi")),
+        // the selection is [[budgetSelectPlan]], the lazy form of the
+        // funnel's eager [[budgetSelect]]; the two share the tier and
+        // target arithmetic, and a parity spec pins them equal
+        budgetSelectPlan(base.select(col("doc_id"), col("source"), col("nt"), col("qi")),
             autoSegments(s))
           .select(col("source"), col("doc_id"), col("nt").as("n_tokens"),
             col("qi").as("quality_ppm"), col("cum_tokens"))

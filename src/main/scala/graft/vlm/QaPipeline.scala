@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.RangeBuckets
 import QaPrimitives.QaTask
 
 /** Registry-driven QA generation orchestration — the Spark re-expression of
@@ -19,7 +20,8 @@ import QaPrimitives.QaTask
   * samples its `image_id` bounds once, from the frames
   * ([[QaPrimitives.imageIdBounds]]: one small job), and every task's id
   * step routes its rows to those ranges. Building a task is eager: its id
-  * assignment ([[QaPrimitives.withContiguousIds]]) runs the routed map
+  * assignment, the id step of [[graft.RangeBuckets]]
+  * ([[graft.RangeBuckets.withContiguousIds]]), runs the routed map
   * stage and the count job and stores its sorted rows on the executors,
   * every sink after that reads those stored rows, and the summary is made
   * from the row counts.
@@ -39,7 +41,7 @@ object QaPipeline {
 
   /** Run the given tasks over a frame corpus, one after another, over one
     * set of `image_id` bounds; returns per-task DataFrames over stored rows
-    * (see [[QaPrimitives.release]]).
+    * (see [[graft.RangeBuckets.release]]).
     */
   def generate(
       frames: DataFrame,
@@ -57,14 +59,14 @@ object QaPipeline {
 
   /** K4: summary — per-task question counts (generate_qa.py:147-163), one
     * row per task with questions. Built on the driver from the counts that
-    * each task's id assignment found ([[QaPrimitives.rowCount]]), so
+    * each task's id assignment found ([[graft.RangeBuckets.rowCount]]), so
     * neither building nor collecting it runs a Spark job; `perTask` must
     * hold the tasks' DataFrames as built.
     */
   def summary(perTask: Map[String, DataFrame], datasetName: String): DataFrame = {
     val spark = perTask.values.head.sparkSession
     val rows = perTask.toSeq.sortBy(_._1)
-      .map { case (t, df) => (t, QaPrimitives.rowCount(df)) }
+      .map { case (t, df) => (t, RangeBuckets.rowCount(df)) }
       .collect { case (t, n) if n > 0 => Row(t, n) }
     val schema = StructType(Seq(
       StructField("task_type", StringType, nullable = false),
@@ -124,10 +126,10 @@ object QaPipeline {
       val perTask = work.map(_.get()).toMap
       combined(perTask).write.mode("overwrite").json(s"$outDir/${datasetName}_all_qa_pairs")
       summary(perTask, datasetName).coalesce(1).write.mode("overwrite").json(s"$outDir/${datasetName}_summary")
-      tasks.map(t => t -> QaPrimitives.rowCount(perTask(t))).toMap
+      tasks.map(t => t -> RangeBuckets.rowCount(perTask(t))).toMap
     } finally {
       pool.shutdown()
-      built.forEach(df => QaPrimitives.release(df))
+      built.forEach(df => RangeBuckets.release(df))
     }
   }
 }

@@ -1,18 +1,10 @@
 package graft.vlm
 
-import scala.reflect.ClassTag
-
-import org.apache.spark.{Partition, RangePartitioner, TaskContext}
-import org.apache.spark.rdd.RDD
+import graft.RangeBuckets
+import graft.RangeBuckets.Bounds
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, GenericInternalRow, InterpretedOrdering, JoinedRow, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shims
-import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.storage.StorageLevel
 
 /** QA assembly primitives (qa_base.py:68-137) shared by the task generators
   * and the oracle-checked query catalog: seeded distractor generation and
@@ -20,8 +12,9 @@ import org.apache.spark.storage.StorageLevel
   * md5, so both Spark and the DuckDB oracle can replay them bit-identically.
   * Also what every task is built from: the per-frame array steps
   * ([[firstPerCategory]], [[categoryCounts]]), the metadata map, and the
-  * contiguous QA-id assignment every task ends with, which runs jobs and
-  * stores rows (see [[withContiguousIds]]).
+  * contiguous QA-id assignment every task ends with: the id step of the
+  * range-bucket module, which runs jobs and stores rows (see
+  * [[graft.RangeBuckets.withContiguousIds]]).
   */
 object QaPrimitives {
   import GeoFunctions.seededUniform
@@ -83,9 +76,9 @@ object QaPrimitives {
   final class QaTask(val name: String, inFrame: Seq[Column], val rows: DataFrame => DataFrame) {
 
     /** The task's QaPair rows, numbered over `bounds` (sampled once per run,
-      * [[imageIdBounds]]); eager, like [[withContiguousIds]].
+      * [[imageIdBounds]]); eager, like [[graft.RangeBuckets.withContiguousIds]].
       */
-    def apply(frames: DataFrame, datasetName: String, bounds: IdBounds): DataFrame =
+    def apply(frames: DataFrame, datasetName: String, bounds: Bounds): DataFrame =
       assignQaIds(rows(frames), datasetName, name, inFrame, bounds)
 
     /** As above, with bounds sampled from `frames` for this task alone. */
@@ -104,145 +97,20 @@ object QaPrimitives {
     * order keys and the QaPair columns enter the sort and the stored rows.
     */
   def assignQaIds(df: DataFrame, datasetName: String, task: String, inFrame: Seq[Column],
-      bounds: IdBounds): DataFrame = {
+      bounds: Bounds): DataFrame = {
     val order = col("image_id") +: FrameKeys ++: inFrame
     val keys = order.indices.map(i => s"_k$i")
     val slim = df.select(order.zip(keys).map { case (c, k) => c.as(k) } ++ QaColumns.map(col): _*)
-    withContiguousIds(slim, "id", s"${datasetName}_${task}_%06d", keys.map(col), bounds)
+    RangeBuckets.withContiguousIds(slim, "id", s"${datasetName}_${task}_%06d", keys.map(col), bounds)
       .select(("id" +: QaColumns).map(col): _*)
   }
 
-  /** Range bounds on the first key of the id steps' order keys: `buckets`
-    * key ranges of about equal row counts (fewer when there are fewer
-    * distinct keys). Sampled once and shared by the id steps of a run.
+  /** The `image_id` bounds of one QA run: sampled from its frames
+    * ([[graft.RangeBuckets.sampleBounds]]), in as many ranges as the
+    * session's AQE start partition count, and shared by its id steps.
     */
-  final class IdBounds private[QaPrimitives] (
-      private[QaPrimitives] val partitioner: RangePartitioner[InternalRow, Null],
-      val keyType: DataType) extends Serializable {
-    def buckets: Int = partitioner.numPartitions
-  }
-
-  /** [[IdBounds]] of `key` over `df`'s rows in `buckets` ranges, from one
-    * small sample job (none for one bucket) under the session's SQL confs.
-    */
-  def sampleBounds(df: DataFrame, key: Column, buckets: Int): IdBounds = {
-    val keys = df.select(key)
-    val keyType = keys.schema.head.dataType
-    val ordering = new InterpretedOrdering(Seq(SortOrder(BoundReference(0, keyType, nullable = true), Ascending)))
-    shims.withSQLConfPropagated(df.sparkSession) {
-      // the sample keeps rows: copy the scan's reused one
-      val rows = keys.queryExecution.toRdd.map(r => (r.copy(), null)).setName("qa id bounds")
-      new IdBounds(new RangePartitioner(buckets, rows)(ordering, ClassTag(classOf[InternalRow])), keyType)
-    }
-  }
-
-  /** The `image_id` bounds of one QA run: sampled from its frames, in as
-    * many ranges as the session's AQE start partition count.
-    */
-  def imageIdBounds(frames: DataFrame): IdBounds =
-    sampleBounds(frames, col("image_id"), shims.initialPartitionNum(frames.sparkSession))
-
-  /** Contiguous zero-based ids in a stable total order, distributed: route
-    * each row to the bucket of `bounds` its first order key falls in, sort
-    * within partitions by the whole order key, then number the rows from
-    * per-partition offsets that one count job finds. A bare
-    * `row_number() over (ORDER BY ...)` would move every row to a single
-    * partition — the one W6 shape that cannot ship at corpus scale. Ids are
-    * stable across runs and equal the window formulation only because each
-    * caller's order key is unique: ties would be numbered in whatever order
-    * the shuffle delivered them.
-    *
-    * Eager, two jobs: the routed shuffle's map stage runs here, once, over
-    * everything below it; contiguous small buckets are then coalesced from
-    * its output sizes, as AQE would coalesce them. The count job sorts,
-    * counts and stores every partition (`MEMORY_AND_DISK`), so the last
-    * offset is the row total ([[rowCount]]), and every later action —
-    * per-task sink, combined union — reads the stored rows instead of
-    * re-running the shuffle and the sort. [[release]] frees them; otherwise
-    * Spark's ContextCleaner does once the result is unreachable. Both jobs
-    * are RDD-level, outside any Dataset action, so they run under the
-    * session's propagated SQL confs: without that, their tasks see the
-    * defaults (e.g. `mapKeyDedupPolicy=EXCEPTION` instead of the session's
-    * `LAST_WIN`). The first order key must have the bounds' key type.
-    */
-  def withContiguousIds(df: DataFrame, idCol: String, fmt: String, order: Seq[Column],
-      bounds: IdBounds): DataFrame = {
-    val spark = df.sparkSession
-    val keyed = df.select(col("*"), order.head.as(RouteKey))
-    val n = keyed.schema.length
-    val keyType = keyed.schema.last.dataType
-    require(keyType == bounds.keyType, s"first order key is $keyType, the bounds are ${bounds.keyType}")
-    val stored = shims.withSQLConfPropagated(spark) {
-      val partitioner = bounds.partitioner
-      val routed = keyed.queryExecution.toRdd.mapPartitions { it =>
-        val key = UnsafeProjection.create(Seq(BoundReference(n - 1, keyType, nullable = true)))
-        it.map(r => (partitioner.getPartition(key(r)), r))
-      }.setName(s"qa id route: $fmt")
-      val shuffled = shims.routeToBuckets(spark, routed, bounds.buckets, n)
-      val sorted = shims.internalCreateDataFrame(spark, shuffled, keyed.schema)
-        .sortWithinPartitions(order: _*).drop(RouteKey)
-      // the sort hands out one reused row object: copy before storing
-      val rows = sorted.queryExecution.toRdd.map(_.copy()).setName(s"qa id rows: $fmt")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val sizes = spark.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => it.size.toLong)
-        new NumberedRows(rows, sizes.scanLeft(0L)(_ + _))
-      } catch {
-        case e: Throwable => rows.unpersist(blocking = true); throw e
-      }
-    }
-    shims.internalCreateDataFrame(spark, stored, df.schema.add("_rn", LongType))
-      .withColumn(idCol, format_string(fmt, col("_rn"))).drop("_rn")
-  }
-
-  /** The first order key, carried through the routed shuffle. */
-  private val RouteKey = "_route"
-
-  /** Unpersists the rows that every [[withContiguousIds]] under `df` stored. */
-  def release(df: DataFrame): Unit = df.queryExecution.logical.foreach {
-    case r: LogicalRDD => r.rdd match {
-      case n: NumberedRows => n.stored.unpersist(blocking = true)
-      case _ =>
-    }
-    case _ =>
-  }
-
-  /** The row count of a DataFrame as [[assignQaIds]] or [[withContiguousIds]]
-    * returned it (projections on top allowed), read from the plan: the
-    * total the count job found, so no job runs. Fails on any other plan.
-    */
-  def rowCount(df: DataFrame): Long = {
-    def total(p: LogicalPlan): Option[Long] = p match {
-      case Project(_, child) => total(child)
-      case r: LogicalRDD => r.rdd match {
-        case n: NumberedRows => Some(n.total)
-        case _ => None
-      }
-      case _ => None
-    }
-    val plan = df.queryExecution.logical
-    total(plan).getOrElse(throw new IllegalArgumentException(
-      s"no stored row count: not a withContiguousIds result under projections:\n${plan.treeString}"))
-  }
-
-  /** Stored sorted rows, each with its global row number (from the
-    * partition's start offset) appended as one more LONG column. `offsets`
-    * holds one start per partition, then the row total.
-    */
-  private final class NumberedRows(val stored: RDD[InternalRow], offsets: Array[Long])
-      extends RDD[InternalRow](stored) {
-    def total: Long = offsets.last
-    override protected def getPartitions: Array[Partition] = stored.partitions
-    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
-      // reused per row: the scan over this RDD projects each row at once
-      val rn = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      var next = offsets(split.index)
-      firstParent[InternalRow].iterator(split, context).map { r =>
-        rn.setLong(0, next); next += 1; joined(r, rn)
-      }
-    }
-  }
+  def imageIdBounds(frames: DataFrame): Bounds =
+    RangeBuckets.sampleBounds(frames, Seq(col("image_id")), shims.initialPartitionNum(frames.sparkSession), "qa id bounds")
 
   /** Seeded shuffle: sort options by per-position md5 keys
     * (qa_base.py:111-137). Adds `_shuffled` (permuted options) and

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * ([[QaPrimitives.categoryCounts]]), form the `i < j` box pairs
   * ([[boxPairs]]) and the camera distances, and then explode the frame's
   * QA rows. So no task joins, groups or windows, and the only exchange in
-  * a task is its id step ([[QaPrimitives.withContiguousIds]]): it routes
+  * a task is its id step ([[graft.RangeBuckets.withContiguousIds]]): it routes
   * the rows to `image_id` ranges sampled once per run, sorts within them by
   * the task's order key, and numbers the rows from per-partition offsets
   * (eager, it stores the sorted rows).

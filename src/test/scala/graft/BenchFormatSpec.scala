@@ -79,6 +79,15 @@ class BenchFormatSpec extends AnyFunSuite with TempDirs {
     assert(jf.get("reran_queries").get(0).asText === "qa")
   }
 
+  test("samples records the protocol constant when every query re-ran") {
+    val results = Seq("qa" -> Seq(3.5, 3.6, 3.7, 1.02), "qb" -> Seq(2.0, 2.1, 2.2, 0.9))
+    val (_, full) = Bench.renderLines(results, Seq(0.4, 0.4), "/tmp/x", reran = Seq("qa", "qb"))
+    val jf = mapper.readTree(full)
+    assert(jf.get("reran").asInt === 2)
+    assert(jf.get("samples").asInt === Bench.Samples)
+    assert(Bench.Samples === 3)
+  }
+
   test("priorMids maps the prior artifact's short keys back to full names and skips unknowns") {
     val tmp = tempFile("bench-prior", ".json")
     java.nio.file.Files.write(tmp,

@@ -6,6 +6,7 @@ import graft.vlm.SparkSpec
   * and no main builds a session of its own. One listener: every measuring
   * tool reads QueryLedger instead of attaching its own. Four env knobs:
   * everything else is a conf, a preset field or a command-line argument.
+  * One bounds sampler: every range-bucket step samples in RangeBuckets.
   */
 class SessionParitySpec extends SparkSpec {
 
@@ -26,6 +27,15 @@ class SessionParitySpec extends SparkSpec {
       val callers = sources.collect { case (name, src) if pattern.r.findFirstIn(src).isDefined => name }
       assert(callers == Seq(home), s"$pattern: ${callers.mkString(", ")}")
     }
+  }
+
+  test("range bounds are sampled in one place in src/main: RangeBuckets") {
+    // Spark's own range exchange (Layout's repartitionByRange) is not a
+    // second sampler written here, and is not matched
+    val sampler = """\bRangePartitioner\b|\bdef\s+\w*[sS]ampleBounds\b|\.sketch\s*\(""".r
+    val homes = SourceScan.sources(new java.io.File("src/main/scala"))
+      .collect { case (name, src) if sampler.findFirstIn(src).isDefined => name }
+    assert(homes == Seq("RangeBuckets.scala"), homes.mkString(", "))
   }
 
   test("src/main reads four env variables, each in README's knob table, and the artifact dir only in Artifacts") {

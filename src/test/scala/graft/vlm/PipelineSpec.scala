@@ -3,6 +3,7 @@ package graft.vlm
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 
+import graft.RangeBuckets
 import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.Row
@@ -129,7 +130,7 @@ class PipelineSpec extends SparkSpec {
     QaPipeline.generate(frames, "testds").foreach { case (t, df) =>
       def sorted(rows: Array[Row]) = rows.sortBy(_.getString(0)).toSeq
       val expected = sorted(df.collect())
-      QaPrimitives.release(df)
+      RangeBuckets.release(df)
       val written = sorted(spark.read.schema(df.schema).json(s"$out/testds_${t}_qa").collect())
       assert(written == expected, t)
       val inCombined = spark.read.schema(df.schema.add("task_type", "string"))
@@ -209,7 +210,7 @@ class PipelineSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](
         QaPipeline.summary(Map("object_count" -> perTask("object_count").filter(lit(false))), "testds"))
       assert(e.getMessage.contains("no stored row count"))
-    } finally perTask.values.foreach(QaPrimitives.release)
+    } finally perTask.values.foreach(RangeBuckets.release)
   }
 
   test("every task's rows reach the id step without an exchange") {
@@ -256,7 +257,7 @@ class PipelineSpec extends SparkSpec {
     // cancelled that job's stage
     val key = udf { (id: Long) => CountJobGate.await(); id }
     val df = spark.range(0, 200, 1, 4).toDF("id")
-    val bounds = QaPrimitives.sampleBounds(df, col("id"), 4)
+    val bounds = RangeBuckets.sampleBounds(df, Seq(col("id")), 4, "qa id bounds")
     val listener = new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
         val counting = e.stageInfo.rddInfos.exists(_.storageLevel != StorageLevel.NONE)
@@ -268,7 +269,7 @@ class PipelineSpec extends SparkSpec {
     val before = sc.getPersistentRDDs.keySet
     sc.addSparkListener(listener)
     try {
-      val e = intercept[Exception](QaPrimitives.withContiguousIds(df, "qid", "q%03d", Seq(key(col("id"))), bounds))
+      val e = intercept[Exception](RangeBuckets.withContiguousIds(df, "qid", "q%03d", Seq(key(col("id"))), bounds))
       assert(msgs(e).exists(_.contains("forced count job failure")), msgs(e).mkString(" | "))
       assert(CountJobGate.stages.containsValue(true), "the count job ran and was cancelled")
     } finally {
@@ -282,10 +283,10 @@ class PipelineSpec extends SparkSpec {
     val schema = new StructType().add("id", LongType)
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     assert(empty.rdd.getNumPartitions == 0)
-    val out = QaPrimitives.withContiguousIds(empty, "qid", "q%03d", Seq(col("id")),
-      QaPrimitives.sampleBounds(empty, col("id"), 4))
-    try assert(QaPrimitives.rowCount(out) == 0 && out.collect().isEmpty)
-    finally QaPrimitives.release(out)
+    val out = RangeBuckets.withContiguousIds(empty, "qid", "q%03d", Seq(col("id")),
+      RangeBuckets.sampleBounds(empty, Seq(col("id")), 4, "qa id bounds"))
+    try assert(RangeBuckets.rowCount(out) == 0 && out.collect().isEmpty)
+    finally RangeBuckets.release(out)
   }
 
   test("limit and bbox-availability gate (F1/F17)") {

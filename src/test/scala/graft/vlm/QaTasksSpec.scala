@@ -1,5 +1,6 @@
 package graft.vlm
 
+import graft.RangeBuckets
 import org.apache.spark.sql.DataFrame
 import FrameSchema._
 
@@ -218,11 +219,11 @@ class QaTasksSpec extends SparkSpec {
       order.toDF("f", "_source_file").select(col("f.*"), col("_source_file"))
     def run(order: Seq[(FrameRecord, String)], buckets: Int): Seq[String] = {
       val fs = frames(order)
-      val bounds = QaPrimitives.sampleBounds(fs, col("image_id"), buckets)
+      val bounds = RangeBuckets.sampleBounds(fs, Seq(col("image_id")), buckets, "qa id bounds")
       assert(bounds.buckets == buckets)
       QaPipeline.taskRegistry.toSeq.sortBy(_._1).flatMap { case (name, task) =>
         val out = task(fs, "testds", bounds)
-        try out.collect().map(r => s"$name $r").toSeq finally QaPrimitives.release(out)
+        try out.collect().map(r => s"$name $r").toSeq finally RangeBuckets.release(out)
       }
     }
     val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
@@ -267,9 +268,10 @@ class QaTasksSpec extends SparkSpec {
     val df = spark.range(0, 200, 1, 4)
       .select(col("id"), element_at(transform(array(lit(0)), _ => dupMap), 1).as("m"))
     def numbered(): Seq[(String, Long)] = {
-      val out = QaPrimitives.withContiguousIds(df, "qid", "q%03d", Seq(col("id")), QaPrimitives.sampleBounds(df, col("id"), 4))
+      val bounds = RangeBuckets.sampleBounds(df, Seq(col("id")), 4, "qa id bounds")
+      val out = RangeBuckets.withContiguousIds(df, "qid", "q%03d", Seq(col("id")), bounds)
       try out.select(col("qid"), col("m")("k")).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      finally QaPrimitives.release(out)
+      finally RangeBuckets.release(out)
     }
     val expected = (0 until 200).map(i => (f"q$i%03d", i + 1L))
     assert(numbered() == expected)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{LongDot, QuantizeVec, ShingleHashes, SimHash56, ZInterleave}
+import graft.functions.{LongDot, QuantizeVec, ShingleHashes, SimHash56}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -23,7 +23,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     function("long_dot", classOf[LongDot])(c => LongDot(c(0), c(1)))
     function("quantize_vec", classOf[QuantizeVec])(c => QuantizeVec(c(0), intArg(c(1))))
     function("shingle_hashes", classOf[ShingleHashes])(c => ShingleHashes(c(0), intArg(c(1))))
-    function("z_interleave", classOf[ZInterleave])(c => ZInterleave(c(0), c(1)))
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
   }
 }

@@ -74,10 +74,6 @@ package object functions {
   def toCameraFrame(verts: Column, extrinsics: Column): Column =
     shims.column(ToCameraFrame(shims.expression(verts), shims.expression(extrinsics)))
 
-  /** Morton (Z-order) bit interleave of two non-negative bigint bucket ids. */
-  def zInterleave(a: Column, b: Column): Column =
-    shims.column(ZInterleave(shims.expression(a), shims.expression(b)))
-
   /** Pack an array<bigint> of 8-bit codes (each in [0,255]) into binary —
     * the SQ8 inverted-list storage form, 1 byte per dim.
     */

@@ -10,16 +10,17 @@ import org.apache.spark.sql.functions._
   *  - [[writeRangeClustered]] — global range partitioning + in-file sort
   *    on a key: every file covers a disjoint key range, so parquet footer
   *    min/max stats prune point/range scans to O(matching files).
-  *  - [[writeZClustered]] — Morton-interleaved two-column clustering:
-  *    both columns get bounded per-file spans, so predicates on EITHER
-  *    column prune (a 1-D sort prunes one and scatters the other).
   *  - [[compact]] — small-file compaction to a target file size: the
   *    file-count pathology of streaming/incremental ingest (N tiny files
   *    = N scheduler tasks + N footer reads + NameNode pressure) folded
   *    back to size-targeted files.
+  *  - [[writeIvfClustered]] / [[writePartitionedIvf]] — IVF inverted lists
+  *    clustered by cell under a versioned manifest, maintained in place by
+  *    [[mergeIvfDelta]] / [[mergeIvfDeltaUpsert]], [[compactIvfInPlace]]
+  *    and [[gcOrphans]].
   *
   * Everything here is metadata-driven on the driver (file listings,
-  * 4-row stat aggregates) plus one distributed shuffle/write — no
+  * manifests, footer stats) plus one distributed shuffle/write — no
   * collect of data rows.
   */
 // Serializable: the merge's span-routing UDF references [[spanOwner]],
@@ -36,42 +37,6 @@ object Layout extends Serializable {
     df.repartitionByRange(numFiles, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .write.mode("overwrite").parquet(path)
-
-  /** Z-order column for two numeric columns, bucketized to `bits`-bit grid
-    * coordinates against broadcast min/max stats. Use as a sort key to
-    * co-locate rows close in both dimensions.
-    */
-  def zValue(a: Column, b: Column, aMin: Column, aMax: Column, bMin: Column, bMax: Column,
-      bits: Int = 20): Column = {
-    // Morton.interleave masks each coordinate to its low 31 bits — a wider
-    // grid would WRAP silently, scattering far-apart rows into the same
-    // z-neighborhood and quietly destroying the footer-stats pruning this
-    // layout exists for (results stay correct, scans stop shrinking)
-    require(bits >= 1 && bits <= 31, s"zValue bits must be in [1, 31], got $bits")
-    val buckets = (1L << bits) - 1
-    def gridCoord(c: Column, lo: Column, hi: Column): Column =
-      least(lit(buckets), floor((c - lo).cast("double") / greatest(hi - lo, lit(1e-300)) * buckets).cast("long"))
-    graft.functions.zInterleave(gridCoord(a, aMin, aMax), gridCoord(b, bMin, bMax))
-  }
-
-  /** Write `df` Z-clustered on two numeric columns into `numFiles` files.
-    * One tiny stats aggregate (1 broadcast row) + one range shuffle on the
-    * interleaved value; both columns end up with bounded per-file spans.
-    */
-  def writeZClustered(df: DataFrame, path: String, colA: String, colB: String,
-      numFiles: Int, bits: Int = 20): Unit = {
-    val stats = df.agg(
-      min(col(colA)).as("a_min"), max(col(colA)).as("a_max"),
-      min(col(colB)).as("b_min"), max(col(colB)).as("b_max"))
-    val z = df.crossJoin(broadcast(stats))
-      .withColumn("graft_z", zValue(col(colA), col(colB),
-        col("a_min"), col("a_max"), col("b_min"), col("b_max"), bits))
-      .drop("a_min", "a_max", "b_min", "b_max")
-    z.repartitionByRange(numFiles, col("graft_z"))
-      .sortWithinPartitions(col("graft_z"))
-      .drop("graft_z")
-      .write.mode("overwrite").parquet(path)
-  }
 
   /** Compact a parquet directory to ~`targetFileBytes` files (driver-side
     * listing for sizes — metadata only). `coalesce` avoids a shuffle when
@@ -484,23 +449,6 @@ object Layout extends Serializable {
       case None => spark.read.parquet(path)
     }
 
-  /** TIME TRAVEL within the GC retention window: read a SPECIFIC snapshot
-    * version — the current one or the retained previous one (older
-    * versions are swept; [[retainedVersions]] lists what's readable).
-    * The retention copies ARE yesterday's snapshot, so an incremental
-    * pipeline audits "today vs before the last merge" — row deltas,
-    * supersede verification, a reader pinned across a merge — with zero
-    * extra storage beyond what reader-grace already keeps.
-    */
-  def readIvfListsAsOf(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val fs = fileSystem(spark, path)
-    manifestVersions(fs, path).find(_._1 == version) match {
-      case Some((v, p)) => readSnapshot(spark, path, loadManifest(fs, v, p))
-      case None => sys.error(s"snapshot version $version not retained at $path " +
-        s"(retained: ${manifestVersions(fs, path).map(_._1).mkString(", ")})")
-    }
-  }
-
   private def readSnapshot(spark: SparkSession, path: String, m: ManifestSnapshot): DataFrame =
     if (m.entries.isEmpty) {
       val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson.getOrElse(
@@ -585,37 +533,6 @@ object Layout extends Serializable {
       value: Any): DataFrame =
     readIvfLists(spark, partitionPath(path, partCol, String.valueOf(value)))
 
-  /** Incrementally fold a MIXED-value delta (rows carrying `partCol`)
-    * into a [[writePartitionedIvf]] layout, with optional supersede
-    * tombstones `(vec_id, cell, partCol)` — victims route by the same
-    * partition value their rows live in (the pk→cell catalog carries the
-    * predicate column at scale, exactly like it carries `cell`). Each
-    * touched partition runs its OWN staged merge against its own
-    * manifest: crash isolation per partition (a failure mid-loop leaves
-    * every other partition's snapshot committed and the failed one
-    * recoverable by re-run, per [[mergeIvfDelta]]'s crash contract), and
-    * a value never seen before creates a fresh partition via the
-    * empty-live-set path. Driver-side work: one bounded distinct over
-    * the delta's partition values plus the per-partition merges'
-    * metadata. Returns value → (filesRewritten, filesTotal).
-    */
-  def mergePartitionedIvfUpsert(spark: SparkSession, path: String, partCol: String,
-      delta: DataFrame, tombstones: Option[DataFrame] = None): Map[String, (Int, Int)] = {
-    val touchedVals = delta.select(col(partCol)).distinct().collect() ++
-      tombstones.map(_.select(col(partCol)).distinct().collect()).getOrElse(Array.empty)
-    require(!touchedVals.exists(_.isNullAt(0)),
-      s"mergePartitionedIvfUpsert: $partCol contains NULL")
-    touchedVals.map(r => String.valueOf(r.get(0))).distinct.sorted.map { v =>
-      val sub = partitionPath(path, partCol, v)
-      val d = delta.filter(col(partCol).cast("string") === v).drop(partCol)
-      val t = tombstones.map(_.filter(col(partCol).cast("string") === v).drop(partCol))
-      v -> (t match {
-        case Some(tt) => mergeIvfDeltaUpsert(spark, sub, d, tt)
-        case None => mergeIvfDelta(spark, sub, d)
-      })
-    }.toMap
-  }
-
   /** The data files a probed cell set maps to, with their on-disk byte
     * sizes — the listing math a query router runs per batch at 100 TB:
     * each cell's owner file resolved from the manifest's min-cell spans
@@ -645,7 +562,7 @@ object Layout extends Serializable {
   }
 
   /** Incrementally fold a DELTA of newly assigned vectors (e.g. the
-    * streaming ingest path: `StreamingOps.assignVectors` → per-trigger
+    * ingest path: `StreamingOps.assignVectors` → per-batch
     * parquet) into an existing inverted-list layout, rewriting ONLY the
     * files whose cell span the delta lands in. At the capacity geometry
     * an ingest batch lands in a small cell subset; a full
@@ -702,8 +619,7 @@ object Layout extends Serializable {
     * crash window: the retention policy deliberately keeps the previous
     * snapshot's replaced files on disk until the NEXT merge, so a raw
     * scan double-counts them for the whole inter-merge interval. Every
-    * consumer must resolve through [[readIvfLists]] /
-    * [[readIvfListsAsOf]] ([[compact]] does). Returns
+    * consumer must resolve through [[readIvfLists]] ([[compact]] does). Returns
     * (filesRewritten, filesTotal).
     */
   def mergeIvfDelta(spark: SparkSession, listsPath: String, delta: DataFrame): (Int, Int) =
@@ -836,52 +752,6 @@ object Layout extends Serializable {
     sweepStaleSwaps(fs, listsPath)
     onStage("gc_done")
     (liveNames.size, newNames.size)
-  }
-
-  /** Metadata-only compaction TRIGGER: does the live snapshot hold more
-    * than `slack` × the byte-ideal file count? One manifest read plus
-    * O(files) file-status calls — the check a maintenance scheduler runs
-    * per partition per cycle at 100 TB, cheap enough to run always.
-    * False for pre-manifest and empty layouts (nothing to heal or no
-    * protocol to heal it through).
-    */
-  def needsCompaction(spark: SparkSession, path: String, targetFileBytes: Long,
-      slack: Double = 2.0): Boolean =
-    readManifest(spark, path) match {
-      case Some(m) if m.entries.nonEmpty =>
-        val fs = fileSystem(spark, path)
-        val total = m.names.map(n =>
-          fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$path/$n")).getLen).sum
-        val ideal = math.max(1L, math.ceil(total.toDouble / targetFileBytes).toLong)
-        m.entries.size > ideal * slack
-      case _ => false
-    }
-
-  /** Maintenance sweep over a [[writePartitionedIvf]] layout: compact IN
-    * PLACE ([[compactIvfInPlace]]) every partition whose live file count
-    * exceeds `slack` × its byte-ideal ([[needsCompaction]]) — partitions
-    * at a healthy grain are not touched (no I/O, no manifest bump, their
-    * pinned readers unaffected). Each partition compacts against its own
-    * manifest with its own crash/OCC isolation, like the per-partition
-    * merges. Returns value → (filesBefore, filesAfter) for the
-    * partitions that compacted.
-    */
-  def compactPartitionedIvf(spark: SparkSession, path: String, partCol: String,
-      targetFileBytes: Long, slack: Double = 2.0): Map[String, (Int, Int)] = {
-    val fs = fileSystem(spark, path)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val parts =
-      if (!fs.exists(dir)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(dir).filter(st =>
-        st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
-    parts.sortBy(_.getPath.getName).flatMap { d =>
-      val sub = s"$path/${d.getPath.getName}"
-      if (needsCompaction(spark, sub, targetFileBytes, slack)) {
-        val value = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(d.getPath.getName.stripPrefix(s"$partCol="))
-        Some(value -> compactIvfInPlace(spark, sub, targetFileBytes))
-      } else None
-    }.toMap
   }
 
   /** [[mergeIvfDelta]] with a stage hook for crash-window testing:
@@ -1068,8 +938,8 @@ object Layout extends Serializable {
     *
     *   - data files referenced by NO retained manifest version (the same
     *     retention rule the post-commit GC applies: the head and its
-    *     predecessor keep every file they list, so snapshot reads and
-    *     time travel within the retention window are unaffected),
+    *     predecessor keep every file they list, so a reader pinned to
+    *     either retained snapshot is unaffected),
     *   - stale `.merge_swap-*` staging dirs and `.manifest_tmp-*` residue,
     *   - manifest versions below head−1 (composing with the snapshot-GC
     *     retention policy).
@@ -1104,76 +974,5 @@ object Layout extends Serializable {
       fs.delete(p, false); deleted += 1
     }
     deleted + sweepStaleSwaps(fs, path)
-  }
-
-  /** At-most-once wrapper for streaming index maintenance: fold a
-    * micro-batch's delta into the layout keyed by its `batchId`, so a
-    * foreachBatch sink that restarts from a checkpoint and re-delivers a
-    * committed batch does NOT double-merge it. The ledger is a hidden
-    * marker dir per batch (`_graft_merge_ledger/batch-N`, invisible to
-    * parquet scans), checked before the merge and written after it —
-    * a crash between merge and marker re-merges on replay (fail toward
-    * duplication, the house stance; a table-format manifest would make
-    * marker+merge one atomic commit). Returns true when the merge ran,
-    * false when the ledger showed the batch already applied.
-    *
-    * LEDGER COMPACTION — the ledger stays O(1) entries, not one per
-    * batch forever (a long-lived stream would otherwise accumulate
-    * unbounded marker dirs — namenode/inode pressure at scale): batchIds
-    * from a foreachBatch sink are MONOTONE, and a checkpoint restart can
-    * only re-deliver the LAST committed batch, so after committing batch
-    * N every marker < N is dead and is pruned in the same call. A caller
-    * replaying batches out of order breaks this contract — monotone
-    * delivery is part of the single-writer contract above.
-    */
-  def mergeIvfDeltaOnce(spark: SparkSession, listsPath: String, delta: DataFrame,
-      batchId: Long): Boolean =
-    ledgerGated(spark, listsPath, batchId) {
-      mergeIvfDelta(spark, listsPath, delta); ()
-    }
-
-  /** [[mergeIvfDeltaOnce]] for a CDC/update stream: the at-most-once
-    * ledger around [[mergeIvfDeltaUpsert]], so a foreachBatch sink that
-    * folds UPDATES (new vectors + their victims' tombstones) into the
-    * index survives a checkpoint replay without double-applying either
-    * half — the supersede and the landing share one staged commit, and
-    * the ledger gates that commit as a unit.
-    */
-  def mergeIvfDeltaUpsertOnce(spark: SparkSession, listsPath: String, delta: DataFrame,
-      tombstones: DataFrame, batchId: Long): Boolean =
-    ledgerGated(spark, listsPath, batchId) {
-      mergeIvfDeltaUpsert(spark, listsPath, delta, tombstones); ()
-    }
-
-  /** The shared at-most-once gate: run `merge` only if `batchId` is not
-    * yet committed per the ledger, then commit its marker and compact.
-    * See [[mergeIvfDeltaOnce]] for the monotone-delivery contract.
-    */
-  private def ledgerGated(spark: SparkSession, listsPath: String,
-      batchId: Long)(merge: => Unit): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(listsPath), spark.sparkContext.hadoopConfiguration)
-    val ledger = new Path(s"$listsPath/_graft_merge_ledger")
-    val marker = new Path(ledger, s"batch-$batchId")
-    def batchOf(p: Path): Option[Long] =
-      Option(p.getName).filter(_.startsWith("batch-"))
-        .flatMap(n => scala.util.Try(n.stripPrefix("batch-").toLong).toOption)
-    val applied = fs.exists(marker) ||
-      // monotone contract: any surviving marker >= batchId proves this
-      // batch was committed before a later one pruned its own marker
-      (fs.exists(ledger) && fs.listStatus(ledger)
-        .flatMap(st => batchOf(st.getPath)).exists(_ >= batchId))
-    if (applied) false
-    else {
-      merge
-      fs.mkdirs(marker)
-      // compact: markers below the new high watermark are unreachable
-      // under monotone replay — prune them so the ledger stays O(1)
-      fs.listStatus(ledger).foreach { st =>
-        if (batchOf(st.getPath).exists(_ < batchId)) fs.delete(st.getPath, true)
-      }
-      true
-    }
   }
 }

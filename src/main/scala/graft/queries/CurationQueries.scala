@@ -36,22 +36,10 @@ object CurationQueries extends QueryModule {
     */
   private val ShardBudget = 2048L
 
-  /** The stateless curation stage as one column program over (doc_id, text,
-    * source): repetition signals → keep gate → stratified-sample gate.
-    * Shared by the batch queries and the streaming lift
-    * ([[graft.streaming.StreamingOps.curateDocs]]) — being per-row and
-    * deterministic it needs no watermark or state store, so batch and
-    * micro-batch execution are row-identical.
-    */
-  def curationStage(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    curationSignals(docs)
-      .filter(qualityGate && col("bucket") < sampleRate)
-      .select(col("doc_id"), col("source"), col("n_tokens"), col("bucket"))
-
   /** The per-row curation signals (repetition stats, sample bucket) with
     * pass-through columns — single source of truth for the gate thresholds
-    * shared by [[curationStage]], the t7/m6 queries' semantics, and
-    * [[graft.CorpusDemo]]'s staged funnel.
+    * shared by the t7/m6 queries' semantics and [[graft.CorpusDemo]]'s
+    * staged funnel.
     */
   def curationSignals(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs

@@ -128,6 +128,51 @@ object EmbeddingQueries extends QueryModule {
   private def seedAssigned(s: SparkSession, d: String): DataFrame =
     cachedAssigned(s, d, "ivfSeedAssigned", cellSeed(s, d))
 
+  /** v20/v21's per-cell drift terms over [[seedAssigned]]: `n_vecs`, the
+    * per-dim sums `sv` (LongVecSum — one partial-combined shuffle, ≤
+    * numCells rows), the seed centroid `cq`, and `dsc` = ‖n·c − Σq‖² by the
+    * n-scaled identity n²(c·c) − 2n(c·Σq) + (Σq·Σq) in DECIMAL(38,0).
+    */
+  private def cellDrift(s: SparkSession, d: String): DataFrame = {
+    val assigned = seedAssigned(s, d)
+    val cent = cellSeed(s, d)
+    // decimal-exact dot of two long arrays — runs on ≤ numCells rows,
+    // AFTER the LongVecSum shuffle, so the wide arithmetic is free
+    def decDot(a: Column, b: Column): Column = aggregate(
+      zip_with(a, b, (x, y) => x.cast("decimal(19,0)") * y.cast("decimal(19,0)")),
+      lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)"), (acc, v) => acc + v)
+    val nDec = col("n_vecs").cast("decimal(19,0)")
+    assigned.groupBy(col("cell"))
+      .agg(count(lit(1)).as("n_vecs"),
+        graft.functions.LongVecSum.column(col("q")).as("sv"))
+      .join(broadcast(cent), col("cell") === col("cid"))
+      .withColumn("dsc",
+        nDec * nDec * decDot(col("cq"), col("cq"))
+          - lit(2).cast("decimal(19,0)") * nDec * decDot(col("cq"), col("sv"))
+          + decDot(col("sv"), col("sv")))
+  }
+
+  /** SQL mirror of [[cellDrift]]'s inputs (CTEs `base`, `cent`, the
+    * assignment, `sums`, `cnt`, and `dots` with the three HUGEINT dot
+    * terms `ss`, `cs`, `cc`); v20 and v21 append their own CTEs.
+    */
+  private def driftSumsSql: String =
+    s"""WITH base AS (SELECT vec_id, q, ${inorm2Sql("q")} AS n2 FROM ($quantizedSql)),
+       |cent AS (SELECT vec_id AS cid, q AS cq FROM base WHERE vec_id < ${cellCapSql("base")}),
+       |${assignSql("base", "cent", Seq("q", "n2"), "cb", "cbassigned")},
+       |sums AS (SELECT cell, pos, CAST(sum(v) AS BIGINT) AS sv
+       |  FROM (SELECT cell, unnest(q) AS v, unnest(range(1, $Dim + 1)) AS pos FROM cbassigned)
+       |  GROUP BY cell, pos),
+       |cnt AS (SELECT cell, count(*) AS n_vecs FROM cbassigned GROUP BY cell),
+       |dots AS (SELECT s.cell,
+       |    CAST(sum(CAST(s.sv AS HUGEINT) * s.sv) AS HUGEINT) AS ss,
+       |    CAST(sum(CAST(c.cv AS HUGEINT) * s.sv) AS HUGEINT) AS cs,
+       |    CAST(sum(CAST(c.cv AS HUGEINT) * c.cv) AS HUGEINT) AS cc
+       |  FROM sums s JOIN (SELECT cid, unnest(cq) AS cv,
+       |      unnest(range(1, $Dim + 1)) AS pos FROM cent) c
+       |    ON c.cid = s.cell AND c.pos = s.pos
+       |  GROUP BY s.cell)""".stripMargin
+
   /** The tiered routers' shared LABELED assignment `(vec_id, q, n2, cell,
     * flabel)` — [[seedAssigned]] joined to labels, with v26/v27's
     * deterministic fine-class synthesis (vec_id % 50 == 7 rows move to
@@ -1227,43 +1272,14 @@ object EmbeddingQueries extends QueryModule {
         // (their vectors re-cluster) before global retrain is worth
         // 100 TB of re-assignment; empty/near-empty drifted cells say
         // shrink the codebook instead.
-        val assigned = seedAssigned(s, d)
-        val cent = cellSeed(s, d)
-        // decimal-exact dot of two long arrays — runs on ≤ numCells rows,
-        // AFTER the LongVecSum shuffle, so the wide arithmetic is free
-        def decDot(a: Column, b: Column): Column = aggregate(
-          zip_with(a, b, (x, y) => x.cast("decimal(19,0)") * y.cast("decimal(19,0)")),
-          lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)"), (acc, v) => acc + v)
-        val per = assigned.groupBy(col("cell"))
-          .agg(count(lit(1)).as("n_vecs"),
-            graft.functions.LongVecSum.column(col("q")).as("sv"))
-        val nDec = col("n_vecs").cast("decimal(19,0)")
         val quot = col("dsc").cast("double") /
           (col("n_vecs").cast("double") * col("n_vecs").cast("double"))
-        per.join(broadcast(cent), col("cell") === col("cid"))
-          .withColumn("dsc",
-            nDec * nDec * decDot(col("cq"), col("cq"))
-              - lit(2).cast("decimal(19,0)") * nDec * decDot(col("cq"), col("sv"))
-              + decDot(col("sv"), col("sv")))
+        cellDrift(s, d)
           .orderBy(quot.desc, col("cell").asc)
           .limit(10)
           .select(col("cell"), col("n_vecs"), round(quot, 6).as("drift"))
       },
-      Some(s"""WITH base AS (SELECT vec_id, q, ${inorm2Sql("q")} AS n2 FROM ($quantizedSql)),
-             |cent AS (SELECT vec_id AS cid, q AS cq FROM base WHERE vec_id < ${cellCapSql("base")}),
-             |${assignSql("base", "cent", Seq("q", "n2"), "cb", "cbassigned")},
-             |sums AS (SELECT cell, pos, CAST(sum(v) AS BIGINT) AS sv
-             |  FROM (SELECT cell, unnest(q) AS v, unnest(range(1, $Dim + 1)) AS pos FROM cbassigned)
-             |  GROUP BY cell, pos),
-             |cnt AS (SELECT cell, count(*) AS n_vecs FROM cbassigned GROUP BY cell),
-             |dots AS (SELECT s.cell,
-             |    CAST(sum(CAST(s.sv AS HUGEINT) * s.sv) AS HUGEINT) AS ss,
-             |    CAST(sum(CAST(c.cv AS HUGEINT) * s.sv) AS HUGEINT) AS cs,
-             |    CAST(sum(CAST(c.cv AS HUGEINT) * c.cv) AS HUGEINT) AS cc
-             |  FROM sums s JOIN (SELECT cid, unnest(cq) AS cv,
-             |      unnest(range(1, $Dim + 1)) AS pos FROM cent) c
-             |    ON c.cid = s.cell AND c.pos = s.pos
-             |  GROUP BY s.cell),
+      Some(s"""$driftSumsSql,
              |drift AS (SELECT t.cell, t.n_vecs,
              |    (CAST(t.n_vecs AS HUGEINT) * t.n_vecs * d.cc
              |      - 2 * CAST(t.n_vecs AS HUGEINT) * d.cs + d.ss) AS dsc
@@ -1295,23 +1311,10 @@ object EmbeddingQueries extends QueryModule {
         // DECIMAL(38,0) like v20, same n ≈ 4e14 exactness edge (Long
         // residual squares alone overflow once n ≳ 3e9); the oracle
         // mirrors with HUGEINT.
-        val assigned = seedAssigned(s, d)
-        val cent = cellSeed(s, d)
-        def decDot(a: Column, b: Column): Column = aggregate(
-          zip_with(a, b, (x, y) => x.cast("decimal(19,0)") * y.cast("decimal(19,0)")),
-          lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)"), (acc, v) => acc + v)
-        val per = assigned.groupBy(col("cell"))
-          .agg(count(lit(1)).as("n_vecs"),
-            graft.functions.LongVecSum.column(col("q")).as("sv"))
-        val nDec = col("n_vecs").cast("decimal(19,0)")
         val n2d = col("n_vecs").cast("double") * col("n_vecs").cast("double")
         val before = col("dsc").cast("double") / n2d
         val after = col("asc").cast("double") / n2d
-        per.join(broadcast(cent), col("cell") === col("cid"))
-          .withColumn("dsc",
-            nDec * nDec * decDot(col("cq"), col("cq"))
-              - lit(2).cast("decimal(19,0)") * nDec * decDot(col("cq"), col("sv"))
-              + decDot(col("sv"), col("sv")))
+        cellDrift(s, d)
           .withColumn("asc", aggregate(
             transform(col("sv"), x => {
               val r = (x % col("n_vecs")).cast("decimal(19,0)"); r * r
@@ -1322,21 +1325,7 @@ object EmbeddingQueries extends QueryModule {
           .select(col("cell"), col("n_vecs"),
             round(before, 6).as("drift_before"), round(after, 6).as("drift_after"))
       },
-      Some(s"""WITH base AS (SELECT vec_id, q, ${inorm2Sql("q")} AS n2 FROM ($quantizedSql)),
-             |cent AS (SELECT vec_id AS cid, q AS cq FROM base WHERE vec_id < ${cellCapSql("base")}),
-             |${assignSql("base", "cent", Seq("q", "n2"), "cb", "cbassigned")},
-             |sums AS (SELECT cell, pos, CAST(sum(v) AS BIGINT) AS sv
-             |  FROM (SELECT cell, unnest(q) AS v, unnest(range(1, $Dim + 1)) AS pos FROM cbassigned)
-             |  GROUP BY cell, pos),
-             |cnt AS (SELECT cell, count(*) AS n_vecs FROM cbassigned GROUP BY cell),
-             |dots AS (SELECT s.cell,
-             |    CAST(sum(CAST(s.sv AS HUGEINT) * s.sv) AS HUGEINT) AS ss,
-             |    CAST(sum(CAST(c.cv AS HUGEINT) * s.sv) AS HUGEINT) AS cs,
-             |    CAST(sum(CAST(c.cv AS HUGEINT) * c.cv) AS HUGEINT) AS cc
-             |  FROM sums s JOIN (SELECT cid, unnest(cq) AS cv,
-             |      unnest(range(1, $Dim + 1)) AS pos FROM cent) c
-             |    ON c.cid = s.cell AND c.pos = s.pos
-             |  GROUP BY s.cell),
+      Some(s"""$driftSumsSql,
              |aftr AS (SELECT s.cell,
              |    CAST(sum(CAST(s.sv % t.n_vecs AS HUGEINT) * (s.sv % t.n_vecs)) AS HUGEINT) AS asc2
              |  FROM sums s JOIN cnt t ON t.cell = s.cell GROUP BY s.cell),

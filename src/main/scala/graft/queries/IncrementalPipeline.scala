@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * doc), and read-time supersede (latest-version-wins minus tombstones
   * over an append-only log, the u7_mvcc_read operator) for deployments
   * that prefer cheap appends + a compaction sweep. The plain
-  * [[graft.layout.Layout.mergeIvfDelta]] append path remains the
-  * streaming sink's contract; IncrementalPipelineSpec pins both.
+  * [[graft.layout.Layout.mergeIvfDelta]] append path remains for
+  * insert-only deltas; IncrementalPipelineSpec pins both.
   */
 object IncrementalPipeline {
 

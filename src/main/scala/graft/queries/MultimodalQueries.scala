@@ -14,9 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * The oracle-checked queries use a deterministic fake decode (md5 of the
   * payload bytes) because the ORACLE engine has no image codec and must
-  * replay every derived quantity; the same batch stage with a real JVM
-  * codec is [[imageFeatures]] (`javax.imageio`, spec-checked on generated
-  * PNGs). Everything the engine is responsible for — binary schema,
+  * replay every derived quantity; a real codec would slot into the same
+  * batch stage. Everything the engine is responsible for — binary schema,
   * batching, partitioning, the executor-side batch loop, metadata math —
   * is real and oracle-checked. Payloads are the UTF-8 bytes of
   * `documents.text`.
@@ -53,49 +52,9 @@ object MultimodalQueries extends QueryModule {
   /** One decoded feature row per media payload. f0..f3 are 32-bit slices of
     * the payload digest — the deterministic STUB standing in for a real
     * image/audio feature extractor. The oracle-checked mm3 query keeps the
-    * stub (DuckDB must be able to replay it); [[imageFeatures]] below is
-    * the REAL-decode variant of the same batch stage.
+    * stub (DuckDB must be able to replay it).
     */
   final case class MediaFeatures(doc_id: Long, n_bytes: Int, f0: Long, f1: Long, f2: Long, f3: Long)
-
-  /** Real per-image features from a JVM-decodable payload (PNG/JPEG/BMP/GIF
-    * via `javax.imageio`). `None` for undecodable bytes.
-    */
-  final case class ImageFeatures(
-      doc_id: Long, n_bytes: Int,
-      width: Int, height: Int, n_bands: Int,
-      mean_luma: Double)
-
-  /** Batched real image decode over a `(doc_id, payload)` binary column —
-    * identical executor-side batch-loop shape as mm3, but with an actual
-    * codec: dimensions, band count, and mean first-band intensity per
-    * payload. Spec-checked on generated PNGs (no cross-engine oracle — the
-    * oracle engine has no image codec).
-    */
-  def imageFeatures(mediaDf: DataFrame, batchSize: Int = DecodeBatchSize): DataFrame = {
-    val spark = mediaDf.sparkSession
-    import spark.implicits._
-    mediaDf.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.flatMap { case (id, payload) =>
-        try {
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-          if (img == null) None
-          else {
-            val r = img.getRaster
-            var sum = 0.0
-            var y = 0
-            while (y < r.getHeight) {
-              var x = 0
-              while (x < r.getWidth) { sum += r.getSample(x, y, 0); x += 1; }
-              y += 1
-            }
-            Some(ImageFeatures(id, payload.length, r.getWidth, r.getHeight,
-              r.getNumBands, sum / (r.getWidth.toLong * r.getHeight)))
-          }
-        } catch { case _: Exception => None }
-      }))
-      .toDF()
-  }
 
   override val defs: Seq[QueryDef] = Seq(
     QueryDef(
@@ -283,7 +242,7 @@ object MultimodalQueries extends QueryModule {
         // within a few bits of the original, so dedup is hamming-radius
         // search over 56-bit signatures. The phash here is the
         // deterministic decode stand-in (the real one is 8×8-DCT over
-        // [[imageFeatures]]' batch seam — same 56-bit column either way):
+        // mm3's batch decode stage — same 56-bit column either way):
         // every group of 16 doc_ids shares a base signature with 0–3
         // hash-positioned bit flips, planting the near-dup structure a
         // re-encode produces. Pairing is d5's pigeonhole shape: hamming ≤ 3

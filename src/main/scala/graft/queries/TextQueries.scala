@@ -338,23 +338,6 @@ object TextQueries extends QueryModule {
           col("sum_bits") * 10 <= col("n_tokens") * 41).as("in_band"))
   }
 
-  /** Serving-side preparation for [[unigramSurprisal]]'s broadcast seam:
-    * the top-K most frequent tokens (lowest bit cost first, token as the
-    * tiebreak) collected as a (token → bits) map for map-only scoring
-    * ([[graft.streaming.StreamingOps.scoreDocs]]). The collect is bounded
-    * by topK — serving prep, not a corpus action.
-    */
-  def unigramBitsTable(docs: DataFrame, topK: Int): Map[String, Long] = {
-    val toks = docs.select(explode(tokens(col("text"))).as("tok"))
-    val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-    val total = vocab.agg(sum(col("cnt")).as("n_total"))
-    vocab.crossJoin(broadcast(total))
-      .select(col("tok"), (length(bin(expr("n_total div cnt"))) - 1).cast("long").as("bits"))
-      .orderBy(col("bits").asc, col("tok").asc)
-      .limit(topK)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-  }
-
   override val defs: Seq[QueryDef] = Seq(
     QueryDef(
       "t1_token_stats",

@@ -1,274 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming surface of the engine.
+/** The curation funnel's and the incremental paths' per-document operators.
   *
-  * The reference pipeline is batch-only (SURVEY.md §2.10) — these ops are the
-  * continuous-ingest lift of its event-shaped operators, written as plain
-  * `DataFrame => DataFrame` transformations so the SAME code runs in batch
-  * (`spark.read` input) and streaming (`spark.readStream` input): Spark's
-  * unified model. Streaming-only semantics (watermarks, state timeouts) are
-  * no-ops under batch execution.
-  *
-  * Scale notes: the stateful ops key their state by a high-cardinality
-  * column (`user_id`, `event_id`, LSH band buckets), so state stores shard
-  * evenly across executors, and watermarks bound the keyed state — with
-  * two documented exceptions: [[nearDupHits]] state is bounded by the
-  * distinct-bucket count (vocabulary-, not corpus-, scale; TTL note on the
-  * method), and [[packDocs]]' sequential-offset contract serializes each
-  * `source` through one task (scaling note on the method).
+  * Each is a `DataFrame => DataFrame` (or `Dataset`) transformation that
+  * CorpusDemo, perfbench's `curate_docs`, AnnDemo and IncrementalDemo run in
+  * batch: the near-dup band guard ([[nearDupBandRows]] → [[nearDupHits]]),
+  * the fuzzy-decontamination screen ([[collectEvalDocs]] →
+  * [[screenDocsFuzzy]]) and the ingest-time IVF cell assignment
+  * ([[assignVectors]]). All but [[nearDupHits]] are stateless and map-only;
+  * [[nearDupHits]] keeps one long per LSH band bucket (state bounded by the
+  * distinct-bucket count — vocabulary-, not corpus-, scale; TTL note on the
+  * method).
   */
 object StreamingOps {
-
-  /** One input event. `ts` is event time. */
-  final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long, event_type: String, value: Double)
-
-  /** One completed (or final-on-shutdown) user session. */
-  final case class Session(user_id: Long, start_ts: Long, end_ts: Long, n_events: Long, total_value: Double)
-
-  /** Open-session accumulator held in the state store (public: the state
-    * encoder's generated code must reach its accessors).
-    */
-  final case class SessionState(start: Long, end: Long, n: Long, total: Double)
-
-  /** Tumbling 10-minute counts per event type. Late data beyond 15 minutes
-    * is dropped by the watermark (streaming); under batch the watermark is
-    * ignored and this is exactly the `e_tumbling_window` aggregation.
-    */
-  def tumblingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "15 minutes")
-      .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n_events"), col("total_value"))
-
-  /** Idempotent-ingest guard: exactly-once per `event_id` within the
-    * watermark horizon (the `readStream` lift of the reference's
-    * one-file-per-frame idempotency, SURVEY.md §2.10).
-    *
-    * Streaming uses `dropDuplicatesWithinWatermark`: plain
-    * `dropDuplicates("event_id")` never evicts — the watermark only bounds
-    * dedup state when the event-time column is part of the keys, so a
-    * non-time-keyed dedup retains every id ever seen and grows without
-    * bound. WithinWatermark keeps each id only for the watermark delay,
-    * which is exactly the replay horizon the guard promises.
-    */
-  def dedupEvents(events: DataFrame): DataFrame = {
-    val wm = events.withWatermark("ts", "15 minutes")
-    if (events.isStreaming) wm.dropDuplicatesWithinWatermark("event_id")
-    else wm.dropDuplicates("event_id")
-  }
-
-  /** All undecided session fragments for one user — disjoint, kept sorted
-    * by start (public: the state encoder's generated code must reach it).
-    */
-  final case class SessionsState(sessions: Seq[SessionState])
-
-  /** Stateful gap sessionization: a session closes after `gapMinutes` of
-    * user inactivity. Same 30-minute-gap semantics as the batch
-    * `e_sessionize` query.
-    *
-    * A session emits only once the watermark passes its gap horizon
-    * (`end + gap <= watermark`) — emitting the moment a within-trigger gap
-    * appears would be wrong whenever a late-but-admissible event
-    * (`ts >= watermark`) later extends or BRIDGES provisionally-separate
-    * fragments. So state holds every undecided fragment, new events merge
-    * into them (union of fragments re-coalesced, so a bridging event fuses
-    * two fragments and the merged start is the true minimum), and a
-    * fragment is final exactly when `end + gap <= watermark`: any future
-    * admissible event has `ts >= watermark >= end + gap`, which can never
-    * merge backward.
-    *
-    * Batch execution has the whole input at once: the same coalesce runs as
-    * a pure per-group fold and every session emits, including the trailing
-    * open one — the batch lag-window semantics.
-    */
-  def sessionize(events: Dataset[Event], gapMinutes: Int = 30): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    val gapMs = gapMinutes * 60L * 1000L
-
-    def fragments(rows: Seq[Event]): Seq[SessionState] =
-      rows.sortBy(e => (e.ts.getTime, e.event_id))
-        .map(e => SessionState(e.ts.getTime, e.ts.getTime, 1, e.value))
-
-    def coalesceFragments(all: Seq[SessionState]): Seq[SessionState] =
-      all.sortBy(s => (s.start, s.end)).foldLeft(Vector.empty[SessionState]) { (acc, s) =>
-        acc.lastOption match {
-          case Some(p) if s.start - p.end <= gapMs =>
-            acc.init :+ SessionState(
-              p.start, math.max(p.end, s.end), p.n + s.n, p.total + s.total)
-          case _ => acc :+ s
-        }
-      }
-
-    if (!events.isStreaming)
-      return events.groupByKey(_.user_id).flatMapGroups { (userId, rows) =>
-        coalesceFragments(fragments(rows.toSeq))
-          .map(s => Session(userId, s.start, s.end, s.n, s.total)).iterator
-      }
-
-    def update(
-        userId: Long,
-        rows: Iterator[Event],
-        state: GroupState[SessionsState]
-    ): Iterator[Session] = {
-      val wm = state.getCurrentWatermarkMs()
-      val merged = coalesceFragments(
-        state.getOption.map(_.sessions).getOrElse(Seq.empty) ++ fragments(rows.toSeq))
-      val (fin, keep) = merged.partition(s => s.end + gapMs <= wm)
-      if (keep.nonEmpty) {
-        state.update(SessionsState(keep))
-        // kept fragments have end + gap > wm by construction, so the
-        // timeout is always in the future as EventTimeTimeout requires
-        state.setTimeoutTimestamp(keep.map(_.end + gapMs).min)
-      } else state.remove()
-      fin.map(s => Session(userId, s.start, s.end, s.n, s.total)).iterator
-    }
-
-    events
-      .withWatermark("ts", "15 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  /** Stream-stream interval self-join: pair each click with the same
-    * user's error events within ±10 minutes of it. Both sides carry
-    * watermarks, and the join condition bounds event-time distance, so each
-    * state store retains at most the watermark+interval horizon — the
-    * stream-stream join shape that stays bounded at any throughput. The
-    * same code runs in batch (watermarks become no-ops, the interval join
-    * is an ordinary range join).
-    */
-  def clickErrorCorrelation(events: DataFrame): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .withWatermark("ts", "10 minutes")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"), col("event_id").as("click_id"))
-    val errors = events.filter(col("event_type") === "error")
-      .withWatermark("ts", "10 minutes")
-      .select(col("user_id").as("e_user"), col("ts").as("error_ts"), col("event_id").as("error_id"))
-    clicks.join(
-      errors,
-      expr("""c_user = e_user AND
-              error_ts BETWEEN click_ts - INTERVAL 10 MINUTES AND click_ts + INTERVAL 10 MINUTES""")
-    ).select(col("c_user").as("user_id"), col("click_id"), col("error_id"), col("click_ts"), col("error_ts"))
-  }
-
-  /** Stream-static enrichment: join the event stream against a static
-    * dimension (label codebook / category map — the J1/J3 shape lifted to
-    * streaming). The static side is broadcast into every micro-batch, so
-    * the stream stays map-only and STATELESS — no watermark, no state
-    * store; unmatched events get a `type_<event_type>` fallback label (the
-    * same coalesce-fallback shape as the batch J3 path,
-    * matterport_processor.py:205-208).
-    */
-  def enrichWithDim(events: DataFrame, dim: DataFrame): DataFrame =
-    events.join(broadcast(dim), Seq("event_type"), "left")
-      .withColumn("label", coalesce(col("label"), concat(lit("type_"), col("event_type"))))
-
-  /** Streaming corpus curation: the stateless repetition-filter +
-    * stratified-sample stage ([[graft.queries.CurationQueries.curationStage]])
-    * applied to a document stream. Per-row, deterministic, no watermark and
-    * no state store — the shape that lets ingest-time curation run on the
-    * live firehose with row-identical batch/stream results.
-    */
-  def curateDocs(docs: DataFrame): DataFrame =
-    graft.queries.CurationQueries.curationStage(docs)
-
-  /** Streaming LM-surprisal scoring — the serving seam documented on
-    * [[graft.queries.TextQueries.unigramSurprisal]] realized: the trained
-    * vocabulary truncates to a broadcast top-K (token → whole-bit cost)
-    * and every document scores MAP-ONLY against it (exact integer sum;
-    * out-of-vocabulary tokens cost `oovBits` — one more bit than the
-    * rarest trained token, the standard backoff). Stateless: no shuffle,
-    * no watermark, no state store, so batch and streaming results are
-    * row-identical; tokenization matches the engine-wide
-    * `[a-z0-9]+`-on-lowercase contract.
-    */
-  def scoreDocs(docs: DataFrame, vocabBits: Map[String, Long]): DataFrame = {
-    // closure-captured, NOT sparkContext.broadcast: an explicit broadcast
-    // per call is never destroyed and leaks across repeated invocations,
-    // while the top-K-bounded map ships fine with the task closure
-    val oovBits = if (vocabBits.isEmpty) 1L else vocabBits.values.max + 1L
-    val score = udf { (text: String) =>
-      if (text == null) (0L, 0L)
-      else {
-        var n = 0L; var sum = 0L
-        val it = "[a-z0-9]+".r.findAllIn(text.toLowerCase)
-        while (it.hasNext) { sum += vocabBits.getOrElse(it.next(), oovBits); n += 1 }
-        (n, sum)
-      }
-    }
-    docs.withColumn("s", score(col("text")))
-      .select(col("doc_id"), col("s._1").as("n_tokens"), col("s._2").as("sum_bits"))
-  }
-
-  /** Eval-set serving table for [[screenVectors]]: the `vec_id % 97 = 0`
-    * eval vectors, quantized exactly like the batch embedding stack
-    * (round(x·1000) — QuantizeVec). Bounded collect BY CONSTRUCTION: the
-    * eval set is benchmark-sized (thousands) at any corpus scale — the
-    * same serving seam as [[scoreDocs]]' top-K vocabulary.
-    */
-  def collectEvalVectors(embeddings: DataFrame): Seq[(Long, Array[Long])] =
-    embeddings.filter(col("vec_id") % 97 === 0)
-      .select(col("vec_id"), graft.functions.quantizeVec(col("embedding"), 1000).as("q"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toSeq.sortBy(_._1)
-
-  /** Streaming semantic-decontamination guard — the v13 operator
-    * (EmbeddingQueries `v13_semantic_decontaminate`) as an ingest-time
-    * screen: each arriving vector scores its max cosine against the
-    * closure-captured eval set and is flagged when it exceeds `threshold`.
-    * Stateless and map-only (one row in, one row out; no shuffle, no
-    * watermark, no state store), so batch and streaming results are
-    * row-identical — the batch op's broadcast-join + partial-agg argmax
-    * collapses to a per-row loop because the eval side is already
-    * in-memory-sized (that is what MAKES it broadcastable in batch).
-    * Determinism contract matches v13 exactly: integer dot/norms, one
-    * double divide per cosine ((cos, -eval_id) tie rule → lowest eval id),
-    * `round(·, 6)` on the reported max only, the flag on the unrounded
-    * value. Input needs (vec_id, q: array<long>) — quantize upstream with
-    * the same QuantizeVec as [[collectEvalVectors]].
-    */
-  def screenVectors(vecs: DataFrame, evals: Seq[(Long, Array[Long])],
-                    threshold: Double = 0.4): DataFrame = {
-    // closure-captured, not sparkContext.broadcast — see scoreDocs
-    val evalArr = evals.sortBy(_._1).toArray
-    // the eval set is fixed-dim by construction; pin that here so a
-    // malformed input vector FAILS the batch instead of silently scoring a
-    // truncated (deflated) cosine and passing the contamination screen
-    val edim = if (evalArr.isEmpty) -1 else evalArr.head._2.length
-    require(evalArr.forall(_._2.length == edim),
-      "screenVectors: eval vectors must share one dimension")
-    val screen = udf { (q: Seq[Long]) =>
-      if (q == null || evalArr.isEmpty) (-1L, 0.0, false)
-      else {
-        val qa = q.toArray
-        require(qa.length == edim,
-          s"screenVectors: input dim ${qa.length} != eval dim $edim")
-        var n2 = 0L
-        var i = 0
-        while (i < qa.length) { n2 += qa(i) * qa(i); i += 1 }
-        val qn = math.sqrt(n2.toDouble)
-        var bestCos = Double.NegativeInfinity
-        var bestId = -1L
-        for ((eid, eq) <- evalArr) {
-          var dot = 0L; var en2 = 0L; var j = 0
-          while (j < edim) { dot += qa(j) * eq(j); j += 1 }
-          j = 0
-          while (j < eq.length) { en2 += eq(j) * eq(j); j += 1 }
-          val cos = dot.toDouble / (qn * math.sqrt(en2.toDouble))
-          // ascending-eid iteration + strict > replays max(struct(cos, -eid))
-          if (cos > bestCos) { bestCos = cos; bestId = eid }
-        }
-        (bestId, bestCos, bestCos >= threshold)
-      }
-    }
-    vecs.withColumn("m", screen(col("q")))
-      .select(col("vec_id"), col("m._1").as("eval_id"),
-        round(col("m._2"), 6).as("max_cos"), col("m._3").as("contaminated"))
-  }
 
   /** Eval-side serving index for [[screenDocsFuzzy]], built from an eval
     * document frame `(doc_id, text, …)` with the exact catalog math
@@ -276,7 +24,7 @@ object StreamingOps {
     * (band_idx, band) bucket to its eval doc ids (ascending), `sets` maps
     * eval doc id to its shingle digest set. Bounded collect BY
     * CONSTRUCTION — the eval set is benchmark-sized (thousands) at any
-    * corpus scale, the same serving seam as [[collectEvalVectors]].
+    * corpus scale.
     */
   case class EvalDocIndex(bands: Map[(Int, String), Array[Long]],
                           sets: Map[Long, Array[Long]])
@@ -289,10 +37,8 @@ object StreamingOps {
     EvalDocIndex(bands, rows.map(r => r._1 -> r._2).toMap)
   }
 
-  /** Streaming fuzzy-decontamination guard — the d17 operator
-    * (DedupQueries `d17_fuzzy_decontaminate`) as an ingest-time screen,
-    * completing the decontamination pillar's batch/stream parity story
-    * (d9-exact has the hash guard, v13-semantic has [[screenVectors]]):
+  /** Fuzzy-decontamination screen — the d17 operator
+    * (DedupQueries `d17_fuzzy_decontaminate`) as a per-document screen:
     * an arriving doc is shingled and banded by the SAME stateless column
     * expressions as the batch side, then checked in-row against the
     * closure-captured eval band index; band collisions are exact-Jaccard
@@ -310,7 +56,9 @@ object StreamingOps {
     */
   def screenDocsFuzzy(docs: DataFrame, eval: EvalDocIndex,
                       threshold: Double = 0.5): DataFrame = {
-    // closure-captured, not sparkContext.broadcast — see scoreDocs
+    // closure-captured, NOT sparkContext.broadcast: an explicit broadcast
+    // per call is never destroyed and leaks across repeated invocations,
+    // while the benchmark-sized eval index ships fine with the task closure
     val bandIdx = eval.bands
     val setsMap = eval.sets
     def r6(x: Double) = // Spark Round(double, 6): valueOf-path BigDecimal, HALF_UP
@@ -362,6 +110,7 @@ object StreamingOps {
         col("m._2").as("eval_doc_id"), col("m._3").as("max_jaccard"))
   }
 
+
   /** Ingest-time IVF index maintenance: assign each arriving vector to its
     * cell against the closure-captured codebook — the streaming sibling of
     * the batch corpus→cell index (EmbeddingQueries' shared assignment) and
@@ -384,7 +133,7 @@ object StreamingOps {
   def assignVectors(vecs: DataFrame, codebook: Seq[(Long, Array[Long])],
                     routed: Boolean = graft.GraftConfig.active.ivfRouted,
                     routeWidth: Int = graft.GraftConfig.active.ivfRouteWidth): DataFrame = {
-    // closure-captured, not sparkContext.broadcast — see scoreDocs
+    // closure-captured, not sparkContext.broadcast — see screenDocsFuzzy
     val cents = codebook.sortBy(_._1).toArray
     require(cents.nonEmpty, "assignVectors needs a non-empty codebook")
     val dim = cents.head._2.length
@@ -451,45 +200,6 @@ object StreamingOps {
     vecs.withColumn("cell", assignF(col("q")))
   }
 
-  /** Streaming router-histogram maintenance — the CDC form of
-    * [[graft.queries.IncrementalPipeline.updateHistogram]]: the index
-    * merge's change feed arrives as (cell, label, delta) rows (+1 per
-    * assigned vector — [[assignVectors]] upstream supplies the cell —
-    * −1 per tombstoned victim at its old coordinates) and a stateful
-    * streaming aggregation keeps the running per-(cell, label) candidate
-    * counts the v24 adaptive-nprobe router reads. State is
-    * histogram-sized (≤ C × |labels| rows at ANY ingest volume — the
-    * same bound as the batch fold). One honest divergence from the batch
-    * fold: an emptied coordinate's state row lingers at 0 (a streaming
-    * aggregation never deletes state on value), so the SERVED view
-    * filters `n_cl > 0` — the zero-drop rule applied at read time;
-    * batch/stream parity under that filter is spec-pinned against
-    * `updateHistogram` over the same change feed.
-    */
-  def histogramDeltas(changes: DataFrame): DataFrame =
-    changes.groupBy(col("cell"), col("label"))
-      .agg(sum(col("delta")).cast("long").as("n_cl"))
-
-  /** Production state-store settings for the stateful guards (band-claim
-    * dedup, sequence packing, sessionization): the RocksDB provider keeps
-    * state off-heap and disk-spillable, so a band-claim store with one
-    * long per DISTINCT bucket survives corpus-scale key counts that would
-    * OOM the default in-memory HDFS-backed provider; changelog
-    * checkpointing ships per-batch deltas instead of re-snapshotting the
-    * full store. Session-level SQL confs — apply before `start()` (e.g.
-    * `conf.foreach { case (k, v) => spark.conf.set(k, v) }`); each
-    * streaming query captures them at start.
-    */
-  val RocksDbStateStoreConf: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
-    // one shared block-cache/write-buffer budget across all loaded stores
-    // instead of per-store unbounded native allocations
-    "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true")
-
-  /** One incoming document (streaming near-dup input). */
-  final case class Doc(doc_id: Long, text: String)
 
   /** One doc→LSH-band assignment (stage-1 output of the near-dup guard). */
   final case class BandRow(band: String, band_idx: Int, doc_id: Long)
@@ -497,7 +207,7 @@ object StreamingOps {
   /** A later document colliding with the bucket's first claimant. */
   final case class BandHit(doc_id: Long, band_idx: Int, rep_doc_id: Long)
 
-  /** Stage 1 of the streaming near-dup guard: doc → 4 LSH band keys, the
+  /** Stage 1 of the near-dup band guard: doc → 4 LSH band keys, the
     * SAME signature math as the batch dedup family (3-gram shingle digests →
     * 8 minhash slices → md5 band pairs; DedupQueries constants) via the
     * fused codegen expressions — stateless, map-only.
@@ -535,118 +245,4 @@ object StreamingOps {
     rows.groupByKey(r => s"${r.band_idx}:${r.band}")
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
   }
-
-  /** Packing input: a curated document with its token count. */
-  final case class PackIn(doc_id: Long, source: String, n_tokens: Long)
-
-  /** Packing output: the document's pack assignment. */
-  final case class PackOut(doc_id: Long, source: String, n_tokens: Long,
-      start_offset: Long, pack_id: Long)
-
-  /** Streaming sequence packing — the stateful lift of the batch t8 query:
-    * per source, a running token offset lives in the state store and each
-    * arriving document is assigned `pack_id = start_offset / budget`.
-    * Within a trigger, documents fold in doc_id order, so batch execution
-    * of the same function (empty state, whole group in one call) equals the
-    * t8 prefix-sum window exactly when arrival order follows doc_id —
-    * spec'd. State per source is ONE long.
-    *
-    * Scaling unit: the sequential-offset contract serializes each `source`
-    * through one task — parallelism equals the number of sources, NOT the
-    * cluster size. That is the honest cost of globally contiguous offsets;
-    * a firehose-scale deployment keys by `(source, shard)` instead and
-    * reconciles per-shard offsets downstream (one add per shard), trading
-    * global contiguity for even sharding.
-    */
-  def packDocs(docs: Dataset[PackIn], budget: Long = 4096L): Dataset[PackOut] = {
-    import docs.sparkSession.implicits._
-    def update(source: String, rows: Iterator[PackIn], state: GroupState[Long]): Iterator[PackOut] = {
-      var offset = state.getOption.getOrElse(0L)
-      val out = rows.toSeq.sortBy(_.doc_id).map { r =>
-        val o = offset
-        offset += r.n_tokens
-        PackOut(r.doc_id, source, r.n_tokens, o, o / budget)
-      }
-      state.update(offset)
-      out.iterator
-    }
-    docs.groupByKey(_.source)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** Rate-cap output: one decision per event (kept = admitted to the
-    * capped corpus). Emitting the decision rather than only survivors keeps
-    * the downstream audit (w8's kept/dropped tallies) a stateless
-    * aggregation over this stream.
-    */
-  final case class RateDecision(event_id: Long, user_id: Long, hr: Long,
-      event_type: String, kept: Boolean)
-
-  /** Streaming per-user hourly rate capping — the stateful lift of the
-    * batch `w8_user_rate_cap` query: at most `cap` events survive per
-    * (user, hour), decided in (ts, event_id) order.
-    *
-    * State per (user, hour) key is ONE long (the kept-count, saturating at
-    * `cap`), and EventTimeTimeout evicts a key as soon as the watermark
-    * passes its hour close — no admissible event can land in a closed hour,
-    * so total state is bounded by the number of user-hour keys inside the
-    * watermark horizon, independent of stream length. Key cardinality
-    * (user × hour) grows with the corpus, so the state store shards evenly —
-    * the same scaling argument as the batch window's (user, hr) partition.
-    *
-    * Within one trigger, events fold in (ts, event_id) order, so batch
-    * execution of the same decision function (empty state, whole group in
-    * one call) equals the w8 rank exactly; across triggers the stream is
-    * order-faithful when arrival follows event time within each key — the
-    * same arrival contract as [[packDocs]] and [[nearDupHits]], and what a
-    * watermark-disciplined source delivers.
-    */
-  def rateCapEvents(events: Dataset[Event], cap: Int = 3): Dataset[RateDecision] = {
-    import events.sparkSession.implicits._
-    val hourMs = 3600000L
-
-    def decide(user: Long, hr: Long, kept0: Long, rows: Seq[Event]): (Long, Seq[RateDecision]) = {
-      var kept = kept0
-      val out = rows.sortBy(e => (e.ts.getTime, e.event_id)).map { e =>
-        val keep = kept < cap
-        if (keep) kept += 1
-        RateDecision(e.event_id, user, hr, e.event_type, keep)
-      }
-      (kept, out)
-    }
-
-    if (!events.isStreaming)
-      return events.groupByKey(e => (e.user_id, e.ts.getTime / hourMs))
-        .flatMapGroups { (key: (Long, Long), rows: Iterator[Event]) =>
-          decide(key._1, key._2, 0L, rows.toSeq)._2.iterator
-        }
-
-    def update(key: (Long, Long), rows: Iterator[Event],
-        state: GroupState[Long]): Iterator[RateDecision] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      val (user, hr) = key
-      val (kept, out) = decide(user, hr, state.getOption.getOrElse(0L), rows.toSeq)
-      state.update(kept)
-      // evict once the watermark passes the hour close (timeout timestamps
-      // must sit strictly past the current watermark, hence the max for
-      // hours that are already closing when their last event arrives)
-      state.setTimeoutTimestamp(math.max((hr + 1) * hourMs, state.getCurrentWatermarkMs() + 1))
-      out.iterator
-    }
-
-    events
-      .withWatermark("ts", "15 minutes")
-      .groupByKey(e => (e.user_id, e.ts.getTime / hourMs))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  /** File-source ingest of an event directory as a stream — the S1
-    * JSON-directory scan lifted to `readStream` (SURVEY.md §2.10). One file
-    * per micro-batch keeps replays deterministic.
-    */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", 1)
-      .json(dir)
 }

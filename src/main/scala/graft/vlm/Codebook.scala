@@ -158,10 +158,6 @@ object Codebook {
       round(avg(col("n_locations")), 4).as("avg_locations")
     )
 
-  /** A8: label distribution over the kept codebook. */
-  def labelDistribution(codebook: DataFrame): DataFrame =
-    codebook.groupBy(col("label")).agg(count(lit(1)).as("n_instances"))
-
   /** A15: stage tallies + success rate over all inference outcomes. */
   def successRates(rows: Dataset[CodebookRow]): DataFrame =
     rows.toDF()

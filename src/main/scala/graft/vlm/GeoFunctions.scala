@@ -149,13 +149,4 @@ object GeoFunctions {
         Box3d.Box.fromCenterDimsEuler(a(0), a(1), a(2), a(3), a(4), a(5), a(6), a(7), a(8)),
         Box3d.Box.fromCenterDimsEuler(b(0), b(1), b(2), b(3), b(4), b(5), b(6), b(7), b(8)))
   }
-
-  /** Quaternion (x,y,z,w) → normalized Euler angles struct — the 9-DoF
-    * conversion chain (data_processing/utils.py:46-90).
-    */
-  val quatToNormalizedEulerUdf = udf {
-    (qx: Double, qy: Double, qz: Double, qw: Double) =>
-      val (p, yw, r) = Geo.quaternionToEulerDeg(qx, qy, qz, qw)
-      (Geo.normalizeAngle(p), Geo.normalizeAngle(yw), Geo.normalizeAngle(r))
-  }
 }

@@ -140,17 +140,6 @@ object Ingest {
         col("sample_image_id"), col("content_hash"))
   }
 
-  /** S2: single-document load. */
-  def readFrame(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(FrameSchema.frameType).json(path)
-      .withColumn("_source_file", input_file_name())
-
-  /** F1: bbox-availability gate with the 2D→3D fallback policy
-    * (data_loader.py:88-106; generate_qa.py:111-122).
-    */
-  def withUsableBoxes(frames: DataFrame): DataFrame =
-    frames.filter(size(col("bounding_boxes_3d")) > 0 || size(col("bounding_boxes_2d")) > 0)
-
   /** K1: snapshot write partitioned by dataset/split. Partitioning uses
     * COPIES of the two columns (`dataset_p`/`split_p` directories):
     * `partitionBy` strips its columns from the payload, and the S1 reader

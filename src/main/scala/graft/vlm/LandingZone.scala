@@ -53,9 +53,6 @@ object LandingZone {
     out
   }
 
-  /** @deprecated naming kept for compatibility; [[rawU16Decoder]] semantics. */
-  val stubDecoder: RasterDecoder = rawU16Decoder
-
   /** HDF5 landing decoder (S7): reads the Hypersim-style single `"dataset"`
     * array via the pure-JVM [[Hdf5Lite]] subset reader. Values pass through
     * unscaled — Hypersim depth is float meters already

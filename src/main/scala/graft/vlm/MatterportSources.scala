@@ -23,12 +23,6 @@ object MatterportSources {
     "array<struct<x:double,y:double,z:double,xl:double,yl:double,zl:double," +
       "pitch:double,yaw:double,roll:double,category:string,label_id:bigint>>"
 
-  def loadTables(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = (
-    spark.read.parquet(s"$dir/images.parquet"),
-    spark.read.parquet(s"$dir/instances.parquet"),
-    spark.read.parquet(s"$dir/categories.parquet")
-  )
-
   /** @param poses optional `(scene_id, frame_id, extrinsics)` camera poses
     *              (from the `matterport_camera_poses` txt files, readable
     *              with [[RawSources.readExtrinsics]]-style parsing).

@@ -36,9 +36,7 @@ object QaTasks {
   val SizeDistractorRange = (0.4, 1.8)
   val ObjObjMinDistance = 0.2
   val ObjObjMaxDistance = 20.0
-  val ObjObjDistractorRange = (0.5, 1.5)
   val CamObjMinDistance = 0.1
-  val RelPosThreshold = 0.1
   val V1SamplesPerFrame = 2
 
   /** Skew guard for the J8 pair tasks (SURVEY §7.4 item 2): a frame with n

@@ -1,6 +1,5 @@
 package graft.layout
 
-import graft.functions.Morton
 import graft.vlm.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -35,33 +34,6 @@ class LayoutSpec extends SparkSpec {
   private def liveFileRanges(path: String, c: String): Seq[(Double, Double)] =
     dfFileRanges(Layout.readIvfLists(spark, path), c)
 
-  test("Morton interleave: known values and per-dimension bit recovery") {
-    assert(Morton.interleave(0L, 0L) === 0L)
-    assert(Morton.interleave(1L, 0L) === 1L)
-    assert(Morton.interleave(0L, 1L) === 2L)
-    assert(Morton.interleave(3L, 3L) === 15L)
-    // against a naive bit loop on randomized inputs
-    def slow(a: Long, b: Long): Long =
-      (0 until 31).foldLeft(0L) { (z, i) =>
-        z | (((a >> i) & 1L) << (2 * i)) | (((b >> i) & 1L) << (2 * i + 1))
-      }
-    val rnd = new scala.util.Random(7)
-    for (_ <- 1 to 200) {
-      val a = rnd.nextLong() & 0x7fffffffL
-      val b = rnd.nextLong() & 0x7fffffffL
-      assert(Morton.interleave(a, b) === slow(a, b))
-    }
-  }
-
-  test("z_interleave expression matches Morton in codegen and SQL registration") {
-    val df = Seq((3L, 5L), (0L, 0L), (123456L, 654321L)).toDF("a", "b")
-    val got = df.select(graft.functions.zInterleave($"a", $"b")).as[Long].collect()
-    assert(got.toSeq === Seq(Morton.interleave(3, 5), 0L, Morton.interleave(123456, 654321)))
-    val sqlGot = df.createOrReplaceTempView("zt")
-    assert(spark.sql("SELECT z_interleave(a, b) FROM zt WHERE a = 3").as[Long].head()
-      === Morton.interleave(3, 5))
-  }
-
   test("writeRangeClustered: disjoint per-file key ranges, rows preserved") {
     val path = tmp("range")
     Layout.writeRangeClustered(events, path, Seq(col("ts")), numFiles = 8)
@@ -74,34 +46,6 @@ class LayoutSpec extends SparkSpec {
       case Seq((_, hi), (lo2, _)) => assert(hi <= lo2, s"overlap: $ranges")
       case _                      =>
     }
-  }
-
-  test("writeZClustered bounds per-file spans of BOTH columns (1-D sort does not)") {
-    val ev01 = graft.Tables.events(spark, "/root/testdata/sf0.01")
-    val zPath = tmp("z")
-    val onedPath = tmp("oned")
-    Layout.writeZClustered(ev01, zPath, "user_id", "value", numFiles = 16)
-    Layout.writeRangeClustered(ev01, onedPath, Seq(col("user_id")), numFiles = 16)
-    assert(spark.read.parquet(zPath).count() === ev01.count())
-    assert(spark.read.parquet(zPath).columns.toSet === ev01.columns.toSet)
-
-    def meanNormSpan(path: String, c: String): Double = {
-      val whole = ev01.agg(
-        (max(col(c).cast("double")) - min(col(c).cast("double"))).as("span"))
-        .as[Double].head()
-      val spans = fileRanges(path, c).map { case (lo, hi) => (hi - lo) / whole }
-      spans.sum / spans.size
-    }
-    val onedV = meanNormSpan(onedPath, "value")
-    val zu = meanNormSpan(zPath, "user_id")
-    val zv = meanNormSpan(zPath, "value")
-    // 1-D user_id sort scatters value (each file spans most of its range);
-    // z-clustering must bound both dimensions and clearly beat the 1-D
-    // layout on the scattered one
-    assert(onedV > 0.6, s"1-D baseline value span $onedV")
-    assert(zv < onedV * 0.8, s"z value span $zv vs 1-D $onedV")
-    assert(zu < 0.6, s"z user_id span $zu")
-    assert(zv < 0.6, s"z value span $zv")
   }
 
   test("writeIvfClustered: inverted-list layout — probe cells map to a bounded file subset") {
@@ -390,30 +334,6 @@ class LayoutSpec extends SparkSpec {
     assert(rows.size === 160)
   }
 
-  test("mergeIvfDeltaUpsertOnce: a replayed CDC batch double-applies neither the landing nor the supersede") {
-    val df = spark.range(320).select(col("id").as("vec_id"), (col("id") % 8).as("cell"))
-    val path = tmp("upsertonce")
-    Layout.writeIvfClustered(df, path, numFiles = 2)
-    val delta = spark.createDataFrame(Seq((3L, 7L))).toDF("vec_id", "cell")
-    val tombs = spark.createDataFrame(Seq((3L, 3L))).toDF("vec_id", "cell")
-    assert(Layout.mergeIvfDeltaUpsertOnce(spark, path, delta, tombs, batchId = 0L))
-    val want = Layout.readIvfLists(spark, path).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(want.contains((3L, 7L)) && !want.contains((3L, 3L)))
-    // checkpoint replay re-delivers batch 0: the ledger refuses it — the
-    // new vector is not landed twice and no OTHER (vec_id=3) row (the one
-    // just written to cell 7) is collaterally tombstoned
-    assert(!Layout.mergeIvfDeltaUpsertOnce(spark, path, delta, tombs, batchId = 0L))
-    val after = Layout.readIvfLists(spark, path).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(after === want)
-    // the next batch still applies, and its marker compacts batch 0's
-    assert(Layout.mergeIvfDeltaUpsertOnce(spark, path,
-      delta.filter(lit(false)), spark.createDataFrame(Seq((4L, 4L))).toDF("vec_id", "cell"),
-      batchId = 1L))
-    assert(Layout.readIvfLists(spark, path).count() === want.size - 1)
-  }
-
   test("manifest v2: commit seeds footer-accurate per-file min-cell routing stats") {
     val df = spark.range(6400).select(col("id").as("vec_id"), (col("id") % 64).as("cell"))
     val path = tmp("manifeststats")
@@ -472,6 +392,7 @@ class LayoutSpec extends SparkSpec {
     // after ONE merge: every v1 file still on disk and readable — the
     // reader's in-flight scan completes against its resolved snapshot
     assert(spark.read.parquet(v1Paths: _*).count() === 3200)
+    assert(Layout.retainedVersions(spark, path) === Seq(1L, 2L))
     val v2 = Layout.currentManifest(spark, path).get
     assert(v2._1 === 2L)
     val delta2 = spark.range(5).select((col("id") + 910000L).as("vec_id"), lit(9L).as("cell"))
@@ -488,6 +409,7 @@ class LayoutSpec extends SparkSpec {
     val manifestsOnDisk = new java.io.File(path).listFiles
       .filter(_.getName.startsWith("_graft_manifest-")).map(_.getName).toSet
     assert(manifestsOnDisk === Set("_graft_manifest-2", "_graft_manifest-3"))
+    assert(Layout.retainedVersions(spark, path) === Seq(2L, 3L))
   }
 
   test("full retraction commits an EMPTY manifest that reads as an empty frame; a later delta repopulates") {
@@ -534,34 +456,6 @@ class LayoutSpec extends SparkSpec {
     assert(v2.schemaJson.isDefined)
   }
 
-  test("time travel: readIvfListsAsOf serves any retained snapshot; swept versions fail loudly") {
-    val df = spark.range(800).select(col("id").as("vec_id"), (col("id") % 8).as("cell"))
-    val path = tmp("timetravel")
-    Layout.writeIvfClustered(df, path, numFiles = 4)
-    val baseRows = df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    def rowsAsOf(v: Long) = Layout.readIvfListsAsOf(spark, path, v).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-
-    val delta1 = spark.range(5).select((col("id") + 9000L).as("vec_id"), lit(2L).as("cell"))
-    Layout.mergeIvfDelta(spark, path, delta1)
-    assert(Layout.retainedVersions(spark, path) === Seq(1L, 2L))
-    // both retained snapshots readable, each exactly its own row set —
-    // an audit job diffs "before vs after the merge" from one directory
-    assert(rowsAsOf(1L) === baseRows)
-    assert(rowsAsOf(2L) ===
-      (baseRows ++ delta1.collect().map(r => (r.getLong(0), r.getLong(1)))).sorted)
-    assert(rowsAsOf(2L) === Layout.readIvfLists(spark, path).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
-
-    // a second merge sweeps v1: time travel to it must fail loudly, not
-    // silently read a torn file set
-    val delta2 = spark.range(3).select((col("id") + 9100L).as("vec_id"), lit(6L).as("cell"))
-    Layout.mergeIvfDelta(spark, path, delta2)
-    assert(Layout.retainedVersions(spark, path) === Seq(2L, 3L))
-    val e = intercept[RuntimeException] { rowsAsOf(1L) }
-    assert(e.getMessage.contains("not retained"), e.getMessage)
-  }
-
   test("predicate-partitioned inverted lists: per-partition manifests, zero cross-partition I/O, independent merges") {
     // 300 vectors over 3 labels × 10 cells; one manifested layout per label
     val df = spark.range(300).select(col("id").as("vec_id"),
@@ -592,40 +486,6 @@ class LayoutSpec extends SparkSpec {
     // the other partitions' manifests are untouched (label=0 still v1)
     assert(Layout.currentManifest(spark, s"$path/label=0").exists(_._1 == 1L))
     assert(Layout.currentManifest(spark, s"$path/label=1").exists(_._1 == 2L))
-  }
-
-  test("mergePartitionedIvfUpsert routes a mixed-label delta to per-partition merges; new labels create fresh partitions") {
-    val df = spark.range(300).select(col("id").as("vec_id"),
-      (col("id") % 3).as("label"), (col("id") % 10).as("cell"))
-    val path = tmp("partmerge")
-    Layout.writePartitionedIvf(df, path, "label", numFiles = 4)
-    def digest(f: java.io.File) = java.security.MessageDigest.getInstance("MD5")
-      .digest(java.nio.file.Files.readAllBytes(f.toPath)).toSeq
-    def partFiles(v: Long) = new java.io.File(s"$path/label=$v").listFiles
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val label0Before = partFiles(0L).map(f => f.getName -> digest(f)).toMap
-
-    // mixed delta: new vectors in labels 1 and 9 (9 never seen — a fresh
-    // partition), plus a supersede in label 1 (vec 4 re-embeds 4→7)
-    val delta = Seq((1000L, 1L, 4L), (1001L, 9L, 2L), (1002L, 9L, 5L), (4L, 1L, 7L))
-      .toDF("vec_id", "label", "cell")
-    val tombs = Seq((4L, 1L, 4L)).toDF("vec_id", "label", "cell")
-    val res = Layout.mergePartitionedIvfUpsert(spark, path, "label", delta, Some(tombs))
-    assert(res.keySet === Set("1", "9"))
-    assert(res("9") === ((0, 0)), "a new label merges via the fresh-path branch")
-
-    // label 1: base rows − superseded + its delta, exactly once
-    val p1 = Layout.readPartitionedIvf(spark, path, "label", 1L).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val base1 = (0L until 300L).filter(_ % 3 == 1).map(v => (v, v % 10))
-    assert(p1 === (base1.filterNot(_ == (4L, 4L)) ++ Seq((1000L, 4L), (4L, 7L))).sorted)
-    // label 9 exists now and holds exactly its delta
-    assert(Layout.readPartitionedIvf(spark, path, "label", 9L).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq === Seq((1001L, 2L), (1002L, 5L)))
-    // label 0 was never touched: same names, same bytes, same manifest v1
-    val label0After = partFiles(0L).map(f => f.getName -> digest(f)).toMap
-    assert(label0After === label0Before)
-    assert(Layout.currentManifest(spark, s"$path/label=0").exists(_._1 == 1L))
   }
 
   test("partitioned layout: writers on different partitions commit independently (no false conflict)") {
@@ -679,6 +539,7 @@ class LayoutSpec extends SparkSpec {
     val df = spark.range(1600).select(col("id").as("vec_id"), (col("id") % 16).as("cell"))
     val path = tmp("occ")
     Layout.writeIvfClustered(df, path, numFiles = 4)
+    val v1Names = Layout.currentManifest(spark, path).get._2.toSet
     val baseRows = df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val deltaA = spark.range(5).select((col("id") + 800000L).as("vec_id"), lit(3L).as("cell"))
     val deltaB = spark.range(7).select((col("id") + 900000L).as("vec_id"), lit(9L).as("cell"))
@@ -701,8 +562,6 @@ class LayoutSpec extends SparkSpec {
     // files were cleaned by its abort (or swept by B's GC)
     val v2 = Layout.currentManifest(spark, path).get
     assert(v2._1 === 2L)
-    val v1Names = Layout.readIvfListsAsOf(spark, path, 1L).inputFiles
-      .map(p => new java.io.File(new java.net.URI(p).getPath).getName).toSet
     val onDisk = new java.io.File(path).listFiles
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
     assert(onDisk === v2._2.toSet ++ v1Names, s"loser left garbage: ${onDisk -- v2._2.toSet -- v1Names}")
@@ -731,12 +590,7 @@ class LayoutSpec extends SparkSpec {
     assert(Layout.readPartitionedIvf(spark, path, "label", "zh:CN").count() === 1)
     assert(Layout.readPartitionedIvf(spark, path, "label", "a=b").count() === 1)
     assert(Layout.readPartitionedIvf(spark, path, "label", "p%q").count() === 1)
-    // and a merge routes into the ESCAPED dir, not a divergent raw-name one
-    val delta = Seq((10L, "en/US", 3L)).toDF("vec_id", "label", "cell")
-    val res = Layout.mergePartitionedIvfUpsert(spark, path, "label", delta)
-    assert(res.keySet === Set("en/US"))
-    assert(Layout.readPartitionedIvf(spark, path, "label", "en/US").count() === 3)
-    // no unescaped sibling dir was forked by the merge
+    // no unescaped sibling dir was forked next to the escaped one
     val dirs = new java.io.File(path).listFiles.filter(_.isDirectory).map(_.getName).toSet
     assert(!dirs.exists(d => d.contains("en/US") || d == "label=en"), dirs.toSeq.sorted)
   }
@@ -820,41 +674,6 @@ class LayoutSpec extends SparkSpec {
     assert(Layout.readIvfLists(spark, path).count() === want.size + 2)
   }
 
-  test("needsCompaction triggers on file-grain drift only; the partitioned sweep compacts exactly the drifted partitions") {
-    val df = spark.range(300).select(col("id").as("vec_id"),
-      (col("id") % 3).as("label"), (col("id") % 10).as("cell"))
-    val path = tmp("partcompact")
-    Layout.writePartitionedIvf(df, path, "label", numFiles = 4)
-    // per-partition live bytes (~equal partitions: 100 rows each)
-    val bytes1 = Layout.liveBytes(spark, s"$path/label=1")
-    // at the written grain nothing needs compaction…
-    assert(!Layout.needsCompaction(spark, s"$path/label=1", targetFileBytes = bytes1 / 4))
-    // …but against a full-partition byte target the 4-file grain is 4x
-    // over the ideal of 1 — the trigger fires from manifest metadata only
-    assert(Layout.needsCompaction(spark, s"$path/label=1", targetFileBytes = bytes1 * 2))
-    // pre-manifest/missing layouts never trigger (no protocol to heal through)
-    assert(!Layout.needsCompaction(spark, s"$path/label=9", targetFileBytes = 1L))
-
-    // drift ONE partition's grain by merging (its sibling stays healthy at
-    // the sweep's target); the sweep must compact exactly the drifted one
-    val delta = spark.range(2).select((col("id") + 9000L).as("vec_id"), lit(3L).as("cell"))
-    Layout.mergeIvfDelta(spark, s"$path/label=2", delta)
-    val res = Layout.compactPartitionedIvf(spark, path, "label",
-      targetFileBytes = bytes1 * 2, slack = 3.0)
-    // all three partitions hold 4-5 files vs ideal 1 at this target ->
-    // with slack 3.0 every partition is over 3x and compacts; tighten the
-    // assertion to the CONTENT contract per partition instead
-    assert(res.keySet === Set("0", "1", "2"))
-    res.foreach { case (v, (before, after)) =>
-      assert(after < before, s"label=$v: $before -> $after")
-    }
-    assert(Layout.readPartitionedIvf(spark, path, "label", 2L).count() === 102)
-    assert(Layout.readPartitionedIvf(spark, path, "label", 0L).count() === 100)
-    // a second sweep is a no-op: every partition is now at grain
-    assert(Layout.compactPartitionedIvf(spark, path, "label",
-      targetFileBytes = bytes1 * 2, slack = 3.0).isEmpty)
-  }
-
   test("compactIvfInPlace crash windows and concurrent-writer abort mirror the merge's contract") {
     val df = spark.range(1600).select(col("id").as("vec_id"), (col("id") % 16).as("cell"))
     val preRows = df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
@@ -918,6 +737,7 @@ class LayoutSpec extends SparkSpec {
     val df = spark.range(1600).select(col("id").as("vec_id"), (col("id") % 16).as("cell"))
     val path = tmp("gcorphans")
     Layout.writeIvfClustered(df, path, numFiles = 4)
+    val v1Names = Layout.currentManifest(spark, path).get._2
     // advance to v2 first, so retention (head + head−1) is actually in play
     val d1 = spark.range(4).select((col("id") + 40000L).as("vec_id"), lit(2L).as("cell"))
     Layout.mergeIvfDelta(spark, path, d1)
@@ -928,9 +748,7 @@ class LayoutSpec extends SparkSpec {
     def topLevel = new java.io.File(path).listFiles
     def orphanParquet(live: Set[String]) = topLevel
       .filter(f => f.getName.endsWith(".parquet") && !live(f.getName)).map(_.getName).toSet
-    val liveBefore = (Layout.currentManifest(spark, path).get._2 ++
-      Layout.readIvfListsAsOf(spark, path, 1L).inputFiles
-        .map(p => new java.io.File(new java.net.URI(p).getPath).getName)).toSet
+    val liveBefore = (Layout.currentManifest(spark, path).get._2 ++ v1Names).toSet
     val liveDigests = topLevel.filter(f => liveBefore(f.getName))
       .map(f => f.getName -> digest(f)).toMap
     // writer killed between rename-in and commit: orphan merged-* files +
@@ -955,13 +773,13 @@ class LayoutSpec extends SparkSpec {
     assert(orphanParquet(liveBefore).isEmpty, "orphans survived the sweep")
     assert(!topLevel.exists(_.getName.startsWith(".merge_swap")), "swap residue survived")
     // the committed snapshot is untouched — byte-identical live files,
-    // same rows — and time travel within retention still works
+    // same rows — and the retained v1 snapshot still reads in full
     topLevel.filter(f => liveBefore(f.getName)).foreach(f =>
       assert(digest(f) === liveDigests(f.getName), s"live file ${f.getName} changed"))
     assert(Layout.readIvfLists(spark, path).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq === committedRows)
     assert(Layout.retainedVersions(spark, path) === Seq(1L, 2L))
-    assert(Layout.readIvfListsAsOf(spark, path, 1L).count() === 1600)
+    assert(spark.read.parquet(v1Names.map(n => s"$path/$n"): _*).count() === 1600)
     // a crash-free layout sweeps nothing; pre-manifest dirs are left alone
     assert(Layout.gcOrphans(spark, path) === 0)
     val raw = tmp("gcraw")

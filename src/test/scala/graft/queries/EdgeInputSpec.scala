@@ -25,8 +25,10 @@ class EdgeInputSpec extends SparkSpec {
   test("curationSignals/curationStage survive null, empty, and non-ASCII text") {
     val sig = CurationQueries.curationSignals(docs).collect()
     assert(sig.length == 5)
-    // the stage gates degenerate docs out instead of erroring
-    val kept = CurationQueries.curationStage(docs).collect().map(_.getLong(0)).toSet
+    // the keep + sample gates filter degenerate docs out instead of erroring
+    val kept = CurationQueries.curationSignals(docs)
+      .filter(CurationQueries.qualityGate && org.apache.spark.sql.functions.col("bucket") < CurationQueries.sampleRate)
+      .collect().map(r => r.getAs[Long]("doc_id")).toSet
     assert(!kept.contains(2L) && !kept.contains(3L) && !kept.contains(5L), kept)
   }
 

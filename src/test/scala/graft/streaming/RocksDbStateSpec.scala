@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.streaming.StreamingOps.{BandHit, Doc}
+import graft.streaming.StreamingOps.BandHit
+import graft.streaming.StreamingOpsSpec.Doc
 import graft.vlm.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import scala.jdk.CollectionConverters._
@@ -14,14 +15,24 @@ import scala.jdk.CollectionConverters._
   */
 class RocksDbStateSpec extends SparkSpec {
 
+  /** The RocksDB provider keeps band-claim state off-heap and
+    * disk-spillable; changelog checkpointing ships per-batch deltas; one
+    * shared memory budget bounds all loaded stores.
+    */
+  private val rocksDbConf: Map[String, String] = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true")
+
   test("nearDupHits on RocksDB: state rows = distinct buckets, flat under duplicate replay") {
     val s = spark
     import s.implicits._
     implicit val sc = s.sqlContext
 
-    val prior = StreamingOps.RocksDbStateStoreConf.keys
+    val prior = rocksDbConf.keys
       .map(k => k -> s.conf.getOption(k)).toMap
-    StreamingOps.RocksDbStateStoreConf.foreach { case (k, v) => s.conf.set(k, v) }
+    rocksDbConf.foreach { case (k, v) => s.conf.set(k, v) }
     try {
       val dupText = "alpha beta gamma delta epsilon zeta eta theta"
       val batch1 = Seq(Doc(1, dupText), Doc(2, "entirely different words occupy this second document"))
@@ -67,9 +78,9 @@ class RocksDbStateSpec extends SparkSpec {
     import s.implicits._
     implicit val sc = s.sqlContext
 
-    val prior = StreamingOps.RocksDbStateStoreConf.keys
+    val prior = rocksDbConf.keys
       .map(k => k -> s.conf.getOption(k)).toMap
-    StreamingOps.RocksDbStateStoreConf.foreach { case (k, v) => s.conf.set(k, v) }
+    rocksDbConf.foreach { case (k, v) => s.conf.set(k, v) }
     try {
       val ckpt = tempDir("graft-rocks-ckpt").toString
       val out = tempDir("graft-rocks-out").toString

@@ -298,7 +298,9 @@ class PipelineSpec extends SparkSpec {
         |"bounding_boxes_2d":[],"bounding_boxes_3d":[]}""".stripMargin.replace("\n", ""))
     val frames = Ingest.readFrames(spark, dir)
     assert(frames.count() == 1)
-    assert(Ingest.withUsableBoxes(frames).count() == 0)
+    // F1: a frame with neither 3D nor 2D boxes yields no QA rows
+    assert(QaTasks.objectCount.rows(frames).count() == 0)
+    assert(QaTasks2D.objectCount2d.rows(frames).count() == 0)
     assert(Ingest.readFrames(spark, dir, limit = Some(0)).count() == 0)
   }
 }

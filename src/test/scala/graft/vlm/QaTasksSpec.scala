@@ -249,6 +249,31 @@ class QaTasksSpec extends SparkSpec {
     assert(want.count(_.nonEmpty) == 1)
   }
 
+  test("the geometry columns equal their Geo scalars") {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.{boxVertices, cameraToBoxDistance, minBoxDistance}
+    val cases = Seq(
+      (Seq(0.0, 0, 5, 1, 1, 1, 0, 0, 0), Seq(3.0, 0, 5, 1, 2, 1, 30, 0, 0), Seq(0.5, -1.0, 0.25), "class_84", 540.0),
+      (Seq(-2.0, 1, 4, 0.5, 1, 2, 0, 45, 10), Seq(1.0, 1, 6, 2, 1, 1, 0, 0, 90), Seq(0.0, 0, 0), "chair", -90.0),
+      (Seq(1.0, -3, 2, 3, 0.2, 1, -60, 10, 0), Seq(1.5, -2.5, 2.5, 1, 1, 1, 0, 0, 0), Seq(9.0, 9, 9), "class_x", 45.5))
+    val got = cases.toDF("a", "b", "cam", "cat", "deg").select(
+        minBoxDistance(boxVertices(col("a")), boxVertices(col("b"))),
+        cameraToBoxDistance(col("cam"), boxVertices(col("a"))),
+        GeoFunctions.centerDistanceCol(col("a")(0), col("a")(1), col("a")(2)),
+        GeoFunctions.normalizeAngleCol(col("deg")),
+        GeoFunctions.parseClassCategoryCol(col("cat")))
+      .collect().map(r => (Seq(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)), r.getString(4))).toSeq
+    def verts(f: Seq[Double]) = Geo.bboxVertices(f(0), f(1), f(2), f(3), f(4), f(5), f(6), f(7), f(8))
+    val want = cases.map { case (a, b, cam, cat, deg) =>
+      (Seq(Geo.minDistanceBetweenBoxes(verts(a), verts(b)), Geo.distanceCameraToBox(cam.toArray, verts(a)),
+        Geo.centerDistance(a(0), a(1), a(2)), Geo.normalizeAngle(deg)), Geo.parseClassCategory(cat))
+    }
+    got.zip(want).foreach { case ((g, gCat), (w, wCat)) =>
+      assert(g.zip(w).forall { case (x, y) => math.abs(x - y) < 1e-9 }, s"$g vs $w")
+      assert(gCat == wCat)
+    }
+  }
+
   test("all tasks are deterministic across runs (seeded M3 randomness)") {
     QaTasks.all.foreach { case (name, fn) =>
       val a = fn(fixture, "testds").collect().map(_.toString).sorted
